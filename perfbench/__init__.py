@@ -1,0 +1,1 @@
+"""sparksketch benchmark (see README.md in this directory)."""
