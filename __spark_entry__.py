@@ -163,7 +163,7 @@ def q_kll_lineitem_qty_quantiles(spark, sf_dir):
     li = _tbl(spark, sf_dir, "lineitem")
     n = li.count()
     sk = sketch_dataframe(li, KLLSpec(k=max(2 * n, 64), col="l_quantity"),
-                          ["l_orderkey"], canonical=True)
+                          ["l_orderkey"])
     rows = [(float(q), float(round(sk.quantile(q), 6))) for q in QS]
     return spark.createDataFrame(rows, "q double, qty double")
 
@@ -239,7 +239,7 @@ def q_kll_fixedk_rank_bound(spark, sf_dir):
     k = 200
     li = _tbl(spark, sf_dir, "lineitem")
     sk = sketch_dataframe(li, KLLSpec(k=k, col="l_extendedprice"),
-                          ["l_orderkey"], canonical=True)
+                          ["l_orderkey"])
     ests = {q: float(sk.quantile(q)) for q in QS}
     counts = li.agg(
         F.count("*").alias("_n"),
@@ -265,7 +265,7 @@ def q_tdigest_price_bound(spark, sf_dir):
     from sparksketch.agg import TDigestSpec, sketch_dataframe
     li = _tbl(spark, sf_dir, "lineitem")
     sk = sketch_dataframe(li, TDigestSpec(compression=200, col="l_extendedprice"),
-                          ["l_orderkey"], canonical=True)
+                          ["l_orderkey"])
     ests = {q: float(sk.quantile(q)) for q in QS}
     counts = li.agg(
         F.count("*").alias("_n"),

@@ -25,14 +25,15 @@ Execution design (SURVEY.md §4, BASELINE.json north_rule):
 - **Byte-identical associativity.** OR/sum/max/min-merge kinds (bloom,
   counting, layered, HLL, CMS, bottom-k, minhash) produce byte-identical
   results for ANY partitioning / merge order.  KLL and t-digest are
-  deterministic given a fixed partitioning; pass ``canonical=True`` to merge
-  partials in sorted-partition order for run-to-run reproducibility.
+  deterministic given a fixed partitioning: every merge folds partials in
+  sorted-partition order, so their results reproduce run to run.
 - **Skew.** Hot groups are split by a salt derived from the item hash
   (``pmod(h1, salt)``), merged in a second, tiny shuffle.
 """
 
 from __future__ import annotations
 
+import time
 from dataclasses import dataclass, field
 from typing import ClassVar, Iterator, Sequence
 
@@ -49,11 +50,14 @@ from .sketches import (BloomFilter, BottomKSketch, CountMinSketch,
                        TDigest, merge_blob_list, sketch_from_bytes)
 from .sketches.base import Sketch
 
-# The secondary EDH hash no longer crosses the Arrow boundary: it is
-# derived worker-side from h1 (hashing.derive_h2) — the crossing is the
-# build's measured bottleneck and hash bytes are its payload.
 
-PARTIAL_SCHEMA = "pid long, sketch binary, rows long"
+def _partials_schema(names: Sequence[str]) -> str:
+    """Partial-sketch rows: partition id, raw rows, one blob per sketch."""
+    return ", ".join(["pid long", "rows long"]
+                     + [f"`{n}` binary" for n in names])
+
+
+PARTIAL_SCHEMA = _partials_schema(["sketch"])
 
 
 def _norm_key(key) -> tuple:
@@ -370,46 +374,33 @@ class LayeredBloomSpec(SketchSpec):
 
 
 # --------------------------------------------------------------------------
-# Global (ungrouped) aggregation: mapInPandas partials + treeAggregate
+# Global (ungrouped) aggregation: mapInPandas partials + tree merge.  One
+# implementation builds and merges N sketches in one pass; the single-sketch
+# calls are that path with the one name ``sketch``.
 # --------------------------------------------------------------------------
-
-def _partial_builder(spec: SketchSpec):
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from pyspark import TaskContext
-        sk = spec.empty()
-        rows = 0
-        for pdf in batches:
-            if len(pdf):
-                spec.update(sk, pdf)
-                rows += len(pdf)
-        pid = TaskContext.get().partitionId()
-        yield pd.DataFrame({"pid": [pid], "sketch": [sk.to_bytes()],
-                            "rows": [rows]})
-    return fn
-
 
 def build_partials(df: DataFrame, spec: SketchSpec,
                    cols: Sequence[str | Column]) -> DataFrame:
-    """One sketch row per input partition (the map-side combine the pandas
-    UDAF API lacks).  Output: DataFrame[pid, sketch, rows]."""
-    return spec.prepare(df, cols).mapInPandas(
-        _partial_builder(spec), schema=PARTIAL_SCHEMA)
+    """One sketch row per input partition: :func:`build_partials_multi`
+    with the single sketch name ``sketch``.
+    Output: DataFrame[pid, rows, sketch, wall_sec]."""
+    return build_partials_multi(df, {"sketch": (spec, cols)})
 
 
-def tree_merge_round(partials: DataFrame, fanout: int = 64) -> DataFrame:
-    """One tree round: fold groups of ``fanout`` partial rows (by pid range,
-    sorted within the group for canonical determinism) into one row each.
-    Shuffles only sketch-sized rows; raw data is long gone."""
+def tree_aggregate(partials: DataFrame, collect_max: int = 1024,
+                   fanout: int = 64,
+                   blob_bytes: int | None = None) -> bytes | None:
+    """Merge single-sketch partial rows (:func:`build_partials` or
+    :func:`stable_build` output) to one blob: :func:`tree_aggregate_multi`
+    over the ``sketch`` column."""
+    return tree_aggregate_multi(partials, ["sketch"], collect_max, fanout,
+                                blob_bytes)["sketch"]
 
-    def fold(key, pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values("pid")
-        blob = merge_blob_list(bytes(b) for b in pdf["sketch"])
-        return pd.DataFrame({"pid": [int(key[0])], "sketch": [blob],
-                             "rows": [int(pdf["rows"].sum())]})
 
-    grouped = partials.withColumn(
-        "_g", (F.col("pid") / F.lit(fanout)).cast("long"))
-    return grouped.groupBy("_g").applyInPandas(fold, PARTIAL_SCHEMA)
+def sketch_dataframe(df: DataFrame, spec: SketchSpec,
+                     cols: Sequence[str | Column]) -> Sketch:
+    """Build + merge in one call; returns the deserialized final sketch."""
+    return sketch_dataframe_multi(df, {"sketch": (spec, cols)})["sketch"]
 
 
 def _collect_partials(partials: DataFrame) -> pd.DataFrame:
@@ -448,59 +439,6 @@ def _budgeted_collect_max(collect_max: int, blob_bytes: int | None) -> int:
     return max(min(collect_max, DRIVER_COLLECT_BUDGET // blob_bytes), 8)
 
 
-def tree_aggregate(partials: DataFrame, depth: int | None = None,
-                   canonical: bool = True, collect_max: int = 1024,
-                   fanout: int = 64,
-                   blob_bytes: int | None = None) -> bytes | None:
-    """Merge partial-sketch rows (one per input partition) to one blob.
-
-    Partials are fixed-size KB-MB sketches, so the dominant cost is the
-    build scan, never the merge — the merge plan only has to avoid fixed
-    overhead:
-
-    - ``<= collect_max`` partitions: collect the rows and fold driver-side
-      in sorted-pid order.  One job, no extra shuffle, no Python-RDD pickle
-      path.  Sorted order is canonical for every sketch kind and
-      byte-identical to any other order for the commutative kinds.
-    - more partitions (cluster scale): iterative DataFrame tree rounds —
-      ``groupBy(pid // fanout)`` -> ``applyInPandas`` fold — until
-      ``collect_max`` rows remain, then the driver fold.  This is the
-      treeAggregate pattern named by north_star, expressed over DataFrames
-      so blobs stay in Arrow and AQE places the (tiny) shuffles.
-
-    ``depth`` overrides the number of tree rounds; ``canonical`` is kept
-    for API compatibility (both paths are canonical now).  ``blob_bytes``
-    (a per-partial size hint, e.g. ``spec.est_bytes()``) additionally caps
-    the driver collect by total bytes, not just row count.
-    """
-    collect_max = _budgeted_collect_max(collect_max, blob_bytes)
-    est_parts = partials.rdd.getNumPartitions()
-    rounds = depth if depth is not None else 0
-    if depth is None:
-        while est_parts > collect_max:
-            rounds += 1
-            est_parts = int(np.ceil(est_parts / fanout))
-    for _ in range(rounds):
-        partials = tree_merge_round(partials, fanout)
-    pdf = _collect_partials(partials.select("pid", "sketch"))
-    return merge_blob_list(bytes(b) for b in pdf["sketch"])
-
-
-def sketch_dataframe(df: DataFrame, spec: SketchSpec,
-                     cols: Sequence[str | Column],
-                     canonical: bool = False) -> Sketch:
-    """Build + merge in one call; returns the deserialized final sketch."""
-    blob = tree_aggregate(build_partials(df, spec, cols), canonical=canonical,
-                          blob_bytes=spec.est_bytes())
-    if blob is None:
-        return spec.empty()
-    return sketch_from_bytes(blob)
-
-
-# --------------------------------------------------------------------------
-# Multi-sketch single-pass build: one scan, one Arrow crossing, N sketches
-# --------------------------------------------------------------------------
-
 def build_partials_multi(
         df: DataFrame,
         specs: dict[str, tuple[SketchSpec, Sequence[str | Column]]],
@@ -513,7 +451,9 @@ def build_partials_multi(
     one — the scan is the cost; the sketch updates are cheap NumPy.
 
     Output: one row per input partition,
-    ``pid long, rows long, <name> binary ...`` (one binary column per spec).
+    ``pid long, rows long, <name> binary ..., wall_sec double`` (one binary
+    column per spec; ``wall_sec`` is the partition's build time, recorded
+    by checkpoint manifests).
 
     Specs that prepare IDENTICAL expressions (e.g. an HLL and a KLL both
     keyed on ``xxhash64(conv_id)``) share ONE projected column: the hash is
@@ -573,11 +513,10 @@ def build_partials_multi(
                     .agg(F.count(F.lit(1)).alias("__cnt")))
         for n in names:
             canon[n]["_cnt"] = "__cnt"
-    schema = ", ".join(["pid long", "rows long"]
-                       + [f"`{n}` binary" for n in names])
 
     def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         from pyspark import TaskContext
+        t0 = time.monotonic()
         sks = {n: specs[n][0].empty() for n in names}
         rows = 0
         for pdf in batches:
@@ -597,9 +536,11 @@ def build_partials_multi(
         data = {"pid": [pid], "rows": [rows]}
         for n in names:
             data[n] = [sks[n].to_bytes()]
+        data["wall_sec"] = [time.monotonic() - t0]
         yield pd.DataFrame(data)
 
-    return prepared.mapInPandas(fn, schema=schema)
+    return prepared.mapInPandas(
+        fn, schema=_partials_schema(names) + ", wall_sec double")
 
 
 def tree_merge_round_multi(partials: DataFrame, names: Sequence[str],
@@ -615,11 +556,10 @@ def tree_merge_round_multi(partials: DataFrame, names: Sequence[str],
             data[n] = [merge_blob_list(bytes(b) for b in pdf[n])]
         return pd.DataFrame(data)
 
-    schema = ", ".join(["pid long", "rows long"]
-                       + [f"`{n}` binary" for n in names])
-    grouped = partials.withColumn(
+    grouped = partials.select(
+        "pid", "rows", *[F.col(f"`{n}`") for n in names]).withColumn(
         "_g", (F.col("pid") / F.lit(fanout)).cast("long"))
-    return grouped.groupBy("_g").applyInPandas(fold, schema)
+    return grouped.groupBy("_g").applyInPandas(fold, _partials_schema(names))
 
 
 def tree_aggregate_multi(partials: DataFrame, names: Sequence[str],
@@ -633,9 +573,11 @@ def tree_aggregate_multi(partials: DataFrame, names: Sequence[str],
     Arrow collect path and folded there (sub-second even for hundreds of
     MB-scale blobs).  Beyond that — true cluster scale — parallel tree
     rounds fold ``fanout`` rows into one executor-side first, so the driver
-    only ever sees ``collect_max`` rows.  Folds happen in sorted-pid order
-    at every level (canonical).  ``blob_bytes`` = per-ROW total size hint
-    (sum of the specs' est_bytes()) capping the collect by bytes.
+    only ever sees ``collect_max`` rows.  The rounds are DataFrame
+    ``groupBy(pid // fanout)`` -> ``applyInPandas`` folds, so blobs stay in
+    Arrow and AQE places the tiny shuffles.  Folds happen in sorted-pid
+    order at every level (canonical).  ``blob_bytes`` = per-ROW total size
+    hint (sum of the specs' est_bytes()) capping the collect by bytes.
     ``est_parts`` (when the caller knows the partial count, e.g. it chose
     the input partitioning) skips the ``.rdd`` partition probe — that
     conversion runs full plan analysis on the driver, a flat cost worth
@@ -646,6 +588,9 @@ def tree_aggregate_multi(partials: DataFrame, names: Sequence[str],
     while est_parts > collect_max:
         partials = tree_merge_round_multi(partials, names, fanout)
         est_parts = int(np.ceil(est_parts / fanout))
+    # collect ``partials`` itself, not a projection of it: the partition
+    # probe above runs an adaptive plan's shuffle stages, and only the same
+    # DataFrame reuses them
     pdf = _collect_partials(partials)
     return {n: merge_blob_list(bytes(b) for b in pdf[n]) for n in names}
 
@@ -723,16 +668,8 @@ def grouped_sketch(df: DataFrame, group_cols: Sequence[str],
         df.withColumn("_salt", F.pmod(F.xxhash64(*cols), F.lit(salt))),
         cols, keep=[*group_cols, "_salt"])
 
-    def build_salted(key, pdf: pd.DataFrame) -> pd.DataFrame:
-        sk = spec.empty()
-        spec.update(sk, pdf)
-        data = {c: [key[i]] for i, c in enumerate(group_cols)}
-        data["sketch"] = [sk.to_bytes()]
-        data["rows"] = [len(pdf)]
-        return pd.DataFrame(data)
-
     stage1 = salted.groupBy(*group_cols, "_salt").applyInPandas(
-        build_salted, out_schema)
+        build, out_schema)
 
     def merge_group(key, pdf: pd.DataFrame) -> pd.DataFrame:
         blob = merge_blob_list(bytes(b) for b in pdf["sketch"])
@@ -757,7 +694,7 @@ def grouped_sketch_segmented(df: DataFrame, group_cols: Sequence[str],
     - **stage 1** (``mapInPandas``, NO shuffle): each input partition
       builds one partial sketch per group it contains, segmented inside the
       Arrow batches — raw rows never leave their partition;
-    - **stage 2** (``groupBy(group).applyInPandas``): only the KB-scale
+    - **stage 2** (:func:`regroup_sketch_rows`): only the KB-scale
       partial-sketch rows shuffle (at most partitions x groups-per-
       partition rows), merged per group — valid because every mergeable
       kind here is associative+commutative.
@@ -772,7 +709,7 @@ def grouped_sketch_segmented(df: DataFrame, group_cols: Sequence[str],
     dict-fold) rather than ``applyInPandas``: per-group Arrow slicing
     costs ~ms per group, which at 10^6+ groups dominates everything —
     the dict-fold costs ~us per group.  Partials merge in sorted
-    stage-1-partition order per group, so grouped results are
+    stage-1-partition order (``_pid``) per group, so grouped results are
     deterministic for every sketch kind including the compacting ones.
     """
     group_cols = list(group_cols)
@@ -806,36 +743,7 @@ def grouped_sketch_segmented(df: DataFrame, group_cols: Sequence[str],
 
     stage1 = prepared.mapInPandas(build_segmented,
                                   out_schema + ", _pid long")
-
-    def merge_fold(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        acc: dict[tuple, list] = {}
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            # rows arrive sorted by (group, _pid) via sortWithinPartitions,
-            # so per-group merge order is deterministic even when a group
-            # spans Arrow batch boundaries
-            for key, sub in pdf.groupby(group_cols, sort=False,
-                                        dropna=False):
-                key = _norm_key(key)
-                ent = acc.get(key)
-                blobs = [bytes(b) for b in sub["sketch"]]
-                if ent is None:
-                    acc[key] = [merge_blob_list(blobs),
-                                int(sub["rows"].sum())]
-                else:
-                    ent[0] = merge_blob_list([ent[0], *blobs])
-                    ent[1] += int(sub["rows"].sum())
-        if acc:
-            keys = sorted(acc, key=_null_last)
-            data = {c: [k[i] for k in keys] for i, c in enumerate(group_cols)}
-            data["sketch"] = [acc[k][0] for k in keys]
-            data["rows"] = [acc[k][1] for k in keys]
-            yield pd.DataFrame(data)
-
-    return (stage1.repartition(*group_cols)
-            .sortWithinPartitions(*group_cols, "_pid")
-            .mapInPandas(merge_fold, out_schema))
+    return regroup_sketch_rows(stage1, group_cols, order_cols=["_pid"])
 
 
 def regroup_sketch_rows(grouped: DataFrame, group_cols: Sequence[str],

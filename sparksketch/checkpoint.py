@@ -2,12 +2,12 @@
 (BASELINE.json north_rule: "resumable from checkpoint with per-partition
 lineage + metrics").
 
-Stage-1 output (one sketch row per partition, from agg.build_partials or
-agg.stable_build) is persisted as parquet keyed by (run_id, pid) together
-with a manifest JSON recording input files, spec repr, seed, per-partition
-row counts and wall-times.  ``resume`` re-builds only the missing
-partitions and re-runs the cheap merge — the expensive scan+build work is
-never repeated.
+Stage-1 output (one sketch row per partition, from the one partial
+builder behind agg.build_partials, which also times each partition) is
+persisted as parquet keyed by (run_id, pid) together with a manifest JSON
+recording input files, spec repr, per-partition row counts and wall-times.
+``resume`` re-builds only the missing partitions and re-runs the cheap
+merge — the expensive scan+build work is never repeated.
 
 The checkpoint directory must be inside the writable workspace (or a real
 object store in production)."""
@@ -16,14 +16,12 @@ from __future__ import annotations
 
 import json
 import os
-import time
 from dataclasses import dataclass
-from typing import Iterator, Sequence
+from typing import Sequence
 
-import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from .agg import PARTIAL_SCHEMA, SketchSpec
+from .agg import SketchSpec, build_partials
 from .sketches import merge_blob_list
 
 
@@ -50,39 +48,24 @@ class Manifest:
                         d["n_partitions"], d["completed"])
 
 
-def _timed_builder(spec: SketchSpec):
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from pyspark import TaskContext
-        t0 = time.monotonic()
-        sk = spec.empty()
-        rows = 0
-        for pdf in batches:
-            if len(pdf):
-                spec.update(sk, pdf)
-                rows += len(pdf)
-        pid = TaskContext.get().partitionId()
-        yield pd.DataFrame({"pid": [pid], "sketch": [sk.to_bytes()],
-                            "rows": [rows],
-                            "wall_sec": [time.monotonic() - t0]})
-    return fn
-
-
 def checkpoint_partials(df: DataFrame, spec: SketchSpec,
                         cols: Sequence[str], ckpt_dir: str, run_id: str,
                         only_pids: set[int] | None = None) -> Manifest:
     """Build per-partition sketches and persist them with lineage.
 
-    ``only_pids`` restricts the build to missing partitions (resume path) —
-    other partitions are filtered out *before* the Arrow crossing."""
+    ``only_pids`` restricts the build to missing partitions (resume path):
+    the other partitions' rows are filtered out on ``spark_partition_id()``
+    before the Arrow crossing, and the empty sketch rows those partitions
+    still emit are dropped, so they are never recorded as completed."""
     os.makedirs(ckpt_dir, exist_ok=True)
-    prepared = spec.prepare(df, cols)
-    input_files = sorted(df.inputFiles()) if df.inputFiles() else []
-    n_parts = prepared.rdd.getNumPartitions()
-
-    built = prepared.mapInPandas(
-        _timed_builder(spec), schema=PARTIAL_SCHEMA + ", wall_sec double")
-    if only_pids is not None:
+    input_files = sorted(df.inputFiles())
+    n_parts = df.rdd.getNumPartitions()
+    if only_pids is None:
+        built = build_partials(df, spec, cols)
+    else:
         pids = sorted(only_pids)
+        built = build_partials(
+            df.filter(F.spark_partition_id().isin(pids)), spec, cols)
         built = built.filter(built.pid.isin(pids))
     out_path = os.path.join(ckpt_dir, f"partials_{run_id}")
     built.write.mode("append").parquet(out_path)

@@ -37,8 +37,7 @@ def quantile_bounds(df: DataFrame, col: str, n_buckets: int,
     boundary)."""
     if n_buckets < 2:
         raise ValueError("n_buckets must be >= 2")
-    sk = sketch_dataframe(df, KLLSpec(k=k, col=col), [col],
-                          canonical=True)
+    sk = sketch_dataframe(df, KLLSpec(k=k, col=col), [col])
     return bounds_from_sketch(sk, n_buckets)
 
 

@@ -64,8 +64,7 @@ class TestRangePartitioning:
 
     def test_zero_scan_path_from_blob(self, spark, skewed):
         from sparksketch.agg import KLLSpec, sketch_dataframe
-        sk = sketch_dataframe(skewed, KLLSpec(k=400, col="v"), ["v"],
-                              canonical=True)
+        sk = sketch_dataframe(skewed, KLLSpec(k=400, col="v"), ["v"])
         assert bounds_from_sketch(sk, 8) == \
             bounds_from_sketch(sk.to_bytes(), 8)
 

@@ -47,6 +47,31 @@ class TestCheckpointResume:
         m3 = resume(spark, df, spec, ["user_id"], ckpt, "r1")
         assert len(m3.completed) == 8
 
+    def test_resume_crosses_only_missing_partitions(self, spark, tmp_path):
+        """resume must not send the completed partitions' rows to Python:
+        the rows entering MapInPandas during the resume job (Spark's SQL
+        metrics) equal the rows of the missing pids alone."""
+        from perfbench.sparkstats import SparkStats
+        from sparksketch.agg import HLLSpec
+        from sparksketch.checkpoint import checkpoint_partials, resume
+
+        df = (spark.range(0, 4000, 1, 8)
+              .select(F.concat(F.lit("u"), F.col("id")).alias("user_id")))
+        spec, ckpt = HLLSpec(p=10), str(tmp_path)
+        checkpoint_partials(df, spec, ["user_id"], ckpt, "r3",
+                            only_pids={0, 1, 2, 5, 6, 7})
+        sc = spark.sparkContext
+        sc.setJobGroup("resume-crossing", "resume of pids 3 and 4")
+        try:
+            m = resume(spark, df, spec, ["user_id"], ckpt, "r3")
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        stats = SparkStats(spark).group("resume-crossing")
+        assert stats["py_ops"] == 1
+        assert stats["py_rows_in"] == 1000  # 2 of 8 partitions x 500 rows
+        assert sorted(int(p) for p in m.completed) == list(range(8))
+        assert m.completed["3"]["rows"] == m.completed["4"]["rows"] == 500
+
     def test_retry_dedup_by_pid(self, spark, tmp_path):
         """A re-run of an already-complete pid (retry after lost manifest
         write) must not double-count: merge dedups by pid."""

@@ -2,15 +2,21 @@
 partition counts and row orders, salted == unsalted, grouped sketches,
 bloom semi-join, stable ordered replay (SURVEY.md §5 test plan)."""
 
+import hashlib
+import os
+import subprocess
+import sys
+
 import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
 from sparksketch.agg import (BloomSpec, BottomKSpec, CMSSpec, CountingBloomSpec,
                              HLLSpec, KLLSpec, LayeredBloomSpec, MinHashSpec,
-                             TDigestSpec, bloom_semijoin, build_partials,
-                             cms_lookup, grouped_sketch, sketch_dataframe,
-                             stable_build, tree_aggregate, with_might_contain)
+                             MixKeyBloomSpec, TDigestSpec, bloom_semijoin,
+                             build_partials, cms_lookup, grouped_sketch,
+                             sketch_dataframe, stable_build, tree_aggregate,
+                             with_might_contain)
 from sparksketch.shape import Shape, StableShape
 from sparksketch.sketches import sketch_from_bytes
 from sparksketch.transcripts import transcripts_from_events
@@ -66,11 +72,70 @@ class TestAssociativity:
         for spec in (KLLSpec(k=200, col="value"),
                      TDigestSpec(compression=100, col="value")):
             part = events.repartition(4, "event_id")
-            b1 = tree_aggregate(build_partials(part, spec, ["event_id"]),
-                                canonical=True)
-            b2 = tree_aggregate(build_partials(part, spec, ["event_id"]),
-                                canonical=True)
+            b1 = tree_aggregate(build_partials(part, spec, ["event_id"]))
+            b2 = tree_aggregate(build_partials(part, spec, ["event_id"]))
             assert b1 == b2
+
+    # sha256 of sketch_dataframe's bytes for every spec kind over the
+    # sf0.001 events, hash-partitioned 4 ways on event_id and sorted within
+    # partitions.  The digests pin the wire bytes across code versions: a
+    # build or merge refactor that changes any kind's bytes fails here.
+    @pytest.mark.parametrize("spec,cols,digest", [
+        pytest.param(BloomSpec(Shape.from_np(10_000, 1e-6)), ["user_id"],
+                     "5facfee0b43383c6fd2945ad2c67cfaf14eb7f9e715f3fa5048461f6d7be4170",
+                     id="bloom"),
+        pytest.param(MixKeyBloomSpec(Shape.from_np(10_000, 1e-6)),
+                     ["user_id", "event_type"],
+                     "c3601caa6d4d962693995110caedf3c703e3ef320426f40b96559d7abb121d8e",
+                     id="mixkey_bloom"),
+        pytest.param(CountingBloomSpec(Shape.from_np(10_000, 1e-4)),
+                     ["user_id"],
+                     "32851ee53d838deb3eea6887b464219c772b1efc92700a0f07be7c5e0ce2ba79",
+                     id="counting_bloom"),
+        pytest.param(HLLSpec(p=12), ["user_id"],
+                     "ffdd95f57768e4325ab60ab07f8bb4c23f287d2e8abfdb36cbbc8a139219367c",
+                     id="hll"),
+        pytest.param(CMSSpec(w=1 << 12, d=4), ["event_type"],
+                     "7f1fe5e4616dd161e53c52024866faf225492d2ef61d28919342c5cc7ae214f2",
+                     id="cms"),
+        pytest.param(KLLSpec(k=64, col="value"), ["event_id"],
+                     "0967d3c56f8da3ff2a1ea20fdd1ea8b9759d8288618d051a5878326341448921",
+                     id="kll"),
+        pytest.param(TDigestSpec(compression=50, col="value"), ["event_id"],
+                     "25e1f75afb149b170300d9670a00c7866ddf0e536ff0f33309a65161eb9a378d",
+                     id="tdigest"),
+        pytest.param(BottomKSpec(k=256), ["user_id"],
+                     "d675217afd17b0c5e9dbb2e82d917f78bbc064239543be54928dffe012f6d69e",
+                     id="bottomk"),
+        pytest.param(MinHashSpec(n_perm=64), ["user_id"],
+                     "3f3b8f22db397f6c0c5245a1cdb1842f699a9f37980a5a51624d515f223d7b6c",
+                     id="minhash"),
+        pytest.param(LayeredBloomSpec(Shape.from_np(10_000, 1e-6),
+                                      layer_col="layer"), ["event_id"],
+                     "5dbff057e11f04942dcc4967545ea45af53b20f0b2e51503351c00720893a750",
+                     id="layered_bloom"),
+    ])
+    def test_golden_bytes(self, events, sf_dir, spec, cols, digest):
+        if os.path.basename(os.path.normpath(sf_dir)) != "sf0.001":
+            pytest.skip("golden digests are recorded for sf0.001")
+        df = (events.withColumn(
+                  "layer", (F.unix_timestamp("ts") / 86400).cast("long"))
+              .repartition(4, "event_id").sortWithinPartitions("event_id"))
+        blob = sketch_dataframe(df, spec, cols).to_bytes()
+        assert hashlib.sha256(blob).hexdigest() == digest
+
+
+class TestPhysicalPlans:
+    def test_explain_plans_checks_pass(self, sf_dir):
+        """tools/explain_plans.py asserts the scale-critical plan shapes:
+        no Exchange before the partial build, one scan for a multi-sketch
+        build, only sketch rows shuffled by the segmented grouped build."""
+        repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+        proc = subprocess.run(
+            [sys.executable, os.path.join(repo, "tools", "explain_plans.py"),
+             sf_dir], capture_output=True, text=True, timeout=600)
+        assert proc.returncode == 0, proc.stdout[-4000:] + proc.stderr[-4000:]
+        assert "ALL PLAN CHECKS PASSED" in proc.stdout
 
 
 class TestEstimates:
@@ -100,14 +165,14 @@ class TestEstimates:
     def test_kll_exact_regime_quantiles(self, events):
         n = events.count()
         sk = sketch_dataframe(events, KLLSpec(k=2 * n, col="value"),
-                              ["event_id"], canonical=True)
+                              ["event_id"])
         vals = np.array([r.value for r in events.select("value").collect()])
         for q in (0.25, 0.5, 0.9):
             assert sk.quantile(q) == pytest.approx(np.quantile(vals, q), rel=1e-9)
 
     def test_tdigest_bound(self, events):
         sk = sketch_dataframe(events, TDigestSpec(compression=100, col="value"),
-                              ["event_id"], canonical=True)
+                              ["event_id"])
         vals = np.array([r.value for r in events.select("value").collect()])
         for q in (0.1, 0.5, 0.9):
             true_rank = (vals <= sk.quantile(q)).mean()

@@ -43,7 +43,7 @@ class TestAgainstSparkBuiltins:
     def test_kll_vs_percentile_approx(self, spark, events):
         from sparksketch.agg import KLLSpec, sketch_dataframe
         sk = sketch_dataframe(events, KLLSpec(k=200, col="value"),
-                              ["event_id"], canonical=True)
+                              ["event_id"])
         spark_qs = events.select(
             F.percentile_approx("value", [0.25, 0.5, 0.75], 10000)).first()[0]
         vals = np.array([r.value for r in events.select("value").collect()])
