@@ -49,6 +49,7 @@ from .sketches import (BloomFilter, BottomKSketch, CountMinSketch,
                        LayeredBloomFilter, MinHashSketch, StableBloomFilter,
                        TDigest, merge_blob_list, sketch_from_bytes)
 from .sketches.base import Sketch
+from .sketches.hll import bucket_rho
 
 
 def _partials_schema(names: Sequence[str]) -> str:
@@ -681,6 +682,67 @@ def grouped_sketch(df: DataFrame, group_cols: Sequence[str],
     return stage1.groupBy(*group_cols).applyInPandas(merge_group, out_schema)
 
 
+def _group_sketches(batches: Iterator[pd.DataFrame],
+                    group_cols: list[str],
+                    spec: SketchSpec) -> dict[tuple, list]:
+    """``{group key: [sketch, rows]}`` over a partition's Arrow batches,
+    one ``spec.update`` per (batch, group)."""
+    sks: dict[tuple, list] = {}
+    for pdf in batches:
+        if not len(pdf):
+            continue
+        for key, sub in pdf.groupby(group_cols, sort=False, dropna=False):
+            key = _norm_key(key)
+            ent = sks.get(key)
+            if ent is None:
+                ent = sks[key] = [spec.empty(), 0]
+            spec.update(ent[0], sub)
+            ent[1] += len(sub)
+    return sks
+
+
+def _batch_group_codes(pdf: pd.DataFrame,
+                       group_cols: list[str]) -> tuple[np.ndarray, list]:
+    """Per-row group code of one batch, and each code's key normalized
+    as :func:`_norm_key` does (NULL and NaN both become ``None``)."""
+    codes = np.zeros(len(pdf), dtype=np.int64)
+    for c in group_cols:
+        cc, uniq = pd.factorize(pdf[c], use_na_sentinel=False)
+        _, first, codes = np.unique(codes * len(uniq) + cc,
+                                    return_index=True, return_inverse=True)
+    cols = [pdf[c].to_numpy()[first].tolist() for c in group_cols]
+    return codes.reshape(-1), [_norm_key(k) for k in zip(*cols)]
+
+
+def _hll_group_sketches(batches: Iterator[pd.DataFrame],
+                        group_cols: list[str], p: int) -> dict[tuple, list]:
+    """:func:`_group_sketches` for HLL: every group's registers are one
+    row of a ``[groups x 2^p]`` block, updated by a single max-scatter per
+    Arrow batch.  Max is order-free, so the bytes equal the per-group
+    ``HyperLogLog.add_hashes`` result."""
+    m = 1 << p
+    index: dict[tuple, int] = {}
+    block = np.zeros((0, m), dtype=np.uint8)
+    rows = np.zeros(0, dtype=np.int64)
+    for pdf in batches:
+        if not len(pdf):
+            continue
+        codes, keys = _batch_group_codes(pdf, group_cols)
+        gid = np.array([index.setdefault(k, len(index)) for k in keys],
+                       dtype=np.int64)[codes]
+        if len(index) > len(block):
+            cap = max(len(index), 2 * len(block))
+            block = np.concatenate(
+                [block, np.zeros((cap - len(block), m), dtype=np.uint8)])
+            rows = np.concatenate(
+                [rows, np.zeros(cap - len(rows), dtype=np.int64)])
+        bucket, rho = bucket_rho(pdf["h1"].to_numpy(), p)
+        np.maximum.at(block, (gid, bucket), rho)
+        rows += np.bincount(gid, minlength=len(rows))
+    return {k: [HyperLogLog(p, block[g]), int(rows[g])]
+            for k, g in index.items()}
+
+
 def grouped_sketch_segmented(df: DataFrame, group_cols: Sequence[str],
                              spec: SketchSpec,
                              cols: Sequence[str | Column]) -> DataFrame:
@@ -693,7 +755,9 @@ def grouped_sketch_segmented(df: DataFrame, group_cols: Sequence[str],
 
     - **stage 1** (``mapInPandas``, NO shuffle): each input partition
       builds one partial sketch per group it contains, segmented inside the
-      Arrow batches — raw rows never leave their partition;
+      Arrow batches — raw rows never leave their partition.  HLL groups
+      share one ``[groups x 2^p]`` register block, updated by a single
+      max-scatter per batch; other kinds update per (batch, group);
     - **stage 2** (:func:`regroup_sketch_rows`): only the KB-scale
       partial-sketch rows shuffle (at most partitions x groups-per-
       partition rows), merged per group — valid because every mergeable
@@ -720,18 +784,9 @@ def grouped_sketch_segmented(df: DataFrame, group_cols: Sequence[str],
 
     def build_segmented(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         from pyspark import TaskContext
-        sks: dict[tuple, list] = {}
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            for key, sub in pdf.groupby(group_cols, sort=False,
-                                        dropna=False):
-                key = _norm_key(key)
-                ent = sks.get(key)
-                if ent is None:
-                    ent = sks[key] = [spec.empty(), 0]
-                spec.update(ent[0], sub)
-                ent[1] += len(sub)
+        sks = (_hll_group_sketches(batches, group_cols, spec.p)
+               if isinstance(spec, HLLSpec)
+               else _group_sketches(batches, group_cols, spec))
         if sks:
             pid = TaskContext.get().partitionId()
             keys = sorted(sks, key=_null_last)  # canonical emit order
@@ -747,16 +802,24 @@ def grouped_sketch_segmented(df: DataFrame, group_cols: Sequence[str],
 
 
 def regroup_sketch_rows(grouped: DataFrame, group_cols: Sequence[str],
-                        order_cols: Sequence[str] = ()) -> DataFrame:
+                        order_cols: Sequence[str] = (),
+                        estimate_col: str | None = None) -> DataFrame:
     """Merge an existing ``[*keys, sketch, rows]`` frame down to a COARSER
     key set — because every sketch kind here is mergeable, rollups /
     grouping-set views are an algebra over KB-scale sketch rows, never a
     rescan of the data.  ``order_cols`` (e.g. the dropped dims) fixes the
-    per-group merge order for determinism."""
+    per-group merge order for determinism.
+
+    With ``estimate_col``, the fold also estimates each merged sketch and
+    emits ``[*group_cols, rows, <estimate_col> double]`` instead of the
+    blob: one Python operator answers the query, where
+    :func:`with_sketch_estimate` after the fold would add a second."""
     group_cols = list(group_cols)
     ktypes = dict(grouped.dtypes)
-    out_schema = ", ".join([f"`{c}` {ktypes[c]}" for c in group_cols]
-                           + ["sketch binary", "rows long"])
+    out_schema = ", ".join(
+        [f"`{c}` {ktypes[c]}" for c in group_cols]
+        + (["rows long", f"`{estimate_col}` double"] if estimate_col
+           else ["sketch binary", "rows long"]))
     sort_cols = group_cols + [c for c in order_cols
                               if c in ktypes and c not in group_cols]
 
@@ -781,8 +844,11 @@ def regroup_sketch_rows(grouped: DataFrame, group_cols: Sequence[str],
             keys = sorted(acc, key=_null_last)
             data = {c: [k[i] for k in keys]
                     for i, c in enumerate(group_cols)}
-            data["sketch"] = [acc[k][0] for k in keys]
             data["rows"] = [acc[k][1] for k in keys]
+            if estimate_col:
+                data[estimate_col] = [_estimate(acc[k][0]) for k in keys]
+            else:
+                data["sketch"] = [acc[k][0] for k in keys]
             yield pd.DataFrame(data)
 
     src = grouped
@@ -851,6 +917,17 @@ def with_sketch_quantile(df: DataFrame, q: float,
     return df.withColumn(out_col, quant(F.col(sketch_col)))
 
 
+def _estimate(blob) -> float:
+    """A sketch blob's headline number: the distinct count for bottom-k/
+    HLL/bloom kinds, ``n`` for KLL/t-digest."""
+    sk = sketch_from_bytes(bytes(blob))
+    for name in ("distinct_estimate", "estimate", "estimate_n"):
+        fn = getattr(sk, name, None)
+        if fn is not None:
+            return float(fn())
+    return float(getattr(sk, "n", float("nan")))
+
+
 def with_sketch_estimate(df: DataFrame, out_col: str = "estimate",
                          sketch_col: str = "sketch") -> DataFrame:
     """Adds each row's sketch estimate (distinct count for bottom-k/HLL/
@@ -860,18 +937,7 @@ def with_sketch_estimate(df: DataFrame, out_col: str = "estimate",
 
     @F.pandas_udf("double")
     def est(blobs: pd.Series) -> pd.Series:
-        out = np.empty(len(blobs), dtype=np.float64)
-        for i, b in enumerate(blobs):
-            sk = sketch_from_bytes(bytes(b))
-            if hasattr(sk, "distinct_estimate"):
-                out[i] = float(sk.distinct_estimate())
-            elif hasattr(sk, "estimate"):
-                out[i] = float(sk.estimate())
-            elif hasattr(sk, "estimate_n"):
-                out[i] = float(sk.estimate_n())
-            else:
-                out[i] = float(getattr(sk, "n", float("nan")))
-        return pd.Series(out)
+        return pd.Series([_estimate(b) for b in blobs], dtype="float64")
 
     return df.withColumn(out_col, est(F.col(sketch_col)))
 

@@ -9,18 +9,22 @@
           .load())
     # -> [*dims, estimate double, rows bigint]
 
-Each input partition owns a deterministic hash bucket of the GROUP KEY
-space: it scans every active segment's sketch rows with pyarrow (KB-scale
-rows — the fact table was only touched when the segments were built),
-keeps its bucket's groups, merges their blobs with the sketch algebra,
-and emits one (group, estimate, rows) tuple per group.  The merge is
-per-group associative+commutative, so bucket-parallel reads are exact.
+The segment list is resolved once, on the driver at plan time, by the
+same manifest reader ``view_query`` uses (view.py): the active segments,
+or the ``segments`` option validated against the manifest (unknown ids,
+or compacted-away ids mixed with active ones, raise).  Each input
+partition owns a deterministic hash bucket of the GROUP KEY space: it
+scans those segments' sketch rows with pyarrow (KB-scale rows — the fact
+table was only touched when the segments were built), keeps its bucket's
+groups, merges their blobs with the sketch algebra, and emits one
+(group, estimate, rows) tuple per group.  The merge is per-group
+associative+commutative, so bucket-parallel reads are exact.
 
 This surface is the catalog-style integration seam: the same view
 directory serves `view_query` (DataFrame API), the registered SQL
-functions over sketch rows, and plain `spark.read` here.  Paths are
-local/POSIX in the sandbox; an object-store deployment swaps the
-pyarrow filesystem the same way io.py swaps the table format.
+functions over sketch rows, and plain `spark.read` here.  Segment files
+are found with a local glob, so this reader takes local/POSIX paths
+only.
 """
 
 from __future__ import annotations
@@ -30,23 +34,15 @@ import zlib
 from pyspark.sql.datasource import (DataSource, DataSourceReader,
                                     InputPartition)
 
+from .agg import _estimate
+from .view import _read_manifest
+
 _ARROW_TO_DDL = {
     "string": "string", "large_string": "string",
     "int8": "tinyint", "int16": "smallint", "int32": "int",
     "int64": "bigint", "float": "float", "double": "double",
     "bool": "boolean", "date32[day]": "date",
 }
-
-
-def _manifest(path: str):
-    import pyarrow.parquet as pq
-    t = pq.read_table(path.rstrip("/") + "/manifest")
-    rows = sorted(zip(*[t.column(c).to_pylist()
-                        for c in ("seg", "spec", "dims", "active",
-                                  "note")]))
-    dims = rows[0][2].split(",") if rows[0][2] else []
-    active = sorted(r[0] for r in rows if r[3])
-    return dims, active
 
 
 def _bucket(key: tuple, n: int) -> int:
@@ -68,7 +64,8 @@ class SketchViewDataSource(DataSource):
         path = self.options.get("path")
         if not path:
             raise ValueError("sketchview needs .option('path', ...)")
-        dims, active = _manifest(path)
+        m = _read_manifest(path)
+        dims, active = m.dims, m.active
         if not active:
             raise ValueError(f"sketch view at {path} has no active "
                              "segments")
@@ -103,9 +100,8 @@ class _SketchViewReader(DataSourceReader):
         self.segments = ([int(s) for s in str(segs).split(",")]
                          if segs not in (None, "") else None)
         # resolved on the DRIVER at plan time so every read task agrees
-        self.dims, active = _manifest(self.path)
-        self.use_segs = (self.segments if self.segments is not None
-                         else active)
+        m = _read_manifest(self.path)
+        self.dims, self.use_segs = m.dims, m.segments(self.segments)
 
     def partitions(self):
         return [InputPartition(i) for i in range(self.n_buckets)]
@@ -115,7 +111,7 @@ class _SketchViewReader(DataSourceReader):
 
         import pyarrow.parquet as pq
 
-        from .sketches import merge_blob_list, sketch_from_bytes
+        from .sketches import merge_blob_list
         bucket = partition.value
         groups: dict[tuple, list] = {}
         for seg in self.use_segs:
@@ -136,13 +132,4 @@ class _SketchViewReader(DataSourceReader):
                     ent[1] += int(rows[i])
         for key in sorted(groups, key=repr):
             blobs, nrows = groups[key]
-            sk = sketch_from_bytes(merge_blob_list(blobs))
-            if hasattr(sk, "distinct_estimate"):
-                est = float(sk.distinct_estimate())
-            elif hasattr(sk, "estimate"):
-                est = float(sk.estimate())
-            elif hasattr(sk, "estimate_n"):
-                est = float(sk.estimate_n())
-            else:
-                est = float(getattr(sk, "n", float("nan")))
-            yield (*key, est, nrows)
+            yield (*key, _estimate(merge_blob_list(blobs)), nrows)

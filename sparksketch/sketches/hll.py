@@ -28,6 +28,27 @@ def _alpha(m: int) -> float:
     return 0.7213 / (1.0 + 1.079 / m)
 
 
+def bucket_rho(h: np.ndarray, p: int) -> tuple[np.ndarray, np.ndarray]:
+    """Register index and rank of signed-int64 hashes (Spark xxhash64):
+    bucket = top ``p`` bits, rho = 1 + leading zeros of the remaining
+    ``64 - p`` bits (``64 - p + 1`` when they are all zero)."""
+    hu = np.asarray(h, dtype=np.int64).view(np.uint64)
+    bucket = (hu >> np.uint64(64 - p)).astype(np.int64)
+    rest = hu << np.uint64(p)  # remaining bits, left-aligned
+    # clz via bit_length: 64 - bit_length(rest); log2 in float64 is exact
+    # for the leading-bit position of each 32-bit half
+    bl = np.zeros(hu.size, dtype=np.int64)
+    nz = rest != 0
+    r = rest[nz]
+    hi = (r >> np.uint64(32)).astype(np.float64)
+    lo = (r & np.uint64(0xFFFFFFFF)).astype(np.float64)
+    bl[nz] = np.where(hi > 0,
+                      33 + np.floor(np.log2(np.maximum(hi, 1))),
+                      1 + np.floor(np.log2(np.maximum(lo, 1)))).astype(np.int64)
+    rho = np.where(nz, 64 - bl + 1, 64 - p + 1)
+    return bucket, np.minimum(rho, 64 - p + 1).astype(np.uint8)
+
+
 class HyperLogLog(Sketch):
     KIND = KIND_HLL
 
@@ -44,23 +65,7 @@ class HyperLogLog(Sketch):
         """Vectorized batch insert from signed-int64 hashes (Spark xxhash64)."""
         if len(h) == 0:
             return
-        hu = np.asarray(h, dtype=np.int64).view(np.uint64)
-        bucket = (hu >> np.uint64(64 - self.p)).astype(np.int64)
-        rest = hu << np.uint64(self.p)  # remaining bits, left-aligned
-        # rho = 1 + count of leading zeros in the top (64-p) bits of rest
-        # clz via bit_length: 64 - bit_length(rest)
-        bl = np.zeros(hu.size, dtype=np.int64)
-        nz = rest != 0
-        # log2 of uint64 safely: use float64 (exact for leading-bit position)
-        r = rest[nz]
-        hi = (r >> np.uint64(32)).astype(np.float64)
-        lo = (r & np.uint64(0xFFFFFFFF)).astype(np.float64)
-        bl_nz = np.where(hi > 0,
-                         33 + np.floor(np.log2(np.maximum(hi, 1))),
-                         1 + np.floor(np.log2(np.maximum(lo, 1)))).astype(np.int64)
-        bl[nz] = bl_nz
-        rho = np.where(nz, 64 - bl + 1, 64 - self.p + 1).astype(np.uint8)
-        rho = np.minimum(rho, 64 - self.p + 1).astype(np.uint8)
+        bucket, rho = bucket_rho(h, self.p)
         np.maximum.at(self.registers, bucket, rho)
 
     def merge(self, other: Sketch) -> None:

@@ -24,6 +24,7 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import SparkSession, functions as F
 
+from .agg import _estimate
 from .sketches import merge_bytes, sketch_from_bytes
 
 __all__ = ["register_sql_functions"]
@@ -44,18 +45,8 @@ def register_sql_functions(spark: SparkSession) -> list[str]:
 
     @F.pandas_udf("double")
     def sketch_estimate(blobs: pd.Series) -> pd.Series:
-        out = np.empty(len(blobs), dtype=np.float64)
-        for sk, idxs in _per_blob_groups(blobs):
-            if hasattr(sk, "distinct_estimate"):
-                v = float(sk.distinct_estimate())
-            elif hasattr(sk, "estimate"):
-                v = float(sk.estimate())
-            elif hasattr(sk, "estimate_n"):
-                v = float(sk.estimate_n())
-            else:
-                v = float(getattr(sk, "n", float("nan")))
-            out[idxs] = v
-        return pd.Series(out)
+        est = {b: _estimate(b) for b in set(map(bytes, blobs))}
+        return pd.Series([est[bytes(b)] for b in blobs], dtype="float64")
 
     @F.pandas_udf("double")
     def sketch_quantile(blobs: pd.Series, qs: pd.Series) -> pd.Series:

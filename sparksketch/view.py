@@ -9,11 +9,22 @@ grouping set coarser than ``dims`` — never rescanning the facts.
 Compaction folds the segment log back to one segment with the same
 algebra.
 
-Storage layout (all Spark I/O, so hdfs/s3a work exactly like the IVF
-index sidecar — similarity.py ivf_write_index):
+Storage layout:
 
     <path>/segments/seg=<id>/*.parquet    [*dims, sketch, rows]
-    <path>/manifest/*.parquet             (seg, spec, dims, active, note)
+    <path>/manifest/manifest.parquet      (seg, spec, dims, active, note)
+
+Segments are written by Spark.  The manifest is one KB-scale parquet file
+the DRIVER reads and writes with pyarrow — no Spark job touches it.  Every
+mutation writes the whole new manifest to ``manifest/_tmp-<uuid>.parquet``
+and then renames it over ``manifest.parquet``, so a reader sees either the
+old manifest or the new one, never a missing or partial file.  A failed
+write leaves the old manifest in force plus a stray ``_tmp-*`` file, which
+pyarrow and Spark both skip (``_``-prefixed names are hidden); the new
+segment files it may leave are unreachable, because queries read only the
+segments the manifest lists.  The rename is atomic on POSIX local paths
+(and HDFS); object stores have no atomic rename.  Only local paths are
+verified here.
 
 ``seg`` is a parquet PARTITION column: restricting a query to specific
 segments (e.g. the last day's) is partition pruning in the scan, not a
@@ -22,57 +33,110 @@ a mismatched sketch spec fails loudly instead of silently merging
 incompatible blobs (the same contract the wire-format VERSION enforces
 at the byte level).
 
-Concurrency note: segment files are immutable once written and every
-manifest mutation rewrites the whole (O(segments), KB-scale) manifest,
-so the stored rows ARE the current state; production deployments that
-need transactional manifest commits under concurrent writers swap the
-io seam to Iceberg/Delta (io.py) and inherit their atomic commit.
+Concurrency note: segment files are immutable once written and each
+manifest commit is one atomic rename, so readers never block or see a
+torn state.  Concurrent WRITERS are not serialized: two appends racing
+on the same view both read manifest version n and the later rename wins,
+dropping the other's segment.  Deployments with concurrent writers swap
+the io seam to Iceberg/Delta (io.py) and inherit their atomic commit.
 """
 
 from __future__ import annotations
 
+import os
+import uuid
+from dataclasses import dataclass
 from typing import Sequence
 
+import pyarrow as pa
+import pyarrow.parquet as pq
+from pyarrow import fs as pafs
 from pyspark.sql import Column, DataFrame, SparkSession, functions as F
 
-from .agg import (SketchSpec, grouped_sketch_segmented,
-                  regroup_sketch_rows, with_sketch_estimate)
+from .agg import SketchSpec, grouped_sketch_segmented, regroup_sketch_rows
 
-_MANIFEST_SCHEMA = ("seg int, spec string, dims string, active boolean, "
-                    "note string")
+_MANIFEST_FILE = "manifest.parquet"
+_MANIFEST_SCHEMA = pa.schema([("seg", pa.int32()), ("spec", pa.string()),
+                              ("dims", pa.string()), ("active", pa.bool_()),
+                              ("note", pa.string())])
 
 
 def _segments_path(path: str) -> str:
     return path.rstrip("/") + "/segments"
 
 
-def _manifest_path(path: str) -> str:
-    return path.rstrip("/") + "/manifest"
+def _manifest_dir(path: str) -> tuple[pafs.FileSystem, str]:
+    d = path.rstrip("/") + "/manifest"
+    try:
+        return pafs.FileSystem.from_uri(d)
+    except pa.ArrowInvalid:  # relative local path
+        return pafs.LocalFileSystem(), os.path.abspath(d)
 
 
-def _read_manifest(spark: SparkSession, path: str) -> DataFrame:
-    return spark.read.schema(_MANIFEST_SCHEMA).parquet(_manifest_path(path))
+@dataclass(frozen=True)
+class _Manifest:
+    """A view's manifest: one ``(seg, spec, dims, active, note)`` row per
+    segment, sorted by segment id."""
+    rows: list[tuple]
+
+    @property
+    def dims(self) -> list[str]:
+        return self.rows[0][2].split(",") if self.rows[0][2] else []
+
+    @property
+    def spec(self) -> str:
+        return self.rows[0][1]
+
+    @property
+    def active(self) -> list[int]:
+        return [r[0] for r in self.rows if r[3]]
+
+    @property
+    def max_seg(self) -> int:
+        return self.rows[-1][0]
+
+    def segments(self, requested: Sequence[int] | None = None) -> list[int]:
+        """The segment ids a read covers: the active set by default, else
+        ``requested`` once validated.  Unknown ids raise, and so does
+        mixing compacted-away segments with active ones — the active
+        compaction already holds their rows, so the merge would count
+        them twice."""
+        if requested is None:
+            return self.active
+        segs = sorted({int(s) for s in requested})
+        known = {r[0]: r[3] for r in self.rows}
+        unknown = [s for s in segs if s not in known]
+        if unknown:
+            raise ValueError(f"unknown segment ids {unknown}; the view has "
+                             f"segments {sorted(known)}")
+        inactive = [s for s in segs if not known[s]]
+        if inactive and len(inactive) < len(segs):
+            raise ValueError(
+                f"segments {inactive} were compacted away; reading them "
+                f"with active segments {sorted(set(segs) - set(inactive))} "
+                "would count their rows twice")
+        return segs
 
 
-def _write_manifest_rows(spark: SparkSession, path: str, rows,
-                         mode: str) -> None:
-    (spark.createDataFrame(rows, _MANIFEST_SCHEMA)
-     .coalesce(1).write.mode(mode).parquet(_manifest_path(path)))
+def _read_manifest(path: str) -> _Manifest:
+    """The view's current manifest; raises ``FileNotFoundError`` when the
+    view has none yet."""
+    fs, d = _manifest_dir(path)
+    t = pq.read_table(f"{d}/{_MANIFEST_FILE}", filesystem=fs,
+                      schema=_MANIFEST_SCHEMA)
+    return _Manifest(sorted(tuple(r.values()) for r in t.to_pylist()))
 
 
-def _manifest_info(spark: SparkSession, path: str):
-    """(dims list, spec repr, active segment ids, max seg id, all rows).
-
-    The manifest is rewritten whole on every mutation (it is O(segments)
-    tiny), so the stored rows ARE the current state — no last-writer
-    reconciliation needed."""
-    rows = [tuple(r) for r in _read_manifest(spark, path).collect()]
-    if not rows:
-        raise ValueError(f"no sketch view manifest under {path}")
-    rows.sort(key=lambda r: r[0])
-    dims = rows[0][2].split(",") if rows[0][2] else []
-    active = sorted(r[0] for r in rows if r[3])
-    return dims, rows[0][1], active, max(r[0] for r in rows), rows
+def _write_manifest(path: str, rows: list[tuple]) -> None:
+    """Commit ``rows`` as the view's manifest: write a hidden temp file,
+    then rename it over the current one."""
+    fs, d = _manifest_dir(path)
+    fs.create_dir(d, recursive=True)
+    tmp = f"{d}/_tmp-{uuid.uuid4().hex}.parquet"
+    pq.write_table(pa.Table.from_pylist(
+        [dict(zip(_MANIFEST_SCHEMA.names, r)) for r in rows],
+        schema=_MANIFEST_SCHEMA), tmp, filesystem=fs)
+    fs.move(tmp, f"{d}/{_MANIFEST_FILE}")
 
 
 def view_materialize(df: DataFrame, dims: Sequence[str], spec: SketchSpec,
@@ -81,13 +145,10 @@ def view_materialize(df: DataFrame, dims: Sequence[str], spec: SketchSpec,
     """Create the view: build per-``dims`` sketch rows from ``df`` (one
     fact scan, raw rows never shuffle) and write them as segment 0."""
     dims = list(dims)
-    spark = df.sparkSession
     rows = grouped_sketch_segmented(df, dims, spec, cols)
     (rows.write.mode("overwrite")
      .parquet(_segments_path(path) + "/seg=0"))
-    _write_manifest_rows(
-        spark, path, [(0, repr(spec), ",".join(dims), True, note)],
-        "overwrite")
+    _write_manifest(path, [(0, repr(spec), ",".join(dims), True, note)])
 
 
 def view_append(df: DataFrame, spec: SketchSpec,
@@ -97,21 +158,37 @@ def view_append(df: DataFrame, spec: SketchSpec,
     The spec must match the view's recorded spec exactly — mergeable
     blobs of different shapes fail loudly here, not silently at query
     time.  Returns the new segment id."""
-    spark = df.sparkSession
-    dims, spec_repr, _, max_seg, rows_m = _manifest_info(spark, path)
-    if repr(spec) != spec_repr:
+    m = _read_manifest(path)
+    if repr(spec) != m.spec:
         raise ValueError(
-            f"sketch spec mismatch: view built with {spec_repr}, "
+            f"sketch spec mismatch: view built with {m.spec}, "
             f"append called with {repr(spec)}")
-    seg = max_seg + 1
-    rows = grouped_sketch_segmented(df, dims, spec, cols)
+    seg = m.max_seg + 1
+    rows = grouped_sketch_segmented(df, m.dims, spec, cols)
     (rows.write.mode("overwrite")
      .parquet(_segments_path(path) + f"/seg={seg}"))
-    _write_manifest_rows(
-        spark, path,
-        rows_m + [(seg, spec_repr, ",".join(dims), True, note)],
-        "overwrite")
+    _write_manifest(path, m.rows + [(seg, m.spec, ",".join(m.dims), True,
+                                     note)])
     return seg
+
+
+def _view_rows(spark: SparkSession, m: _Manifest, path: str,
+               group_cols: Sequence[str] | None, where: Column | None,
+               segments: Sequence[int] | None,
+               estimate_col: str | None = None) -> DataFrame:
+    src = spark.read.parquet(_segments_path(path))
+    src = src.filter(F.col("seg").isin(m.segments(segments)))
+    if where is not None:
+        src = src.filter(where)
+    dims = m.dims
+    gcols = dims if group_cols is None else list(group_cols)
+    unknown = [c for c in gcols if c not in dims]
+    if unknown:
+        raise ValueError(f"group cols {unknown} not in view dims {dims}")
+    # deterministic merge order: remaining dims, then segment id
+    return regroup_sketch_rows(src.select(*dims, "seg", "sketch", "rows"),
+                               gcols, order_cols=[*dims, "seg"],
+                               estimate_col=estimate_col)
 
 
 def view_rows(spark: SparkSession, path: str,
@@ -125,20 +202,10 @@ def view_rows(spark: SparkSession, path: str,
     mergeable.  ``where`` filters on dim columns BEFORE the merge (the
     predicate reaches the parquet scan of KB-scale rows); ``segments``
     restricts to specific segment ids via parquet partition pruning
-    (default: the active set)."""
-    dims, _, active, _, _ = _manifest_info(spark, path)
-    src = spark.read.parquet(_segments_path(path))
-    segs = list(segments) if segments is not None else active
-    src = src.filter(F.col("seg").isin([int(s) for s in segs]))
-    if where is not None:
-        src = src.filter(where)
-    gcols = dims if group_cols is None else list(group_cols)
-    unknown = [c for c in gcols if c not in dims]
-    if unknown:
-        raise ValueError(f"group cols {unknown} not in view dims {dims}")
-    # deterministic merge order: remaining dims, then segment id
-    return regroup_sketch_rows(src.select(*dims, "seg", "sketch", "rows"),
-                               gcols, order_cols=[*dims, "seg"])
+    (default: the active set; unknown ids, or compacted-away ids mixed
+    with active ones, raise ``ValueError``)."""
+    return _view_rows(spark, _read_manifest(path), path, group_cols, where,
+                      segments)
 
 
 def view_query(spark: SparkSession, path: str,
@@ -147,10 +214,10 @@ def view_query(spark: SparkSession, path: str,
                segments: Sequence[int] | None = None,
                estimate_col: str = "estimate") -> DataFrame:
     """``view_rows`` + executor-side estimates: the driver only ever sees
-    (group, estimate, rows) — sketch blobs stay on the executors."""
-    merged = view_rows(spark, path, group_cols, where, segments)
-    return (with_sketch_estimate(merged, estimate_col)
-            .drop("sketch"))
+    (group, rows, estimate) — sketch blobs stay on the executors, and the
+    estimate is taken inside the merge's own Python operator."""
+    return _view_rows(spark, _read_manifest(path), path, group_cols, where,
+                      segments, estimate_col)
 
 
 def view_stream_writer(dims: Sequence[str], spec: SketchSpec,
@@ -174,16 +241,14 @@ def view_stream_writer(dims: Sequence[str], spec: SketchSpec,
     dims = list(dims)
 
     def fn(batch_df: DataFrame, batch_id: int) -> None:
-        from pyspark.errors import AnalysisException
-        spark = batch_df.sparkSession
         note = f"stream_batch={batch_id}"
         try:
-            _, _, _, _, rows_m = _manifest_info(spark, path)
-        except AnalysisException:  # no manifest yet: first batch creates
+            m = _read_manifest(path)
+        except FileNotFoundError:  # no manifest yet: first batch creates
             view_materialize(batch_df, dims, spec, cols, path, note=note)
             return
         if any(nt == note or nt.startswith(note + ";")
-               for *_a, nt in rows_m):
+               for *_a, nt in m.rows):
             return  # replayed batch: the prior attempt committed
         view_append(batch_df, spec, cols, path, note=note)
 
@@ -195,18 +260,17 @@ def view_compact(spark: SparkSession, path: str,
     """Fold the active segments into one (pure sketch algebra, no fact
     scan).  Old segments stay on storage for lineage but are marked
     inactive; returns the new segment id."""
-    dims, spec_repr, active, max_seg, rows_m = _manifest_info(spark, path)
-    merged = view_rows(spark, path)  # active set at full dims
-    seg = max_seg + 1
+    m = _read_manifest(path)
+    active = set(m.active)
+    merged = _view_rows(spark, m, path, None, None, None)  # full dims
+    seg = m.max_seg + 1
     (merged.write.mode("overwrite")
      .parquet(_segments_path(path) + f"/seg={seg}"))
     # notes are PRESERVED (the streaming writer's exactly-once check
     # matches on them); the compaction marker is appended after ';'
     kept = [(s, sp, d, act and s not in active,
              f"{nt}; compacted into {seg}" if act and s in active else nt)
-            for s, sp, d, act, nt in rows_m]
-    _write_manifest_rows(
-        spark, path,
-        kept + [(seg, spec_repr, ",".join(dims), True, note)],
-        "overwrite")
+            for s, sp, d, act, nt in m.rows]
+    _write_manifest(path, kept + [(seg, m.spec, ",".join(m.dims), True,
+                                   note)])
     return seg

@@ -77,3 +77,28 @@ class TestSketchViewDataSource:
                 for r in ev.groupBy("flag").agg(
                     F.countDistinct("user_id").alias("exact")).collect()}
         assert got == want and None in got
+
+    def test_segments_option_validated(self, spark, sf_dir,
+                                       tmp_path_factory):
+        """The ``segments`` option goes through the view's manifest check:
+        an unknown id raises, and so does a compacted-away segment mixed
+        with the active one."""
+        from sparksketch.view import view_compact
+        events = spark.read.parquet(f"{sf_dir}/events.parquet")
+        path = str(tmp_path_factory.mktemp("dss") / "view")
+        spec = BottomKSpec(k=1024)
+        h = F.xxhash64(F.col("event_id").cast("string")) % 2 == 0
+        view_materialize(events.filter(h), ["event_type"], spec,
+                         ["user_id"], path)
+        view_append(events.filter(~h), spec, ["user_id"], path)
+        seg = view_compact(spark, path)
+
+        def read(segs):
+            return (spark.read.format("sketchview").option("path", path)
+                    .option("segments", segs).load().collect())
+        with pytest.raises(Exception, match="unknown segment ids"):
+            read(f"{seg},9")
+        with pytest.raises(Exception, match="count their rows twice"):
+            read(f"1,{seg}")
+        assert (sum(r["rows"] for r in read(f"{seg}"))
+                == sum(r["rows"] for r in read("0,1")))

@@ -38,13 +38,23 @@ class TestNullGroupKeys:
         from sparksketch.agg import HLLSpec, grouped_sketch, \
             grouped_sketch_segmented
         df = self._df(spark)
-        seg = {r["g"]: bytes(r["sketch"])
-               for r in grouped_sketch_segmented(df, ["g"], HLLSpec(p=12),
-                                                 ["v"]).collect()}
         plain = {r["g"]: bytes(r["sketch"])
                  for r in grouped_sketch(df, ["g"], HLLSpec(p=12),
                                          ["v"]).collect()}
-        assert seg == plain  # byte-identical per group incl. the NULL group
+        # 3-row Arrow batches: every key, NULL included, recurs across the
+        # batches of one partition, so the grouped HLL block must carry
+        # each group's registers from batch to batch
+        conf = "spark.sql.execution.arrow.maxRecordsPerBatch"
+        default = spark.conf.get(conf)
+        for batch in (default, "3"):
+            spark.conf.set(conf, batch)
+            try:
+                seg = {r["g"]: bytes(r["sketch"])
+                       for r in grouped_sketch_segmented(
+                           df, ["g"], HLLSpec(p=12), ["v"]).collect()}
+            finally:
+                spark.conf.set(conf, default)
+            assert seg == plain  # byte-identical per group incl. NULL
 
     def test_regroup_and_cube_with_nulls(self, spark):
         from sparksketch.agg import HLLSpec, grouped_sketch_cube, \

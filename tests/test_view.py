@@ -92,9 +92,8 @@ class TestSketchView:
                  for r in view_query(spark, path).collect()}
         assert after == before
         # one active segment now, and it is the new one
-        from sparksketch.view import _manifest_info
-        _, _, active, _, _ = _manifest_info(spark, path)
-        assert active == [seg]
+        from sparksketch.view import _read_manifest
+        assert _read_manifest(path).active == [seg]
 
     def test_spec_mismatch_rejected(self, spark, events, tmp_path):
         path = self._build(events, tmp_path)
@@ -110,7 +109,7 @@ class TestSketchView:
         """foreachBatch maintenance: one segment per micro-batch from a
         file stream; a replayed batch id is a no-op; the final view
         answers exactly."""
-        from sparksketch.view import _manifest_info, view_stream_writer
+        from sparksketch.view import _read_manifest, view_stream_writer
         src = str(tmp_path / "src")
         path = str(tmp_path / "sview")
         # two source files -> two micro-batches (maxFilesPerTrigger=1);
@@ -134,14 +133,14 @@ class TestSketchView:
              .option("checkpointLocation", str(tmp_path / "ckpt"))
              .trigger(availableNow=True).start())
         q.awaitTermination(120)
-        _, _, active, _, rows_m = _manifest_info(spark, path)
+        m = _read_manifest(path)
+        active = m.active
         assert len(active) == 2
-        notes = sorted(r[4] for r in rows_m)
+        notes = sorted(r[4] for r in m.rows)
         assert notes == ["stream_batch=0", "stream_batch=1"]
         # crash-replay of the last committed batch: a no-op
         writer(events.filter(~h), 1)
-        _, _, active2, _, _ = _manifest_info(spark, path)
-        assert active2 == active
+        assert _read_manifest(path).active == active
         got = {r["event_type"]: r["estimate"]
                for r in view_query(spark, path).collect()}
         want = _exact(events, ["event_type"])
@@ -191,3 +190,62 @@ class TestSketchView:
         for r in view_query(spark, path).collect():
             exact = want[(r["event_type"],)][0]
             assert abs(r["estimate"] - exact) <= 3 * sigma * exact + 2
+
+    @pytest.mark.parametrize("op", ["append", "compact"])
+    def test_failed_manifest_write_keeps_prior_answers(
+            self, spark, events, tmp_path, monkeypatch, op):
+        """The manifest commit fails after its temp file is written and
+        before the rename: the view still answers exactly as before, byte
+        for byte, and both readers skip the stray ``_tmp-*`` file."""
+        import os
+
+        import pyarrow.parquet as pq
+
+        from sparksketch.datasource import SketchViewDataSource
+        from sparksketch.view import _read_manifest
+        spark.dataSource.register(SketchViewDataSource)
+        path = self._build(events, tmp_path)
+
+        def answers():
+            q = view_query(spark, path).toPandas()
+            blobs = sorted((r["event_type"], bytes(r["sketch"]))
+                           for r in view_rows(spark, path).collect())
+            read = (spark.read.format("sketchview").option("path", path)
+                    .load().toPandas().sort_values("event_type")
+                    .reset_index(drop=True))
+            return q, blobs, read
+
+        before, rows_before = answers(), _read_manifest(path).rows
+        write_table = pq.write_table
+
+        def crash(table, where, **kw):
+            write_table(table, where, **kw)
+            raise RuntimeError("injected crash before the rename")
+
+        monkeypatch.setattr(pq, "write_table", crash)
+        with pytest.raises(RuntimeError, match="injected crash"):
+            if op == "append":
+                view_append(events, self.SPEC, ["user_id"], path)
+            else:
+                view_compact(spark, path)
+        monkeypatch.undo()
+        assert any(f.startswith("_tmp-")
+                   for f in os.listdir(f"{path}/manifest"))
+        assert _read_manifest(path).rows == rows_before
+        after = answers()
+        assert after[0].equals(before[0])
+        assert after[1] == before[1]
+        assert after[2].equals(before[2])
+
+    def test_segments_validated(self, spark, events, tmp_path):
+        """Unknown segment ids raise; so do compacted-away segments mixed
+        with active ones (their rows would count twice)."""
+        path = self._build(events, tmp_path)
+        with pytest.raises(ValueError, match="unknown segment ids \\[7\\]"):
+            view_rows(spark, path, segments=[0, 7])
+        seg = view_compact(spark, path)
+        with pytest.raises(ValueError, match="count their rows twice"):
+            view_rows(spark, path, segments=[0, seg])
+        # compacted-away segments on their own are a lineage read
+        lineage = view_query(spark, path, group_cols=[], segments=[0, 1])
+        assert lineage.collect()[0]["rows"] == events.count()

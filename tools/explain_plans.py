@@ -9,6 +9,7 @@ scale-critical properties directly from the plan text:
 - the sketch-build plan has NO Exchange before the mapInPandas partials
   (raw rows never shuffle; only sketch blobs do)
 - probe-side plans stay in WholeStageCodegen up to the single Arrow eval
+- a sketch-view query folds and estimates in ONE Python operator
 
 Usage: PYTHONPATH=/root/repo python tools/explain_plans.py [sf_dir]
 """
@@ -268,7 +269,8 @@ def main():
     import tempfile
     import shutil
     from sparksketch.agg import BottomKSpec
-    from sparksketch.view import view_append, view_materialize, view_rows
+    from sparksketch.view import (view_append, view_materialize,
+                                  view_query, view_rows)
     events = spark.read.parquet(f"{SF}/events.parquet")
     vdir = tempfile.mkdtemp(prefix="sparksketch_planview_")
     try:
@@ -281,6 +283,17 @@ def main():
                                   segments=[0]))
         ok &= check("sketch view: segment restriction is partition "
                     "pruning", vplan, ["PartitionFilters", "seg"], [])
+        # the query folds AND estimates in its one Python operator: no
+        # estimate UDF (ArrowEvalPython) after the merge's MapInPandas
+        qplan = plan_of(view_query(spark, vdir, ["event_type"]))
+        print(qplan)
+        py_ops = re.findall(r"^\(\d+\) (\w*(?:Python|Pandas|InArrow)\w*)",
+                            qplan, re.M)
+        ok &= check("sketch view query: one Python operator", qplan,
+                    ["MapInPandas"], ["ArrowEvalPython"])
+        if py_ops != ["MapInPandas"]:
+            print(f"FAIL  sketch view query: Python operators {py_ops}")
+            ok = False
     finally:
         shutil.rmtree(vdir, ignore_errors=True)
 
