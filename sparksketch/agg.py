@@ -20,8 +20,14 @@ Execution design (SURVEY.md §4, BASELINE.json north_rule):
   merge) for low-cardinality groups; ``grouped_sketch_segmented`` builds
   per-(input partition, group) partials inside ``mapInPandas`` so raw rows
   never shuffle — the path for per-conversation sketches at billions of
-  groups.  Salting/segmenting are sound because every mergeable sketch
-  kind here has a commutative+associative merge.
+  groups.  Merging sketch ROWS per group (stage 2 of the segmented build,
+  view appends/compactions/queries, streaming windows, the cube) is one
+  fold, :func:`regroup_sketch_rows`: rows arrive sorted by group, so each
+  Arrow batch is a sequence of same-group runs merged by
+  ``merge_blob_runs`` — one stacked NumPy max/OR per batch for HLL and
+  dense Bloom, decode-and-merge for the other kinds.  Salting/segmenting
+  are sound because every mergeable sketch kind here has a
+  commutative+associative merge.
 - **Byte-identical associativity.** OR/sum/max/min-merge kinds (bloom,
   counting, layered, HLL, CMS, bottom-k, minhash) produce byte-identical
   results for ANY partitioning / merge order.  KLL and t-digest are
@@ -48,8 +54,8 @@ from .sketches import (BloomFilter, BottomKSketch, CountMinSketch,
                        CountingBloomFilter, HyperLogLog, KLLSketch,
                        LayeredBloomFilter, MinHashSketch, StableBloomFilter,
                        TDigest, merge_blob_list, sketch_from_bytes)
-from .sketches.base import Sketch
-from .sketches.hll import bucket_rho
+from .sketches.base import Sketch, merge_blob_runs
+from .sketches.hll import blob_prefix, bucket_rho
 
 
 def _partials_schema(names: Sequence[str]) -> str:
@@ -685,7 +691,7 @@ def grouped_sketch(df: DataFrame, group_cols: Sequence[str],
 def _group_sketches(batches: Iterator[pd.DataFrame],
                     group_cols: list[str],
                     spec: SketchSpec) -> dict[tuple, list]:
-    """``{group key: [sketch, rows]}`` over a partition's Arrow batches,
+    """``{group key: [blob, rows]}`` over a partition's Arrow batches,
     one ``spec.update`` per (batch, group)."""
     sks: dict[tuple, list] = {}
     for pdf in batches:
@@ -698,19 +704,22 @@ def _group_sketches(batches: Iterator[pd.DataFrame],
                 ent = sks[key] = [spec.empty(), 0]
             spec.update(ent[0], sub)
             ent[1] += len(sub)
-    return sks
+    return {k: [sk.to_bytes(), n] for k, (sk, n) in sks.items()}
 
 
 def _batch_group_codes(pdf: pd.DataFrame,
                        group_cols: list[str]) -> tuple[np.ndarray, list]:
     """Per-row group code of one batch, and each code's key normalized
-    as :func:`_norm_key` does (NULL and NaN both become ``None``)."""
+    as :func:`_norm_key` does (NULL and NaN both become ``None``, and
+    share one code)."""
     codes = np.zeros(len(pdf), dtype=np.int64)
+    if not group_cols:
+        return codes, [()]
     for c in group_cols:
         cc, uniq = pd.factorize(pdf[c], use_na_sentinel=False)
         _, first, codes = np.unique(codes * len(uniq) + cc,
                                     return_index=True, return_inverse=True)
-    cols = [pdf[c].to_numpy()[first].tolist() for c in group_cols]
+    cols = [pdf[c].take(first).tolist() for c in group_cols]
     return codes.reshape(-1), [_norm_key(k) for k in zip(*cols)]
 
 
@@ -718,7 +727,8 @@ def _hll_group_sketches(batches: Iterator[pd.DataFrame],
                         group_cols: list[str], p: int) -> dict[tuple, list]:
     """:func:`_group_sketches` for HLL: every group's registers are one
     row of a ``[groups x 2^p]`` block, updated by a single max-scatter per
-    Arrow batch.  Max is order-free, so the bytes equal the per-group
+    Arrow batch, and each blob is the HLL prefix plus its block row.  Max
+    is order-free, so the bytes equal the per-group
     ``HyperLogLog.add_hashes`` result."""
     m = 1 << p
     index: dict[tuple, int] = {}
@@ -739,7 +749,8 @@ def _hll_group_sketches(batches: Iterator[pd.DataFrame],
         bucket, rho = bucket_rho(pdf["h1"].to_numpy(), p)
         np.maximum.at(block, (gid, bucket), rho)
         rows += np.bincount(gid, minlength=len(rows))
-    return {k: [HyperLogLog(p, block[g]), int(rows[g])]
+    prefix = blob_prefix(p)
+    return {k: [prefix + block[g].tobytes(), int(rows[g])]
             for k, g in index.items()}
 
 
@@ -770,11 +781,13 @@ def grouped_sketch_segmented(df: DataFrame, group_cols: Sequence[str],
     singletons.
 
     Stage 2 is ALSO segmented (``repartition(group)`` + ``mapInPandas``
-    dict-fold) rather than ``applyInPandas``: per-group Arrow slicing
-    costs ~ms per group, which at 10^6+ groups dominates everything —
-    the dict-fold costs ~us per group.  Partials merge in sorted
-    stage-1-partition order (``_pid``) per group, so grouped results are
-    deterministic for every sketch kind including the compacting ones.
+    run fold, :func:`regroup_sketch_rows`) rather than ``applyInPandas``:
+    per-group Arrow slicing costs ~ms per group, which at 10^6+ groups
+    dominates everything.  Partials merge in sorted stage-1-partition
+    order (``_pid``) per group, so grouped results are deterministic for
+    every sketch kind including the compacting ones.  Stage 1 emits blobs
+    directly: an HLL group's blob is the HLL prefix plus its register-block
+    row, with no per-group sketch object.
     """
     group_cols = list(group_cols)
     prepared = spec.prepare(df, cols, keep=group_cols)
@@ -791,7 +804,7 @@ def grouped_sketch_segmented(df: DataFrame, group_cols: Sequence[str],
             pid = TaskContext.get().partitionId()
             keys = sorted(sks, key=_null_last)  # canonical emit order
             data = {c: [k[i] for k in keys] for i, c in enumerate(group_cols)}
-            data["sketch"] = [sks[k][0].to_bytes() for k in keys]
+            data["sketch"] = [sks[k][0] for k in keys]
             data["rows"] = [sks[k][1] for k in keys]
             data["_pid"] = pid
             yield pd.DataFrame(data)
@@ -809,6 +822,16 @@ def regroup_sketch_rows(grouped: DataFrame, group_cols: Sequence[str],
     grouping-set views are an algebra over KB-scale sketch rows, never a
     rescan of the data.  ``order_cols`` (e.g. the dropped dims) fixes the
     per-group merge order for determinism.
+
+    The rows are repartitioned by ``group_cols`` and sorted by them (then
+    ``order_cols``), so inside each Arrow batch a group is one run of
+    consecutive rows.  Each batch's runs merge in one
+    :func:`~sparksketch.sketches.base.merge_blob_runs` call (a stacked
+    NumPy max/OR for HLL and dense Bloom, no sketch objects) and ``rows``
+    sums by ``np.add.reduceat``.  A group already in the accumulator —
+    its rows straddle two batches — merges as ``merge_blob_list([acc,
+    *run])``, the same decode order as one list, so KLL and t-digest bytes
+    do not depend on where batches split.
 
     With ``estimate_col``, the fold also estimates each merged sketch and
     emits ``[*group_cols, rows, <estimate_col> double]`` instead of the
@@ -828,18 +851,30 @@ def regroup_sketch_rows(grouped: DataFrame, group_cols: Sequence[str],
         for pdf in batches:
             if not len(pdf):
                 continue
-            it = (pdf.groupby(group_cols, sort=False, dropna=False)
-                  if group_cols else [((), pdf)])
-            for key, sub in it:
-                key = _norm_key(key)
+            # one run per group; the stable sort keeps each group's rows
+            # in arrival order (a no-op on the sorted input)
+            codes, keys = _batch_group_codes(pdf, group_cols)
+            order = np.argsort(codes, kind="stable")
+            codes = codes[order]
+            starts = np.flatnonzero(np.diff(codes, prepend=-1))
+            ends = np.append(starts[1:], len(codes))
+            blobs = pdf["sketch"].to_numpy()[order].tolist()
+            rows = np.add.reduceat(pdf["rows"].to_numpy()[order], starts)
+            new = []  # (entry, run) of groups first seen in this batch
+            for s, e, n in zip(starts, ends, rows):
+                key = keys[codes[s]]
                 ent = acc.get(key)
-                blobs = [bytes(b) for b in sub["sketch"]]
                 if ent is None:
-                    acc[key] = [merge_blob_list(blobs),
-                                int(sub["rows"].sum())]
-                else:
-                    ent[0] = merge_blob_list([ent[0], *blobs])
-                    ent[1] += int(sub["rows"].sum())
+                    ent = acc[key] = [None, 0]
+                    new.append((ent, blobs[s:e]))
+                else:  # straddles batches: merge as one list, in order
+                    ent[0] = merge_blob_list([ent[0], *blobs[s:e]])
+                ent[1] += int(n)
+            merged = merge_blob_runs(
+                [b for _, run in new for b in run],
+                np.cumsum([0, *(len(run) for _, run in new)])[:-1])
+            for (ent, _), blob in zip(new, merged):
+                ent[0] = blob
         if acc:
             keys = sorted(acc, key=_null_last)
             data = {c: [k[i] for k in keys]

@@ -6,6 +6,8 @@ Stage-1 output (one sketch row per partition, from the one partial
 builder behind agg.build_partials, which also times each partition) is
 persisted as parquet keyed by (run_id, pid) together with a manifest JSON
 recording input files, spec repr, per-partition row counts and wall-times.
+The manifest is written to a temp file and renamed over the old one, so a
+crash mid-write leaves the previous manifest loadable.
 ``resume`` re-builds only the missing partitions and re-runs the cheap
 merge — the expensive scan+build work is never repeated.
 
@@ -22,6 +24,7 @@ from typing import Sequence
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from .agg import SketchSpec, build_partials
+from .io import write_text_atomic
 from .sketches import merge_blob_list
 
 
@@ -77,8 +80,8 @@ def checkpoint_partials(df: DataFrame, spec: SketchSpec,
         n_partitions=n_parts,
         completed={str(r.pid): {"rows": r.rows, "wall_sec": round(r.wall_sec, 4)}
                    for r in done})
-    with open(os.path.join(ckpt_dir, f"manifest_{run_id}.json"), "w") as f:
-        f.write(manifest.to_json())
+    write_text_atomic(os.path.join(ckpt_dir, f"manifest_{run_id}.json"),
+                      manifest.to_json())
     return manifest
 
 

@@ -16,9 +16,18 @@ or compacted-away ids mixed with active ones, raise).  Each input
 partition owns a deterministic hash bucket of the GROUP KEY space: it
 scans those segments' sketch rows with pyarrow (KB-scale rows — the fact
 table was only touched when the segments were built), keeps its bucket's
-groups, merges their blobs with the sketch algebra, and emits one
-(group, estimate, rows) tuple per group.  The merge is per-group
-associative+commutative, so bucket-parallel reads are exact.
+groups (the bucket test runs once per distinct key), stable-sorts those
+rows by key and folds each key's run with ``merge_blob_runs`` (one stacked
+NumPy max/OR for HLL and dense Bloom), and emits one (group, estimate,
+rows) tuple per group.  The merge is per-group associative+commutative,
+so bucket-parallel reads are exact.
+
+Read amplification: segments carry no bucket column, so EVERY bucket task
+reads every row of every segment it covers and keeps about 1/buckets of
+them — the view is read ``buckets`` times over.  Rows are KB-scale sketch
+rows, so this is cheap at today's view sizes; a persisted
+``bucket = pmod(xxhash64(*dims), B)`` column written at append/compact
+time would let each task read only its slice (ROADMAP item 1).
 
 This surface is the catalog-style integration seam: the same view
 directory serves `view_query` (DataFrame API), the registered SQL
@@ -108,12 +117,15 @@ class _SketchViewReader(DataSourceReader):
 
     def read(self, partition):
         import glob
+        from itertools import repeat
 
+        import numpy as np
         import pyarrow.parquet as pq
 
-        from .sketches import merge_blob_list
+        from .sketches.base import merge_blob_runs
         bucket = partition.value
-        groups: dict[tuple, list] = {}
+        mine: dict[tuple, bool] = {}  # bucket test, once per distinct key
+        keys, blobs, rows = [], [], []
         for seg in self.use_segs:
             for f in sorted(glob.glob(
                     self.path.rstrip("/")
@@ -121,15 +133,27 @@ class _SketchViewReader(DataSourceReader):
                 t = pq.read_table(f, columns=[*self.dims, "sketch",
                                               "rows"])
                 cols = [t.column(d).to_pylist() for d in self.dims]
-                blobs = t.column("sketch").to_pylist()
-                rows = t.column("rows").to_pylist()
-                for i in range(t.num_rows):
-                    key = tuple(c[i] for c in cols)
-                    if _bucket(key, self.n_buckets) != bucket:
-                        continue
-                    ent = groups.setdefault(key, [[], 0])
-                    ent[0].append(blobs[i])
-                    ent[1] += int(rows[i])
-        for key in sorted(groups, key=repr):
-            blobs, nrows = groups[key]
-            yield (*key, _estimate(merge_blob_list(blobs)), nrows)
+                for key, blob, n in zip(
+                        zip(*cols) if cols else repeat((), t.num_rows),
+                        t.column("sketch").to_pylist(),
+                        t.column("rows").to_pylist()):
+                    ok = mine.get(key)
+                    if ok is None:
+                        ok = mine[key] = (_bucket(key, self.n_buckets)
+                                          == bucket)
+                    if ok:
+                        keys.append(key)
+                        blobs.append(blob)
+                        rows.append(n)
+        if not keys:
+            return
+        # stable sort: each group's rows stay in segment/file/row order
+        reprs = [repr(k) for k in keys]
+        order = sorted(range(len(keys)), key=reprs.__getitem__)
+        starts = [j for j, i in enumerate(order)
+                  if j == 0 or reprs[i] != reprs[order[j - 1]]]
+        merged = merge_blob_runs([blobs[i] for i in order], starts)
+        nrows = np.add.reduceat(np.asarray(rows, dtype=np.int64)[order],
+                                starts)
+        for s, blob, n in zip(starts, merged, nrows):
+            yield (*keys[order[s]], _estimate(blob), int(n))

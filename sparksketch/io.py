@@ -14,6 +14,9 @@ works unchanged because they only consume DataFrames.  Writes go through
 
 from __future__ import annotations
 
+import os
+import uuid
+
 from pyspark.sql import DataFrame, SparkSession
 
 
@@ -34,6 +37,23 @@ def write_table(df: DataFrame, target: str, fmt: str = "parquet",
         df.write.mode(mode).parquet(target)
     else:
         df.write.format(fmt).mode(mode).save(target)
+
+
+def write_text_atomic(path: str, text: str) -> None:
+    """Write a small local file (a manifest or pointer) as one commit:
+    write a temp file beside ``path``, sync it, and rename it over
+    ``path``.  A failed write leaves the previous file whole."""
+    tmp = f"{path}.tmp-{uuid.uuid4().hex}"
+    try:
+        with open(tmp, "w") as f:
+            f.write(text)
+            f.flush()
+            os.fsync(f.fileno())
+        os.replace(tmp, path)  # atomic on POSIX
+    except BaseException:
+        if os.path.exists(tmp):
+            os.unlink(tmp)
+        raise
 
 
 def read_stream(spark: SparkSession, source: str, schema,

@@ -18,8 +18,8 @@ import numpy as np
 from ..bitops import popcount
 from ..hashing import edh_indices_flat
 from ..shape import Shape
-from .base import (KIND_BLOOM, KIND_BLOOM_SPARSE, Sketch, pack_header,
-                   register, sketch_from_bytes)
+from .base import (HEADER_SIZE, KIND_BLOOM, KIND_BLOOM_SPARSE, Sketch,
+                   pack_header, register, sketch_from_bytes)
 
 _BLOOM_HDR = struct.Struct("<QI")
 _SPARSE_HDR = struct.Struct("<QII")
@@ -188,5 +188,7 @@ def pick_representation(bf: BloomFilter, sparse_threshold: float = 0.1) -> Sketc
     return bf
 
 
-register(KIND_BLOOM, BloomFilter._decode)
+# dense words merge by OR, and OR over their little-endian bytes is the same
+register(KIND_BLOOM, BloomFilter._decode,
+         elementwise=(HEADER_SIZE + _BLOOM_HDR.size, np.bitwise_or))
 register(KIND_BLOOM_SPARSE, SparseBloomFilter._decode)

@@ -13,7 +13,7 @@ import struct
 
 import numpy as np
 
-from .base import KIND_HLL, Sketch, pack_header, register
+from .base import HEADER_SIZE, KIND_HLL, Sketch, pack_header, register
 
 _HDR = struct.Struct("<B")
 
@@ -26,6 +26,11 @@ def _alpha(m: int) -> float:
     if m == 64:
         return 0.709
     return 0.7213 / (1.0 + 1.079 / m)
+
+
+def blob_prefix(p: int) -> bytes:
+    """The bytes of an HLL blob before its ``2^p`` registers."""
+    return pack_header(KIND_HLL) + _HDR.pack(p)
 
 
 def bucket_rho(h: np.ndarray, p: int) -> tuple[np.ndarray, np.ndarray]:
@@ -87,7 +92,7 @@ class HyperLogLog(Sketch):
         return 1.04 / math.sqrt(self.m)
 
     def to_bytes(self) -> bytes:
-        return pack_header(self.KIND) + _HDR.pack(self.p) + self.registers.tobytes()
+        return blob_prefix(self.p) + self.registers.tobytes()
 
     @staticmethod
     def _decode(body: memoryview) -> "HyperLogLog":
@@ -96,4 +101,5 @@ class HyperLogLog(Sketch):
         return HyperLogLog(int(p), regs)
 
 
-register(KIND_HLL, HyperLogLog._decode)
+register(KIND_HLL, HyperLogLog._decode,
+         elementwise=(HEADER_SIZE + _HDR.size, np.maximum))

@@ -33,9 +33,10 @@ from typing import Iterator, Sequence, Tuple
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from .agg import SketchSpec, grouped_sketch
+from .agg import SketchSpec, grouped_sketch, regroup_sketch_rows
+from .io import write_text_atomic
 from .shape import StableShape
-from .sketches import merge_blob_list, sketch_from_bytes
+from .sketches import sketch_from_bytes
 from .sketches.stable import StableBloomFilter
 
 
@@ -213,12 +214,10 @@ class WindowedSketchState:
 
     def _commit(self, version: str) -> None:
         import json
-        tmp = self._pointer_path() + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump({"version": version,
-                       "max_seen_ts": (self._max_seen_ts.isoformat()
-                                       if self._max_seen_ts else None)}, f)
-        os.replace(tmp, self._pointer_path())  # atomic on POSIX
+        write_text_atomic(self._pointer_path(), json.dumps(
+            {"version": version,
+             "max_seen_ts": (self._max_seen_ts.isoformat()
+                             if self._max_seen_ts else None)}))
 
     def _gc_old_versions(self, keep: str) -> None:
         import shutil
@@ -238,7 +237,7 @@ class WindowedSketchState:
         live = self._current_state_path()
         if live is not None:
             parts = spark.read.parquet(live).unionByName(parts)
-        merged = self._fold(parts)
+        merged = regroup_sketch_rows(parts, self._keys)
         if self.watermark is not None:
             hi = keyed.select(F.max("window_start")).first()[0]
             if hi is not None:
@@ -254,20 +253,6 @@ class WindowedSketchState:
             os.path.join(self.state_dir, version))
         self._commit(version)
         self._gc_old_versions(keep=version)
-
-    def _fold(self, parts: DataFrame) -> DataFrame:
-        keys = self._keys
-        ktypes = dict(parts.dtypes)
-        schema = ", ".join([f"`{c}` {ktypes[c]}" for c in keys]
-                           + ["sketch binary", "rows long"])
-
-        def fold(key, pdf: pd.DataFrame) -> pd.DataFrame:
-            data = {c: [key[i]] for i, c in enumerate(keys)}
-            data["sketch"] = [merge_blob_list(bytes(b) for b in pdf["sketch"])]
-            data["rows"] = [int(pdf["rows"].sum())]
-            return pd.DataFrame(data)
-
-        return parts.groupBy(*keys).applyInPandas(fold, schema)
 
     def snapshot(self, spark: SparkSession) -> DataFrame:
         """Current merged state: one row per (window, group)."""

@@ -72,6 +72,63 @@ class TestCheckpointResume:
         assert sorted(int(p) for p in m.completed) == list(range(8))
         assert m.completed["3"]["rows"] == m.completed["4"]["rows"] == 500
 
+    def test_failed_manifest_write_keeps_prior_manifest(self, spark,
+                                                        tmp_path,
+                                                        monkeypatch):
+        """A manifest write that dies after writing part of its JSON leaves
+        the prior manifest loadable, and a later resume still yields bytes
+        equal to a full build."""
+        import builtins
+
+        import sparksketch.io as sparksketch_io
+        from sparksketch.agg import HLLSpec, build_partials, tree_aggregate
+        from sparksketch.checkpoint import (checkpoint_partials,
+                                            merged_sketch_bytes,
+                                            missing_pids, resume)
+
+        class TornFile:
+            def __init__(self, f):
+                self.f = f
+
+            def __enter__(self):
+                return self
+
+            def __exit__(self, *exc):
+                self.f.close()
+
+            def write(self, text):
+                self.f.write(text[:len(text) // 2])
+                self.f.flush()
+                raise OSError("disk full")
+
+        def torn_open(path, mode="r", *args, **kwargs):
+            f = builtins.open(path, mode, *args, **kwargs)
+            return TornFile(f) if "w" in mode else f
+
+        df = (spark.range(0, 3000, 1, 6)
+              .select(F.concat(F.lit("u"), F.col("id") % 900)
+                      .alias("user_id")))
+        spec, ckpt = HLLSpec(p=10), str(tmp_path)
+        checkpoint_partials(df, spec, ["user_id"], ckpt, "r4",
+                            only_pids={0, 1, 2})
+        manifest = tmp_path / "manifest_r4.json"
+        before = manifest.read_text()
+
+        monkeypatch.setattr(sparksketch_io, "open", torn_open,
+                            raising=False)
+        with pytest.raises(OSError, match="disk full"):
+            resume(spark, df, spec, ["user_id"], ckpt, "r4")
+        monkeypatch.undo()
+        assert manifest.read_text() == before
+        assert missing_pids(ckpt, "r4") == {3, 4, 5}
+        assert sorted(p.name for p in tmp_path.iterdir()
+                      if p.name.startswith("manifest")) == ["manifest_r4.json"]
+
+        resume(spark, df, spec, ["user_id"], ckpt, "r4")
+        assert missing_pids(ckpt, "r4") == set()
+        assert merged_sketch_bytes(spark, ckpt, "r4") == tree_aggregate(
+            build_partials(df, spec, ["user_id"]))
+
     def test_retry_dedup_by_pid(self, spark, tmp_path):
         """A re-run of an already-complete pid (retry after lost manifest
         write) must not double-count: merge dedups by pid."""

@@ -124,6 +124,51 @@ class TestAssociativity:
         blob = sketch_dataframe(df, spec, cols).to_bytes()
         assert hashlib.sha256(blob).hexdigest() == digest
 
+    # sha256 of every regroup_sketch_rows output row (keys, rows, sketch
+    # bytes, in key order) over the sf0.001 events, with 3-row Arrow
+    # batches so groups straddle batches in both folds: the segmented
+    # build's stage 2 on (event_type, ub) and the rollup to ub, whose
+    # NULL key recurs in every partition.
+    @pytest.mark.parametrize("spec,cols,digest", [
+        pytest.param(HLLSpec(p=10), ["user_id"],
+                     "5937048bdb0781b201d9a36aa6e551b2a26cee47234bdf531302c2fb3e764581",
+                     id="hll"),
+        pytest.param(BloomSpec(Shape.from_np(2_000, 1e-4)), ["user_id"],
+                     "4454c184a2da4323d4155e08ed9ad9cadec5725e19d8b4fcc4ce3ccbb73a9853",
+                     id="bloom"),
+        pytest.param(KLLSpec(k=32, col="value"), ["event_id"],
+                     "6865f25fb454ef7398ecea74f7c2236fc980bc959ff59edf60b6cfe0107b2b34",
+                     id="kll"),
+    ])
+    def test_regroup_golden_bytes(self, spark, events, sf_dir, spec, cols,
+                                  digest):
+        from sparksketch.agg import (grouped_sketch_segmented,
+                                     regroup_sketch_rows)
+        if os.path.basename(os.path.normpath(sf_dir)) != "sf0.001":
+            pytest.skip("golden digests are recorded for sf0.001")
+        df = (events.withColumn("ub", F.when(F.col("user_id") % 7 != 0,
+                                             F.col("user_id") % 5))
+              .repartition(4, "event_id").sortWithinPartitions("event_id"))
+        conf = "spark.sql.execution.arrow.maxRecordsPerBatch"
+        default = spark.conf.get(conf)
+        spark.conf.set(conf, "3")
+        try:
+            fine = grouped_sketch_segmented(df, ["event_type", "ub"], spec,
+                                            cols)
+            coarse = regroup_sketch_rows(fine, ["ub"],
+                                         order_cols=["event_type"])
+            h = hashlib.sha256()
+            for frame, keys in ((fine, ["event_type", "ub"]),
+                                (coarse, ["ub"])):
+                rows = [(tuple(r[k] for k in keys), r["rows"],
+                         bytes(r["sketch"])) for r in frame.collect()]
+                for key, n, blob in sorted(rows, key=repr):
+                    h.update(repr((key, n)).encode())
+                    h.update(blob)
+        finally:
+            spark.conf.set(conf, default)
+        assert h.hexdigest() == digest
+
 
 class TestPhysicalPlans:
     def test_explain_plans_checks_pass(self, sf_dir):
