@@ -1,60 +1,49 @@
-"""H.264 baseline INTRA codec — pure NumPy/Python, the media tier's real
-frame-decode layer.
+"""H.264 baseline codec for single-reference I/P streams — pure
+NumPy/Python, the media tier's real frame-decode layer.
 
 What this is (precisely): a conformant SUBSET of ITU-T H.264 / ISO 14496-10
-baseline profile — IDR-led GOPs of one-slice I and P pictures, CAVLC
-entropy mode, 4:2:0 8-bit, frame_mbs_only; intra macroblock types
-**I_PCM**, **Intra_16x16** and **Intra_4x4**; inter macroblock types
-**P_L0_16x16** and **P_Skip** (one reference picture, full-sample luma
-motion with spec 8.4.2.2.1 edge clamping, EXACT eighth-sample bilinear
-chroma interpolation per 8.4.2.2.2, median motion-vector prediction
-8.4.1.3, the P_Skip inference 8.4.1.1, mb_skip_run coding, and the
-Table 9-4 inter coded_block_pattern mapping) — all with full coded
-residuals
-(CodedBlockPattern via Table 7-11 / the Table 9-4 me(v) mapping —
-quantized 4x4 transform coefficients through the complete CAVLC layer:
-coeff_token Table 9-5 incl. the chroma-DC column and the nC>=8 FLC,
-adaptive level prefix/suffix 9.2.2, total_zeros Tables 9-7/9-8/9-9(a),
-run_before Table 9-10 — see h264_residual.py), loop filter disabled via
-the slice header (disable_deblocking_filter_idc = 1, so a PPS with
+baseline profile — IDR-led GOPs of one-slice I and P pictures, each P
+picture predicting from the previous picture only; CAVLC entropy mode,
+4:2:0 8-bit, frame_mbs_only, loop filter disabled via the slice header
+(disable_deblocking_filter_idc = 1, so a PPS with
 deblocking_filter_control_present is required — mp4.encode_pps(True)).
 
-The ENCODER makes a real per-macroblock rate-distortion choice: the best
-available Intra_16x16 luma prediction (Vertical / Horizontal / DC / Plane,
-spec 8.3.3) against a full Intra_4x4 trial (all nine 8.3.1 modes per 4x4
-block, chosen by prediction SAD with a most-probable-mode bias), each
-residual-coded at ``qp``, plus the best chroma 8x8 prediction (DC /
-Horizontal / Vertical / Plane, spec 8.3.4); the winner is used whenever
-its RECONSTRUCTION approximates the source within ``pcm_mad``
-mean-absolute-difference per sample, else lossless I_PCM.  Prediction runs
-off the RECONSTRUCTED neighbor samples, exactly as a decoder sees them,
-and the encoder reconstructs through the decoder's own
-dequant/inverse-transform functions, so the decoder's output is
-bit-identical to the encoder's reconstruction (tested in
-tests/test_h264.py, tests/test_h264_i4x4.py).
+Inside the subset:
 
-The DECODER accepts any stream inside the subset — including full CAVLC
-residual decode with the per-4x4-block nC neighbor context (I_PCM
-neighbors counting 16 per spec 9.2.1), Intra_4x4 most-probable-mode
-signalling (8.3.1.1) with decode-order sample availability, per-MB QP
-tracking via mb_qp_delta, and the chroma QP mapping of Table 8-15.
+- intra macroblocks **I_PCM**, **Intra_16x16** (spec 8.3.3) and
+  **Intra_4x4** (the nine 8.3.1 modes with most-probable-mode
+  signalling 8.3.1.1), in I slices and inside P slices;
+- inter macroblocks **P_Skip** (the 8.4.1.1 inference, mb_skip_run) and
+  the full P partition tree — P_L0_16x16 / P_16x8 / P_8x16 (Table 7-13)
+  and P_8x8 with 8x8 / 8x4 / 4x8 / 4x4 sub-partitions (Table 7-14) — with
+  directional and median motion-vector prediction (8.4.1.3) at 4x4-block
+  granularity;
+- quarter-sample luma motion compensation (8.4.2.2.1: the 6-tap
+  half-sample filter, the two-stage center sample, Table 8-12 quarter
+  averaging) and eighth-sample bilinear chroma (8.4.2.2.2), with the
+  8.4.2.2.1 edge clamping;
+- full coded residuals: CodedBlockPattern via Table 7-11 and the Table 9-4
+  me(v) mappings, quantized 4x4 transform coefficients through the
+  complete CAVLC layer (see h264_residual.py), per-4x4-block nC context
+  (I_PCM neighbors count 16, spec 9.2.1), per-MB QP via mb_qp_delta and
+  the chroma QP mapping of Table 8-15.
+
 Anything OUTSIDE the subset raises NotImplementedError naming the
-feature: the remaining seam is B direct/skip modes and sub-16x16 B
-partitions, weighted BIprediction (the B-slice variant), CABAC, and
-the loop filter.  Inside the subset as of round 5: explicit weighted
-prediction for P slices (pred_weight_table 7.3.5.4, the 8.4.2.3.2
-sample op, an auto least-squares fade fit); B slices (B_L0_16x16 /
-B_L1_16x16 / B_Bi_16x16 with default-average biprediction,
-non-reference NALs, POC-split reference lists, display-order
-reordering in decode_gop); quarter-sample luma motion
-(8.4.2.2.1: the 6-tap half-sample filter, the two-stage center sample,
-Table 8-12 quarter averaging); the full P-slice partition tree —
-P_16x8 / P_8x16 (Table 7-13) and P_8x8 with 8x8 / 8x4 / 4x8 / 4x4
-sub-partitions (Table 7-14) — with directional MV prediction (8.4.1.3)
-at 4x4-block granularity and sequential intra-MB partition prediction;
-and multiple reference pictures (sliding-window DPB, te(v) ref_idx_l0
-per partition / per 8x8 quadrant, refidx-keyed neighbor matching in
-the MV predictor, P_8x8ref0 inference).
+feature: B slices, explicit weighted prediction (weighted_pred_flag = 1),
+more than one active reference picture, reference list modification,
+adaptive reference picture marking, multi-slice pictures, interlaced
+coding, CABAC and the loop filter.  Corrupt streams raise ValueError.
+
+The ENCODER makes a real per-macroblock rate-distortion choice with
+J = SSD + lambda * R: Intra_16x16 (best of Vertical / Horizontal / DC /
+Plane) against a full Intra_4x4 trial in I slices; P_Skip and the
+partition shapes (two-stage integer + half/quarter-sample motion search)
+against Intra_16x16 in P slices.  A macroblock whose RECONSTRUCTION misses
+the source by more than ``pcm_mad`` mean-absolute-difference per sample
+falls back to lossless I_PCM.  Prediction runs off the RECONSTRUCTED
+neighbor samples and the encoder reconstructs through the decoder's own
+functions, so the decoder's output is bit-identical to the encoder's
+reconstruction (tests/test_h264*.py).
 
 Why a per-macroblock Python loop is acceptable here: fixture media frames
 are tiny (a few dozen macroblocks) and the codec runs INSIDE mapInPandas —
@@ -73,8 +62,10 @@ from . import h264_residual as hr
 from .mp4 import _BitReader, _BitWriter, _unescape_rbsp, parse_avcc, \
     parse_pps, parse_sps
 
-__all__ = ["encode_iframe", "decode_iframe", "avc_sample",
-           "decode_avc_sample", "rgb_to_yuv420", "yuv420_to_rgb"]
+__all__ = ["encode_iframe", "encode_pframe", "encode_gop", "decode_iframe",
+           "decode_iframe_planes", "decode_pframe_planes", "decode_gop",
+           "avc_sample", "decode_avc_sample", "rgb_to_yuv420",
+           "yuv420_to_rgb"]
 
 # luma Intra_16x16 prediction modes (spec 8.3.3)
 _L_V, _L_H, _L_DC, _L_PLANE = 0, 1, 2, 3
@@ -392,13 +383,13 @@ assert len(_CBP_INTER_INV) == 48
 
 
 # ---------------------------------------------------------------------------
-# inter prediction (spec 8.4) — P_L0_16x16 + P_Skip subset: QUARTER-sample
+# inter prediction (spec 8.4) from one reference picture: QUARTER-sample
 # luma motion compensation (8.4.2.2.1: the (1,-5,20,20,-5,1)/32 6-tap
 # half-sample filter, the two-stage center sample j, and the averaging
 # quarter positions of Table 8-12), EXACT eighth-sample bilinear chroma
-# interpolation (8.4.2.2.2), median motion-vector prediction (8.4.1.3)
-# and the P_Skip inference (8.4.1.1).  Motion vectors are stored in
-# quarter-luma-sample units, one per MB (16x16 partitions only).
+# interpolation (8.4.2.2.2), motion-vector prediction (8.4.1.3) and the
+# P_Skip inference (8.4.1.1).  Motion vectors are stored in
+# quarter-luma-sample units per 4x4 block.
 # ---------------------------------------------------------------------------
 
 _QPEL_TAPS = np.array([1, -5, 20, 20, -5, 1], dtype=np.int64)
@@ -489,18 +480,6 @@ def _mc_chroma(ref: np.ndarray, cx0: int, cy0: int,
     d = win[1:, 1:]
     return (((8 - xf) * (8 - yf) * a + xf * (8 - yf) * b
              + (8 - xf) * yf * c + xf * yf * d + 32) >> 6).astype(np.uint8)
-
-
-def _wp_apply(pred: np.ndarray, w_: int, o_: int, d: int) -> np.ndarray:
-    """Explicit weighted-prediction sample op (spec 8.4.2.3.2, single
-    list): ((p*w + 2^(d-1)) >> d) + o, clipped — applied AFTER
-    interpolation."""
-    p = pred.astype(np.int64)
-    if d > 0:
-        p = ((p * w_ + (1 << (d - 1))) >> d) + o_
-    else:
-        p = p * w_ + o_
-    return np.clip(p, 0, 255).astype(np.uint8)
 
 
 def _nb_blk(mvs4: np.ndarray, ref4: np.ndarray, decoded: np.ndarray,
@@ -808,6 +787,15 @@ def _try_i4_mb(oY: np.ndarray, recY: np.ndarray, yx: int, yy: int,
     return modes, blocks, rec.copy(), mad
 
 
+def _ref_planes(ref) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+    """The one reference picture, an (Y, Cb, Cr) planes tuple; anything
+    else (None, a list of pictures) raises ValueError."""
+    if ref is None or len(ref) != 3 \
+            or not all(isinstance(p, np.ndarray) for p in ref):
+        raise ValueError("P slice needs one (Y, Cb, Cr) reference picture")
+    return tuple(ref)
+
+
 def encode_iframe(rgb: np.ndarray, pcm_mad: float = 4.0,
                   qp: int = 26) -> bytes:
     """Encode one RGB frame as an IDR slice NAL (header byte 0x65
@@ -1038,11 +1026,10 @@ def _try_i16_in_p(oY, oCb, oCr, recY, recCb, recCr, yx, yy, cx, cy,
 
 
 def _emit_i16_in_p(w: _BitWriter, ctx: _CoeffCtx, mbx: int, mby: int,
-                   cand: dict, offset: int = 5) -> None:
+                   cand: dict) -> None:
     """Write one Intra_16x16 MB inside a P slice (Table 7-13: the
-    I-slice mb_type shifted by 5) or a B slice (offset 23,
-    Table 7-14)."""
-    w.ue(offset + 1 + cand["lmode"] + 4 * cand["cbp_c"]
+    I-slice mb_type shifted by 5)."""
+    w.ue(5 + 1 + cand["lmode"] + 4 * cand["cbp_c"]
          + (12 if cand["cbp_l"] else 0))
     w.ue(cand["cmode"])
     w.se(0)  # mb_qp_delta
@@ -1052,145 +1039,52 @@ def _emit_i16_in_p(w: _BitWriter, ctx: _CoeffCtx, mbx: int, mby: int,
 
 
 def encode_pframe(rgb: np.ndarray,
-                  ref,
+                  ref: tuple[np.ndarray, np.ndarray, np.ndarray],
                   qp: int = 26, pcm_mad: float = 4.0, frame_num: int = 1,
-                  search: int = 8, poc: int | None = None,
-                  weighted=None) -> bytes:
+                  search: int = 8) -> bytes:
     """Encode one RGB frame as a P slice NAL (header byte 0x61) against
-    ``ref`` — the UNCROPPED reconstructed planes of the previous frame,
-    or a LIST of such plane tuples (reference list L0, index 0 = most
-    recent) for multi-reference prediction (use :func:`encode_gop` to
-    thread them automatically).
+    ``ref`` — the UNCROPPED reconstructed (Y, Cb, Cr) planes of the
+    previous frame (use :func:`encode_gop` to thread them automatically).
 
     Per MB, in candidate order: P_Skip / inter partitions with a
-    two-stage motion search per partition per reference (+-``search``
-    integer positions around the rounded median predictor, then half-
-    and quarter-sample refinement rings around the winner; SAD + ref-bit
-    objective, P_Skip emitted when the 16x16 shape picks refidx 0, the
-    8.4.1.1 inference vector, and every quantized coefficient is zero);
-    Intra_16x16 fallback when motion compensation misses ``pcm_mad``;
-    lossless I_PCM as the last resort.  Intra_4x4 inside P slices is
-    decoder-only.  The encoder reconstructs through the decoder's own
-    functions, so decode keeps the bit-identity contract.
-
-    ``weighted``: explicit weighted prediction (spec 8.4.2.3.2 — the
-    fade tool).  ``"auto"`` least-squares-fits a per-reference luma
-    (weight, offset) at denom 2^5 plus chroma mean offsets;
-    or pass ``(luma_log2_denom, chroma_log2_denom, [per-ref
-    (lw, lo, cwb, cob, cwr, cor)])`` explicitly.  The stream then
-    carries a pred_weight_table and MUST be decoded with a PPS whose
-    weighted_pred_flag is set (mp4.encode_pps(weighted_pred=True))."""
+    two-stage motion search per partition (+-``search`` integer
+    positions around the rounded median predictor, then half- and
+    quarter-sample refinement rings around the winner; P_Skip emitted
+    when the 16x16 shape picks the 8.4.1.1 inference vector and every
+    quantized coefficient is zero); Intra_16x16 fallback when motion
+    compensation misses ``pcm_mad``; lossless I_PCM as the last resort.
+    Intra_4x4 inside P slices is decoder-only.  The encoder reconstructs
+    through the decoder's own functions, so decode keeps the
+    bit-identity contract."""
     if rgb.ndim != 3 or rgb.shape[2] != 3:
         raise ValueError("encode_pframe expects (h, w, 3) RGB")
     if not 0 <= qp <= 51:
         raise ValueError(f"qp must be in [0, 51], got {qp}")
     Y, Cb, Cr = rgb_to_yuv420(rgb)
     Y, Cb, Cr = _pad_mb(Y, 16), _pad_mb(Cb, 8), _pad_mb(Cr, 8)
-    refs = [ref] if isinstance(ref[0], np.ndarray) else list(ref)
-    for rY, _rCb, _rCr in refs:
-        if rY.shape != Y.shape:
-            raise ValueError(
-                f"reference luma {rY.shape} != frame luma {Y.shape}")
-    n_refs = len(refs)
+    refY, refCb, refCr = _ref_planes(ref)
+    if refY.shape != Y.shape:
+        raise ValueError(
+            f"reference luma {refY.shape} != frame luma {Y.shape}")
     mbs_h, mbs_w = Y.shape[0] // 16, Y.shape[1] // 16
     recY = np.zeros_like(Y)
     recCb = np.zeros_like(Cb)
     recCr = np.zeros_like(Cr)
     ctx = _CoeffCtx(mbs_w, mbs_h)
     decoded = np.zeros((mbs_h * 4, mbs_w * 4), dtype=bool)
-    i4modes = np.full((mbs_h * 4, mbs_w * 4), -1, dtype=np.int8)
     mvs4 = np.zeros((mbs_h * 4, mbs_w * 4, 2), dtype=np.int32)
     ref4 = np.full((mbs_h * 4, mbs_w * 4), -1, dtype=np.int8)
     qpc = hr.chroma_qp(qp, 0)
-    refY64s = [r[0].astype(np.int64) for r in refs]
-
-    def _ref_bits(ri: int) -> int:
-        """te(v) bit cost of ref_idx_l0 (9.1: 1 bit when 2 refs are
-        active, ue(v) otherwise; absent with a single reference)."""
-        if n_refs == 1:
-            return 0
-        if n_refs == 2:
-            return 1
-        return 2 * int(ri + 1).bit_length() - 1
-
-    if weighted == "auto":
-        # least-squares luma fade fit per reference: a = cov/var,
-        # b = mean residual; chroma rides on mean offsets
-        wl = []
-        Yf = Y.astype(np.float64)
-        for rY_, rCb_, rCr_ in refs:
-            rf = rY_.astype(np.float64)
-            var = float(rf.var())
-            a = (float(((Yf - Yf.mean()) * (rf - rf.mean())).mean())
-                 / var if var > 1e-9 else 1.0)
-            lw = int(np.clip(round(a * 32), -127, 127))
-            lo = int(np.clip(round(float(Yf.mean())
-                                   - lw * float(rf.mean()) / 32.0),
-                             -127, 127))
-            cob = int(np.clip(round(float(Cb.mean())
-                                    - float(rCb_.astype(np.float64)
-                                            .mean())), -127, 127))
-            cor = int(np.clip(round(float(Cr.mean())
-                                    - float(rCr_.astype(np.float64)
-                                            .mean())), -127, 127))
-            wl.append((lw, lo, 32, cob, 32, cor))
-        weighted = (5, 5, wl)
-    if weighted is not None:
-        if len(weighted[2]) != n_refs:
-            raise ValueError(
-                f"weighted needs one entry per reference "
-                f"({n_refs}), got {len(weighted[2])}")
-
-    def _wle(p, ri):
-        """Weight a luma prediction for reference ``ri`` (encoder side;
-        no-op without weights)."""
-        if weighted is None:
-            return p
-        return _wp_apply(p, weighted[2][ri][0], weighted[2][ri][1],
-                         weighted[0])
-
-    def _wce(p, ri, comp):
-        if weighted is None:
-            return p
-        w_, o_ = (weighted[2][ri][2 + 2 * comp],
-                  weighted[2][ri][3 + 2 * comp])
-        return _wp_apply(p, w_, o_, weighted[1])
+    refY64 = refY.astype(np.int64)
 
     w = _BitWriter()
     w.ue(0)                      # first_mb_in_slice
     w.ue(5)                      # slice_type: P (all slices)
     w.ue(0)                      # pic_parameter_set_id
     w.u(frame_num % 256, 8)      # frame_num
-    # pic_order_cnt_lsb: DISPLAY order (decouples from frame_num once
-    # B pictures reorder the stream; defaults to 2*frame_num for the
-    # classic all-P GOP)
-    w.u((2 * frame_num if poc is None else poc) % 256, 8)
-    if n_refs > 1:
-        w.u(1, 1)                # num_ref_idx_active_override_flag
-        w.ue(n_refs - 1)         # num_ref_idx_l0_active_minus1
-    else:
-        w.u(0, 1)                # num_ref_idx_active_override_flag
+    w.u((2 * frame_num) % 256, 8)  # pic_order_cnt_lsb
+    w.u(0, 1)                    # num_ref_idx_active_override_flag
     w.u(0, 1)                    # ref_pic_list_modification_flag_l0
-    if weighted is not None:     # pred_weight_table (7.3.5.4)
-        ld, cd, wl = weighted
-        w.ue(ld)
-        w.ue(cd)
-        for lw, lo, cwb, cob, cwr, cor in wl:
-            if lw == 1 << ld and lo == 0:
-                w.u(0, 1)        # luma_weight_l0_flag
-            else:
-                w.u(1, 1)
-                w.se(lw)
-                w.se(lo)
-            if (cwb == 1 << cd and cob == 0
-                    and cwr == 1 << cd and cor == 0):
-                w.u(0, 1)        # chroma_weight_l0_flag
-            else:
-                w.u(1, 1)
-                w.se(cwb)
-                w.se(cob)
-                w.se(cwr)
-                w.se(cor)
     w.u(0, 1)                    # adaptive_ref_pic_marking_mode_flag
     w.se(qp - 26)                # slice_qp_delta
     w.ue(1)                      # disable_deblocking_filter_idc
@@ -1208,15 +1102,14 @@ def encode_pframe(rgb: np.ndarray,
             oY64 = oY.astype(np.int64)
             lam = 0.85 * 2.0 ** ((qp - 12) / 3.0)
 
-            def _search_part(px, py, bw_, bh_, centers, radius, ref64,
-                             ri=0, first=()):
+            def _search_part(px, py, bw_, bh_, centers, radius,
+                             first=()):
                 """Integer exhaustive search around each center, then
                 half- and quarter-sample refinement rings around the
-                winner (the classic two-stage fractional search), against
-                one reference picture.  The ``first`` candidates (the
-                exact, possibly fractional, skip inference) are evaluated
-                before everything else so strict '<' comparisons keep
-                P_Skip reachable on ties."""
+                winner (the classic two-stage fractional search).  The
+                ``first`` candidates (the exact, possibly fractional,
+                skip inference) are evaluated before everything else so
+                strict '<' comparisons keep P_Skip reachable on ties."""
                 o = Y[py:py + bh_, px:px + bw_].astype(np.int64)
                 best_l, seen = None, set()
                 cands = list(first) + [(0, 0)]
@@ -1227,8 +1120,8 @@ def encode_pframe(rgb: np.ndarray,
 
                 def _sad(q):
                     return int(np.abs(
-                        o - _wle(_mc_luma(ref64, px, py, q, (bh_, bw_)),
-                                 ri).astype(np.int64)).sum())
+                        o - _mc_luma(refY64, px, py, q, (bh_, bw_))
+                        .astype(np.int64)).sum())
 
                 for q in cands:
                     if q in seen:
@@ -1260,110 +1153,84 @@ def encode_pframe(rgb: np.ndarray,
                 """Search one partitioning.  Partitions are predicted
                 and committed SEQUENTIALLY into scratch grids, because
                 the next partition's predictor reads the previous ones'
-                mvs and refidxs (exactly what the decoder will
-                reconstruct).  Each partition also picks its reference
-                picture (SAD + te(v) ref bits); for P_8x8 the quadrant's
-                reference is chosen by the 8x8-shape search and the
-                finer sub_mb_types (8x4 / 4x8 / 4x4) are then weighed on
-                that reference by SAD + lambda*mvd-rate over a
-                quadrant-local scratch before committing."""
+                mvs (exactly what the decoder will reconstruct).  For
+                P_8x8 the finer sub_mb_types (8x4 / 4x8 / 4x4) are
+                weighed against 8x8 per quadrant by SAD + lambda *
+                mvd-rate over a quadrant-local scratch before
+                committing."""
                 mbt, plist0 = _P_SHAPES[shape]
                 t_mvs, t_ref = mvs4.copy(), ref4.copy()
                 t_dec = decoded.copy()
                 predY = np.empty((16, 16), dtype=np.uint8)
                 predCb = np.empty((8, 8), dtype=np.uint8)
                 predCr = np.empty((8, 8), dtype=np.uint8)
-                mv_list, mvd_list, ri_list, plist = [], [], [], []
+                mv_list, mvd_list, plist = [], [], []
                 sub_types = None
 
-                def _do_part(tag, ox, oy, wb, hb, grids, fixed_ref=None):
-                    """Search one partition (over references unless
-                    ``fixed_ref`` pins one) against ``grids`` and commit
-                    its (mv, refidx) there; returns (mv, mvd, ri, cost)
-                    where cost folds the te(v) ref bits into the SAD."""
+                def _do_part(tag, ox, oy, wb, hb, grids):
+                    """Search one partition against ``grids`` and commit
+                    its mv there; returns (mv, mvd, sad)."""
                     g_mvs, g_ref, g_dec = grids
                     bx, by = bx0 + ox, by0 + oy
                     px, py = yx + ox * 4, yy + oy * 4
-                    ref_cands = ([fixed_ref] if fixed_ref is not None
-                                 else range(n_refs))
-                    best_r = None
-                    for ri in ref_cands:
-                        mvp_p = _mv_pred(g_mvs, g_ref, g_dec, bx, by, wb,
-                                         part=tag, refidx=ri)
-                        c0 = ((mvp_p[0] + 2) >> 2, (mvp_p[1] + 2) >> 2)
-                        if shape == "16x16":
-                            mv_p, sad = _search_part(
-                                px, py, 16, 16, [c0], search, refY64s[ri],
-                                ri, first=[skipmv] if ri == 0 else ())
-                        else:
-                            # sub-partition searches center on the
-                            # partition's own predictor, the 16x16
-                            # winner, AND the origin (motion can OPPOSE
-                            # the predictor — e.g. shearing halves at a
-                            # picture corner where the only neighbor
-                            # predicts the other half's vector), with a
-                            # small radius — the full-radius evidence
-                            # already lives in the 16x16 trial
-                            centers = [c0,
-                                       (best16[0] >> 2, best16[1] >> 2),
-                                       (0, 0)]
-                            mv_p, sad = _search_part(
-                                px, py, wb * 4, hb * 4, centers, 3,
-                                refY64s[ri], ri)
-                        cost = sad + lam_s * _ref_bits(ri)
-                        if best_r is None or cost < best_r[0]:
-                            best_r = (cost, mv_p, mvp_p, ri)
-                    cost, mv_p, mvp_p, ri = best_r
+                    mvp_p = _mv_pred(g_mvs, g_ref, g_dec, bx, by, wb,
+                                     part=tag)
+                    c0 = ((mvp_p[0] + 2) >> 2, (mvp_p[1] + 2) >> 2)
+                    if shape == "16x16":
+                        mv_p, sad = _search_part(px, py, 16, 16, [c0],
+                                                 search, first=[skipmv])
+                    else:
+                        # sub-partition searches center on the
+                        # partition's own predictor, the 16x16 winner,
+                        # AND the origin (motion can OPPOSE the
+                        # predictor — e.g. shearing halves at a picture
+                        # corner where the only neighbor predicts the
+                        # other half's vector), with a small radius —
+                        # the full-radius evidence already lives in the
+                        # 16x16 trial
+                        centers = [c0, (best16[0] >> 2, best16[1] >> 2),
+                                   (0, 0)]
+                        mv_p, sad = _search_part(px, py, wb * 4, hb * 4,
+                                                 centers, 3)
                     g_mvs[by:by + hb, bx:bx + wb] = mv_p
-                    g_ref[by:by + hb, bx:bx + wb] = ri
+                    g_ref[by:by + hb, bx:bx + wb] = 0
                     g_dec[by:by + hb, bx:bx + wb] = True
                     return mv_p, (mv_p[0] - mvp_p[0],
-                                  mv_p[1] - mvp_p[1]), ri, cost
+                                  mv_p[1] - mvp_p[1]), sad
 
-                def _commit(tag, ox, oy, wb, hb, mv_p, mvd, ri):
-                    rY_, rCb_, rCr_ = refs[ri]
+                def _commit(tag, ox, oy, wb, hb, mv_p, mvd):
                     predY[oy * 4:oy * 4 + hb * 4, ox * 4:ox * 4 + wb * 4] \
-                        = _wle(_mc_luma(rY_, yx + ox * 4, yy + oy * 4,
-                                        mv_p, (hb * 4, wb * 4)), ri)
+                        = _mc_luma(refY, yx + ox * 4, yy + oy * 4, mv_p,
+                                   (hb * 4, wb * 4))
                     predCb[oy * 2:oy * 2 + hb * 2, ox * 2:ox * 2 + wb * 2] \
-                        = _wce(_mc_chroma(rCb_, cx + ox * 2, cy + oy * 2,
-                                          mv_p, (hb * 2, wb * 2)), ri, 0)
+                        = _mc_chroma(refCb, cx + ox * 2, cy + oy * 2, mv_p,
+                                     (hb * 2, wb * 2))
                     predCr[oy * 2:oy * 2 + hb * 2, ox * 2:ox * 2 + wb * 2] \
-                        = _wce(_mc_chroma(rCr_, cx + ox * 2, cy + oy * 2,
-                                          mv_p, (hb * 2, wb * 2)), ri, 1)
+                        = _mc_chroma(refCr, cx + ox * 2, cy + oy * 2, mv_p,
+                                     (hb * 2, wb * 2))
                     bx, by = bx0 + ox, by0 + oy
                     t_mvs[by:by + hb, bx:bx + wb] = mv_p
-                    t_ref[by:by + hb, bx:bx + wb] = ri
+                    t_ref[by:by + hb, bx:bx + wb] = 0
                     t_dec[by:by + hb, bx:bx + wb] = True
                     mv_list.append(mv_p)
                     mvd_list.append(mvd)
-                    ri_list.append(ri)
                     plist.append((tag, ox, oy, wb, hb))
 
-                quad_refs = None
                 if shape == "8x8":
-                    sub_types, quad_refs = [], []
+                    sub_types = []
                     for qox, qoy in _QUADRANTS:
-                        best_q, qref = None, None
+                        best_q = None
                         for smt in (0, 1, 2, 3):
                             q_grids = (t_mvs.copy(), t_ref.copy(),
                                        t_dec.copy())
                             tot_cost, rate, recs = 0.0, _SUB_HEAD[smt], []
                             for sox, soy, swb, shb in _SUB_SHAPES[smt]:
                                 ox, oy = qox + sox, qoy + soy
-                                mv_p, mvd, ri, cost = _do_part(
-                                    None, ox, oy, swb, shb, q_grids,
-                                    fixed_ref=qref)
-                                tot_cost += cost
+                                mv_p, mvd, sad = _do_part(
+                                    None, ox, oy, swb, shb, q_grids)
+                                tot_cost += sad
                                 rate += 2 + abs(mvd[0]) + abs(mvd[1])
-                                recs.append((ox, oy, swb, shb, mv_p,
-                                             mvd, ri))
-                            if smt == 0:
-                                # the 8x8-shape search picks the
-                                # quadrant's reference; finer shapes
-                                # share it (ref_idx is per 8x8 in the
-                                # syntax)
-                                qref = recs[0][6]
+                                recs.append((ox, oy, swb, shb, mv_p, mvd))
                             cost = tot_cost + lam_s * rate
                             if best_q is None or cost < best_q[0]:
                                 best_q = (cost, smt, recs)
@@ -1376,21 +1243,19 @@ def encode_pframe(rgb: np.ndarray,
                             if smt == 0 and tot_cost <= 48 * lam_s:
                                 break
                         sub_types.append(best_q[1])
-                        quad_refs.append(best_q[2][0][6])
-                        for ox, oy, swb, shb, mv_p, mvd, ri in best_q[2]:
-                            _commit(None, ox, oy, swb, shb, mv_p, mvd, ri)
+                        for ox, oy, swb, shb, mv_p, mvd in best_q[2]:
+                            _commit(None, ox, oy, swb, shb, mv_p, mvd)
                 else:
                     for tag, ox, oy, wb, hb in plist0:
-                        mv_p, mvd, ri, _cost_p = _do_part(
+                        mv_p, mvd, _sad = _do_part(
                             tag, ox, oy, wb, hb, (t_mvs, t_ref, t_dec))
                         # _do_part committed the grids; _commit rewrites
                         # the same values and fills the prediction
                         # planes and lists
-                        _commit(tag, ox, oy, wb, hb, mv_p, mvd, ri)
+                        _commit(tag, ox, oy, wb, hb, mv_p, mvd)
                 return {"shape": shape, "mb_type": mbt, "plist": plist,
                         "sub_types": sub_types, "mvs": mv_list,
-                        "mvds": mvd_list, "ris": ri_list,
-                        "quad_refs": quad_refs, "predY": predY,
+                        "mvds": mvd_list, "predY": predY,
                         "predCb": predCb, "predCr": predCr}
 
             def _cost(tr):
@@ -1444,12 +1309,9 @@ def encode_pframe(rgb: np.ndarray,
                 mv_rate = sum(abs(dx) + abs(dy) for dx, dy in tr["mvds"])
                 if tr["shape"] == "8x8":
                     head = 12 + sum(_SUB_HEAD[s] for s in tr["sub_types"]) \
-                        + 2 * len(tr["mvds"]) \
-                        + sum(_ref_bits(ri) for ri in tr["quad_refs"])
+                        + 2 * len(tr["mvds"])
                 else:
-                    head = {"16x16": 10, "16x8": 14,
-                            "8x16": 14}[tr["shape"]] \
-                        + sum(_ref_bits(ri) for ri in tr["ris"])
+                    head = {"16x16": 10, "16x8": 14, "8x16": 14}[tr["shape"]]
                 tr.update(blocks4=blocks4, cbp_luma4=cbp_luma4,
                           cbp=cbp_luma4 | (cbp_chroma << 4),
                           cbp_chroma=cbp_chroma, dcCb=dcCb, acCb=acCb,
@@ -1463,8 +1325,7 @@ def encode_pframe(rgb: np.ndarray,
             # a clean skip needs no other trials; otherwise weigh the
             # sub-partitionings (their finer vectors must BUY their extra
             # mvd/header bits through the shared J)
-            if not (t16["mvs"][0] == skipmv and t16["ris"][0] == 0
-                    and t16["cbp"] == 0):
+            if not (t16["mvs"][0] == skipmv and t16["cbp"] == 0):
                 for shape in ("16x8", "8x16", "8x8"):
                     tr = _cost(_trial(shape, best16=t16["mvs"][0]))
                     if tr["j"] < bt["j"]:
@@ -1488,7 +1349,7 @@ def encode_pframe(rgb: np.ndarray,
                 continue
             if pcm_mad >= 0 and bt["imad"] <= pcm_mad:
                 if bt["shape"] == "16x16" and bt["mvs"][0] == skipmv \
-                        and bt["ris"][0] == 0 and bt["cbp"] == 0:
+                        and bt["cbp"] == 0:
                     pending_skip += 1        # P_Skip
                 else:
                     w.ue(pending_skip)       # mb_skip_run
@@ -1497,16 +1358,6 @@ def encode_pframe(rgb: np.ndarray,
                     if bt["shape"] == "8x8":
                         for smt in bt["sub_types"]:
                             w.ue(smt)        # sub_mb_type (Table 7-14)
-                    if n_refs > 1:
-                        # ref_idx_l0, te(v): per partition, or per 8x8
-                        # quadrant for P_8x8 (7.3.5.1 / 7.3.5.2)
-                        for ri in (bt["quad_refs"]
-                                   if bt["shape"] == "8x8"
-                                   else bt["ris"]):
-                            if n_refs == 2:
-                                w.u(1 - ri, 1)
-                            else:
-                                w.ue(ri)
                     for dx, dy in bt["mvds"]:
                         w.se(dx)             # mvd_l0 per partition
                         w.se(dy)
@@ -1523,12 +1374,12 @@ def encode_pframe(rgb: np.ndarray,
                 recY[yy:yy + 16, yx:yx + 16] = bt["rY"]
                 recCb[cy:cy + 8, cx:cx + 8] = bt["rCb"]
                 recCr[cy:cy + 8, cx:cx + 8] = bt["rCr"]
-                for (tag, ox, oy, wb, hb), mv_p, ri in zip(
-                        bt["plist"], bt["mvs"], bt["ris"]):
+                for (tag, ox, oy, wb, hb), mv_p in zip(bt["plist"],
+                                                       bt["mvs"]):
                     mvs4[by0 + oy:by0 + oy + hb,
                          bx0 + ox:bx0 + ox + wb] = mv_p
                     ref4[by0 + oy:by0 + oy + hb,
-                         bx0 + ox:bx0 + ox + wb] = ri
+                         bx0 + ox:bx0 + ox + wb] = 0
                 decoded[by0:by0 + 4, bx0:bx0 + 4] = True
                 continue
             # Intra_16x16 fallback inside the P slice (motion missed)
@@ -1559,308 +1410,28 @@ def encode_pframe(rgb: np.ndarray,
 
 
 def encode_gop(frames, qp: int = 26, pcm_mad: float = 4.0,
-               search: int = 8, n_refs: int = 1,
-               weighted=None) -> list[bytes]:
+               search: int = 8) -> list[bytes]:
     """Encode frames as an IDR-led GOP: frame 0 via encode_iframe, the
-    rest as P slices, threading each frame's DECODED reconstruction
-    through a sliding-window DPB of the last ``n_refs`` pictures
-    (reference list L0, most recent first — the decoder's planes ARE
-    the encoder's by the bit-identity contract, so this doubles as a
-    self-check).  Needs the matching SPS/PPS fixed choices
-    (mp4.encode_sps(..., max_num_ref_frames=n_refs) / encode_pps(True))
-    only at decode time — the reference here is reconstructed with a
+    rest as P slices, each predicting from the previous frame's DECODED
+    reconstruction (the decoder's planes ARE the encoder's by the
+    bit-identity contract, so this doubles as a self-check).  Decode
+    with the matching SPS/PPS fixed choices (mp4.encode_sps /
+    encode_pps(True)); the reference here is reconstructed with a
     synthetic uncropped geometry."""
     frames = list(frames)
     if not frames:
         raise ValueError("no frames")
-    if n_refs < 1:
-        raise ValueError("n_refs must be >= 1")
     h, w_, _ = frames[0].shape
     from .mp4 import encode_pps, encode_sps, parse_pps, parse_sps
-    sps = parse_sps(encode_sps(w_, h, fps=10.0,
-                               max_num_ref_frames=n_refs))
-    pps = parse_pps(encode_pps(deblocking_control=True,
-                               weighted_pred=weighted is not None))
-    out = [encode_iframe(frames[0], pcm_mad=pcm_mad, qp=qp)]
-    dpb = [_decode_slice(out[0], sps, pps, None)]
-    for i, fr in enumerate(frames[1:], start=1):
-        nal = encode_pframe(fr, dpb, qp=qp, pcm_mad=pcm_mad,
-                            frame_num=i, search=search,
-                            weighted=weighted)
-        out.append(nal)
-        dpb.insert(0, _decode_slice(nal, sps, pps, dpb))
-        del dpb[n_refs:]
-    return out
-
-
-def encode_bframe(rgb: np.ndarray,
-                  ref_l0: tuple[np.ndarray, np.ndarray, np.ndarray],
-                  ref_l1: tuple[np.ndarray, np.ndarray, np.ndarray],
-                  qp: int = 26, pcm_mad: float = 4.0, frame_num: int = 1,
-                  poc: int = 0, search: int = 8) -> bytes:
-    """Encode one RGB frame as a non-reference B slice NAL (header byte
-    0x01: nal_ref_idc 0) predicting from a past (``ref_l0``) and a
-    future (``ref_l1``) reconstructed picture — B_L0_16x16 /
-    B_L1_16x16 / B_Bi_16x16 per MB by the shared J decision (default
-    biprediction = the (p0+p1+1)>>1 average, weighted_bipred_idc 0),
-    with Intra_16x16 / I_PCM fallbacks.  ``poc`` is the DISPLAY index
-    (pic_order_cnt_lsb = 2*poc), which for a B picture differs from
-    decode order; the decoder rebuilds the same L0/L1 lists from POC.
-    Direct/skip modes and sub-16x16 B partitions are the documented
-    seam."""
-    if rgb.ndim != 3 or rgb.shape[2] != 3:
-        raise ValueError("encode_bframe expects (h, w, 3) RGB")
-    if not 0 <= qp <= 51:
-        raise ValueError(f"qp must be in [0, 51], got {qp}")
-    Y, Cb, Cr = rgb_to_yuv420(rgb)
-    Y, Cb, Cr = _pad_mb(Y, 16), _pad_mb(Cb, 8), _pad_mb(Cr, 8)
-    for rY, _a, _b in (ref_l0, ref_l1):
-        if rY.shape != Y.shape:
-            raise ValueError(
-                f"reference luma {rY.shape} != frame luma {Y.shape}")
-    refs = (ref_l0, ref_l1)
-    refY64s = [r[0].astype(np.int64) for r in refs]
-    mbs_h, mbs_w = Y.shape[0] // 16, Y.shape[1] // 16
-    recY, recCb, recCr = (np.zeros_like(Y), np.zeros_like(Cb),
-                          np.zeros_like(Cr))
-    ctx = _CoeffCtx(mbs_w, mbs_h)
-    decoded = np.zeros((mbs_h * 4, mbs_w * 4), dtype=bool)
-    mvs4b = [np.zeros((mbs_h * 4, mbs_w * 4, 2), dtype=np.int32)
-             for _ in range(2)]
-    ref4b = [np.full((mbs_h * 4, mbs_w * 4), -1, dtype=np.int8)
-             for _ in range(2)]
-    qpc = hr.chroma_qp(qp, 0)
-    lam = 0.85 * 2.0 ** ((qp - 12) / 3.0)
-
-    w = _BitWriter()
-    w.ue(0)                      # first_mb_in_slice
-    w.ue(6)                      # slice_type: B (all slices)
-    w.ue(0)                      # pic_parameter_set_id
-    w.u(frame_num % 256, 8)      # frame_num
-    w.u((2 * poc) % 256, 8)      # pic_order_cnt_lsb (display order)
-    w.u(1, 1)                    # direct_spatial_mv_pred_flag
-    w.u(0, 1)                    # num_ref_idx_active_override_flag
-    w.u(0, 1)                    # ref_pic_list_modification_flag_l0
-    w.u(0, 1)                    # ref_pic_list_modification_flag_l1
-    # nal_ref_idc == 0: no dec_ref_pic_marking
-    w.se(qp - 26)                # slice_qp_delta
-    w.ue(1)                      # disable_deblocking_filter_idc
-
-    for mby in range(mbs_h):
-        for mbx in range(mbs_w):
-            yx, yy = mbx * 16, mby * 16
-            cx, cy = mbx * 8, mby * 8
-            bx0, by0 = mbx * 4, mby * 4
-            oY = Y[yy:yy + 16, yx:yx + 16]
-            oCb = Cb[cy:cy + 8, cx:cx + 8]
-            oCr = Cr[cy:cy + 8, cx:cx + 8]
-            oY64 = oY.astype(np.int64)
-
-            def _list_best(li):
-                """Best 16x16 mv against list ``li``'s reference (the
-                same two-stage search the P encoder runs)."""
-                mvp = _mv_pred(mvs4b[li], ref4b[li], decoded, bx0, by0, 4)
-                c0 = ((mvp[0] + 2) >> 2, (mvp[1] + 2) >> 2)
-                best_l, seen = None, set()
-                cands = [(0, 0)] + [
-                    (4 * (c0[0] + dx), 4 * (c0[1] + dy))
-                    for dy in range(-search, search + 1)
-                    for dx in range(-search, search + 1)]
-
-                def _sad(q):
-                    return int(np.abs(
-                        oY64 - _mc_luma(refY64s[li], yx, yy, q)
-                        .astype(np.int64)).sum())
-
-                for q in cands:
-                    if q in seen:
-                        continue
-                    seen.add(q)
-                    sad = _sad(q)
-                    if best_l is None or sad < best_l[0]:
-                        best_l = (sad, q)
-                for step in (2, 1):
-                    qx, qy = best_l[1]
-                    for dy in (-step, 0, step):
-                        for dx in (-step, 0, step):
-                            q = (qx + dx, qy + dy)
-                            if q in seen:
-                                continue
-                            seen.add(q)
-                            sad = _sad(q)
-                            if sad < best_l[0]:
-                                best_l = (sad, q)
-                return best_l[1], mvp
-
-            def _mb_pred(li, mv):
-                rY_, rCb_, rCr_ = refs[li]
-                return (_mc_luma(rY_, yx, yy, mv),
-                        _mc_chroma(rCb_, cx, cy, mv),
-                        _mc_chroma(rCr_, cx, cy, mv))
-
-            mv0, mvp0 = _list_best(0)
-            mv1, mvp1 = _list_best(1)
-            p0, p1 = _mb_pred(0, mv0), _mb_pred(1, mv1)
-
-            def _avg(a, b):
-                return tuple(
-                    ((x.astype(np.int64) + y + 1) >> 1).astype(np.uint8)
-                    for x, y in zip(a, b))
-
-            trials = [
-                (1, p0, [(0, mv0, mvp0)], 10),            # B_L0_16x16
-                (2, p1, [(1, mv1, mvp1)], 10),            # B_L1_16x16
-                # B_Bi from the two single-list winners...
-                (3, _avg(p0, p1), [(0, mv0, mvp0), (1, mv1, mvp1)], 12),
-            ]
-            if (mv0, mv1) != (mvp0, mvp1):
-                # ...and from the zero-mvd predictor pair: the average
-                # can be exact at the predictors even when neither
-                # single-list SAD favors them (each list alone sees the
-                # OTHER anchor's half of the difference as noise)
-                trials.append(
-                    (3, _avg(_mb_pred(0, mvp0), _mb_pred(1, mvp1)),
-                     [(0, mvp0, mvp0), (1, mvp1, mvp1)], 12))
-            best = None
-            for mbt, pred, mvrecs, head in trials:
-                predY, predCb, predCr = pred
-                predY64 = predY.astype(np.int64)
-                blocks4 = []
-                for blk, (ox, oy) in enumerate(hr.LUMA_BLOCK_ORDER):
-                    res = oY64[oy * 4:oy * 4 + 4, ox * 4:ox * 4 + 4] \
-                        - predY64[oy * 4:oy * 4 + 4, ox * 4:ox * 4 + 4]
-                    blocks4.append(hr.mat_to_scan(
-                        hr.quant4x4(hr.fwd4x4(res), qp)))
-                cbp_luma4 = 0
-                for i8 in range(4):
-                    if any(blocks4[i8 * 4 + i4].any() for i4 in range(4)):
-                        cbp_luma4 |= 1 << i8
-                dcCb, acCb = hr.transform_quant_chroma8(oCb, predCb, qpc)
-                dcCr, acCr = hr.transform_quant_chroma8(oCr, predCr, qpc)
-                if any(a.any() for a in acCb) \
-                        or any(a.any() for a in acCr):
-                    cbp_chroma = 2
-                elif dcCb.any() or dcCr.any():
-                    cbp_chroma = 1
-                else:
-                    cbp_chroma = 0
-                zero_l = [np.zeros(16, dtype=np.int64)] * 16
-                rY = _recon_luma_blocks4(
-                    predY, blocks4 if cbp_luma4 else zero_l, qp)
-                rCb = hr.recon_chroma8(
-                    predCb,
-                    dcCb if cbp_chroma else np.zeros((2, 2), np.int64),
-                    acCb if cbp_chroma == 2 else None, qpc)
-                rCr = hr.recon_chroma8(
-                    predCr,
-                    dcCr if cbp_chroma else np.zeros((2, 2), np.int64),
-                    acCr if cbp_chroma == 2 else None, qpc)
-                imad = max(
-                    float(np.abs(oY64 - rY.astype(np.int64)).mean()),
-                    (float(np.abs(oCb.astype(np.int64)
-                                  - rCb.astype(np.int64)).mean())
-                     + float(np.abs(oCr.astype(np.int64)
-                                    - rCr.astype(np.int64)).mean())) / 2.0)
-                nnz = sum(int(np.count_nonzero(b)) for b in blocks4) \
-                    + int(np.count_nonzero(dcCb)) \
-                    + int(np.count_nonzero(dcCr)) \
-                    + sum(int(np.count_nonzero(a)) for a in acCb) \
-                    + sum(int(np.count_nonzero(a)) for a in acCr)
-                ssd = float(((oY64 - rY.astype(np.int64)) ** 2).sum())
-                mv_rate = sum(abs(mv[0] - mvp[0]) + abs(mv[1] - mvp[1])
-                              for _li, mv, mvp in mvrecs)
-                j = ssd + lam * (head + mv_rate + 6 * nnz)
-                cand = dict(mbt=mbt, mvrecs=mvrecs, blocks4=blocks4,
-                            cbp_luma4=cbp_luma4,
-                            cbp=cbp_luma4 | (cbp_chroma << 4),
-                            cbp_chroma=cbp_chroma, dcCb=dcCb, acCb=acCb,
-                            dcCr=dcCr, acCr=acCr, rY=rY, rCb=rCb,
-                            rCr=rCr, imad=imad, j=j)
-                if best is None or j < best["j"]:
-                    best = cand
-            i16 = _try_i16_in_p(oY, oCb, oCr, recY, recCb, recCr,
-                                yx, yy, cx, cy, qp, qpc)
-            use_intra = (i16 is not None and pcm_mad >= 0
-                         and i16["j"] < best["j"]
-                         and i16["mad"] <= pcm_mad)
-            inter_ok = pcm_mad >= 0 and best["imad"] <= pcm_mad
-            w.ue(0)  # mb_skip_run (B_Skip never emitted)
-            if not use_intra and inter_ok:
-                w.ue(best["mbt"])
-                for _li, mv, mvp in best["mvrecs"]:
-                    w.se(mv[0] - mvp[0])
-                    w.se(mv[1] - mvp[1])
-                w.ue(_CBP_INTER_INV[best["cbp"]])
-                if best["cbp"]:
-                    w.se(0)  # mb_qp_delta
-                    _write_i4_luma_residual(w, ctx, mbx, mby,
-                                            best["blocks4"],
-                                            best["cbp_luma4"])
-                    _write_chroma_residual(w, ctx, mbx, mby,
-                                           best["dcCb"], best["acCb"],
-                                           best["dcCr"], best["acCr"],
-                                           best["cbp_chroma"])
-                recY[yy:yy + 16, yx:yx + 16] = best["rY"]
-                recCb[cy:cy + 8, cx:cx + 8] = best["rCb"]
-                recCr[cy:cy + 8, cx:cx + 8] = best["rCr"]
-                for li, mv, _mvp in best["mvrecs"]:
-                    mvs4b[li][by0:by0 + 4, bx0:bx0 + 4] = mv
-                    ref4b[li][by0:by0 + 4, bx0:bx0 + 4] = 0
-            elif use_intra or (i16 is not None and pcm_mad >= 0
-                               and i16["mad"] <= pcm_mad):
-                _emit_i16_in_p(w, ctx, mbx, mby, i16, offset=23)
-                recY[yy:yy + 16, yx:yx + 16] = i16["rY"]
-                recCb[cy:cy + 8, cx:cx + 8] = i16["rCb"]
-                recCr[cy:cy + 8, cx:cx + 8] = i16["rCr"]
-            else:
-                w.ue(23 + 25)                # I_PCM in a B slice
-                w.align()
-                w.bytes_(oY.tobytes())
-                w.bytes_(oCb.tobytes())
-                w.bytes_(oCr.tobytes())
-                ctx.mark_pcm(mbx, mby)
-                recY[yy:yy + 16, yx:yx + 16] = oY
-                recCb[cy:cy + 8, cx:cx + 8] = oCb
-                recCr[cy:cy + 8, cx:cx + 8] = oCr
-            decoded[by0:by0 + 4, bx0:bx0 + 4] = True
-    return bytes([0x01]) + w.rbsp()
-
-
-def encode_gop_b(frames, qp: int = 26, pcm_mad: float = 4.0,
-                 search: int = 8) -> list[bytes]:
-    """Encode display-order frames as an IDR-led GOP with one
-    NON-REFERENCE B picture between consecutive anchors (display
-    I0 B1 P2 B3 P4 ...; decode order I0 P2 B1 P4 B3 ...).  Returns the
-    DECODE-order NAL list; ``decode_gop`` reorders output back to
-    display order via POC.  Each B predicts from the two surrounding
-    anchor reconstructions (L0 = past, L1 = future), so the stream's
-    SPS must declare max_num_ref_frames >= 2 (decode with
-    ``encode_sps(..., max_num_ref_frames=2)``)."""
-    frames = list(frames)
-    if not frames:
-        raise ValueError("no frames")
-    h, w_, _ = frames[0].shape
-    from .mp4 import encode_pps, encode_sps, parse_pps, parse_sps
-    sps = parse_sps(encode_sps(w_, h, fps=10.0, max_num_ref_frames=2))
+    sps = parse_sps(encode_sps(w_, h, fps=10.0))
     pps = parse_pps(encode_pps(deblocking_control=True))
     out = [encode_iframe(frames[0], pcm_mad=pcm_mad, qp=qp)]
-    prev_rec = _decode_slice(out[0], sps, pps, None)
-    fn = 1
-    for disp in range(2, len(frames), 2):
-        nal = encode_pframe(frames[disp], prev_rec, qp=qp,
-                            pcm_mad=pcm_mad, frame_num=fn,
-                            search=search, poc=2 * disp)
+    ref = _decode_slice(out[0], sps, pps, None)
+    for i, fr in enumerate(frames[1:], start=1):
+        nal = encode_pframe(fr, ref, qp=qp, pcm_mad=pcm_mad, frame_num=i,
+                            search=search)
         out.append(nal)
-        rec = _decode_slice(nal, sps, pps, prev_rec)
-        out.append(encode_bframe(frames[disp - 1], prev_rec, rec,
-                                 qp=qp, pcm_mad=pcm_mad, frame_num=fn,
-                                 poc=disp - 1, search=search))
-        prev_rec, fn = rec, fn + 1
-    if len(frames) % 2 == 0:  # trailing display frame has no future
-        disp = len(frames) - 1
-        out.append(encode_pframe(frames[disp], prev_rec, qp=qp,
-                                 pcm_mad=pcm_mad, frame_num=fn,
-                                 search=search, poc=2 * disp))
+        ref = _decode_slice(nal, sps, pps, ref)
     return out
 
 
@@ -1906,46 +1477,15 @@ def decode_pframe_planes(nal: bytes, sps: dict, pps: dict,
 def decode_gop(nals: list[bytes], sps: dict, pps: dict,
                stats: dict | None = None) -> list[np.ndarray]:
     """Decode an IDR-led group of pictures (I/P slice NALs, decode
-    order) to a list of (h, w, 3) RGB frames, threading each decoded
-    picture as the next one's reference."""
-    entries = []
-    dpb: list = []  # (poc, planes), most recently decoded first
-    n_refs = max(1, sps.get("max_num_ref_frames", 1))
+    order) to a list of (h, w, 3) RGB frames in the same order, each P
+    picture predicting from the most recent reference picture."""
+    out, ref = [], None
     for nal in nals:
-        if (nal[0] & 0x1F) == 5:
-            dpb.clear()  # IDR resets the reference picture buffer
-        st5, poc = _slice_header_peek(nal, sps)
-        if st5 == 1:  # B: default lists split around this picture's POC
-            l0 = [e[1] for e in sorted((e for e in dpb if e[0] < poc),
-                                       key=lambda e: -e[0])]
-            l1 = [e[1] for e in sorted((e for e in dpb if e[0] > poc),
-                                       key=lambda e: e[0])]
-            planes = _decode_slice(nal, sps, pps, (l0, l1), stats)
-        else:
-            refs = [e[1] for e in dpb]
-            planes = _decode_slice(nal, sps, pps, refs or None, stats)
+        planes = _decode_slice(nal, sps, pps, ref, stats)
         if (nal[0] >> 5) & 3:  # nal_ref_idc: reference pictures only
-            dpb.insert(0, (poc, planes))
-            del dpb[n_refs:]
-        entries.append((poc, yuv420_to_rgb(*_crop_planes(planes, sps))))
-    # DISPLAY order (PicOrderCnt); equals decode order for all-P GOPs
-    entries.sort(key=lambda e: e[0])
-    return [rgb for _poc, rgb in entries]
-
-
-def _slice_header_peek(nal: bytes, sps: dict) -> tuple[int, int]:
-    """(slice_type %% 5, pic_order_cnt_lsb) from a slice header — the
-    two fields decode_gop needs for reference-list construction and
-    display-order output, without decoding the slice."""
-    r = _BitReader(_unescape_rbsp(nal[1:]))
-    r.ue()  # first_mb_in_slice
-    st5 = r.ue() % 5
-    r.ue()  # pic_parameter_set_id
-    r.u(sps["log2_max_frame_num"])  # frame_num
-    if (nal[0] & 0x1F) == 5:
-        r.ue()  # idr_pic_id
-    poc = r.u(sps["log2_max_poc_lsb"]) if sps["poc_type"] == 0 else 0
-    return st5, poc
+            ref = planes
+        out.append(yuv420_to_rgb(*_crop_planes(planes, sps)))
+    return out
 
 
 def _crop_planes(planes, sps: dict):
@@ -1962,9 +1502,9 @@ def _decode_slice(nal: bytes, sps: dict, pps: dict,
                   ref, stats: dict | None = None):
     """Decode one I or P slice to UNCROPPED (Y, Cb, Cr) planes.
 
-    ``ref``: None (I slices), one (Y, Cb, Cr) planes tuple, or a LIST
-    of such tuples — reference list L0, index 0 = most recent decoded
-    picture (what :func:`decode_gop` threads)."""
+    ``ref``: None for I slices; for P slices the one reference picture,
+    an UNCROPPED (Y, Cb, Cr) planes tuple (what :func:`decode_gop`
+    threads)."""
     if not nal:
         raise ValueError("empty NAL")
     nal_type = nal[0] & 0x1F
@@ -1977,12 +1517,13 @@ def _decode_slice(nal: bytes, sps: dict, pps: dict,
         raise NotImplementedError("multi-slice pictures unsupported")
     slice_type = r.ue()
     st5 = slice_type % 5
-    is_p, is_b = st5 == 0, st5 == 1
-    if st5 not in (0, 1, 2):  # 2/7 = I, 0/5 = P, 1/6 = B
+    is_p = st5 == 0
+    if st5 not in (0, 2):  # 2/7 = I, 0/5 = P
         raise NotImplementedError(
-            f"only I, P and B slices supported (slice_type {slice_type})")
-    if (is_p or is_b) and ref is None:
-        raise ValueError("P/B slice needs reference pictures")
+            f"{'B' if st5 == 1 else 'SP/SI'} slices unsupported "
+            f"(slice_type {slice_type})")
+    if is_p:
+        refY, refCb, refCr = _ref_planes(ref)
     r.ue()  # pic_parameter_set_id
     r.u(sps["log2_max_frame_num"])  # frame_num
     if not sps.get("frame_mbs_only", 1):
@@ -1996,48 +1537,22 @@ def _decode_slice(nal: bytes, sps: dict, pps: dict,
             r.se()
     if pps.get("redundant_pic_cnt_present"):
         r.ue()
-    if is_b:
-        r.u(1)  # direct_spatial_mv_pred_flag (no direct MBs in subset)
-    n_active = pps.get("num_ref_idx_l0_default", 1)
-    n_active_l1 = pps.get("num_ref_idx_l1_default", 1)
-    if is_p or is_b:
+    if is_p:
+        n_active = pps.get("num_ref_idx_l0_default", 1)
         if r.u(1):  # num_ref_idx_active_override_flag
             n_active = 1 + r.ue()  # num_ref_idx_l0_active_minus1
-            if is_b:
-                n_active_l1 = 1 + r.ue()
+        if n_active > 1:
+            raise NotImplementedError(
+                f"multiple reference pictures unsupported ({n_active} "
+                f"active)")
         if r.u(1):  # ref_pic_list_modification_flag_l0
             raise NotImplementedError(
                 "reference list modification unsupported")
-        if is_b and r.u(1):  # ref_pic_list_modification_flag_l1
+        if pps.get("weighted_pred"):
             raise NotImplementedError(
-                "reference list modification unsupported")
-        if is_b and pps.get("weighted_bipred_idc", 0):
-            raise NotImplementedError(
-                "weighted biprediction unsupported (implicit/explicit)")
-        if is_b and (n_active > 1 or n_active_l1 > 1):
-            raise NotImplementedError(
-                "multiple references per list in B slices unsupported")
-    wp = None
-    if is_p and pps.get("weighted_pred"):
-        # pred_weight_table (7.3.5.4): explicit weighted prediction —
-        # per-reference (weight, offset) pairs, luma + both chroma
-        ld = r.ue()  # luma_log2_weight_denom
-        cd = r.ue()  # chroma_log2_weight_denom
-        if ld > 7 or cd > 7:
-            raise ValueError("log2 weight denom out of range")
-        wlist = []
-        for _ in range(n_active):
-            lw, lo = 1 << ld, 0
-            if r.u(1):  # luma_weight_l0_flag
-                lw, lo = r.se(), r.se()
-            cwb, cob, cwr, cor = 1 << cd, 0, 1 << cd, 0
-            if r.u(1):  # chroma_weight_l0_flag
-                cwb, cob = r.se(), r.se()
-                cwr, cor = r.se(), r.se()
-            wlist.append((lw, lo, cwb, cob, cwr, cor))
-        wp = (ld, cd, wlist)
-    nal_ref_idc = (nal[0] >> 5) & 3
-    if nal_ref_idc:  # dec_ref_pic_marking
+                "explicit weighted prediction (weighted_pred_flag) "
+                "unsupported")
+    if (nal[0] >> 5) & 3:  # nal_ref_idc: dec_ref_pic_marking
         if idr:
             r.u(1)  # no_output_of_prior_pics_flag
             r.u(1)  # long_term_reference_flag
@@ -2067,56 +1582,16 @@ def _decode_slice(nal: bytes, sps: dict, pps: dict,
     decoded = np.zeros((mbs_h * 4, mbs_w * 4), dtype=bool)
     i4modes = np.full((mbs_h * 4, mbs_w * 4), -1, dtype=np.int8)
     qp_offset = pps.get("chroma_qp_index_offset", 0)
-    if is_p:
-        refs = [ref] if isinstance(ref[0], np.ndarray) else list(ref)
-        if len(refs) < n_active:
-            raise ValueError(
-                f"slice declares {n_active} active references, decoder "
-                f"holds {len(refs)}")
-        refY, refCb, refCr = refs[0]
-        mvs4 = np.zeros((mbs_h * 4, mbs_w * 4, 2), dtype=np.int32)
-        ref4 = np.full((mbs_h * 4, mbs_w * 4), -1, dtype=np.int8)
-    if is_b:
-        if (not isinstance(ref, tuple) or len(ref) != 2
-                or (ref[0] is not None and isinstance(ref[0], np.ndarray))):
-            raise ValueError(
-                "B slice needs (past_list, future_list) reference lists")
-        l0_list, l1_list = ref
-        if not l0_list or not l1_list:
-            raise ValueError(
-                "B slice needs a past (L0) and a future (L1) reference")
-        bi_refs = (l0_list[0], l1_list[0])
-        # per-list MV state (the 8.4.1.3 prediction runs per list)
-        mvs4b = [np.zeros((mbs_h * 4, mbs_w * 4, 2), dtype=np.int32)
-                 for _ in range(2)]
-        ref4b = [np.full((mbs_h * 4, mbs_w * 4), -1, dtype=np.int8)
-                 for _ in range(2)]
+    mvs4 = np.zeros((mbs_h * 4, mbs_w * 4, 2), dtype=np.int32)
+    ref4 = np.full((mbs_h * 4, mbs_w * 4), -1, dtype=np.int8)
 
     def _bump(key):
         if stats is not None:
             stats[key] = stats.get(key, 0) + 1
 
-    def _wl(p, ri):
-        """Weight a luma prediction for reference ``ri`` (no-op without
-        a pred_weight_table)."""
-        if wp is None:
-            return p
-        return _wp_apply(p, wp[2][ri][0], wp[2][ri][1], wp[0])
-
-    def _wc(p, ri, comp):
-        """Weight a chroma prediction (comp 0 = Cb, 1 = Cr)."""
-        if wp is None:
-            return p
-        w_, o_ = wp[2][ri][2 + 2 * comp], wp[2][ri][3 + 2 * comp]
-        return _wp_apply(p, w_, o_, wp[1])
-
     n_mbs = mbs_w * mbs_h
     addr = 0
     while addr < n_mbs:
-        if is_b:
-            if r.ue():  # mb_skip_run: B_Skip decodes via direct inference
-                raise NotImplementedError(
-                    "B_Skip (direct-mode inference) unsupported")
         if is_p:
             run = r.ue()
             if addr + run > n_mbs:
@@ -2128,12 +1603,9 @@ def _decode_slice(nal: bytes, sps: dict, pps: dict,
                 cx, cy = mbx * 8, mby * 8
                 bx0, by0 = mbx * 4, mby * 4
                 mv = _skip_mv(mvs4, ref4, decoded, mbx, mby)
-                recY[yy:yy + 16, yx:yx + 16] = _wl(
-                    _mc_luma(refY, yx, yy, mv), 0)
-                recCb[cy:cy + 8, cx:cx + 8] = _wc(
-                    _mc_chroma(refCb, cx, cy, mv), 0, 0)
-                recCr[cy:cy + 8, cx:cx + 8] = _wc(
-                    _mc_chroma(refCr, cx, cy, mv), 0, 1)
+                recY[yy:yy + 16, yx:yx + 16] = _mc_luma(refY, yx, yy, mv)
+                recCb[cy:cy + 8, cx:cx + 8] = _mc_chroma(refCb, cx, cy, mv)
+                recCr[cy:cy + 8, cx:cx + 8] = _mc_chroma(refCr, cx, cy, mv)
                 mvs4[by0:by0 + 4, bx0:bx0 + 4] = mv
                 ref4[by0:by0 + 4, bx0:bx0 + 4] = 0
                 decoded[by0:by0 + 4, bx0:bx0 + 4] = True
@@ -2160,26 +1632,6 @@ def _decode_slice(nal: bytes, sps: dict, pps: dict,
                             f"invalid sub_mb_type in {sub_types}")
                     plist = _p8x8_plist(sub_types)
 
-                def _read_ref() -> int:
-                    if n_active == 1:
-                        return 0
-                    ri = (1 - r.u(1)) if n_active == 2 else r.ue()  # te(v)
-                    if ri >= n_active:
-                        raise ValueError(
-                            f"ref_idx_l0 {ri} >= active count {n_active}")
-                    return ri
-
-                # ref_idx_l0 precedes the mvds (7.3.5.1/7.3.5.2): one per
-                # partition, or one per 8x8 quadrant (its sub-partitions
-                # share it); P_8x8ref0 (mb_type 4) infers 0
-                if mb_type in (3, 4):
-                    quad_refs = ([0] * 4 if mb_type == 4
-                                 else [_read_ref() for _ in range(4)])
-                    prefs = []
-                    for qi, smt in enumerate(sub_types):
-                        prefs += [quad_refs[qi]] * len(_SUB_SHAPES[smt])
-                else:
-                    prefs = [_read_ref() for _ in plist]
                 mvds = [(r.se(), r.se()) for _ in plist]
                 code_num = r.ue()
                 if code_num > 47:
@@ -2197,32 +1649,28 @@ def _decode_slice(nal: bytes, sps: dict, pps: dict,
                 predY = np.empty((16, 16), dtype=np.uint8)
                 predCb = np.empty((8, 8), dtype=np.uint8)
                 predCr = np.empty((8, 8), dtype=np.uint8)
-                frac = multiref = False
+                frac = False
                 # partitions reconstruct sequentially: the second one's
-                # predictor reads the first's mv/refidx from the grids
-                for (tag, ox, oy, wb, hb), mvd, ri in zip(plist, mvds,
-                                                          prefs):
+                # predictor reads the first's mv from the grids
+                for (tag, ox, oy, wb, hb), mvd in zip(plist, mvds):
                     bx, by = bx0 + ox, by0 + oy
                     px, py = yx + ox * 4, yy + oy * 4
                     mvp = _mv_pred(mvs4, ref4, decoded, bx, by, wb,
-                                   part=tag, refidx=ri)
+                                   part=tag)
                     mv = (mvp[0] + mvd[0], mvp[1] + mvd[1])
                     frac = frac or bool(mv[0] & 3 or mv[1] & 3)
-                    multiref = multiref or ri > 0
-                    rY_, rCb_, rCr_ = refs[ri]
                     predY[oy * 4:oy * 4 + hb * 4, ox * 4:ox * 4 + wb * 4] \
-                        = _wl(_mc_luma(rY_, px, py, mv,
-                                       (hb * 4, wb * 4)), ri)
+                        = _mc_luma(refY, px, py, mv, (hb * 4, wb * 4))
                     predCb[oy * 2:oy * 2 + hb * 2,
-                           ox * 2:ox * 2 + wb * 2] = _wc(_mc_chroma(
-                        rCb_, cx + ox * 2, cy + oy * 2, mv,
-                        (hb * 2, wb * 2)), ri, 0)
+                           ox * 2:ox * 2 + wb * 2] = _mc_chroma(
+                        refCb, cx + ox * 2, cy + oy * 2, mv,
+                        (hb * 2, wb * 2))
                     predCr[oy * 2:oy * 2 + hb * 2,
-                           ox * 2:ox * 2 + wb * 2] = _wc(_mc_chroma(
-                        rCr_, cx + ox * 2, cy + oy * 2, mv,
-                        (hb * 2, wb * 2)), ri, 1)
+                           ox * 2:ox * 2 + wb * 2] = _mc_chroma(
+                        refCr, cx + ox * 2, cy + oy * 2, mv,
+                        (hb * 2, wb * 2))
                     mvs4[by:by + hb, bx:bx + wb] = mv
-                    ref4[by:by + hb, bx:bx + wb] = ri
+                    ref4[by:by + hb, bx:bx + wb] = 0
                     decoded[by:by + hb, bx:bx + wb] = True
                 recY[yy:yy + 16, yx:yx + 16] = _recon_luma_blocks4(
                     predY, blocks4, qp)
@@ -2236,67 +1684,8 @@ def _decode_slice(nal: bytes, sps: dict, pps: dict,
                     _bump("psub")
                 if frac:
                     _bump("qpel")
-                if multiref:
-                    _bump("multiref")
                 continue
             mb_type -= 5  # intra MB in a P slice (Table 7-13 offset)
-        if is_b:
-            if mb_type < 23:  # inter B MB (Table 7-14 mb_type column)
-                if mb_type == 0:
-                    raise NotImplementedError(
-                        "B_Direct_16x16 (direct prediction) unsupported")
-                if mb_type > 3:
-                    raise NotImplementedError(
-                        "B partitions below 16x16 unsupported")
-                use_l = (mb_type in (1, 3), mb_type in (2, 3))  # L0, L1
-                mvds_b = [(r.se(), r.se()) if u else None for u in use_l]
-                code_num = r.ue()
-                if code_num > 47:
-                    raise ValueError(
-                        f"invalid coded_block_pattern {code_num}")
-                cbp = _CBP_INTER[code_num]
-                cbp_luma4, cbp_chroma = cbp & 15, cbp >> 4
-                if cbp:
-                    qp = (qp + r.se() + 52) % 52
-                qpc = hr.chroma_qp(qp, qp_offset)
-                blocks4 = _read_i4_luma_residual(r, ctx, mbx, mby,
-                                                 cbp_luma4)
-                dcCb, acCb, dcCr, acCr = _read_chroma_residual(
-                    r, ctx, mbx, mby, cbp_chroma)
-                preds = []
-                frac = False
-                for li in (0, 1):
-                    if not use_l[li]:
-                        continue
-                    mvp = _mv_pred(mvs4b[li], ref4b[li], decoded,
-                                   bx0, by0, 4)
-                    mv = (mvp[0] + mvds_b[li][0], mvp[1] + mvds_b[li][1])
-                    frac = frac or bool(mv[0] & 3 or mv[1] & 3)
-                    rY_, rCb_, rCr_ = bi_refs[li]
-                    preds.append((
-                        _mc_luma(rY_, yx, yy, mv),
-                        _mc_chroma(rCb_, cx, cy, mv),
-                        _mc_chroma(rCr_, cx, cy, mv)))
-                    mvs4b[li][by0:by0 + 4, bx0:bx0 + 4] = mv
-                    ref4b[li][by0:by0 + 4, bx0:bx0 + 4] = 0
-                if len(preds) == 2:  # default biprediction: average
-                    predY, predCb, predCr = (
-                        ((a.astype(np.int64) + b + 1) >> 1).astype(np.uint8)
-                        for a, b in zip(preds[0], preds[1]))
-                else:
-                    predY, predCb, predCr = preds[0]
-                recY[yy:yy + 16, yx:yx + 16] = _recon_luma_blocks4(
-                    predY, blocks4, qp)
-                recCb[cy:cy + 8, cx:cx + 8] = hr.recon_chroma8(
-                    predCb, dcCb, acCb, qpc)
-                recCr[cy:cy + 8, cx:cx + 8] = hr.recon_chroma8(
-                    predCr, dcCr, acCr, qpc)
-                decoded[by0:by0 + 4, bx0:bx0 + 4] = True
-                _bump({1: "b_l0", 2: "b_l1", 3: "b_bi"}[mb_type])
-                if frac:
-                    _bump("qpel")
-                continue
-            mb_type -= 23  # intra MB in a B slice (Table 7-14 offset)
         if mb_type == 25:  # I_PCM
             r.align()
             recY[yy:yy + 16, yx:yx + 16] = np.frombuffer(

@@ -300,8 +300,7 @@ def parse_sps(nal: bytes) -> dict:
 
 
 def encode_sps(width: int, height: int, profile_idc: int = 66,
-               level_idc: int = 30, fps: float | None = None,
-               max_num_ref_frames: int = 1) -> bytes:
+               level_idc: int = 30, fps: float | None = None) -> bytes:
     """Synthesize a conformant baseline/main-profile SPS NAL declaring the
     given TRUE frame dimensions (macroblock-aligned size + frame
     cropping) and optional VUI fps — the ground-truth generator for the
@@ -324,7 +323,7 @@ def encode_sps(width: int, height: int, profile_idc: int = 66,
     w.ue(4)  # log2_max_frame_num_minus4
     w.ue(0)  # pic_order_cnt_type = 0
     w.ue(4)  # log2_max_pic_order_cnt_lsb_minus4
-    w.ue(max_num_ref_frames)
+    w.ue(1)  # max_num_ref_frames
     w.u(0, 1)  # gaps_in_frame_num_value_allowed
     w.ue(mbs_w - 1)
     w.ue(mbs_h - 1)
@@ -357,16 +356,13 @@ def encode_sps(width: int, height: int, profile_idc: int = 66,
     return bytes([0x67]) + w.rbsp()
 
 
-def encode_pps(deblocking_control: bool = False,
-               weighted_pred: bool = False) -> bytes:
+def encode_pps(deblocking_control: bool = False) -> bytes:
     """Minimal conformant PPS NAL (CAVLC, one slice group).
 
     ``deblocking_control=True`` sets deblocking_filter_control_present so
     a slice header can legitimately switch the loop filter OFF
     (disable_deblocking_filter_idc=1) — required by sparksketch.h264,
-    whose decoder implements no deblocking.  ``weighted_pred=True`` sets
-    weighted_pred_flag so P slice headers carry a pred_weight_table
-    (explicit weighted prediction — fades)."""
+    whose decoder implements no deblocking."""
     w = _BitWriter()
     w.ue(0)  # pic_parameter_set_id
     w.ue(0)  # seq_parameter_set_id
@@ -375,7 +371,7 @@ def encode_pps(deblocking_control: bool = False,
     w.ue(0)  # num_slice_groups_minus1
     w.ue(0)  # num_ref_idx_l0_default_active_minus1
     w.ue(0)  # num_ref_idx_l1_default_active_minus1
-    w.u(1 if weighted_pred else 0, 1)  # weighted_pred_flag
+    w.u(0, 1)  # weighted_pred_flag
     w.u(0, 2)  # weighted_bipred_idc
     w.se(0)  # pic_init_qp_minus26
     w.se(0)  # pic_init_qs_minus26

@@ -19,18 +19,16 @@ Decode support has three tiers:
 3. **Video** — BOTH container layers are real: RIFF/AVI MJPEG decodes
    end-to-end (frame JPEG bytes out), and ISO BMFF/MP4 parses its moov
    sample tables (sparksketch/mp4.py) to emit each sampled sync frame's
-   coded bytes.  H.264 baseline-INTRA bitstreams inside those samples
-   now decode for real too (sparksketch/h264.py: slice headers,
-   macroblock layer, I_PCM + Intra_16x16 + Intra_4x4 with full CAVLC
-   coefficient residuals via sparksketch/h264_residual.py,
-   ``h264_frame_features`` below, plus P slices — P_Skip, the full
-   partition tree down to 4x4 sub-blocks, multiple reference pictures,
-   quarter-sample luma / eighth-sample chroma motion compensation —
-   explicit weighted prediction (fades), and B slices (L0/L1/Bi 16x16,
-   POC-split lists, display reordering) so IDR-led GOPs decode
-   end-to-end); B direct modes / weighted biprediction / CABAC /
-   deblocking / H.265 remain the documented seam a full codec library
-   would fill.
+   coded bytes.  H.264 baseline bitstreams inside those samples decode
+   for real too (sparksketch/h264.py: slice headers, macroblock layer,
+   I_PCM + Intra_16x16 + Intra_4x4 with full CAVLC coefficient residuals
+   via sparksketch/h264_residual.py, ``h264_frame_features`` below, plus
+   single-reference P slices — P_Skip, the full partition tree down to
+   4x4 sub-blocks, quarter-sample luma / eighth-sample chroma motion
+   compensation — so IDR-led I/P GOPs decode end-to-end).  B slices,
+   weighted prediction, multiple reference pictures, CABAC, deblocking
+   and H.265 raise ``NotImplementedError``; they are the seam a full
+   codec library would fill.
 """
 
 from __future__ import annotations
@@ -514,6 +512,18 @@ def video_sps_features(spark, n: int = 32, partitions: int = 4) -> DataFrame:
         "container_height int, container_differs boolean"))
 
 
+def _h264_clip(mid: int, w: int = 44, h: int = 28, n_frames: int = 4):
+    """(RGB frames, texture mean) of clip ``mid`` in
+    :func:`h264_frame_features`."""
+    y = np.arange(h)[:, None, None]
+    x = np.arange(w)[None, :, None]
+    c = np.arange(3)[None, None, :]
+    tex = ((x + y) * 6) % 48 - 21
+    return ([((mid % 16 + f * 6) + 24 + y + x + 40 * c + tex)
+             .astype(np.uint8) for f in range(n_frames)],
+            float(tex.mean()))
+
+
 def h264_frame_features(spark, n: int = 32, every_ms: int = 200,
                         partitions: int = 4) -> DataFrame:
     """REAL H.264 video decode end-to-end (closes the round-4 VERDICT
@@ -539,28 +549,25 @@ def h264_frame_features(spark, n: int = 32, every_ms: int = 200,
     smaller than its forced-all-PCM encoding) and ``i4_engaged`` asserts
     the decoded stream REALLY contains Intra_4x4 macroblocks — the
     census comes from the decoder's own mb_type parse, not encoder
-    bookkeeping."""
+    bookkeeping.  ``gop_ok`` covers the inter path: the same clip as a
+    single-reference I/P GOP (``h264.encode_gop``: frame 0 I, each later
+    frame a P slice off the previous reconstruction, decoded in decode
+    order by ``h264.decode_gop``) must be smaller than the all-intra
+    clip, and every decoded frame must meet the same mean bound."""
     base = spark.range(0, n, 1, partitions).select(
         F.col("id").alias("media_id"))
-    true_w, true_h, n_frames = 44, 28, 4
+    true_w, true_h = 44, 28
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         from .h264 import (avc_sample, decode_gop, decode_iframe_planes,
                            encode_gop, encode_iframe, yuv420_to_rgb)
         from .mp4 import build_mp4, mp4_frame_plan, parse_avcc, parse_mp4
         from .mp4 import parse_pps, parse_sps
-        y = np.arange(true_h)[:, None, None]
-        x = np.arange(true_w)[None, :, None]
-        c = np.arange(3)[None, None, :]
-        tex = (((x[..., 0] + y[..., 0]) * 6) % 48 - 21)[..., None]
-        t_mean = float(tex.mean())
         for pdf in batches:
             rows = []
             for mid in pdf["media_id"]:
                 mid = int(mid)
-                frames_rgb = [((mid % 16 + f * 6) + 24 + y + x + 40 * c
-                               + tex).astype(np.uint8)
-                              for f in range(n_frames)]
+                frames_rgb, t_mean = _h264_clip(mid, true_w, true_h)
                 samples = [avc_sample([encode_iframe(fr, pcm_mad=3.0)])
                            for fr in frames_rgb]
                 pcm_len = sum(

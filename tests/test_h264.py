@@ -5,6 +5,8 @@ encoder reconstructed (both run prediction off reconstructed neighbors),
 and I_PCM round-trips losslessly in 4:2:0 space.  Everything outside the
 documented subset raises NotImplementedError naming the feature.
 """
+import hashlib
+
 import numpy as np
 import pytest
 
@@ -239,6 +241,39 @@ class TestSeamsRaiseLoudly:
         with pytest.raises(ValueError):
             decode_iframe(bytes([0x65]) + w.rbsp(), sps, pps)
 
+    @staticmethod
+    def _out_of_subset(feature):
+        """(GOP NALs, pps) whose second picture uses ``feature``."""
+        from sparksketch.h264 import encode_gop
+        from sparksketch.mp4 import _BitWriter
+        rgb = _noise(16, 16, 7)
+        nals = encode_gop([rgb, rgb])
+        pps = parse_pps(encode_pps(deblocking_control=True))
+        if feature == "weighted":
+            return nals, dict(pps, weighted_pred=1)
+        w = _BitWriter()
+        w.ue(0)                                  # first_mb_in_slice
+        w.ue(6 if feature == "b_slice" else 5)   # slice_type B / P
+        w.ue(0)                                  # pic_parameter_set_id
+        w.u(1, 8)                                # frame_num
+        w.u(2, 8)                                # pic_order_cnt_lsb
+        w.u(1, 1)                # num_ref_idx_active_override_flag
+        w.ue(1)                  # num_ref_idx_l0_active_minus1: 2 refs
+        w.u(0, 2)
+        w.se(0)
+        w.ue(1)
+        return [nals[0], bytes([0x61]) + w.rbsp()], pps
+
+    @pytest.mark.parametrize("feature", ["b_slice", "weighted", "two_refs"])
+    def test_out_of_subset_inter_rejected(self, feature):
+        from sparksketch.h264 import decode_gop
+        nals, pps = self._out_of_subset(feature)
+        sps, _, _, _ = _cfg(16, 16)
+        match = {"b_slice": "B slices", "weighted": "weighted prediction",
+                 "two_refs": "multiple reference pictures"}[feature]
+        with pytest.raises(NotImplementedError, match=match):
+            decode_gop(nals, sps, pps)
+
     def test_truncated_pcm_rejected(self):
         rgb = _noise(16, 16, 6)
         sps, pps, _, _ = _cfg(16, 16)
@@ -273,6 +308,31 @@ class TestMp4Glue:
                 avc_sample([encode_sps(16, 16)]),
                 build_avcc(encode_sps(16, 16),
                            encode_pps(deblocking_control=True)))
+
+
+class TestDriverStreamsGolden:
+    """sha256 of the bitstreams ``h264_frame_features`` encodes (its
+    per-frame IDR slices and its I/P GOP) for three clips, recorded
+    before the B-slice, weighted-prediction and multi-reference code was
+    deleted: the encoder that remains emits the same bytes."""
+    DIGESTS = {
+        0: ("3eadd7c280686e3686002e230ab139366b756ce1af3feef1cdb46f2fc8a25f39",
+            "04b80e9012cd3d11cae83aceeedc05e12338f9b71ce44f37a09d5fdd7c4a2d4d"),
+        7: ("a0edb4988fa8297d3ab50d7abc813c586663c2826e8a58e1dd87edf1a8458717",
+            "d93a6c892b5a77c7a05ad28ee3962c32248da1ce7b09677ee38906b5603ec1bc"),
+        13: ("eca24cb44eafdcd95fd8628c86fd6c1eafb0e1514e58132931fe1b6849d95862",
+             "829caf336ffc0486d8a2665247df40579491801be1d324ad1c5bf1d47735949b"),
+    }
+
+    @pytest.mark.parametrize("mid", sorted(DIGESTS))
+    def test_driver_streams_unchanged(self, mid):
+        from sparksketch.h264 import encode_gop
+        from sparksketch.multimodal import _h264_clip
+        frames, _ = _h264_clip(mid)
+        intra = avc_sample([encode_iframe(fr, pcm_mad=3.0) for fr in frames])
+        gop = avc_sample(encode_gop(frames, qp=26, pcm_mad=3.0))
+        assert (hashlib.sha256(intra).hexdigest(),
+                hashlib.sha256(gop).hexdigest()) == self.DIGESTS[mid]
 
 
 class TestDistributedTier:

@@ -352,17 +352,3 @@ def test_qpel_interp_matches_scalar_spec_reference(seed, mvx, mvy, x0, y0):
         [[_ref_interp(ref, y0 + yi + yy, x0 + xi + xx, xf, yf)
           for xx in range(8)] for yy in range(8)], dtype=np.uint8)
     assert np.array_equal(got, want)
-
-
-@settings(max_examples=MAX_EX, deadline=None)
-@given(p=st.integers(0, 255), w=st.integers(-127, 127),
-       o=st.integers(-127, 127), d=st.integers(0, 7))
-def test_wp_apply_matches_spec_formula(p, w, o, d):
-    from sparksketch.h264 import _wp_apply
-    arr = np.full((2, 2), p, dtype=np.uint8)
-    got = int(_wp_apply(arr, w, o, d)[0, 0])
-    if d > 0:
-        want = ((p * w + (1 << (d - 1))) >> d) + o
-    else:
-        want = p * w + o
-    assert got == min(max(want, 0), 255)

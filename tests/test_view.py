@@ -146,6 +146,40 @@ class TestSketchView:
         want = _exact(events, ["event_type"])
         assert got == {k[0]: v[0] for k, v in want.items()}
 
+    def test_stream_writer_failed_commit_then_replay(
+            self, spark, events, tmp_path, monkeypatch):
+        """The manifest commit of micro-batch 1 fails after its temp file
+        is written; the re-delivered batch 1 then commits exactly once
+        and the view answers exactly."""
+        import pyarrow.parquet as pq
+
+        from sparksketch.view import _read_manifest, view_stream_writer
+        path = str(tmp_path / "sview")
+        h = F.xxhash64(F.col("event_id").cast("string")) % 2 == 0
+        writer = view_stream_writer(["event_type"], self.SPEC,
+                                    ["user_id"], path)
+        writer(events.filter(h), 0)
+        write_table = pq.write_table
+
+        def crash(table, where, **kw):
+            write_table(table, where, **kw)
+            raise RuntimeError("injected crash before the rename")
+
+        monkeypatch.setattr(pq, "write_table", crash)
+        with pytest.raises(RuntimeError, match="injected crash"):
+            writer(events.filter(~h), 1)
+        monkeypatch.undo()
+        assert [r[4] for r in _read_manifest(path).rows] == \
+            ["stream_batch=0"]
+        writer(events.filter(~h), 1)
+        m = _read_manifest(path)
+        assert [r[4] for r in m.rows if r[3]] == \
+            ["stream_batch=0", "stream_batch=1"]
+        got = {r["event_type"]: (r["estimate"], r["rows"])
+               for r in view_query(spark, path).collect()}
+        want = _exact(events, ["event_type"])
+        assert got == {k[0]: v for k, v in want.items()}
+
     def test_multi_dim_view_with_null_dim_values(self, spark, events,
                                                  tmp_path):
         """Two dims, one with NULLs injected: per-(type, flag) groups,
