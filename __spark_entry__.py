@@ -170,7 +170,7 @@ def q_kll_lineitem_qty_quantiles(spark, sf_dir):
 
 def q_kll_grouped_fixedk_latency(spark, sf_dir):
     """Per-conversation inter-turn latency p95 with a FIXED k=200 KLL per
-    group, built via the segmented two-stage path (round-2 VERDICT #6:
+    group, built via grouped_sketch's two stages (round-2 VERDICT #6:
     the bridge between the exact-regime demos and the fixed-k bound
     gate).  This is the 100 TB plan shape for billions of groups: k never
     scales with data, raw rows never shuffle (per-(partition, conv) KLL
@@ -180,8 +180,7 @@ def q_kll_grouped_fixedk_latency(spark, sf_dir):
     conversation has far fewer than k deltas, so the fixed-k sketch is
     exact per group and the oracle is per-conv quantile_cont."""
     from pyspark.sql import Window
-    from sparksketch.agg import (KLLSpec, grouped_sketch_segmented,
-                                 with_sketch_quantile)
+    from sparksketch.agg import KLLSpec, grouped_sketch, with_sketch_quantile
     from sparksketch.transcripts import transcripts_from_events
     _utc(spark)
     tr = transcripts_from_events(spark, sf_dir)
@@ -189,9 +188,8 @@ def q_kll_grouped_fixedk_latency(spark, sf_dir):
     secs = F.col("ts").cast("timestamp").cast("double")
     deltas = (tr.withColumn("delta_s", secs - F.lag(secs).over(w))
               .filter(F.col("delta_s").isNotNull()))
-    per = grouped_sketch_segmented(deltas, ["conv_id"],
-                                   KLLSpec(k=200, col="delta_s"),
-                                   ["conv_id"])
+    per = grouped_sketch(deltas, ["conv_id"], KLLSpec(k=200, col="delta_s"),
+                         ["conv_id"])
     return (with_sketch_quantile(per, 0.95, "p95")
             .select("conv_id", F.round(F.col("p95"), 6).alias("p95_s"))
             .orderBy("conv_id"))
@@ -618,16 +616,16 @@ def q_bloom_setops_estimates(spark, sf_dir):
 
 
 def q_grouped_kmv_role_distinct(spark, sf_dir):
-    """Salted grouped aggregation (north_rule skew path): per-role distinct
-    texts via bottom-k sketches built as (role, salt) partials then
-    re-merged — valid because the merge is commutative+associative.  Exact
-    below k."""
+    """Grouped aggregation on a hot key (north_rule skew path): per-role
+    distinct texts via bottom-k sketches.  A handful of roles carry every
+    turn, and the map-side combine reduces each role to one partial per
+    input partition before the shuffle — valid because the merge is
+    commutative+associative.  Exact below k."""
     from sparksketch.agg import BottomKSpec, grouped_sketch
     from sparksketch.sketches import sketch_from_bytes
     from sparksketch.transcripts import transcripts_from_events
     tr = transcripts_from_events(spark, sf_dir)
-    per_role = grouped_sketch(tr, ["role"], BottomKSpec(k=1 << 18),
-                              ["text"], salt=8)
+    per_role = grouped_sketch(tr, ["role"], BottomKSpec(k=1 << 18), ["text"])
     rows = [(r.role, int(round(
         sketch_from_bytes(bytes(r.sketch)).distinct_estimate())))
         for r in per_role.collect()]
@@ -637,7 +635,7 @@ def q_grouped_kmv_role_distinct(spark, sf_dir):
 
 def q_grouped_conv_distinct_texts(spark, sf_dir):
     """HIGH-CARDINALITY grouped aggregation (one sketch per conversation)
-    via the segmented two-stage path: stage 1 builds per-(partition, conv)
+    via grouped_sketch's two stages: stage 1 builds per-(partition, conv)
     bottom-k partials inside mapInPandas — raw rows NEVER shuffle — and
     stage 2 shuffles only KB-scale sketch rows.  Estimates are extracted
     executor-side (with_sketch_estimate), so blobs never reach the driver.
@@ -645,12 +643,11 @@ def q_grouped_conv_distinct_texts(spark, sf_dir):
     This is the plan shape that survives billions of groups at 100 TB; the
     plan invariant (no raw-row Exchange before the partial build) is
     asserted in tools/explain_plans.py."""
-    from sparksketch.agg import (BottomKSpec, grouped_sketch_segmented,
+    from sparksketch.agg import (BottomKSpec, grouped_sketch,
                                  with_sketch_estimate)
     from sparksketch.transcripts import transcripts_from_events
     tr = transcripts_from_events(spark, sf_dir)
-    per = grouped_sketch_segmented(tr, ["conv_id"], BottomKSpec(k=4096),
-                                   ["text"])
+    per = grouped_sketch(tr, ["conv_id"], BottomKSpec(k=4096), ["text"])
     return (with_sketch_estimate(per, "est")
             .select("conv_id",
                     F.round("est").cast("long").alias("distinct_texts"))
@@ -659,18 +656,17 @@ def q_grouped_conv_distinct_texts(spark, sf_dir):
 
 def q_sql_api_conv_distinct(spark, sf_dir):
     """PURE-SQL surface parity (sqlfuncs.register_sql_functions): the
-    segmented per-conversation bottom-k sketch table is exposed as a temp
+    per-conversation bottom-k sketch table is exposed as a temp
     view and queried with the registered ``sketch_estimate`` SQL function
     — same answer as the DataFrame-API path (grouped_conv_distinct_texts)
     and the same count(DISTINCT) oracle.  Shows a SQL-only user can
     consume every aggregation's ``[keys..., sketch, rows]`` output."""
-    from sparksketch.agg import BottomKSpec, grouped_sketch_segmented
+    from sparksketch.agg import BottomKSpec, grouped_sketch
     from sparksketch.sqlfuncs import register_sql_functions
     from sparksketch.transcripts import transcripts_from_events
     register_sql_functions(spark)
     tr = transcripts_from_events(spark, sf_dir)
-    per = grouped_sketch_segmented(tr, ["conv_id"], BottomKSpec(k=4096),
-                                   ["text"])
+    per = grouped_sketch(tr, ["conv_id"], BottomKSpec(k=4096), ["text"])
     per.createOrReplaceTempView("conv_sketches_sqlapi")
     return spark.sql(
         "SELECT conv_id, CAST(round(sketch_estimate(sketch)) AS BIGINT) "

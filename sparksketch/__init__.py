@@ -6,7 +6,8 @@ vectorized Arrow/pandas UDFs.
 Capability surface modeled on Claudenw/BloomFilters (see SURVEY.md); the
 execution design is Spark-first: JVM-side xxhash64 hashing, per-partition
 vectorized sketch builds via mapInPandas, associative byte-canonical merges
-via treeAggregate, salted two-phase grouped aggregation for skew."""
+via treeAggregate, grouped aggregation with a map-side combine that bounds a
+hot group to one partial sketch per input partition."""
 
 from .shape import Shape, StableShape  # noqa: F401
 from . import sketches  # noqa: F401

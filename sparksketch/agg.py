@@ -15,26 +15,23 @@ Execution design (SURVEY.md §4, BASELINE.json north_rule):
   per input partition, built fully vectorized — then merged with
   ``rdd.treeAggregate`` (depth ~ log4(P)).  Raw rows never shuffle; only
   KB-MB sketch blobs do.
-- **Grouped aggregation** has two physical paths: ``grouped_sketch`` is
-  two-phase ``applyInPandas`` ((group, salt) -> partial, then group ->
-  merge) for low-cardinality groups; ``grouped_sketch_segmented`` builds
-  per-(input partition, group) partials inside ``mapInPandas`` so raw rows
-  never shuffle — the path for per-conversation sketches at billions of
-  groups.  Merging sketch ROWS per group (stage 2 of the segmented build,
-  view appends/compactions/queries, streaming windows, the cube) is one
-  fold, :func:`regroup_sketch_rows`: rows arrive sorted by group, so each
-  Arrow batch is a sequence of same-group runs merged by
-  ``merge_blob_runs`` — one stacked NumPy max/OR per batch for HLL and
-  dense Bloom, decode-and-merge for the other kinds.  Salting/segmenting
-  are sound because every mergeable sketch kind here has a
-  commutative+associative merge.
+- **Grouped aggregation** has one path, :func:`grouped_sketch`: each
+  input partition builds per-group partials inside ``mapInPandas`` (raw
+  rows never shuffle), and only those sketch rows shuffle to be merged.
+  Merging sketch ROWS per group (stage 2 of the grouped build, view
+  appends/compactions/queries, streaming windows, the cube) is one fold,
+  :func:`regroup_sketch_rows`: rows arrive sorted by group, so each Arrow
+  batch is a sequence of same-group runs merged by ``merge_blob_runs`` —
+  one stacked NumPy max/OR per batch for HLL and dense Bloom,
+  decode-and-merge for the other kinds.  Partials are sound because
+  every mergeable sketch kind here has a commutative+associative merge.
 - **Byte-identical associativity.** OR/sum/max/min-merge kinds (bloom,
   counting, layered, HLL, CMS, bottom-k, minhash) produce byte-identical
   results for ANY partitioning / merge order.  KLL and t-digest are
   deterministic given a fixed partitioning: every merge folds partials in
   sorted-partition order, so their results reproduce run to run.
-- **Skew.** Hot groups are split by a salt derived from the item hash
-  (``pmod(h1, salt)``), merged in a second, tiny shuffle.
+- **Skew.** The grouped build's map-side combine bounds a hot group to
+  one partial row per input partition before anything shuffles.
 """
 
 from __future__ import annotations
@@ -637,56 +634,9 @@ def sketch_dataframe_multi(
 
 
 # --------------------------------------------------------------------------
-# Grouped aggregation: two-phase applyInPandas with optional salting
+# Grouped aggregation: per-partition partials in mapInPandas, merged by
+# the one sketch-row fold
 # --------------------------------------------------------------------------
-
-def grouped_sketch(df: DataFrame, group_cols: Sequence[str],
-                   spec: SketchSpec, cols: Sequence[str | Column],
-                   salt: int | None = None) -> DataFrame:
-    """``groupBy(group_cols).agg(sketch)`` -> DataFrame[*group_cols, sketch,
-    rows].
-
-    With ``salt=S``, hot groups are split S ways on ``pmod(h1, S)`` first
-    (partial sketches), then re-merged — valid because merges are
-    associative+commutative.  Two small shuffles replace one skewed one.
-    """
-    prepared = spec.prepare(df, cols, keep=group_cols)
-    gtypes = dict(df.select(*group_cols).dtypes)
-    out_schema = ", ".join([f"`{c}` {gtypes[c]}" for c in group_cols]
-                           + ["sketch binary", "rows long"])
-
-    def build(key, pdf: pd.DataFrame) -> pd.DataFrame:
-        sk = spec.empty()
-        spec.update(sk, pdf)
-        data = {c: [key[i]] for i, c in enumerate(group_cols)}
-        data["sketch"] = [sk.to_bytes()]
-        data["rows"] = [len(pdf)]
-        return pd.DataFrame(data)
-
-    if salt is None:
-        return prepared.groupBy(*group_cols).applyInPandas(build, out_schema)
-
-    # Salt from the item hash, computed independently of the spec's batch
-    # columns: KLL/TDigest prune the unused h1 from their crossing and
-    # MixKey specs emit per-column hashes, so F.col("h1") is not a column
-    # every prepared frame has.  pmod(xxhash64(*cols), salt) equals the
-    # old pmod(h1, salt) for single-hash specs — byte-identical results.
-    salted = spec.prepare(
-        df.withColumn("_salt", F.pmod(F.xxhash64(*cols), F.lit(salt))),
-        cols, keep=[*group_cols, "_salt"])
-
-    stage1 = salted.groupBy(*group_cols, "_salt").applyInPandas(
-        build, out_schema)
-
-    def merge_group(key, pdf: pd.DataFrame) -> pd.DataFrame:
-        blob = merge_blob_list(bytes(b) for b in pdf["sketch"])
-        data = {c: [key[i]] for i, c in enumerate(group_cols)}
-        data["sketch"] = [blob]
-        data["rows"] = [int(pdf["rows"].sum())]
-        return pd.DataFrame(data)
-
-    return stage1.groupBy(*group_cols).applyInPandas(merge_group, out_schema)
-
 
 def _group_sketches(batches: Iterator[pd.DataFrame],
                     group_cols: list[str],
@@ -754,15 +704,11 @@ def _hll_group_sketches(batches: Iterator[pd.DataFrame],
             for k, g in index.items()}
 
 
-def grouped_sketch_segmented(df: DataFrame, group_cols: Sequence[str],
-                             spec: SketchSpec,
-                             cols: Sequence[str | Column]) -> DataFrame:
-    """Grouped sketch aggregation for HIGH-CARDINALITY groups (e.g. one
-    sketch per ``conv_id`` at billions of conversations).
-
-    ``grouped_sketch`` shuffles every raw row to its group (applyInPandas
-    has no map-side combine) — fine for roles/days, fatal at 10^9 groups x
-    10^3 rows.  This variant is the map-side combine made explicit:
+def grouped_sketch(df: DataFrame, group_cols: Sequence[str],
+                   spec: SketchSpec,
+                   cols: Sequence[str | Column]) -> DataFrame:
+    """``groupBy(group_cols).agg(sketch)`` -> DataFrame[*group_cols, sketch,
+    rows], with the map-side combine that ``applyInPandas`` lacks:
 
     - **stage 1** (``mapInPandas``, NO shuffle): each input partition
       builds one partial sketch per group it contains, segmented inside the
@@ -770,24 +716,20 @@ def grouped_sketch_segmented(df: DataFrame, group_cols: Sequence[str],
       share one ``[groups x 2^p]`` register block, updated by a single
       max-scatter per batch; other kinds update per (batch, group);
     - **stage 2** (:func:`regroup_sketch_rows`): only the KB-scale
-      partial-sketch rows shuffle (at most partitions x groups-per-
-      partition rows), merged per group — valid because every mergeable
-      kind here is associative+commutative.
+      partial-sketch rows shuffle, merged per group — valid because every
+      mergeable kind here is associative+commutative.
 
-    Executor memory holds O(groups-in-partition x sketch bytes) during
-    stage 1: pick compact specs for ultra-high cardinality (bottom-k with
-    small k, HLL p<=12).  If the input is already hash-partitioned by the
-    group key, stage 1 emits exactly one row per group and stage 2 merges
-    singletons.
+    Skew needs no extra phase: a hot group adds at most one partial row
+    per input partition, so stage 2 folds at most partitions x groups
+    rows whatever the key distribution.  Executor memory holds
+    O(groups-in-partition x sketch bytes) during stage 1: pick compact
+    specs for ultra-high cardinality (bottom-k with small k, HLL p<=12).
 
-    Stage 2 is ALSO segmented (``repartition(group)`` + ``mapInPandas``
-    run fold, :func:`regroup_sketch_rows`) rather than ``applyInPandas``:
-    per-group Arrow slicing costs ~ms per group, which at 10^6+ groups
-    dominates everything.  Partials merge in sorted stage-1-partition
-    order (``_pid``) per group, so grouped results are deterministic for
-    every sketch kind including the compacting ones.  Stage 1 emits blobs
-    directly: an HLL group's blob is the HLL prefix plus its register-block
-    row, with no per-group sketch object.
+    Partials merge in sorted stage-1-partition order (``_pid``) per group,
+    so KLL and t-digest results are deterministic for a fixed input
+    partitioning; every other kind is byte-identical for any partitioning.
+    Group keys follow :func:`_norm_key`: NaN keys in a floating group
+    column join the NULL group.
     """
     group_cols = list(group_cols)
     prepared = spec.prepare(df, cols, keep=group_cols)
@@ -795,7 +737,7 @@ def grouped_sketch_segmented(df: DataFrame, group_cols: Sequence[str],
     out_schema = ", ".join([f"`{c}` {gtypes[c]}" for c in group_cols]
                            + ["sketch binary", "rows long"])
 
-    def build_segmented(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def build(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         from pyspark import TaskContext
         sks = (_hll_group_sketches(batches, group_cols, spec.p)
                if isinstance(spec, HLLSpec)
@@ -809,8 +751,7 @@ def grouped_sketch_segmented(df: DataFrame, group_cols: Sequence[str],
             data["_pid"] = pid
             yield pd.DataFrame(data)
 
-    stage1 = prepared.mapInPandas(build_segmented,
-                                  out_schema + ", _pid long")
+    stage1 = prepared.mapInPandas(build, out_schema + ", _pid long")
     return regroup_sketch_rows(stage1, group_cols, order_cols=["_pid"])
 
 
@@ -918,7 +859,7 @@ def grouped_sketch_cube(df: DataFrame, dims: Sequence[str],
     dims = list(dims)
     dtypes = dict(df.select(*dims).dtypes)
     from .caching import track_cache
-    finest = track_cache(grouped_sketch_segmented(df, dims, spec, cols)
+    finest = track_cache(grouped_sketch(df, dims, spec, cols)
                          .persist(StorageLevel.MEMORY_AND_DISK))
     frames = []
     for r in range(len(dims), -1, -1):

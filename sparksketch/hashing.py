@@ -27,6 +27,16 @@ _U64 = np.uint64
 _I64 = np.int64
 
 
+def as_hashes(h) -> np.ndarray:
+    """``h`` as an int64 hash array.  Floating input raises ``TypeError``:
+    a float64 "hash" has already lost its low bits, and NaN or a value
+    past ±2^63 would cast to INT64_MIN without a word."""
+    a = np.asarray(h)
+    if a.dtype.kind in "fc":
+        raise TypeError(f"hash arrays must be integers, got {a.dtype}")
+    return a.astype(np.int64, copy=False)
+
+
 def _tetra(i: np.ndarray) -> np.ndarray:
     """(i^3 - i) / 6 with int64 wrap-around (exact division, always integral)."""
     i = i.astype(np.int64, copy=False)
@@ -52,8 +62,8 @@ def edh_indices(h1: np.ndarray, h2: np.ndarray | None, k: int,
     """
     if h2 is None:
         h2 = derive_h2(h1)
-    h1 = np.asarray(h1, dtype=np.int64).reshape(-1, 1)
-    h2 = np.asarray(h2, dtype=np.int64).reshape(-1, 1)
+    h1 = as_hashes(h1).reshape(-1, 1)
+    h2 = as_hashes(h2).reshape(-1, 1)
     i = np.arange(k, dtype=np.int64).reshape(1, -1)
     with np.errstate(over="ignore"):
         raw = h1 - i * h2 + _tetra(i)
@@ -85,8 +95,7 @@ def derive_h2(h1: np.ndarray) -> np.ndarray:
     split.  A full-pair collision between distinct keys still requires an
     h1 collision (2^-64), and every sketch API applies this convention
     whenever h2 is omitted, so build and probe stay consistent."""
-    return splitmix64(np.asarray(h1, dtype=np.int64).view(_U64)
-                      ^ _U64(H2_MIX)).view(_I64)
+    return splitmix64(as_hashes(h1).view(_U64) ^ _U64(H2_MIX)).view(_I64)
 
 
 def combine_hashes(*hs: np.ndarray) -> np.ndarray:
@@ -107,10 +116,10 @@ def combine_hashes(*hs: np.ndarray) -> np.ndarray:
     xxhash64 collision (2^-64 per component)."""
     if not hs:
         raise ValueError("combine_hashes needs at least one hash array")
-    z = np.asarray(hs[0], dtype=np.int64).view(_U64)
+    z = as_hashes(hs[0]).view(_U64)
     with np.errstate(over="ignore"):
         for h in hs[1:]:
-            u = np.asarray(h, dtype=np.int64).view(_U64)
+            u = as_hashes(h).view(_U64)
             z = splitmix64(z ^ ((u << _U64(32)) | (u >> _U64(32))))
     return z.view(_I64)
 

@@ -14,6 +14,7 @@ import struct
 
 import numpy as np
 
+from ..hashing import as_hashes
 from .base import KIND_BOTTOMK, Sketch, pack_header, register
 
 _HDR = struct.Struct("<IQI")  # k, n_total, n_kept
@@ -47,7 +48,7 @@ class BottomKSketch(Sketch):
         self.values = v[: self.k].copy()
 
     def add_hashes(self, h: np.ndarray, values: np.ndarray | None = None) -> None:
-        h = np.asarray(h, dtype=np.int64).view(np.uint64)
+        h = as_hashes(h).view(np.uint64)
         if h.size == 0:
             return
         if values is None:

@@ -13,6 +13,7 @@ import struct
 
 import numpy as np
 
+from ..hashing import as_hashes
 from .base import HEADER_SIZE, KIND_HLL, Sketch, pack_header, register
 
 _HDR = struct.Struct("<B")
@@ -37,7 +38,7 @@ def bucket_rho(h: np.ndarray, p: int) -> tuple[np.ndarray, np.ndarray]:
     """Register index and rank of signed-int64 hashes (Spark xxhash64):
     bucket = top ``p`` bits, rho = 1 + leading zeros of the remaining
     ``64 - p`` bits (``64 - p + 1`` when they are all zero)."""
-    hu = np.asarray(h, dtype=np.int64).view(np.uint64)
+    hu = as_hashes(h).view(np.uint64)
     bucket = (hu >> np.uint64(64 - p)).astype(np.int64)
     rest = hu << np.uint64(p)  # remaining bits, left-aligned
     # clz via bit_length: 64 - bit_length(rest); log2 in float64 is exact

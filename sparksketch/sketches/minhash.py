@@ -16,7 +16,7 @@ import struct
 
 import numpy as np
 
-from ..hashing import splitmix64
+from ..hashing import as_hashes, splitmix64
 from .base import KIND_MINHASH, Sketch, pack_header, register
 
 _HDR = struct.Struct("<IQ")  # n_perm, seed
@@ -29,7 +29,7 @@ def perm_seeds(n_perm: int, seed: int) -> np.ndarray:
 
 def signature_matrix(hashes: np.ndarray, n_perm: int, seed: int = 42) -> np.ndarray:
     """(n_items, n_perm) uint64 matrix of per-permutation hashes."""
-    hu = np.asarray(hashes, dtype=np.int64).view(np.uint64).reshape(-1, 1)
+    hu = as_hashes(hashes).view(np.uint64).reshape(-1, 1)
     seeds = perm_seeds(n_perm, seed).reshape(1, -1)
     return splitmix64(hu ^ seeds)
 

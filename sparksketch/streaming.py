@@ -154,13 +154,15 @@ class WindowedSketchState:
     Each batch runs the *batch* engine (`grouped_sketch`) over
     ``window(ts)`` + group columns, then folds the new partials into the
     stored ones — one tiny read-merge-write per batch over KB-scale rows.
-    Late rows merge into their (old) window algebraically.
+    A hot window or group needs no special handling: the build's map-side
+    combine emits at most one partial per input partition for it.  Late
+    rows merge into their (old) window algebraically.
     """
 
     def __init__(self, spec: SketchSpec, cols: Sequence[str],
                  state_dir: str, window: str = "1 hour",
                  ts_col: str = "ts", group_cols: Sequence[str] = (),
-                 watermark: str | None = None, salt: int | None = None):
+                 watermark: str | None = None):
         self.spec = spec
         self.cols = list(cols)
         self.state_dir = state_dir
@@ -168,7 +170,6 @@ class WindowedSketchState:
         self.ts_col = ts_col
         self.group_cols = list(group_cols)
         self.watermark = watermark
-        self.salt = salt
         self._max_seen_ts = None
         # adopt pre-versioning state: the original layout was a bare
         # 'windows' dir with no CURRENT pointer — without this, an upgrade
@@ -232,8 +233,7 @@ class WindowedSketchState:
         keyed = batch_df.withColumn(
             "window_start",
             F.window(F.col(self.ts_col), self.window)["start"])
-        parts = grouped_sketch(keyed, self._keys, self.spec, self.cols,
-                               salt=self.salt)
+        parts = grouped_sketch(keyed, self._keys, self.spec, self.cols)
         live = self._current_state_path()
         if live is not None:
             parts = spark.read.parquet(live).unionByName(parts)

@@ -1,10 +1,10 @@
 """Materialized sketch views: log-structured, incrementally maintained
 sketch rollups — the hypertable-rollup pattern a 100 TB transcript
 pipeline needs.  A scheduled job appends one SEGMENT of per-``dims``
-sketch rows per batch of new data (the ONLY fact-table scan, built with
-the no-raw-shuffle segmented path); interactive queries read KB-scale
-sketch rows, merge them with the sketch algebra
-(:func:`~sparksketch.agg.regroup_sketch_rows`) and answer at any
+sketch rows per batch of new data (the ONLY fact-table scan, built by
+:func:`~sparksketch.agg.grouped_sketch`, which never shuffles raw rows);
+interactive queries read KB-scale sketch rows, merge them with the sketch
+algebra (:func:`~sparksketch.agg.regroup_sketch_rows`) and answer at any
 grouping set coarser than ``dims`` — never rescanning the facts.
 Compaction folds the segment log back to one segment with the same
 algebra.
@@ -53,7 +53,7 @@ import pyarrow.parquet as pq
 from pyarrow import fs as pafs
 from pyspark.sql import Column, DataFrame, SparkSession, functions as F
 
-from .agg import SketchSpec, grouped_sketch_segmented, regroup_sketch_rows
+from .agg import SketchSpec, grouped_sketch, regroup_sketch_rows
 
 _MANIFEST_FILE = "manifest.parquet"
 _MANIFEST_SCHEMA = pa.schema([("seg", pa.int32()), ("spec", pa.string()),
@@ -145,7 +145,7 @@ def view_materialize(df: DataFrame, dims: Sequence[str], spec: SketchSpec,
     """Create the view: build per-``dims`` sketch rows from ``df`` (one
     fact scan, raw rows never shuffle) and write them as segment 0."""
     dims = list(dims)
-    rows = grouped_sketch_segmented(df, dims, spec, cols)
+    rows = grouped_sketch(df, dims, spec, cols)
     (rows.write.mode("overwrite")
      .parquet(_segments_path(path) + "/seg=0"))
     _write_manifest(path, [(0, repr(spec), ",".join(dims), True, note)])
@@ -164,7 +164,7 @@ def view_append(df: DataFrame, spec: SketchSpec,
             f"sketch spec mismatch: view built with {m.spec}, "
             f"append called with {repr(spec)}")
     seg = m.max_seg + 1
-    rows = grouped_sketch_segmented(df, m.dims, spec, cols)
+    rows = grouped_sketch(df, m.dims, spec, cols)
     (rows.write.mode("overwrite")
      .parquet(_segments_path(path) + f"/seg={seg}"))
     _write_manifest(path, m.rows + [(seg, m.spec, ",".join(m.dims), True,

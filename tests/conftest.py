@@ -30,3 +30,21 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir():
     return SF_DIR
+
+
+@pytest.fixture(scope="session")
+def grouped_reference():
+    """Driver-side grouped build to check ``grouped_sketch`` against:
+    ``{key tuple: (sketch bytes, rows)}`` from ``toPandas()``, a
+    ``groupby(dropna=False)`` and one ``spec.empty()`` + ``spec.update``
+    per group.  NULL and NaN keys both become ``None``."""
+    def build(df, group_cols, spec, cols):
+        pdf = spec.prepare(df, cols, keep=group_cols).toPandas()
+        out = {}
+        for key, sub in pdf.groupby(list(group_cols), dropna=False):
+            sk = spec.empty()
+            spec.update(sk, sub)
+            key = tuple(None if v is None or v != v else v for v in key)
+            out[key] = (sk.to_bytes(), len(sub))
+        return out
+    return build

@@ -134,3 +134,30 @@ def test_sketch_apis_accept_omitted_h2():
     b.insert_hashes(h1)
     assert a.to_bytes() == b.to_bytes()
     assert np.array_equal(a.contains_hashes(h1), b.contains_hashes(h1, h2))
+
+
+def test_float_hash_input_raises():
+    """A float64 array is not a hash array: NaN and values past ±2^63 would
+    cast to INT64_MIN, so every entry point that takes hashes refuses it
+    rather than hashing a constant."""
+    import pytest
+
+    from sparksketch.hashing import combine_hashes, derive_h2
+    from sparksketch.sketches import (BottomKSketch, CountMinSketch,
+                                      HyperLogLog, MinHashSketch)
+    from sparksketch.sketches.hll import bucket_rho
+    ints = np.arange(4, dtype=np.int64)
+    floats = ints * 1.5
+    for call in (lambda: edh_indices(floats, None, 3, 97),
+                 lambda: edh_indices(ints, floats, 3, 97),
+                 lambda: derive_h2(floats),
+                 lambda: combine_hashes(ints, floats),
+                 lambda: bucket_rho(floats, 10),
+                 lambda: HyperLogLog(10).add_hashes(floats),
+                 lambda: CountMinSketch(64, 2).add_hashes(floats),
+                 lambda: BottomKSketch(8).add_hashes(floats),
+                 lambda: MinHashSketch(8).add_hashes(floats)):
+        with pytest.raises(TypeError, match="must be integers"):
+            call()
+    # integer input of any width still passes, as int64
+    assert np.array_equal(derive_h2(ints.astype(np.int32)), derive_h2(ints))

@@ -119,18 +119,26 @@ def test_sketch_dataframe_multi_auto_split(spark, skewed):
     assert b["kll"].n == skewed.count()
 
 
-def test_salted_grouped_no_longer_needs_h1(spark, skewed):
-    """The salt expression derives from xxhash64(*cols) — salting now works
-    for specs that don't emit an 'h1' batch column (KLL, MixKey) and stays
-    byte-identical for those that do."""
-    a = {r.k: bytes(r.sketch) for r in
-         grouped_sketch(skewed.filter(F.col("k") < "2"), ["k"],
-                        HLLSpec(p=12), ["v"], salt=3).collect()}
-    b = {r.k: bytes(r.sketch) for r in
-         grouped_sketch(skewed.filter(F.col("k") < "2"), ["k"],
-                        HLLSpec(p=12), ["v"]).collect()}
-    assert a == b
-    rows = grouped_sketch(skewed.filter(F.col("k") < "2"), ["k"],
-                          KLLSpec(k=64, col="v"), ["v"], salt=3).collect()
-    assert {r.k for r in rows} and all(
-        sketch_from_bytes(bytes(r.sketch)).n > 0 for r in rows)
+def test_grouped_hot_key_folds_partials_only(spark, skewed):
+    """A hot key needs no salt: grouped_sketch combines map-side, so the
+    rows entering its fold are at most partitions x groups, while the
+    NULL tool alone carries two thirds of the raw rows."""
+    from perfbench.sparkstats import SparkStats
+    raw = skewed.count()
+    parts = skewed.rdd.getNumPartitions()
+    groups = skewed.select("tool").distinct().count()
+    sc = spark.sparkContext
+    sc.setJobGroup("grouped-hot-key", "grouped_sketch on a hot key")
+    try:
+        rows = grouped_sketch(skewed, ["tool"], HLLSpec(p=12),
+                              ["k"]).collect()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    stats = SparkStats(spark).group("grouped-hot-key")
+    # two Python operators: the partial build reads every raw row, the
+    # fold reads only the partial rows
+    assert stats["py_ops"] == 2
+    folded = stats["py_rows_in"] - raw
+    assert 0 < folded <= parts * groups
+    assert {r.tool: r.rows for r in rows}[None] == raw - raw // 3
+    assert sum(r.rows for r in rows) == raw

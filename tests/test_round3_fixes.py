@@ -24,23 +24,21 @@ class TestNullGroupKeys:
         return spark.createDataFrame(rows, "g string, v int").repartition(4)
 
     def test_segmented_null_group(self, spark):
-        from sparksketch.agg import HLLSpec, grouped_sketch_segmented, \
+        from sparksketch.agg import HLLSpec, grouped_sketch, \
             with_sketch_estimate
-        out = grouped_sketch_segmented(self._df(spark), ["g"],
-                                       HLLSpec(p=12), ["v"])
+        out = grouped_sketch(self._df(spark), ["g"], HLLSpec(p=12), ["v"])
         got = {r["g"]: (r["rows"], round(r["estimate"]))
                for r in with_sketch_estimate(out).collect()}
         assert set(got) == {"a", "b", None}
         assert got[None] == (7, 7)
         assert got["a"] == (20, 20)
 
-    def test_segmented_matches_plain_grouped_with_nulls(self, spark):
-        from sparksketch.agg import HLLSpec, grouped_sketch, \
-            grouped_sketch_segmented
+    def test_segmented_matches_plain_grouped_with_nulls(self, spark,
+                                                        grouped_reference):
+        from sparksketch.agg import HLLSpec, grouped_sketch
         df = self._df(spark)
-        plain = {r["g"]: bytes(r["sketch"])
-                 for r in grouped_sketch(df, ["g"], HLLSpec(p=12),
-                                         ["v"]).collect()}
+        plain = grouped_reference(df, ["g"], HLLSpec(p=12), ["v"])
+        assert set(plain) == {("a",), ("b",), (None,)}
         # 3-row Arrow batches: every key, NULL included, recurs across the
         # batches of one partition, so the grouped HLL block must carry
         # each group's registers from batch to batch
@@ -49,18 +47,18 @@ class TestNullGroupKeys:
         for batch in (default, "3"):
             spark.conf.set(conf, batch)
             try:
-                seg = {r["g"]: bytes(r["sketch"])
-                       for r in grouped_sketch_segmented(
+                seg = {(r["g"],): (bytes(r["sketch"]), r["rows"])
+                       for r in grouped_sketch(
                            df, ["g"], HLLSpec(p=12), ["v"]).collect()}
             finally:
                 spark.conf.set(conf, default)
-            assert seg == plain  # byte-identical per group incl. NULL
+            assert seg == plain  # bytes and rows per group incl. NULL
 
     def test_regroup_and_cube_with_nulls(self, spark):
-        from sparksketch.agg import HLLSpec, grouped_sketch_cube, \
-            grouped_sketch_segmented, regroup_sketch_rows
+        from sparksketch.agg import HLLSpec, grouped_sketch, \
+            grouped_sketch_cube, regroup_sketch_rows
         df = self._df(spark)
-        fine = grouped_sketch_segmented(df, ["g"], HLLSpec(p=12), ["v"])
+        fine = grouped_sketch(df, ["g"], HLLSpec(p=12), ["v"])
         glob = regroup_sketch_rows(fine, [], order_cols=["g"]).collect()
         assert len(glob) == 1 and glob[0]["rows"] == 39
         cube = grouped_sketch_cube(df, ["g"], HLLSpec(p=12), ["v"]).collect()

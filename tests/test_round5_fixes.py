@@ -513,13 +513,21 @@ class TestCmsSparseLayout:
 
     def test_roundtrip_both_layouts(self):
         from sparksketch.sketches import sketch_from_bytes
-        for n in (5, 2000):
+        dense_body = 256 * 3 * 8
+        for n, sparse in ((5, True), (2000, False)):
             cms = self._cms(w=256, d=3)
-            h = np.arange(n, dtype=np.int64) * 0x9E3779B97F4A7C15
+            # n distinct keys: multiply in uint64 so the product wraps
+            h = (np.arange(n, dtype=np.uint64)
+                 * np.uint64(0x9E3779B97F4A7C15)).view(np.int64)
             cms.add_hashes(h)
-            rt = sketch_from_bytes(cms.to_bytes())
+            blob = cms.to_bytes()
+            if sparse:
+                assert len(blob) <= dense_body // 2
+            else:
+                assert len(blob) >= dense_body
+            rt = sketch_from_bytes(blob)
             assert np.array_equal(rt.table, cms.table)
-            assert rt.to_bytes() == cms.to_bytes()
+            assert rt.to_bytes() == blob
 
     def test_mixed_layout_merge_matches_whole(self):
         from sparksketch.sketches.base import merge_bytes

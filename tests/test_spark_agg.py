@@ -1,5 +1,6 @@
 """Distributed aggregation tests (local Spark): associativity across
-partition counts and row orders, salted == unsalted, grouped sketches,
+partition counts and row orders, grouped sketches against a driver-side
+reference,
 bloom semi-join, stable ordered replay (SURVEY.md §5 test plan)."""
 
 import hashlib
@@ -36,7 +37,7 @@ def lineitem(spark, sf_dir):
 
 class TestAssociativity:
     """north_rule: byte-identical merged sketch across partition counts
-    {2,4,8} and shuffled row orders, salted == unsalted."""
+    {2,4,8} and shuffled row orders."""
 
     @pytest.mark.parametrize("spec_fn", [
         lambda: BloomSpec(Shape.from_np(10_000, 1e-6)),
@@ -126,7 +127,7 @@ class TestAssociativity:
 
     # sha256 of every regroup_sketch_rows output row (keys, rows, sketch
     # bytes, in key order) over the sf0.001 events, with 3-row Arrow
-    # batches so groups straddle batches in both folds: the segmented
+    # batches so groups straddle batches in both folds: the grouped
     # build's stage 2 on (event_type, ub) and the rollup to ub, whose
     # NULL key recurs in every partition.
     @pytest.mark.parametrize("spec,cols,digest", [
@@ -142,8 +143,7 @@ class TestAssociativity:
     ])
     def test_regroup_golden_bytes(self, spark, events, sf_dir, spec, cols,
                                   digest):
-        from sparksketch.agg import (grouped_sketch_segmented,
-                                     regroup_sketch_rows)
+        from sparksketch.agg import regroup_sketch_rows
         if os.path.basename(os.path.normpath(sf_dir)) != "sf0.001":
             pytest.skip("golden digests are recorded for sf0.001")
         df = (events.withColumn("ub", F.when(F.col("user_id") % 7 != 0,
@@ -153,8 +153,7 @@ class TestAssociativity:
         default = spark.conf.get(conf)
         spark.conf.set(conf, "3")
         try:
-            fine = grouped_sketch_segmented(df, ["event_type", "ub"], spec,
-                                            cols)
+            fine = grouped_sketch(df, ["event_type", "ub"], spec, cols)
             coarse = regroup_sketch_rows(fine, ["ub"],
                                          order_cols=["event_type"])
             h = hashlib.sha256()
@@ -174,7 +173,7 @@ class TestPhysicalPlans:
     def test_explain_plans_checks_pass(self, sf_dir):
         """tools/explain_plans.py asserts the scale-critical plan shapes:
         no Exchange before the partial build, one scan for a multi-sketch
-        build, only sketch rows shuffled by the segmented grouped build."""
+        build, only sketch rows shuffled by the grouped build."""
         repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
         proc = subprocess.run(
             [sys.executable, os.path.join(repo, "tools", "explain_plans.py"),
@@ -235,48 +234,87 @@ class TestGrouped:
         for k, d in exact.items():
             assert abs(got[k] - d) <= max(3 * 1.04 / np.sqrt(2 ** 14) * d, 1)
 
-    def test_salted_equals_unsalted(self, events):
+    def test_grouped_rows_exact(self, events):
         spec = BloomSpec(Shape.from_np(10_000, 1e-6))
-        plain = {r.event_type: bytes(r.sketch) for r in
-                 grouped_sketch(events, ["event_type"], spec, ["user_id"]).collect()}
-        salted = {r.event_type: bytes(r.sketch) for r in
-                  grouped_sketch(events, ["event_type"], spec, ["user_id"],
-                                 salt=8).collect()}
-        assert plain == salted  # byte-identical per group
-        rows_plain = {r.event_type: r.rows for r in
-                      grouped_sketch(events, ["event_type"], spec, ["user_id"]).collect()}
+        rows = {r.event_type: r.rows for r in
+                grouped_sketch(events, ["event_type"], spec, ["user_id"]).collect()}
         exact_rows = {r.event_type: r.c for r in
                       events.groupBy("event_type").agg(F.count("*").alias("c")).collect()}
-        assert rows_plain == exact_rows
+        assert rows == exact_rows
 
-    def test_segmented_equals_plain_grouped(self, events):
-        """The no-raw-shuffle segmented path must produce byte-identical
-        per-group sketches to the shuffle-based path (commutative merge)."""
-        from sparksketch.agg import grouped_sketch_segmented
+    def test_segmented_equals_plain_grouped(self, events, grouped_reference):
+        """Per-partition partials merged per group give the bytes and rows
+        of one plain sketch per group, built on the driver (commutative
+        merge)."""
         spec = BloomSpec(Shape.from_np(10_000, 1e-6))
-        plain = {r.event_type: (bytes(r.sketch), r.rows) for r in
-                 grouped_sketch(events, ["event_type"], spec,
-                                ["user_id"]).collect()}
-        seg = {r.event_type: (bytes(r.sketch), r.rows) for r in
-               grouped_sketch_segmented(events, ["event_type"], spec,
-                                        ["user_id"]).collect()}
-        assert plain == seg
+        seg = {(r.event_type,): (bytes(r.sketch), r.rows) for r in
+               grouped_sketch(events, ["event_type"], spec,
+                              ["user_id"]).collect()}
+        assert seg == grouped_reference(events, ["event_type"], spec,
+                                        ["user_id"])
+
+    # sha256 of grouped_sketch's output (key, rows and sketch bytes of every
+    # group, in key order) over the sf0.001 events grouped by event_type,
+    # hash-partitioned 4 ways on event_id.  These kinds merge order-free,
+    # so the digests hold for any grouped build that is correct; KLL and
+    # t-digest bytes depend on the merge order and are left out.
+    @pytest.mark.parametrize("spec,cols,digest", [
+        pytest.param(BloomSpec(Shape.from_np(10_000, 1e-6)), ["user_id"],
+                     "060c80663a37a9465055469b3056a817fa7340495de73d93f673a18fa2077d1f",
+                     id="bloom"),
+        pytest.param(MixKeyBloomSpec(Shape.from_np(10_000, 1e-6)),
+                     ["user_id", "event_type"],
+                     "498a77afdcaf66d8dde8c4f7c90cccd260ad9f273cac6ea82bda6e51570c8cc4",
+                     id="mix"),
+        pytest.param(CountingBloomSpec(Shape.from_np(10_000, 1e-4)),
+                     ["user_id"],
+                     "d08d57bc9fadf4f932ee0f56622fac6c1ba2497475fb57b5c83787bde9fb95ee",
+                     id="counting"),
+        pytest.param(HLLSpec(p=12), ["user_id"],
+                     "aba50e05437b8e2a08c952daf6576e52db3a94484acaed734939bdeb0edaf81d",
+                     id="hll"),
+        pytest.param(CMSSpec(w=1 << 12, d=4), ["user_id"],
+                     "fd576fe9419431a6406104bf4a248841889694c52866a62e68b087071e11e1e9",
+                     id="cms"),
+        pytest.param(BottomKSpec(k=256), ["user_id"],
+                     "753dabcb892431ffa20745d66be72582c5d6dcd1af05ab389fc7d85edb3df167",
+                     id="bottomk"),
+        pytest.param(MinHashSpec(n_perm=64), ["user_id"],
+                     "10a4fcff8c10ce6e2e6bdea2cbb1cc22aee915e306a138eba62d35f403dcc82c",
+                     id="minhash"),
+        pytest.param(LayeredBloomSpec(Shape.from_np(10_000, 1e-6),
+                                      layer_col="layer"), ["event_id"],
+                     "ab2b610cdeb142870ed6b1023bb2420539f89f3f44620ddfca60b67fc5e941ca",
+                     id="layered"),
+    ])
+    def test_grouped_golden_bytes(self, events, sf_dir, spec, cols, digest):
+        if os.path.basename(os.path.normpath(sf_dir)) != "sf0.001":
+            pytest.skip("golden digests are recorded for sf0.001")
+        df = (events.withColumn(
+                  "layer", (F.unix_timestamp("ts") / 86400).cast("long"))
+              .repartition(4, "event_id").sortWithinPartitions("event_id"))
+        h = hashlib.sha256()
+        for r in sorted(grouped_sketch(df, ["event_type"], spec,
+                                       cols).collect(),
+                        key=lambda r: r.event_type):
+            h.update(repr((r.event_type, r.rows)).encode())
+            h.update(bytes(r.sketch))
+        assert h.hexdigest() == digest
 
     def test_regroup_from_finest_equals_direct(self, events):
         """CUBE building block: merging finest (a, b) sketches down to (a)
         must be byte-identical to building (a) directly from the data —
         the one-scan rollup is exact for commutative kinds."""
-        from sparksketch.agg import (grouped_sketch_segmented,
-                                     regroup_sketch_rows)
+        from sparksketch.agg import regroup_sketch_rows
         spec = BloomSpec(Shape.from_np(10_000, 1e-6))
-        finest = grouped_sketch_segmented(
+        finest = grouped_sketch(
             events, ["event_type", "user_id"], spec, ["props"])
         rolled = {r.event_type: (bytes(r.sketch), r.rows) for r in
                   regroup_sketch_rows(finest, ["event_type"],
                                       order_cols=["user_id"]).collect()}
         direct = {r.event_type: (bytes(r.sketch), r.rows) for r in
-                  grouped_sketch_segmented(events, ["event_type"], spec,
-                                           ["props"]).collect()}
+                  grouped_sketch(events, ["event_type"], spec,
+                                 ["props"]).collect()}
         assert rolled == direct
         # global () regroup == one tree-aggregated blob
         from sparksketch.agg import build_partials, tree_aggregate
@@ -288,10 +326,9 @@ class TestGrouped:
     def test_segmented_high_cardinality_exact(self, events):
         """One bottom-k sketch per user_id (high-cardinality group): exact
         regime => per-group distinct estimates equal count(DISTINCT)."""
-        from sparksketch.agg import (BottomKSpec, grouped_sketch_segmented,
-                                     with_sketch_estimate)
-        per = grouped_sketch_segmented(events, ["user_id"],
-                                       BottomKSpec(k=1024), ["event_type"])
+        from sparksketch.agg import with_sketch_estimate
+        per = grouped_sketch(events, ["user_id"], BottomKSpec(k=1024),
+                             ["event_type"])
         got = {r.user_id: int(round(r.est)) for r in
                with_sketch_estimate(per, "est").collect()}
         exact = {r.user_id: r.d for r in

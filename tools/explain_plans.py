@@ -109,14 +109,14 @@ def main():
     assert p4.count(") Scan parquet") == 1, "multi-sketch must scan ONCE"
     print("PASS  multi-sketch scans parquet exactly once")
 
-    # 5. segmented grouped build (high-cardinality groups): raw rows never
+    # 5. grouped build (high-cardinality groups): raw rows never
     # shuffle — the ONLY Exchange in the plan is AFTER the mapInPandas
     # partial build, i.e. it moves KB-scale sketch rows, not data rows
-    from sparksketch.agg import BottomKSpec, grouped_sketch_segmented
-    p5 = plan_of(grouped_sketch_segmented(
+    from sparksketch.agg import BottomKSpec, grouped_sketch
+    p5 = plan_of(grouped_sketch(
         orders, ["o_custkey"], BottomKSpec(k=64), ["o_orderkey"]))
     print(p5)
-    ok &= check("segmented grouped build: single sketch-row exchange", p5,
+    ok &= check("grouped build: single sketch-row exchange", p5,
                 want=["MapInPandas"], forbid=["FlatMapGroupsInPandas"])
     # the tree prints top-down, so compare plan NODE NUMBERS (dataflow
     # order: (1) scan ... (n) sink): both stages are MapInPandas and the
@@ -127,8 +127,8 @@ def main():
                      re.findall(r"\bMapInPandas \((\d+)\)", p5))
     assert len(ex_ids) == 1, f"expected exactly one Exchange, got {ex_ids}"
     assert len(map_ids) == 2 and map_ids[0] < ex_ids[0] < map_ids[1], \
-        "raw rows must not shuffle before the segmented partial build"
-    print("PASS  segmented grouped build shuffles only sketch rows")
+        "raw rows must not shuffle before the grouped partial build"
+    print("PASS  grouped build shuffles only sketch rows")
 
     # 6. layered `find` probe: the probe UDF runs map-side over the
     # broadcast blob — the only Exchanges in the plan are the inherent
@@ -156,23 +156,23 @@ def main():
 
     # 7. grouped fixed-k KLL (per-conv latency p95, the billions-of-groups
     # plan): raw rows shuffle exactly ONCE, for the inherent lag-window
-    # (delta computation) — between the two segmented mapInPandas stages
-    # only KB-scale sketch rows cross an Exchange; anything after stage 2
-    # moves (conv_id, p95) result rows
+    # (delta computation) — between the grouped build's two mapInPandas
+    # stages only KB-scale sketch rows cross an Exchange; anything after
+    # stage 2 moves (conv_id, p95) result rows
     import __spark_entry__ as se
     p7 = plan_of(se.q_kll_grouped_fixedk_latency(spark, SF))
     print(p7)
     ex7 = sorted(int(m) for m in re.findall(r"\bExchange \((\d+)\)", p7))
     map7 = sorted(int(m) for m in re.findall(r"\bMapInPandas \((\d+)\)", p7))
     win7 = sorted(int(m) for m in re.findall(r"\bWindow \((\d+)\)", p7))
-    assert len(map7) == 2, f"expected 2 segmented stages, got {map7}"
+    assert len(map7) == 2, f"expected 2 grouped-build stages, got {map7}"
     # every pre-build Exchange must feed a Window (the transcript
     # turn-ordering + lag derivation); the build itself adds NO raw-row
     # shuffle: nothing between the last Window and stage 1
     assert win7 and not [e for e in ex7 if win7[-1] < e < map7[0]], \
         "the partial build must not shuffle raw rows beyond the windows"
     assert len([e for e in ex7 if map7[0] < e < map7[1]]) == 1, \
-        "exactly one sketch-row Exchange between segmented stages"
+        "exactly one sketch-row Exchange between the grouped-build stages"
     print("PASS  grouped fixed-k KLL shuffles raw rows only for the "
           "lag window; sketch rows otherwise")
 
