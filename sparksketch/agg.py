@@ -43,7 +43,9 @@ from typing import ClassVar, Iterator, Sequence
 import numpy as np
 import pandas as pd
 from pyspark.sql import Column, DataFrame, functions as F
-from pyspark.sql.types import BooleanType, LongType
+from pyspark.sql.types import (BinaryType, BooleanType, DoubleType,
+                               LongType, StringType, StructField,
+                               StructType)
 
 from .hashing import combine_hashes
 from .shape import Shape, StableShape
@@ -704,6 +706,33 @@ def _hll_group_sketches(batches: Iterator[pd.DataFrame],
             for k, g in index.items()}
 
 
+def _grouped_partials(df: DataFrame, group_cols: list[str],
+                      spec: SketchSpec,
+                      cols: Sequence[str | Column]) -> DataFrame:
+    """Stage 1 of :func:`grouped_sketch`: one partial sketch row per
+    (input partition, group), ``[*group_cols, sketch, rows, _pid]``."""
+    prepared = spec.prepare(df, cols, keep=group_cols)
+    gtypes = dict(df.select(*group_cols).dtypes)
+    out_schema = ", ".join([f"`{c}` {gtypes[c]}" for c in group_cols]
+                           + ["sketch binary", "rows long", "_pid long"])
+
+    def build(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        from pyspark import TaskContext
+        sks = (_hll_group_sketches(batches, group_cols, spec.p)
+               if isinstance(spec, HLLSpec)
+               else _group_sketches(batches, group_cols, spec))
+        if sks:
+            pid = TaskContext.get().partitionId()
+            keys = sorted(sks, key=_null_last)  # canonical emit order
+            data = {c: [k[i] for k in keys] for i, c in enumerate(group_cols)}
+            data["sketch"] = [sks[k][0] for k in keys]
+            data["rows"] = [sks[k][1] for k in keys]
+            data["_pid"] = pid
+            yield pd.DataFrame(data)
+
+    return prepared.mapInPandas(build, out_schema)
+
+
 def grouped_sketch(df: DataFrame, group_cols: Sequence[str],
                    spec: SketchSpec,
                    cols: Sequence[str | Column]) -> DataFrame:
@@ -732,32 +761,24 @@ def grouped_sketch(df: DataFrame, group_cols: Sequence[str],
     column join the NULL group.
     """
     group_cols = list(group_cols)
-    prepared = spec.prepare(df, cols, keep=group_cols)
-    gtypes = dict(df.select(*group_cols).dtypes)
-    out_schema = ", ".join([f"`{c}` {gtypes[c]}" for c in group_cols]
-                           + ["sketch binary", "rows long"])
+    return regroup_sketch_rows(_grouped_partials(df, group_cols, spec, cols),
+                               group_cols, order_cols=["_pid"])
 
-    def build(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from pyspark import TaskContext
-        sks = (_hll_group_sketches(batches, group_cols, spec.p)
-               if isinstance(spec, HLLSpec)
-               else _group_sketches(batches, group_cols, spec))
-        if sks:
-            pid = TaskContext.get().partitionId()
-            keys = sorted(sks, key=_null_last)  # canonical emit order
-            data = {c: [k[i] for k in keys] for i, c in enumerate(group_cols)}
-            data["sketch"] = [sks[k][0] for k in keys]
-            data["rows"] = [sks[k][1] for k in keys]
-            data["_pid"] = pid
-            yield pd.DataFrame(data)
 
-    stage1 = prepared.mapInPandas(build, out_schema + ", _pid long")
-    return regroup_sketch_rows(stage1, group_cols, order_cols=["_pid"])
+def _sketch_row_schema(df: DataFrame,
+                       group_cols: Sequence[str]) -> StructType:
+    """The schema of merged sketch rows keyed by ``group_cols`` of ``df``:
+    ``[*group_cols, sketch binary, rows bigint]``."""
+    return StructType([StructField(c, df.schema[c].dataType)
+                       for c in group_cols]
+                      + [StructField("sketch", BinaryType()),
+                         StructField("rows", LongType())])
 
 
 def regroup_sketch_rows(grouped: DataFrame, group_cols: Sequence[str],
                         order_cols: Sequence[str] = (),
-                        estimate_col: str | None = None) -> DataFrame:
+                        estimate_col: str | None = None,
+                        write_dir: str | None = None) -> DataFrame:
     """Merge an existing ``[*keys, sketch, rows]`` frame down to a COARSER
     key set — because every sketch kind here is mergeable, rollups /
     grouping-set views are an algebra over KB-scale sketch rows, never a
@@ -777,15 +798,30 @@ def regroup_sketch_rows(grouped: DataFrame, group_cols: Sequence[str],
     With ``estimate_col``, the fold also estimates each merged sketch and
     emits ``[*group_cols, rows, <estimate_col> double]`` instead of the
     blob: one Python operator answers the query, where
-    :func:`with_sketch_estimate` after the fold would add a second."""
+    :func:`with_sketch_estimate` after the fold would add a second.
+
+    With ``write_dir``, each fold task writes its merged
+    ``[*group_cols, sketch, rows]`` rows as one parquet file in that
+    directory (:func:`~sparksketch.io.write_part`) and emits one
+    ``(file, rows)`` row naming it; a task with no groups writes nothing.
+    The caller commits the files it collects — no Spark write job runs."""
+    from .io import fs_path, write_part
     group_cols = list(group_cols)
-    ktypes = dict(grouped.dtypes)
-    out_schema = ", ".join(
-        [f"`{c}` {ktypes[c]}" for c in group_cols]
-        + (["rows long", f"`{estimate_col}` double"] if estimate_col
-           else ["sketch binary", "rows long"]))
+    row_schema = _sketch_row_schema(grouped, group_cols)
+    target = tz = None
+    if estimate_col:
+        out_schema = StructType(row_schema.fields[:-2] + [
+            StructField("rows", LongType()),
+            StructField(estimate_col, DoubleType())])
+    elif write_dir is not None:
+        out_schema = StructType([StructField("file", StringType()),
+                                 StructField("rows", LongType())])
+        target = fs_path(write_dir)
+        tz = grouped.sparkSession.conf.get("spark.sql.session.timeZone")
+    else:
+        out_schema = row_schema
     sort_cols = group_cols + [c for c in order_cols
-                              if c in ktypes and c not in group_cols]
+                              if c in grouped.columns and c not in group_cols]
 
     def fold(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         acc: dict[tuple, list] = {}
@@ -825,7 +861,13 @@ def regroup_sketch_rows(grouped: DataFrame, group_cols: Sequence[str],
                 data[estimate_col] = [_estimate(acc[k][0]) for k in keys]
             else:
                 data["sketch"] = [acc[k][0] for k in keys]
-            yield pd.DataFrame(data)
+            pdf = pd.DataFrame(data)
+            if target is not None:
+                from pyspark import TaskContext
+                name = write_part(pdf, row_schema, target, tz,
+                                  TaskContext.get().partitionId())
+                pdf = pd.DataFrame({"file": [name], "rows": [len(pdf)]})
+            yield pdf
 
     src = grouped
     if group_cols:

@@ -9,13 +9,15 @@
           .load())
     # -> [*dims, estimate double, rows bigint]
 
-The segment list is resolved once, on the driver at plan time, by the
-same manifest reader ``view_query`` uses (view.py): the active segments,
-or the ``segments`` option validated against the manifest (unknown ids,
-or compacted-away ids mixed with active ones, raise).  Each input
-partition owns a deterministic hash bucket of the GROUP KEY space: it
-scans those segments' sketch rows with pyarrow (KB-scale rows — the fact
-table was only touched when the segments were built), keeps its bucket's
+The file list is resolved once, at plan time, by the same manifest
+reader ``view_query`` uses (view.py): the files the manifest lists for
+the active segments, or for the ``segments`` option validated against the
+manifest (unknown ids, or compacted-away ids mixed with active ones,
+raise).  Files no manifest lists are never opened.  The schema's dim
+types come from the manifest too.  Each input partition owns a
+deterministic hash bucket of the GROUP KEY space: it reads those files'
+sketch rows with pyarrow (KB-scale rows — the fact table was only touched
+when the segments were built), keeps its bucket's
 groups (the bucket test runs once per distinct key), stable-sorts those
 rows by key and folds each key's run with ``merge_blob_runs`` (one stacked
 NumPy max/OR for HLL and dense Bloom), and emits one (group, estimate,
@@ -31,9 +33,7 @@ time would let each task read only its slice (ROADMAP item 1).
 
 This surface is the catalog-style integration seam: the same view
 directory serves `view_query` (DataFrame API), the registered SQL
-functions over sketch rows, and plain `spark.read` here.  Segment files
-are found with a local glob, so this reader takes local/POSIX paths
-only.
+functions over sketch rows, and plain `spark.read` here.
 """
 
 from __future__ import annotations
@@ -42,16 +42,10 @@ import zlib
 
 from pyspark.sql.datasource import (DataSource, DataSourceReader,
                                     InputPartition)
+from pyspark.sql.types import DoubleType, LongType, StructField, StructType
 
 from .agg import _estimate
 from .view import _read_manifest
-
-_ARROW_TO_DDL = {
-    "string": "string", "large_string": "string",
-    "int8": "tinyint", "int16": "smallint", "int32": "int",
-    "int64": "bigint", "float": "float", "double": "double",
-    "bool": "boolean", "date32[day]": "date",
-}
 
 
 def _bucket(key: tuple, n: int) -> int:
@@ -68,34 +62,15 @@ class SketchViewDataSource(DataSource):
     def name(cls) -> str:
         return "sketchview"
 
-    def schema(self) -> str:
-        import pyarrow.parquet as pq
+    def schema(self) -> StructType:
         path = self.options.get("path")
         if not path:
             raise ValueError("sketchview needs .option('path', ...)")
         m = _read_manifest(path)
-        dims, active = m.dims, m.active
-        if not active:
-            raise ValueError(f"sketch view at {path} has no active "
-                             "segments")
-        seg = pq.read_schema(
-            self._seg_file(path, active[0]))
-        cols = []
-        for d in dims:
-            at = str(seg.field(d).type)
-            if at not in _ARROW_TO_DDL:
-                raise ValueError(f"unsupported dim type {at} for {d}")
-            cols.append(f"`{d}` {_ARROW_TO_DDL[at]}")
-        return ", ".join(cols + ["estimate double", "rows bigint"])
-
-    @staticmethod
-    def _seg_file(path: str, seg: int) -> str:
-        import glob
-        files = sorted(glob.glob(
-            path.rstrip("/") + f"/segments/seg={seg}/*.parquet"))
-        if not files:
-            raise ValueError(f"segment {seg} has no parquet files")
-        return files[0]
+        seg_rows = m.schema
+        return StructType([seg_rows[d] for d in m.dims]
+                          + [StructField("estimate", DoubleType()),
+                             StructField("rows", LongType())])
 
     def reader(self, schema):
         return _SketchViewReader(self.options)
@@ -108,15 +83,14 @@ class _SketchViewReader(DataSourceReader):
         segs = options.get("segments")
         self.segments = ([int(s) for s in str(segs).split(",")]
                          if segs not in (None, "") else None)
-        # resolved on the DRIVER at plan time so every read task agrees
+        # resolved once at plan time so every read task agrees
         m = _read_manifest(self.path)
-        self.dims, self.use_segs = m.dims, m.segments(self.segments)
+        self.dims, self.files = m.dims, m.files(self.path, self.segments)
 
     def partitions(self):
         return [InputPartition(i) for i in range(self.n_buckets)]
 
     def read(self, partition):
-        import glob
         from itertools import repeat
 
         import numpy as np
@@ -126,25 +100,20 @@ class _SketchViewReader(DataSourceReader):
         bucket = partition.value
         mine: dict[tuple, bool] = {}  # bucket test, once per distinct key
         keys, blobs, rows = [], [], []
-        for seg in self.use_segs:
-            for f in sorted(glob.glob(
-                    self.path.rstrip("/")
-                    + f"/segments/seg={seg}/*.parquet")):
-                t = pq.read_table(f, columns=[*self.dims, "sketch",
-                                              "rows"])
-                cols = [t.column(d).to_pylist() for d in self.dims]
-                for key, blob, n in zip(
-                        zip(*cols) if cols else repeat((), t.num_rows),
-                        t.column("sketch").to_pylist(),
-                        t.column("rows").to_pylist()):
-                    ok = mine.get(key)
-                    if ok is None:
-                        ok = mine[key] = (_bucket(key, self.n_buckets)
-                                          == bucket)
-                    if ok:
-                        keys.append(key)
-                        blobs.append(blob)
-                        rows.append(n)
+        for f in self.files:
+            t = pq.read_table(f, columns=[*self.dims, "sketch", "rows"])
+            cols = [t.column(d).to_pylist() for d in self.dims]
+            for key, blob, n in zip(
+                    zip(*cols) if cols else repeat((), t.num_rows),
+                    t.column("sketch").to_pylist(),
+                    t.column("rows").to_pylist()):
+                ok = mine.get(key)
+                if ok is None:
+                    ok = mine[key] = _bucket(key, self.n_buckets) == bucket
+                if ok:
+                    keys.append(key)
+                    blobs.append(blob)
+                    rows.append(n)
         if not keys:
             return
         # stable sort: each group's rows stay in segment/file/row order

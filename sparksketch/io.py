@@ -17,7 +17,12 @@ from __future__ import annotations
 import os
 import uuid
 
+import pandas as pd
+import pyarrow as pa
+import pyarrow.parquet as pq
+from pyarrow import fs as pafs
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 
 def read_table(spark: SparkSession, source: str,
@@ -54,6 +59,40 @@ def write_text_atomic(path: str, text: str) -> None:
         if os.path.exists(tmp):
             os.unlink(tmp)
         raise
+
+
+def fs_path(path: str) -> tuple[pafs.FileSystem, str]:
+    """The pyarrow filesystem and in-filesystem path of ``path``: a URI
+    (``hdfs://``, ``s3://``, ...) or a local path, made absolute."""
+    try:
+        return pafs.FileSystem.from_uri(path)
+    except pa.ArrowInvalid:  # a local path without a scheme
+        return pafs.LocalFileSystem(), os.path.abspath(path)
+
+
+def write_part(pdf: pd.DataFrame, schema: StructType,
+               target: tuple[pafs.FileSystem, str], timezone: str,
+               partition: int) -> str:
+    """Write ``pdf`` as one new parquet file in the directory ``target``
+    (an :func:`fs_path` pair) and return the file's name.  Columns take the
+    Arrow types of the Spark ``schema``, converted as ``mapInPandas``
+    converts its output (session ``timezone`` for timestamps), so Spark
+    reads the file back with ``schema``.  The name,
+    ``part-<partition>-<uuid>.parquet``, is new for every call: a retried
+    or speculative task attempt never overwrites another attempt's file."""
+    from pyspark.sql.pandas.types import (_create_converter_from_pandas,
+                                          to_arrow_schema)
+    arrow = to_arrow_schema(schema)
+    cols = [pa.Array.from_pandas(
+        _create_converter_from_pandas(f.dataType, timezone=timezone)(
+            pdf[f.name]), type=af.type, safe=False)
+        for f, af in zip(schema.fields, arrow)]
+    fs, d = target
+    fs.create_dir(d, recursive=True)
+    name = f"part-{partition:05d}-{uuid.uuid4().hex}.parquet"
+    pq.write_table(pa.Table.from_arrays(cols, schema=arrow), f"{d}/{name}",
+                   filesystem=fs)
+    return name
 
 
 def read_stream(spark: SparkSession, source: str, schema,

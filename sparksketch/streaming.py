@@ -33,7 +33,7 @@ from typing import Iterator, Sequence, Tuple
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from .agg import SketchSpec, grouped_sketch, regroup_sketch_rows
+from .agg import SketchSpec, _grouped_partials, regroup_sketch_rows
 from .io import write_text_atomic
 from .shape import StableShape
 from .sketches import sketch_from_bytes
@@ -151,9 +151,10 @@ class WindowedSketchState:
              .trigger(availableNow=True).start()); q.awaitTermination()
         final = wss.snapshot(spark)   # window_start, [groups...], sketch
 
-    Each batch runs the *batch* engine (`grouped_sketch`) over
-    ``window(ts)`` + group columns, then folds the new partials into the
-    stored ones — one tiny read-merge-write per batch over KB-scale rows.
+    Each batch runs stage 1 of the *batch* engine (`grouped_sketch`) over
+    ``window(ts)`` + group columns and folds those partials together with
+    the stored state in ONE pass — one tiny read-merge-write per batch
+    over KB-scale rows.
     A hot window or group needs no special handling: the build's map-side
     combine emits at most one partial per input partition for it.  Late
     rows merge into their (old) window algebraically.
@@ -228,16 +229,22 @@ class WindowedSketchState:
                 shutil.rmtree(os.path.join(self.state_dir, name),
                               ignore_errors=True)
 
-    def process_batch(self, batch_df: DataFrame, batch_id: int) -> None:
+    def _merged(self, batch_df: DataFrame) -> DataFrame:
+        """The next state: the stored state and the batch's partials
+        (:func:`~sparksketch.agg.grouped_sketch`'s stage 1) folded once per
+        (window, group), the state first (``_pid = -1``) and then the
+        partials in partition order, so KLL and t-digest bytes reproduce."""
         spark = batch_df.sparkSession
         keyed = batch_df.withColumn(
             "window_start",
             F.window(F.col(self.ts_col), self.window)["start"])
-        parts = grouped_sketch(keyed, self._keys, self.spec, self.cols)
+        parts = _grouped_partials(keyed, self._keys, self.spec, self.cols)
         live = self._current_state_path()
         if live is not None:
-            parts = spark.read.parquet(live).unionByName(parts)
-        merged = regroup_sketch_rows(parts, self._keys)
+            parts = (spark.read.parquet(live)
+                     .withColumn("_pid", F.lit(-1).cast("long"))
+                     .unionByName(parts))
+        merged = regroup_sketch_rows(parts, self._keys, order_cols=["_pid"])
         if self.watermark is not None:
             hi = keyed.select(F.max("window_start")).first()[0]
             if hi is not None:
@@ -248,8 +255,11 @@ class WindowedSketchState:
                     F.col("window_start")
                     >= F.lit(self._max_seen_ts)
                     - F.expr(f"INTERVAL {self.watermark}"))
+        return merged
+
+    def process_batch(self, batch_df: DataFrame, batch_id: int) -> None:
         version = f"windows_v{batch_id}"
-        merged.write.mode("overwrite").parquet(
+        self._merged(batch_df).write.mode("overwrite").parquet(
             os.path.join(self.state_dir, version))
         self._commit(version)
         self._gc_old_versions(keep=version)

@@ -2,36 +2,44 @@
 sketch rollups — the hypertable-rollup pattern a 100 TB transcript
 pipeline needs.  A scheduled job appends one SEGMENT of per-``dims``
 sketch rows per batch of new data (the ONLY fact-table scan, built by
-:func:`~sparksketch.agg.grouped_sketch`, which never shuffles raw rows);
-interactive queries read KB-scale sketch rows, merge them with the sketch
-algebra (:func:`~sparksketch.agg.regroup_sketch_rows`) and answer at any
-grouping set coarser than ``dims`` — never rescanning the facts.
-Compaction folds the segment log back to one segment with the same
-algebra.
+:func:`~sparksketch.agg.grouped_sketch`'s two stages, which never shuffle
+raw rows); interactive queries read KB-scale sketch rows, merge them with
+the sketch algebra (:func:`~sparksketch.agg.regroup_sketch_rows`) and
+answer at any grouping set coarser than ``dims`` — never rescanning the
+facts.  Compaction folds the segment log back to one segment with the
+same algebra.
 
 Storage layout:
 
-    <path>/segments/seg=<id>/*.parquet    [*dims, sketch, rows]
-    <path>/manifest/manifest.parquet      (seg, spec, dims, active, note)
+    <path>/segments/seg=<id>/part-<pid>-<uuid>.parquet  [*dims, sketch, rows]
+    <path>/manifest/manifest.parquet
+        (seg, spec, dims, active, note, files, schema)
 
-Segments are written by Spark.  The manifest is one KB-scale parquet file
-the DRIVER reads and writes with pyarrow — no Spark job touches it.  Every
-mutation writes the whole new manifest to ``manifest/_tmp-<uuid>.parquet``
-and then renames it over ``manifest.parquet``, so a reader sees either the
-old manifest or the new one, never a missing or partial file.  A failed
-write leaves the old manifest in force plus a stray ``_tmp-*`` file, which
-pyarrow and Spark both skip (``_``-prefixed names are hidden); the new
-segment files it may leave are unreachable, because queries read only the
-segments the manifest lists.  The rename is atomic on POSIX local paths
-(and HDFS); object stores have no atomic rename.  Only local paths are
-verified here.
+Each fold task that makes a segment's rows writes them as one parquet
+file with pyarrow (``regroup_sketch_rows(write_dir=...)``) and returns
+its name; no Spark write job runs.  The manifest is one KB-scale parquet
+file the DRIVER reads and writes with pyarrow: per segment, its files
+(relative to ``<path>/segments``) and the rows' Spark schema as JSON,
+which parses without a JVM (the sketchview reader plans in a Python
+worker).  Every mutation writes the whole new manifest to
+``manifest/_tmp-<uuid>.parquet`` and renames it over
+``manifest.parquet``, so a reader sees the old manifest or the new one,
+never a missing or partial file.  The rename is the only commit: every
+reader opens exactly the listed files, so a file no manifest lists (a
+failed write's segment, a failed or speculative task attempt's output)
+is never read, and a stray ``_tmp-*`` file is hidden by its ``_``
+prefix.  The rename is atomic on POSIX local paths (and HDFS); object
+stores have no atomic rename.  Only local paths are verified here.
 
-``seg`` is a parquet PARTITION column: restricting a query to specific
-segments (e.g. the last day's) is partition pruning in the scan, not a
-filter over all rows.  The manifest records repr(spec) so an append with
-a mismatched sketch spec fails loudly instead of silently merging
-incompatible blobs (the same contract the wire-format VERSION enforces
-at the byte level).
+Reads scan the listed files of the requested segments with
+``spark.read.schema(<manifest schema>)`` and ``basePath`` (``seg`` comes
+from the paths): no directory listing, no schema-inference job.  Past
+``spark.sql.sources.parallelPartitionDiscovery.threshold`` (32) files,
+Spark looks up their status with a parallel job of its own.  The
+manifest records repr(spec), so an append with a mismatched sketch spec
+fails loudly instead of silently merging incompatible blobs (the
+wire-format VERSION's contract at the byte level).  A manifest without
+file lists (the earlier directory-listed layout) is rejected.
 
 Concurrency note: segment files are immutable once written and each
 manifest commit is one atomic rename, so readers never block or see a
@@ -43,57 +51,69 @@ the io seam to Iceberg/Delta (io.py) and inherit their atomic commit.
 
 from __future__ import annotations
 
-import os
+import json
 import uuid
 from dataclasses import dataclass
-from typing import Sequence
+from typing import NamedTuple, Sequence
 
 import pyarrow as pa
 import pyarrow.parquet as pq
-from pyarrow import fs as pafs
-from pyspark.sql import Column, DataFrame, SparkSession, functions as F
+from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql.types import IntegerType, StructField, StructType
 
-from .agg import SketchSpec, grouped_sketch, regroup_sketch_rows
+from .agg import (SketchSpec, _grouped_partials, _sketch_row_schema,
+                  regroup_sketch_rows)
+from .io import fs_path
 
 _MANIFEST_FILE = "manifest.parquet"
 _MANIFEST_SCHEMA = pa.schema([("seg", pa.int32()), ("spec", pa.string()),
                               ("dims", pa.string()), ("active", pa.bool_()),
-                              ("note", pa.string())])
+                              ("note", pa.string()),
+                              ("files", pa.list_(pa.string())),
+                              ("schema", pa.string())])
+
+
+class _Segment(NamedTuple):
+    """One manifest row: a segment, its files and the rows' schema."""
+    seg: int
+    spec: str
+    dims: str
+    active: bool
+    note: str
+    files: list[str]  # relative to <path>/segments
+    schema: str       # Spark StructType JSON of [*dims, sketch, rows]
 
 
 def _segments_path(path: str) -> str:
     return path.rstrip("/") + "/segments"
 
 
-def _manifest_dir(path: str) -> tuple[pafs.FileSystem, str]:
-    d = path.rstrip("/") + "/manifest"
-    try:
-        return pafs.FileSystem.from_uri(d)
-    except pa.ArrowInvalid:  # relative local path
-        return pafs.LocalFileSystem(), os.path.abspath(d)
-
-
 @dataclass(frozen=True)
 class _Manifest:
-    """A view's manifest: one ``(seg, spec, dims, active, note)`` row per
-    segment, sorted by segment id."""
-    rows: list[tuple]
+    """A view's manifest: one :class:`_Segment` per segment, sorted by
+    segment id."""
+    rows: list[_Segment]
 
     @property
     def dims(self) -> list[str]:
-        return self.rows[0][2].split(",") if self.rows[0][2] else []
+        return self.rows[0].dims.split(",") if self.rows[0].dims else []
 
     @property
     def spec(self) -> str:
-        return self.rows[0][1]
+        return self.rows[0].spec
+
+    @property
+    def schema(self) -> StructType:
+        """The Spark schema of the segment rows, ``[*dims, sketch, rows]``."""
+        return StructType.fromJson(json.loads(self.rows[0].schema))
 
     @property
     def active(self) -> list[int]:
-        return [r[0] for r in self.rows if r[3]]
+        return [r.seg for r in self.rows if r.active]
 
     @property
     def max_seg(self) -> int:
-        return self.rows[-1][0]
+        return self.rows[-1].seg
 
     def segments(self, requested: Sequence[int] | None = None) -> list[int]:
         """The segment ids a read covers: the active set by default, else
@@ -104,7 +124,7 @@ class _Manifest:
         if requested is None:
             return self.active
         segs = sorted({int(s) for s in requested})
-        known = {r[0]: r[3] for r in self.rows}
+        known = {r.seg: r.active for r in self.rows}
         unknown = [s for s in segs if s not in known]
         if unknown:
             raise ValueError(f"unknown segment ids {unknown}; the view has "
@@ -117,26 +137,54 @@ class _Manifest:
                 "would count their rows twice")
         return segs
 
+    def files(self, path: str,
+              requested: Sequence[int] | None = None) -> list[str]:
+        """The files of the segments a read covers (see :meth:`segments`),
+        in segment order, as paths under the view at ``path``."""
+        segs = set(self.segments(requested))
+        root = _segments_path(path)
+        return [f"{root}/{f}" for r in self.rows if r.seg in segs
+                for f in r.files]
+
 
 def _read_manifest(path: str) -> _Manifest:
     """The view's current manifest; raises ``FileNotFoundError`` when the
-    view has none yet."""
-    fs, d = _manifest_dir(path)
-    t = pq.read_table(f"{d}/{_MANIFEST_FILE}", filesystem=fs,
-                      schema=_MANIFEST_SCHEMA)
-    return _Manifest(sorted(tuple(r.values()) for r in t.to_pylist()))
+    view has none yet and ``ValueError`` for a manifest of the earlier
+    layout, whose segments were found by listing directories."""
+    fs, d = fs_path(path.rstrip("/") + "/manifest")
+    t = pq.read_table(f"{d}/{_MANIFEST_FILE}", filesystem=fs)
+    if t.schema.names != _MANIFEST_SCHEMA.names:
+        raise ValueError(
+            f"the view at {path} has a manifest of the old layout, without "
+            "segment file lists (columns "
+            f"{t.schema.names}); rebuild it with view_materialize")
+    return _Manifest(sorted(_Segment(*r.values()) for r in t.to_pylist()))
 
 
-def _write_manifest(path: str, rows: list[tuple]) -> None:
+def _write_manifest(path: str, rows: list[_Segment]) -> None:
     """Commit ``rows`` as the view's manifest: write a hidden temp file,
     then rename it over the current one."""
-    fs, d = _manifest_dir(path)
+    fs, d = fs_path(path.rstrip("/") + "/manifest")
     fs.create_dir(d, recursive=True)
     tmp = f"{d}/_tmp-{uuid.uuid4().hex}.parquet"
     pq.write_table(pa.Table.from_pylist(
-        [dict(zip(_MANIFEST_SCHEMA.names, r)) for r in rows],
-        schema=_MANIFEST_SCHEMA), tmp, filesystem=fs)
+        [r._asdict() for r in rows], schema=_MANIFEST_SCHEMA), tmp,
+        filesystem=fs)
     fs.move(tmp, f"{d}/{_MANIFEST_FILE}")
+
+
+def _write_segment(rows: DataFrame, dims: list[str], order_cols: list[str],
+                   path: str, seg: int, spec: str, note: str) -> _Segment:
+    """Fold ``rows`` to one row per ``dims`` group, each fold task writing
+    its rows as one file of segment ``seg``; the segment's manifest row,
+    not yet committed."""
+    seg_dir = f"seg={seg}"
+    written = regroup_sketch_rows(
+        rows, dims, order_cols=order_cols,
+        write_dir=f"{_segments_path(path)}/{seg_dir}").collect()
+    return _Segment(seg, spec, ",".join(dims), True, note,
+                    [f"{seg_dir}/{r.file}" for r in written],
+                    _sketch_row_schema(rows, dims).json())
 
 
 def view_materialize(df: DataFrame, dims: Sequence[str], spec: SketchSpec,
@@ -145,10 +193,9 @@ def view_materialize(df: DataFrame, dims: Sequence[str], spec: SketchSpec,
     """Create the view: build per-``dims`` sketch rows from ``df`` (one
     fact scan, raw rows never shuffle) and write them as segment 0."""
     dims = list(dims)
-    rows = grouped_sketch(df, dims, spec, cols)
-    (rows.write.mode("overwrite")
-     .parquet(_segments_path(path) + "/seg=0"))
-    _write_manifest(path, [(0, repr(spec), ",".join(dims), True, note)])
+    parts = _grouped_partials(df, dims, spec, cols)
+    _write_manifest(path, [_write_segment(parts, dims, ["_pid"], path, 0,
+                                          repr(spec), note)])
 
 
 def view_append(df: DataFrame, spec: SketchSpec,
@@ -164,20 +211,31 @@ def view_append(df: DataFrame, spec: SketchSpec,
             f"sketch spec mismatch: view built with {m.spec}, "
             f"append called with {repr(spec)}")
     seg = m.max_seg + 1
-    rows = grouped_sketch(df, m.dims, spec, cols)
-    (rows.write.mode("overwrite")
-     .parquet(_segments_path(path) + f"/seg={seg}"))
-    _write_manifest(path, m.rows + [(seg, m.spec, ",".join(m.dims), True,
-                                     note)])
+    parts = _grouped_partials(df, m.dims, spec, cols)
+    _write_manifest(path, m.rows + [_write_segment(
+        parts, m.dims, ["_pid"], path, seg, m.spec, note)])
     return seg
+
+
+def _segment_rows(spark: SparkSession, m: _Manifest, path: str,
+                  segments: Sequence[int] | None) -> DataFrame:
+    """``[*dims, seg, sketch, rows]`` of the covered segments: a scan of
+    exactly their listed files with the manifest's schema."""
+    files = m.files(path, segments)
+    if files:
+        src = (spark.read.schema(m.schema)
+               .option("basePath", _segments_path(path)).parquet(*files))
+    else:  # only empty segments; a file scan needs at least one path
+        src = spark.createDataFrame([], StructType(
+            m.schema.fields + [StructField("seg", IntegerType())]))
+    return src.select(*m.dims, "seg", "sketch", "rows")
 
 
 def _view_rows(spark: SparkSession, m: _Manifest, path: str,
                group_cols: Sequence[str] | None, where: Column | None,
                segments: Sequence[int] | None,
                estimate_col: str | None = None) -> DataFrame:
-    src = spark.read.parquet(_segments_path(path))
-    src = src.filter(F.col("seg").isin(m.segments(segments)))
+    src = _segment_rows(spark, m, path, segments)
     if where is not None:
         src = src.filter(where)
     dims = m.dims
@@ -186,8 +244,7 @@ def _view_rows(spark: SparkSession, m: _Manifest, path: str,
     if unknown:
         raise ValueError(f"group cols {unknown} not in view dims {dims}")
     # deterministic merge order: remaining dims, then segment id
-    return regroup_sketch_rows(src.select(*dims, "seg", "sketch", "rows"),
-                               gcols, order_cols=[*dims, "seg"],
+    return regroup_sketch_rows(src, gcols, order_cols=[*dims, "seg"],
                                estimate_col=estimate_col)
 
 
@@ -201,9 +258,9 @@ def view_rows(spark: SparkSession, path: str,
     ``[]`` = the global sketch) is valid because every kind is
     mergeable.  ``where`` filters on dim columns BEFORE the merge (the
     predicate reaches the parquet scan of KB-scale rows); ``segments``
-    restricts to specific segment ids via parquet partition pruning
-    (default: the active set; unknown ids, or compacted-away ids mixed
-    with active ones, raise ``ValueError``)."""
+    restricts the scan to those segments' files (default: the active
+    set; unknown ids, or compacted-away ids mixed with active ones,
+    raise ``ValueError``)."""
     return _view_rows(spark, _read_manifest(path), path, group_cols, where,
                       segments)
 
@@ -234,9 +291,9 @@ def view_stream_writer(dims: Sequence[str], spec: SketchSpec,
     Structured Streaming re-delivers the last uncommitted batch after a
     crash.  Segment files are immutable and the manifest note records
     the batch id, so a replayed batch either finds its note (the prior
-    attempt committed — no-op) or redoes the whole append; partially
-    written segment files without a manifest row are unreachable by
-    queries, so the redo overwrites them harmlessly.  The first batch
+    attempt committed — no-op) or redoes the whole append; the files of
+    the failed attempt are listed in no manifest, so no reader opens
+    them, and the redo writes new ones beside them.  The first batch
     creates the view."""
     dims = list(dims)
 
@@ -247,8 +304,8 @@ def view_stream_writer(dims: Sequence[str], spec: SketchSpec,
         except FileNotFoundError:  # no manifest yet: first batch creates
             view_materialize(batch_df, dims, spec, cols, path, note=note)
             return
-        if any(nt == note or nt.startswith(note + ";")
-               for *_a, nt in m.rows):
+        if any(r.note == note or r.note.startswith(note + ";")
+               for r in m.rows):
             return  # replayed batch: the prior attempt committed
         view_append(batch_df, spec, cols, path, note=note)
 
@@ -262,15 +319,13 @@ def view_compact(spark: SparkSession, path: str,
     inactive; returns the new segment id."""
     m = _read_manifest(path)
     active = set(m.active)
-    merged = _view_rows(spark, m, path, None, None, None)  # full dims
     seg = m.max_seg + 1
-    (merged.write.mode("overwrite")
-     .parquet(_segments_path(path) + f"/seg={seg}"))
+    new = _write_segment(_segment_rows(spark, m, path, None), m.dims,
+                         [*m.dims, "seg"], path, seg, m.spec, note)
     # notes are PRESERVED (the streaming writer's exactly-once check
     # matches on them); the compaction marker is appended after ';'
-    kept = [(s, sp, d, act and s not in active,
-             f"{nt}; compacted into {seg}" if act and s in active else nt)
-            for s, sp, d, act, nt in m.rows]
-    _write_manifest(path, kept + [(seg, m.spec, ",".join(m.dims), True,
-                                   note)])
+    kept = [r._replace(active=False,
+                       note=f"{r.note}; compacted into {seg}")
+            if r.seg in active else r for r in m.rows]
+    _write_manifest(path, kept + [new])
     return seg

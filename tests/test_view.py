@@ -68,8 +68,9 @@ class TestSketchView:
                  .select("user_id").distinct().count())
         assert got[0]["estimate"] == exact
 
-    def test_segment_restriction_is_partition_pruned(self, spark, events,
-                                                     tmp_path):
+    def test_segment_restriction_reads_only_its_files(self, spark, events,
+                                                      tmp_path):
+        from sparksketch.view import _read_manifest
         path = self._build(events, tmp_path)
         # only segment 0: estimates reflect HALF the facts
         half = view_query(spark, path, group_cols=[], segments=[0])
@@ -77,11 +78,13 @@ class TestSketchView:
         exact_half = (events.filter(h).select("user_id")
                       .distinct().count())
         assert half.collect()[0]["estimate"] == exact_half
-        # and the seg filter is PARTITION pruning in the physical scan
-        plan = view_rows(spark, path, group_cols=[],
-                         segments=[0])._jdf.queryExecution() \
-            .executedPlan().toString()
-        assert "PartitionFilters" in plan and "seg" in plan
+        # and the scan's file list is exactly segment 0's files
+        scanned = view_rows(spark, path, group_cols=[],
+                            segments=[0]).inputFiles()
+        seg0 = _read_manifest(path).rows[0]
+        assert seg0.seg == 0 and seg0.files
+        assert sorted(f.split("/segments/", 1)[1] for f in scanned) == \
+            sorted(seg0.files)
 
     def test_compact_preserves_estimates(self, spark, events, tmp_path):
         path = self._build(events, tmp_path)
@@ -283,3 +286,155 @@ class TestSketchView:
         # compacted-away segments on their own are a lineage read
         lineage = view_query(spark, path, group_cols=[], segments=[0, 1])
         assert lineage.collect()[0]["rows"] == events.count()
+
+    def test_stray_segment_files_are_never_read(self, spark, events,
+                                                tmp_path):
+        """A valid parquet file of sketch rows that no manifest lists sits
+        in an active segment's directory, as a failed or speculative task
+        attempt leaves it: queries, merged rows, compaction and the
+        sketchview reader all still give the exact answers."""
+        import glob
+        import shutil
+
+        from sparksketch.datasource import SketchViewDataSource
+        spark.dataSource.register(SketchViewDataSource)
+        path = self._build(events, tmp_path)
+        src = sorted(glob.glob(f"{path}/segments/seg=1/*.parquet"))[0]
+        shutil.copy(src, f"{path}/segments/seg=1/part-00000-stray.parquet")
+        want = {k[0]: (float(e), n)
+                for k, (e, n) in _exact(events, ["event_type"]).items()}
+
+        def read():
+            return {r["event_type"]: (r["estimate"], r["rows"])
+                    for r in spark.read.format("sketchview")
+                    .option("path", path).load().collect()}
+
+        def query():
+            return {r["event_type"]: (r["estimate"], r["rows"])
+                    for r in view_query(spark, path).collect()}
+
+        assert query() == want
+        assert read() == want
+        total = view_rows(spark, path, group_cols=[]).collect()
+        assert [r["rows"] for r in total] == [events.count()]
+        view_compact(spark, path)
+        assert query() == want
+        assert read() == want
+
+    def test_empty_append_commits_a_segment_without_files(
+            self, spark, events, tmp_path):
+        """An append of no facts commits a segment that lists no files;
+        queries, the reader and compaction answer as before it."""
+        from sparksketch.datasource import SketchViewDataSource
+        from sparksketch.view import _read_manifest
+        spark.dataSource.register(SketchViewDataSource)
+        path = self._build(events, tmp_path)
+        seg = view_append(events.limit(0), self.SPEC, ["user_id"], path)
+        m = _read_manifest(path)
+        assert m.active == [0, 1, seg] and m.rows[-1].files == []
+        want = {k[0]: (float(e), n)
+                for k, (e, n) in _exact(events, ["event_type"]).items()}
+
+        def answers():
+            q = {r["event_type"]: (r["estimate"], r["rows"])
+                 for r in view_query(spark, path).collect()}
+            read = {r["event_type"]: (r["estimate"], r["rows"])
+                    for r in spark.read.format("sketchview")
+                    .option("path", path).load().collect()}
+            return q, read
+
+        assert answers() == (want, want)
+        assert view_query(spark, path, segments=[seg]).collect() == []
+        view_compact(spark, path)
+        assert answers() == (want, want)
+
+    def test_view_of_no_facts_answers_empty(self, spark, events, tmp_path):
+        """A view materialized from no facts has no segment files at all;
+        its queries and reads return no groups rather than failing."""
+        from sparksketch.datasource import SketchViewDataSource
+        spark.dataSource.register(SketchViewDataSource)
+        path = str(tmp_path / "empty")
+        view_materialize(events.limit(0), ["event_type"], self.SPEC,
+                         ["user_id"], path)
+        assert view_query(spark, path).collect() == []
+        assert (spark.read.format("sketchview").option("path", path)
+                .load().collect()) == []
+        view_compact(spark, path)
+        assert view_rows(spark, path).collect() == []
+
+    def test_int_dim_with_nulls_keeps_its_type(self, spark, events,
+                                               tmp_path):
+        """An ``int`` dim with NULLs round-trips through the segment
+        writer as an int: in the files, in the manifest schema, in merged
+        rows and in the sketchview schema, with the NULL group exact."""
+        import pyarrow as pa
+        import pyarrow.parquet as pq
+        from pyspark.sql.types import IntegerType
+
+        from sparksketch.datasource import SketchViewDataSource
+        from sparksketch.view import _read_manifest
+        spark.dataSource.register(SketchViewDataSource)
+        path = str(tmp_path / "intview")
+        ev = events.withColumn(
+            "bucket", F.when(F.col("event_id") % 3 == 0, F.lit(None))
+            .otherwise(F.pmod(F.xxhash64("user_id"), F.lit(4)))
+            .cast("int"))
+        view_materialize(ev, ["bucket"], self.SPEC, ["user_id"], path)
+        m = _read_manifest(path)
+        assert m.schema["bucket"].dataType == IntegerType()
+        for f in m.files(path):
+            assert pq.read_schema(f).field("bucket").type == pa.int32()
+        assert view_rows(spark, path).schema["bucket"].dataType == \
+            IntegerType()
+        want = {r["bucket"]: float(r["exact"])
+                for r in ev.groupBy("bucket").agg(
+                    F.countDistinct("user_id").alias("exact")).collect()}
+        got = {r["bucket"]: r["estimate"]
+               for r in view_query(spark, path).collect()}
+        assert got == want and None in got
+        read = spark.read.format("sketchview").option("path", path).load()
+        assert read.schema["bucket"].dataType == IntegerType()
+        assert {r["bucket"]: r["estimate"] for r in read.collect()} == want
+
+    def test_old_layout_manifest_rejected(self, spark, tmp_path):
+        """A manifest without segment file lists (the earlier layout,
+        whose readers listed segment directories) raises, naming it."""
+        import os
+
+        import pyarrow as pa
+        import pyarrow.parquet as pq
+        path = str(tmp_path / "old")
+        os.makedirs(f"{path}/manifest")
+        pq.write_table(pa.table({
+            "seg": pa.array([0], pa.int32()), "spec": ["BottomKSpec()"],
+            "dims": ["event_type"], "active": [True], "note": ["initial"]}),
+            f"{path}/manifest/manifest.parquet")
+        for call in (lambda: view_query(spark, path),
+                     lambda: view_compact(spark, path)):
+            with pytest.raises(ValueError, match="old layout"):
+                call()
+
+    def test_view_calls_use_no_spark_writer_or_inference_job(
+            self, spark, events, tmp_path, monkeypatch):
+        """Views write through no ``DataFrameWriter``, and a warm
+        ``view_query`` runs no schema-inference or listing job (stages
+        named ``parquet at ...``)."""
+        def no_writer(df):
+            raise AssertionError("a view call used DataFrame.write")
+
+        monkeypatch.setattr(type(events), "write", property(no_writer))
+        path = self._build(events, tmp_path)
+        view_compact(spark, path)
+        view_query(spark, path).collect()  # warm
+        sc = spark.sparkContext
+        sc.setJobGroup("warm-view-query", "warm view_query")
+        try:
+            view_query(spark, path).collect()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        st = sc.statusTracker()
+        names = [st.getStageInfo(s).name
+                 for j in st.getJobIdsForGroup("warm-view-query")
+                 for s in st.getJobInfo(j).stageIds]
+        assert names
+        assert not [n for n in names if n.startswith("parquet at")], names

@@ -10,6 +10,9 @@ scale-critical properties directly from the plan text:
   (raw rows never shuffle; only sketch blobs do)
 - probe-side plans stay in WholeStageCodegen up to the single Arrow eval
 - a sketch-view query folds and estimates in ONE Python operator
+- sketch-view writes run no Spark file-write command: the fold's own
+  tasks write the segment files, and reads scan only the listed files
+- a streaming micro-batch folds its partials and the state once
 
 Usage: PYTHONPATH=/root/repo python tools/explain_plans.py [sf_dir]
 """
@@ -264,31 +267,64 @@ def main():
         "anti-join must not re-evaluate the probe UDF per downstream use"
     print("PASS  bloom anti-join keeps one probe eval per branch")
 
-    # -- materialized sketch view: segment restriction is PARTITION
-    # pruning in the scan (round 5) -------------------------------------
-    import tempfile
-    import shutil
-    from sparksketch.agg import BottomKSpec
-    from sparksketch.view import (view_append, view_materialize,
-                                  view_query, view_rows)
+    # -- materialized sketch view: reads open only the manifest's files
+    # of the requested segments, and the fold's own tasks write segment
+    # files (no Spark write command) --------------------------------------
+    from pyspark.sql.classic.dataframe import DataFrame
+    from sparksketch.view import (_read_manifest, view_append, view_compact,
+                                  view_materialize, view_query, view_rows)
     events = spark.read.parquet(f"{SF}/events.parquet")
     vdir = tempfile.mkdtemp(prefix="sparksketch_planview_")
+    py_op = re.compile(r"^\(\d+\) (\w*(?:Python|Pandas|InArrow)\w*)", re.M)
     try:
         half = F.xxhash64(F.col("event_id").cast("string")) % 2 == 0
         spec = BottomKSpec(k=4096)
         view_materialize(events.filter(half), ["event_type"], spec,
                          ["user_id"], vdir)
-        view_append(events.filter(~half), spec, ["user_id"], vdir)
-        vplan = plan_of(view_rows(spark, vdir, group_cols=[],
-                                  segments=[0]))
-        ok &= check("sketch view: segment restriction is partition "
-                    "pruning", vplan, ["PartitionFilters", "seg"], [])
+        # the plans the view's writes collect: captured at collect()
+        collected, collect = [], DataFrame.collect
+
+        def capture(df):
+            collected.append(plan_of(df))
+            return collect(df)
+        DataFrame.collect = capture
+        try:
+            view_append(events.filter(~half), spec, ["user_id"], vdir)
+            view_compact(spark, vdir)
+        finally:
+            DataFrame.collect = collect
+        for name, wplan in zip(("view_append", "view_compact"), collected):
+            print(wplan)
+            ok &= check(f"{name}: no Spark file-write command", wplan,
+                        ["MapInPandas"],
+                        ["InsertIntoHadoopFsRelationCommand", "WriteFiles"])
+            ops = py_op.findall(wplan)
+            # the last Python operator is the fold, emitting (file, rows)
+            fold = wplan[wplan.rfind("MapInPandas ("):]
+            if (not ops or ops[-1] != "MapInPandas"
+                    or not re.search(r"\[file#\d+, rows#\d+L\]", fold)):
+                print(f"FAIL  {name}: last Python operator is not the "
+                      f"writing fold ({ops})")
+                ok = False
+        if len(collected) != 2:
+            print(f"FAIL  view writes collected {len(collected)} plans")
+            ok = False
+        m = _read_manifest(vdir)
+        scanned = view_rows(spark, vdir, group_cols=[],
+                            segments=[0]).inputFiles()
+        got = sorted(f.split("/segments/", 1)[1] for f in scanned)
+        if got and got == sorted(m.rows[0].files):
+            print("PASS  sketch view: the segment-0 scan lists only "
+                  "segment 0's files")
+        else:
+            print(f"FAIL  sketch view: segment-0 scan files {got} != "
+                  f"{sorted(m.rows[0].files)}")
+            ok = False
         # the query folds AND estimates in its one Python operator: no
         # estimate UDF (ArrowEvalPython) after the merge's MapInPandas
         qplan = plan_of(view_query(spark, vdir, ["event_type"]))
         print(qplan)
-        py_ops = re.findall(r"^\(\d+\) (\w*(?:Python|Pandas|InArrow)\w*)",
-                            qplan, re.M)
+        py_ops = py_op.findall(qplan)
         ok &= check("sketch view query: one Python operator", qplan,
                     ["MapInPandas"], ["ArrowEvalPython"])
         if py_ops != ["MapInPandas"]:
@@ -296,6 +332,33 @@ def main():
             ok = False
     finally:
         shutil.rmtree(vdir, ignore_errors=True)
+
+    # -- windowed streaming state: each micro-batch's partials and the
+    # stored state fold in ONE pass (2 MapInPandas, 1 Exchange) ----------
+    import datetime
+    from sparksketch.agg import HLLSpec
+    from sparksketch.streaming import WindowedSketchState
+    sdir = tempfile.mkdtemp(prefix="sparksketch_planstream_")
+    try:
+        batch = events.select(
+            "user_id", "event_type",
+            F.lit(datetime.datetime(2026, 1, 1)).alias("ts"))
+        wss = WindowedSketchState(HLLSpec(p=10), ["user_id"], sdir,
+                                  window="1 day", group_cols=["event_type"])
+        wss.process_batch(batch, 0)
+        splan = plan_of(wss._merged(batch))
+        print(splan)
+        n_map = len(re.findall(r"\bMapInPandas \((\d+)\)", splan))
+        n_ex = len(re.findall(r"\bExchange \((\d+)\)", splan))
+        if (n_map, n_ex) == (2, 1):
+            print("PASS  streaming micro-batch folds once: 2 MapInPandas, "
+                  "1 Exchange")
+        else:
+            print(f"FAIL  streaming micro-batch: {n_map} MapInPandas, "
+                  f"{n_ex} Exchange (want 2, 1)")
+            ok = False
+    finally:
+        shutil.rmtree(sdir, ignore_errors=True)
 
     # -- range_bucket stays inside whole-stage codegen (no Python eval
     # in the bucket-assignment hot path; round 5) ------------------------
