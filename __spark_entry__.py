@@ -704,6 +704,9 @@ def q_checkpoint_resume_distinct(spark, sf_dir):
       query the global grouping set (merges across roles AND segments);
     - tier 'view_compacted' — the same answer after view_compact folds
       the segment log to one segment (pure sketch algebra, no rescan).
+      The compacted view is also read through
+      ``spark.read.format("sketchview")``, whose per-role frame must equal
+      ``view_query``'s, or the query raises.
 
     Exact regime throughout: bottom-k with k >= distinct."""
     import shutil
@@ -711,6 +714,7 @@ def q_checkpoint_resume_distinct(spark, sf_dir):
     from sparksketch.agg import BottomKSpec
     from sparksketch.checkpoint import (checkpoint_partials,
                                         merged_sketch_bytes, resume)
+    from sparksketch.datasource import SketchViewDataSource
     from sparksketch.sketches import sketch_from_bytes
     from sparksketch.transcripts import transcripts_from_events
     from sparksketch.view import (view_append, view_compact,
@@ -731,6 +735,16 @@ def q_checkpoint_resume_distinct(spark, sf_dir):
         v1 = view_query(spark, vdir, group_cols=[]).collect()[0]
         view_compact(spark, vdir)
         v2 = view_query(spark, vdir, group_cols=[]).collect()[0]
+        spark.dataSource.register(SketchViewDataSource)
+        cols = ["role", "estimate", "rows"]
+        read, query = (df.select(*cols).toPandas().sort_values("role")
+                       .reset_index(drop=True) for df in (
+                           spark.read.format("sketchview")
+                           .option("path", vdir).load(),
+                           view_query(spark, vdir, ["role"])))
+        if not read.equals(query):
+            raise RuntimeError(
+                f"sketchview read {read} != view_query {query}")
         rows = [("resume", int(round(sk.distinct_estimate()))),
                 ("view", int(round(v1["estimate"]))),
                 ("view_compacted", int(round(v2["estimate"])))]

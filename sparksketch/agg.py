@@ -44,8 +44,8 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import Column, DataFrame, functions as F
 from pyspark.sql.types import (BinaryType, BooleanType, DoubleType,
-                               LongType, StringType, StructField,
-                               StructType)
+                               IntegerType, LongType, StringType,
+                               StructField, StructType)
 
 from .hashing import combine_hashes
 from .shape import Shape, StableShape
@@ -712,7 +712,7 @@ def _grouped_partials(df: DataFrame, group_cols: list[str],
     """Stage 1 of :func:`grouped_sketch`: one partial sketch row per
     (input partition, group), ``[*group_cols, sketch, rows, _pid]``."""
     prepared = spec.prepare(df, cols, keep=group_cols)
-    gtypes = dict(df.select(*group_cols).dtypes)
+    gtypes = dict(df.dtypes)
     out_schema = ", ".join([f"`{c}` {gtypes[c]}" for c in group_cols]
                            + ["sketch binary", "rows long", "_pid long"])
 
@@ -778,7 +778,8 @@ def _sketch_row_schema(df: DataFrame,
 def regroup_sketch_rows(grouped: DataFrame, group_cols: Sequence[str],
                         order_cols: Sequence[str] = (),
                         estimate_col: str | None = None,
-                        write_dir: str | None = None) -> DataFrame:
+                        write_dir: str | None = None,
+                        buckets: int = 1) -> DataFrame:
     """Merge an existing ``[*keys, sketch, rows]`` frame down to a COARSER
     key set — because every sketch kind here is mergeable, rollups /
     grouping-set views are an algebra over KB-scale sketch rows, never a
@@ -800,12 +801,16 @@ def regroup_sketch_rows(grouped: DataFrame, group_cols: Sequence[str],
     blob: one Python operator answers the query, where
     :func:`with_sketch_estimate` after the fold would add a second.
 
-    With ``write_dir``, each fold task writes its merged
-    ``[*group_cols, sketch, rows]`` rows as one parquet file in that
-    directory (:func:`~sparksketch.io.write_part`) and emits one
-    ``(file, rows)`` row naming it; a task with no groups writes nothing.
-    The caller commits the files it collects — no Spark write job runs."""
-    from .io import fs_path, write_part
+    With ``write_dir``, the rows are laid out in ``buckets`` buckets by
+    ``_bucket = pmod(xxhash64(*group_cols), buckets)``, computed in the
+    JVM (bucket 0 without group columns), and repartitioned by it, so
+    each bucket is folded by one task.  A task writes the merged
+    ``[*group_cols, sketch, rows]`` rows of each bucket it holds as one
+    parquet file in that directory (:func:`~sparksketch.io.write_part`)
+    and emits one ``(file, rows, bucket)`` row naming it; a task with no
+    groups writes nothing.  The caller commits the files it collects —
+    no Spark write job runs."""
+    from .io import arrow_rows, fs_path, write_part
     group_cols = list(group_cols)
     row_schema = _sketch_row_schema(grouped, group_cols)
     target = tz = None
@@ -815,13 +820,15 @@ def regroup_sketch_rows(grouped: DataFrame, group_cols: Sequence[str],
             StructField(estimate_col, DoubleType())])
     elif write_dir is not None:
         out_schema = StructType([StructField("file", StringType()),
-                                 StructField("rows", LongType())])
+                                 StructField("rows", LongType()),
+                                 StructField("bucket", IntegerType())])
         target = fs_path(write_dir)
         tz = grouped.sparkSession.conf.get("spark.sql.session.timeZone")
     else:
         out_schema = row_schema
-    sort_cols = group_cols + [c for c in order_cols
-                              if c in grouped.columns and c not in group_cols]
+    key_cols = group_cols if write_dir is None else ["_bucket", *group_cols]
+    sort_cols = key_cols + [c for c in order_cols
+                            if c in grouped.columns and c not in group_cols]
 
     def fold(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         acc: dict[tuple, list] = {}
@@ -830,7 +837,7 @@ def regroup_sketch_rows(grouped: DataFrame, group_cols: Sequence[str],
                 continue
             # one run per group; the stable sort keeps each group's rows
             # in arrival order (a no-op on the sorted input)
-            codes, keys = _batch_group_codes(pdf, group_cols)
+            codes, keys = _batch_group_codes(pdf, key_cols)
             order = np.argsort(codes, kind="stable")
             codes = codes[order]
             starts = np.flatnonzero(np.diff(codes, prepend=-1))
@@ -855,22 +862,29 @@ def regroup_sketch_rows(grouped: DataFrame, group_cols: Sequence[str],
         if acc:
             keys = sorted(acc, key=_null_last)
             data = {c: [k[i] for k in keys]
-                    for i, c in enumerate(group_cols)}
+                    for i, c in enumerate(key_cols)}
             data["rows"] = [acc[k][1] for k in keys]
             if estimate_col:
                 data[estimate_col] = [_estimate(acc[k][0]) for k in keys]
             else:
                 data["sketch"] = [acc[k][0] for k in keys]
             pdf = pd.DataFrame(data)
-            if target is not None:
-                from pyspark import TaskContext
-                name = write_part(pdf, row_schema, target, tz,
-                                  TaskContext.get().partitionId())
-                pdf = pd.DataFrame({"file": [name], "rows": [len(pdf)]})
-            yield pdf
+            if target is None:
+                yield pdf
+                return
+            for b, part in pdf.groupby("_bucket", sort=False):
+                name = write_part(arrow_rows(part, row_schema, tz), target,
+                                  b)
+                yield pd.DataFrame({"file": [name], "rows": [len(part)],
+                                    "bucket": [b]})
 
     src = grouped
-    if group_cols:
+    if write_dir is not None:
+        bucket = (F.pmod(F.xxhash64(*group_cols), F.lit(buckets))
+                  if group_cols else F.lit(0))
+        src = (src.withColumn("_bucket", bucket.cast("int"))
+               .repartition("_bucket").sortWithinPartitions(*sort_cols))
+    elif group_cols:
         src = (src.repartition(*group_cols)
                .sortWithinPartitions(*sort_cols))
     else:

@@ -4,32 +4,24 @@
     spark.dataSource.register(SketchViewDataSource)
     df = (spark.read.format("sketchview")
           .option("path", view_path)
-          .option("buckets", 8)            # read parallelism
           .option("segments", "0,2")       # optional segment restriction
           .load())
     # -> [*dims, estimate double, rows bigint]
 
-The file list is resolved once, at plan time, by the same manifest
+The file lists are resolved once, at plan time, by the same manifest
 reader ``view_query`` uses (view.py): the files the manifest lists for
 the active segments, or for the ``segments`` option validated against the
 manifest (unknown ids, or compacted-away ids mixed with active ones,
 raise).  Files no manifest lists are never opened.  The schema's dim
-types come from the manifest too.  Each input partition owns a
-deterministic hash bucket of the GROUP KEY space: it reads those files'
-sketch rows with pyarrow (KB-scale rows — the fact table was only touched
-when the segments were built), keeps its bucket's
-groups (the bucket test runs once per distinct key), stable-sorts those
-rows by key and folds each key's run with ``merge_blob_runs`` (one stacked
-NumPy max/OR for HLL and dense Bloom), and emits one (group, estimate,
-rows) tuple per group.  The merge is per-group associative+commutative,
-so bucket-parallel reads are exact.
+types come from the manifest too.
 
-Read amplification: segments carry no bucket column, so EVERY bucket task
-reads every row of every segment it covers and keeps about 1/buckets of
-them — the view is read ``buckets`` times over.  Rows are KB-scale sketch
-rows, so this is cheap at today's view sizes; a persisted
-``bucket = pmod(xxhash64(*dims), B)`` column written at append/compact
-time would let each task read only its slice (ROADMAP item 1).
+There is one input partition per stored bucket of the view, so a read is
+one wave of B tasks at the default B.  Each task opens only its bucket's
+files (every row of a group lives in its bucket), folds them with
+``view._fold_bucket`` — a stable sort by key, then ``merge_blob_runs``
+per key (one stacked NumPy max/OR for HLL and dense Bloom) — and emits
+one Arrow batch of (group, estimate, rows), one row per group.  Read work
+is O(rows of the view), each row read once.
 
 This surface is the catalog-style integration seam: the same view
 directory serves `view_query` (DataFrame API), the registered SQL
@@ -38,21 +30,14 @@ functions over sketch rows, and plain `spark.read` here.
 
 from __future__ import annotations
 
-import zlib
-
+import pyarrow as pa
 from pyspark.sql.datasource import (DataSource, DataSourceReader,
                                     InputPartition)
 from pyspark.sql.types import DoubleType, LongType, StructField, StructType
 
 from .agg import _estimate
-from .view import _read_manifest
-
-
-def _bucket(key: tuple, n: int) -> int:
-    """Deterministic bucket of a group key (crc32 of a length-framed
-    repr — builtin hash() is seed-randomized across executors)."""
-    s = "\x1f".join(f"{len(repr(k))}:{repr(k)}" for k in key)
-    return zlib.crc32(s.encode()) % n
+from .io import fs_path
+from .view import _fold_bucket, _read_manifest, _segments_path
 
 
 class SketchViewDataSource(DataSource):
@@ -78,51 +63,26 @@ class SketchViewDataSource(DataSource):
 
 class _SketchViewReader(DataSourceReader):
     def __init__(self, options):
-        self.path = options.get("path")
-        self.n_buckets = int(options.get("buckets", 8))
+        path = options.get("path")
         segs = options.get("segments")
-        self.segments = ([int(s) for s in str(segs).split(",")]
-                         if segs not in (None, "") else None)
+        segments = ([int(s) for s in str(segs).split(",")]
+                    if segs not in (None, "") else None)
         # resolved once at plan time so every read task agrees
-        m = _read_manifest(self.path)
-        self.dims, self.files = m.dims, m.files(self.path, self.segments)
+        m = _read_manifest(path)
+        self.dims = m.dims
+        self.fs, root = fs_path(_segments_path(path))
+        self.buckets = m.bucket_files(root, segments)
 
     def partitions(self):
-        return [InputPartition(i) for i in range(self.n_buckets)]
+        """One partition per bucket; its value is the bucket's files."""
+        return [InputPartition(files) for files in self.buckets]
 
     def read(self, partition):
-        from itertools import repeat
-
-        import numpy as np
-        import pyarrow.parquet as pq
-
-        from .sketches.base import merge_blob_runs
-        bucket = partition.value
-        mine: dict[tuple, bool] = {}  # bucket test, once per distinct key
-        keys, blobs, rows = [], [], []
-        for f in self.files:
-            t = pq.read_table(f, columns=[*self.dims, "sketch", "rows"])
-            cols = [t.column(d).to_pylist() for d in self.dims]
-            for key, blob, n in zip(
-                    zip(*cols) if cols else repeat((), t.num_rows),
-                    t.column("sketch").to_pylist(),
-                    t.column("rows").to_pylist()):
-                ok = mine.get(key)
-                if ok is None:
-                    ok = mine[key] = _bucket(key, self.n_buckets) == bucket
-                if ok:
-                    keys.append(key)
-                    blobs.append(blob)
-                    rows.append(n)
-        if not keys:
+        if not partition.value:
             return
-        # stable sort: each group's rows stay in segment/file/row order
-        reprs = [repr(k) for k in keys]
-        order = sorted(range(len(keys)), key=reprs.__getitem__)
-        starts = [j for j, i in enumerate(order)
-                  if j == 0 or reprs[i] != reprs[order[j - 1]]]
-        merged = merge_blob_runs([blobs[i] for i in order], starts)
-        nrows = np.add.reduceat(np.asarray(rows, dtype=np.int64)[order],
-                                starts)
-        for s, blob, n in zip(starts, merged, nrows):
-            yield (*keys[order[s]], _estimate(blob), int(n))
+        t = _fold_bucket(self.fs, partition.value, self.dims)
+        est = [_estimate(b) for b in t.column("sketch").to_pylist()]
+        yield from pa.Table.from_arrays(
+            [*(t.column(d) for d in self.dims), pa.array(est, pa.float64()),
+             t.column("rows")],
+            names=[*self.dims, "estimate", "rows"]).to_batches()

@@ -70,16 +70,11 @@ def fs_path(path: str) -> tuple[pafs.FileSystem, str]:
         return pafs.LocalFileSystem(), os.path.abspath(path)
 
 
-def write_part(pdf: pd.DataFrame, schema: StructType,
-               target: tuple[pafs.FileSystem, str], timezone: str,
-               partition: int) -> str:
-    """Write ``pdf`` as one new parquet file in the directory ``target``
-    (an :func:`fs_path` pair) and return the file's name.  Columns take the
-    Arrow types of the Spark ``schema``, converted as ``mapInPandas``
-    converts its output (session ``timezone`` for timestamps), so Spark
-    reads the file back with ``schema``.  The name,
-    ``part-<partition>-<uuid>.parquet``, is new for every call: a retried
-    or speculative task attempt never overwrites another attempt's file."""
+def arrow_rows(pdf: pd.DataFrame, schema: StructType,
+               timezone: str) -> pa.Table:
+    """``pdf`` as an Arrow table of the Spark ``schema``'s Arrow types,
+    converted as ``mapInPandas`` converts its output (session ``timezone``
+    for timestamps), so Spark reads a file of it back with ``schema``."""
     from pyspark.sql.pandas.types import (_create_converter_from_pandas,
                                           to_arrow_schema)
     arrow = to_arrow_schema(schema)
@@ -87,11 +82,19 @@ def write_part(pdf: pd.DataFrame, schema: StructType,
         _create_converter_from_pandas(f.dataType, timezone=timezone)(
             pdf[f.name]), type=af.type, safe=False)
         for f, af in zip(schema.fields, arrow)]
+    return pa.Table.from_arrays(cols, schema=arrow)
+
+
+def write_part(table: pa.Table, target: tuple[pafs.FileSystem, str],
+               partition: int) -> str:
+    """Write ``table`` as one new parquet file in the directory ``target``
+    (an :func:`fs_path` pair) and return the file's name.  The name,
+    ``part-<partition>-<uuid>.parquet``, is new for every call: a retried
+    or speculative task attempt never overwrites another attempt's file."""
     fs, d = target
     fs.create_dir(d, recursive=True)
     name = f"part-{partition:05d}-{uuid.uuid4().hex}.parquet"
-    pq.write_table(pa.Table.from_arrays(cols, schema=arrow), f"{d}/{name}",
-                   filesystem=fs)
+    pq.write_table(table, f"{d}/{name}", filesystem=fs)
     return name
 
 

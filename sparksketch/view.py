@@ -11,35 +11,48 @@ same algebra.
 
 Storage layout:
 
-    <path>/segments/seg=<id>/part-<pid>-<uuid>.parquet  [*dims, sketch, rows]
+    <path>/segments/seg=<id>/part-<bucket>-<uuid>.parquet  [*dims, sketch, rows]
     <path>/manifest/manifest.parquet
-        (seg, spec, dims, active, note, files, schema)
+        (seg, spec, dims, active, note, files, buckets, schema, nbuckets)
 
-Each fold task that makes a segment's rows writes them as one parquet
-file with pyarrow (``regroup_sketch_rows(write_dir=...)``) and returns
-its name; no Spark write job runs.  The manifest is one KB-scale parquet
-file the DRIVER reads and writes with pyarrow: per segment, its files
-(relative to ``<path>/segments``) and the rows' Spark schema as JSON,
-which parses without a JVM (the sketchview reader plans in a Python
-worker).  Every mutation writes the whole new manifest to
-``manifest/_tmp-<uuid>.parquet`` and renames it over
-``manifest.parquet``, so a reader sees the old manifest or the new one,
-never a missing or partial file.  The rename is the only commit: every
-reader opens exactly the listed files, so a file no manifest lists (a
-failed write's segment, a failed or speculative task attempt's output)
-is never read, and a stray ``_tmp-*`` file is hidden by its ``_``
-prefix.  The rename is atomic on POSIX local paths (and HDFS); object
-stores have no atomic rename.  Only local paths are verified here.
+Segments are bucketed: a group's rows live in bucket
+``pmod(xxhash64(*dims), B)`` of every segment, and a segment holds at
+most one file per bucket.  B is the session's default parallelism when
+the view is materialized, so one wave of tasks covers every bucket; the
+manifest records it with each file's bucket.  The materialize/append
+fold computes the bucket in the JVM and repartitions by it
+(``regroup_sketch_rows(write_dir=..., buckets=B)``): each fold task
+writes one file per bucket it holds with pyarrow and returns their
+names; no Spark write job runs.  Since one bucket's files hold every row
+of its groups, compaction and the sketchview reader fold bucket by
+bucket (:func:`_fold_bucket`) with no shuffle: compaction is one job of
+B tasks (``spark.range(B).mapInPandas``), each folding one bucket's
+files of the active segments into the new segment's file for that
+bucket.
 
-Reads scan the listed files of the requested segments with
-``spark.read.schema(<manifest schema>)`` and ``basePath`` (``seg`` comes
-from the paths): no directory listing, no schema-inference job.  Past
-``spark.sql.sources.parallelPartitionDiscovery.threshold`` (32) files,
-Spark looks up their status with a parallel job of its own.  The
+The manifest is one KB-scale parquet file the DRIVER reads and writes
+with pyarrow: per segment, its files (relative to ``<path>/segments``),
+their buckets, B and the rows' Spark schema as JSON, which parses without
+a JVM (the sketchview reader plans in a Python worker).  Every mutation
+writes the whole new manifest to ``manifest/_tmp-<uuid>.parquet`` and
+renames it over ``manifest.parquet``, so a reader sees the old manifest
+or the new one, never a missing or partial file.  The rename is the only
+commit: every reader opens exactly the listed files, so a file no
+manifest lists (a failed write's segment, a failed or speculative task
+attempt's output) is never read, and a stray ``_tmp-*`` file is hidden
+by its ``_`` prefix.  The rename is atomic on POSIX local paths (and
+HDFS); object stores have no atomic rename.  Only local paths are
+verified here.
+
+``view_query`` and ``view_rows`` scan the listed files of the requested
+segments with ``spark.read.schema(<manifest schema>)`` and ``basePath``
+(``seg`` comes from the paths): no directory listing, no schema-inference
+job, and no parallel file-status job however many files are listed (the
+listing threshold is raised to the file count for that one call).  The
 manifest records repr(spec), so an append with a mismatched sketch spec
-fails loudly instead of silently merging incompatible blobs (the
-wire-format VERSION's contract at the byte level).  A manifest without
-file lists (the earlier directory-listed layout) is rejected.
+or dim types fails loudly instead of silently merging incompatible blobs
+(the wire-format VERSION's contract at the byte level).  A manifest
+without bucketed file lists (an earlier layout) is rejected.
 
 Concurrency note: segment files are immutable once written and each
 manifest commit is one atomic rename, so readers never block or see a
@@ -56,21 +69,28 @@ import uuid
 from dataclasses import dataclass
 from typing import NamedTuple, Sequence
 
+import numpy as np
+import pandas as pd
 import pyarrow as pa
+import pyarrow.compute as pc
 import pyarrow.parquet as pq
+from pyarrow import fs as pafs
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql.types import IntegerType, StructField, StructType
 
 from .agg import (SketchSpec, _grouped_partials, _sketch_row_schema,
                   regroup_sketch_rows)
-from .io import fs_path
+from .io import fs_path, write_part
+from .sketches.base import merge_blob_runs
 
 _MANIFEST_FILE = "manifest.parquet"
 _MANIFEST_SCHEMA = pa.schema([("seg", pa.int32()), ("spec", pa.string()),
                               ("dims", pa.string()), ("active", pa.bool_()),
                               ("note", pa.string()),
                               ("files", pa.list_(pa.string())),
-                              ("schema", pa.string())])
+                              ("buckets", pa.list_(pa.int32())),
+                              ("schema", pa.string()),
+                              ("nbuckets", pa.int32())])
 
 
 class _Segment(NamedTuple):
@@ -80,8 +100,10 @@ class _Segment(NamedTuple):
     dims: str
     active: bool
     note: str
-    files: list[str]  # relative to <path>/segments
-    schema: str       # Spark StructType JSON of [*dims, sketch, rows]
+    files: list[str]    # relative to <path>/segments
+    buckets: list[int]  # the bucket of each file
+    schema: str         # Spark StructType JSON of [*dims, sketch, rows]
+    nbuckets: int       # B, the view's bucket count
 
 
 def _segments_path(path: str) -> str:
@@ -106,6 +128,10 @@ class _Manifest:
     def schema(self) -> StructType:
         """The Spark schema of the segment rows, ``[*dims, sketch, rows]``."""
         return StructType.fromJson(json.loads(self.rows[0].schema))
+
+    @property
+    def nbuckets(self) -> int:
+        return self.rows[0].nbuckets
 
     @property
     def active(self) -> list[int]:
@@ -146,17 +172,31 @@ class _Manifest:
         return [f"{root}/{f}" for r in self.rows if r.seg in segs
                 for f in r.files]
 
+    def bucket_files(self, root: str,
+                     requested: Sequence[int] | None = None
+                     ) -> list[list[str]]:
+        """Per bucket, the files of the segments a read covers (see
+        :meth:`segments`) in segment order, as paths under ``root``, the
+        view's segments directory: what :func:`_fold_bucket` reads."""
+        segs = set(self.segments(requested))
+        out: list[list[str]] = [[] for _ in range(self.nbuckets)]
+        for r in self.rows:
+            if r.seg in segs:
+                for f, b in zip(r.files, r.buckets):
+                    out[b].append(f"{root}/{f}")
+        return out
+
 
 def _read_manifest(path: str) -> _Manifest:
     """The view's current manifest; raises ``FileNotFoundError`` when the
-    view has none yet and ``ValueError`` for a manifest of the earlier
-    layout, whose segments were found by listing directories."""
+    view has none yet and ``ValueError`` for a manifest of an earlier
+    layout, whose segments were listed directories or unbucketed files."""
     fs, d = fs_path(path.rstrip("/") + "/manifest")
     t = pq.read_table(f"{d}/{_MANIFEST_FILE}", filesystem=fs)
     if t.schema.names != _MANIFEST_SCHEMA.names:
         raise ValueError(
-            f"the view at {path} has a manifest of the old layout, without "
-            "segment file lists (columns "
+            f"the view at {path} has a manifest of an old layout, without "
+            "bucketed segment file lists (columns "
             f"{t.schema.names}); rebuild it with view_materialize")
     return _Manifest(sorted(_Segment(*r.values()) for r in t.to_pylist()))
 
@@ -173,61 +213,87 @@ def _write_manifest(path: str, rows: list[_Segment]) -> None:
     fs.move(tmp, f"{d}/{_MANIFEST_FILE}")
 
 
-def _write_segment(rows: DataFrame, dims: list[str], order_cols: list[str],
-                   path: str, seg: int, spec: str, note: str) -> _Segment:
-    """Fold ``rows`` to one row per ``dims`` group, each fold task writing
-    its rows as one file of segment ``seg``; the segment's manifest row,
-    not yet committed."""
-    seg_dir = f"seg={seg}"
-    written = regroup_sketch_rows(
-        rows, dims, order_cols=order_cols,
-        write_dir=f"{_segments_path(path)}/{seg_dir}").collect()
+def _new_segment(seg: int, spec: str, dims: list[str], note: str,
+                 written: list, schema: StructType,
+                 nbuckets: int) -> _Segment:
+    """The manifest row, not yet committed, of segment ``seg`` whose fold
+    tasks ``written`` its files as ``(file, rows, bucket)`` rows."""
+    written = sorted(written, key=lambda r: r.bucket)
     return _Segment(seg, spec, ",".join(dims), True, note,
-                    [f"{seg_dir}/{r.file}" for r in written],
-                    _sketch_row_schema(rows, dims).json())
+                    [f"seg={seg}/{r.file}" for r in written],
+                    [r.bucket for r in written], schema.json(), nbuckets)
+
+
+def _write_segment(parts: DataFrame, dims: list[str], schema: StructType,
+                   path: str, seg: int, spec: str, note: str,
+                   nbuckets: int) -> _Segment:
+    """Fold the partial rows ``parts`` to one row per ``dims`` group, laid
+    out in ``nbuckets`` buckets, one file of segment ``seg`` per bucket;
+    the segment's manifest row, not yet committed."""
+    written = regroup_sketch_rows(
+        parts, dims, order_cols=["_pid"],
+        write_dir=f"{_segments_path(path)}/seg={seg}",
+        buckets=nbuckets).collect()
+    return _new_segment(seg, spec, dims, note, written, schema, nbuckets)
 
 
 def view_materialize(df: DataFrame, dims: Sequence[str], spec: SketchSpec,
                      cols: Sequence[str | Column], path: str,
                      note: str = "initial") -> None:
     """Create the view: build per-``dims`` sketch rows from ``df`` (one
-    fact scan, raw rows never shuffle) and write them as segment 0."""
+    fact scan, raw rows never shuffle) and write them as segment 0, in as
+    many buckets as the session's default parallelism."""
     dims = list(dims)
     parts = _grouped_partials(df, dims, spec, cols)
-    _write_manifest(path, [_write_segment(parts, dims, ["_pid"], path, 0,
-                                          repr(spec), note)])
+    _write_manifest(path, [_write_segment(
+        parts, dims, _sketch_row_schema(parts, dims), path, 0, repr(spec),
+        note, df.sparkSession.sparkContext.defaultParallelism)])
 
 
 def view_append(df: DataFrame, spec: SketchSpec,
                 cols: Sequence[str | Column], path: str,
                 note: str = "append") -> int:
     """Append one segment built from new facts (e.g. today's partition).
-    The spec must match the view's recorded spec exactly — mergeable
-    blobs of different shapes fail loudly here, not silently at query
-    time.  Returns the new segment id."""
+    The spec and the dims' types must match the view's exactly —
+    mergeable blobs of different shapes, or keys that hash to other
+    buckets, fail loudly here, not silently at query time.  Returns the
+    new segment id."""
     m = _read_manifest(path)
     if repr(spec) != m.spec:
         raise ValueError(
             f"sketch spec mismatch: view built with {m.spec}, "
             f"append called with {repr(spec)}")
-    seg = m.max_seg + 1
     parts = _grouped_partials(df, m.dims, spec, cols)
+    schema = _sketch_row_schema(parts, m.dims)
+    if schema != m.schema:
+        raise ValueError(
+            f"dim types mismatch: view built with {m.schema.simpleString()}"
+            f", append gives {schema.simpleString()}")
+    seg = m.max_seg + 1
     _write_manifest(path, m.rows + [_write_segment(
-        parts, m.dims, ["_pid"], path, seg, m.spec, note)])
+        parts, m.dims, schema, path, seg, m.spec, note, m.nbuckets)])
     return seg
 
 
 def _segment_rows(spark: SparkSession, m: _Manifest, path: str,
                   segments: Sequence[int] | None) -> DataFrame:
     """``[*dims, seg, sketch, rows]`` of the covered segments: a scan of
-    exactly their listed files with the manifest's schema."""
+    exactly their listed files with the manifest's schema.  Spark lists
+    more than ``parallelPartitionDiscovery.threshold`` paths with a job of
+    its own; the threshold is raised to the file count for this call."""
     files = m.files(path, segments)
-    if files:
+    if not files:  # only empty segments; a file scan needs a path
+        return spark.createDataFrame([], StructType(
+            m.schema.fields + [StructField("seg", IntegerType())])
+        ).select(*m.dims, "seg", "sketch", "rows")
+    key = "spark.sql.sources.parallelPartitionDiscovery.threshold"
+    old = spark.conf.get(key)
+    spark.conf.set(key, str(max(int(old), len(files))))
+    try:
         src = (spark.read.schema(m.schema)
                .option("basePath", _segments_path(path)).parquet(*files))
-    else:  # only empty segments; a file scan needs at least one path
-        src = spark.createDataFrame([], StructType(
-            m.schema.fields + [StructField("seg", IntegerType())]))
+    finally:
+        spark.conf.set(key, old)
     return src.select(*m.dims, "seg", "sketch", "rows")
 
 
@@ -312,20 +378,62 @@ def view_stream_writer(dims: Sequence[str], spec: SketchSpec,
     return fn
 
 
+def _fold_bucket(fs: pafs.FileSystem, files: list[str],
+                 dims: list[str]) -> pa.Table:
+    """Fold one bucket: read its ``files`` (listed in segment order) with
+    pyarrow, stable-sort the rows by ``dims`` so each group's rows keep
+    their segment order, and merge each group's run with
+    ``merge_blob_runs``.  Returns ``[*dims, sketch, rows]``, one row per
+    group, sorted by ``dims``: the bytes the Spark fold gives, which also
+    merges each group in segment order."""
+    t = pa.concat_tables(
+        [pq.read_table(f, filesystem=fs) for f in files]).combine_chunks()
+    if dims:
+        t = t.take(pc.sort_indices(t, [(d, "ascending") for d in dims]))
+    new = np.zeros(t.num_rows, dtype=bool)
+    new[:1] = True
+    for d in dims:  # a run starts where any dim differs (NULL == NULL)
+        prev, cur = t.column(d)[:-1], t.column(d)[1:]
+        same = pc.if_else(pc.is_null(prev), pc.is_null(cur),
+                          pc.fill_null(pc.equal(prev, cur), False))
+        new[1:] |= ~np.asarray(same)
+    starts = np.flatnonzero(new)
+    return pa.Table.from_arrays(
+        [*(t.column(d).take(starts) for d in dims),
+         pa.array(merge_blob_runs(t.column("sketch").to_pylist(), starts),
+                  pa.binary()),
+         pa.array(np.add.reduceat(np.asarray(t.column("rows")), starts))],
+        schema=t.schema)
+
+
 def view_compact(spark: SparkSession, path: str,
                  note: str = "compact") -> int:
     """Fold the active segments into one (pure sketch algebra, no fact
-    scan).  Old segments stay on storage for lineage but are marked
-    inactive; returns the new segment id."""
+    scan) in one Spark job of B tasks, task ``b`` folding bucket ``b``'s
+    files (no file scan, no shuffle).  Old segments stay on storage for
+    lineage but are marked inactive; returns the new segment id."""
     m = _read_manifest(path)
-    active = set(m.active)
-    seg = m.max_seg + 1
-    new = _write_segment(_segment_rows(spark, m, path, None), m.dims,
-                         [*m.dims, "seg"], path, seg, m.spec, note)
+    seg, dims = m.max_seg + 1, m.dims
+    fs, root = fs_path(_segments_path(path))
+    buckets = m.bucket_files(root)
+    target = (fs, f"{root}/seg={seg}")
+
+    def fold(batches):
+        for ids in batches:
+            for b in ids["id"].tolist():
+                if buckets[b]:
+                    t = _fold_bucket(fs, buckets[b], dims)
+                    yield pd.DataFrame({"file": [write_part(t, target, b)],
+                                        "rows": [t.num_rows], "bucket": [b]})
+
+    written = (spark.range(m.nbuckets, numPartitions=m.nbuckets)
+               .mapInPandas(fold, "file string, rows long, bucket int")
+               .collect())
     # notes are PRESERVED (the streaming writer's exactly-once check
     # matches on them); the compaction marker is appended after ';'
     kept = [r._replace(active=False,
                        note=f"{r.note}; compacted into {seg}")
-            if r.seg in active else r for r in m.rows]
-    _write_manifest(path, kept + [new])
+            if r.active else r for r in m.rows]
+    _write_manifest(path, kept + [_new_segment(
+        seg, m.spec, dims, note, written, m.schema, m.nbuckets)])
     return seg

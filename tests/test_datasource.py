@@ -1,11 +1,11 @@
 """spark.read.format("sketchview") — the Python Data Source over a
-materialized sketch view: schema derivation, bucket-parallel exact
-merge, and segment restriction.
+materialized sketch view: schema derivation, one exact bucket fold per
+read task, and segment restriction.
 """
 import pytest
 from pyspark.sql import functions as F
 
-from sparksketch.agg import BottomKSpec
+from sparksketch.agg import BottomKSpec, HLLSpec
 from sparksketch.datasource import SketchViewDataSource
 from sparksketch.view import view_append, view_materialize
 
@@ -28,8 +28,7 @@ class TestSketchViewDataSource:
         events = spark.read.parquet(f"{sf_dir}/events.parquet")
         got = {r["event_type"]: (r["estimate"], r["rows"])
                for r in (spark.read.format("sketchview")
-                         .option("path", view_path)
-                         .option("buckets", 4).load()).collect()}
+                         .option("path", view_path).load()).collect()}
         want = {r["event_type"]: (r["exact"], r["n"])
                 for r in events.groupBy("event_type").agg(
                     F.countDistinct("user_id").alias("exact"),
@@ -40,8 +39,11 @@ class TestSketchViewDataSource:
             assert got[k][1] == n
 
     def test_each_group_emitted_exactly_once(self, spark, view_path):
-        df = (spark.read.format("sketchview")
-              .option("path", view_path).option("buckets", 16).load())
+        """Every group's rows of both segments meet in its one bucket:
+        one output row per group, one partition per stored bucket."""
+        from sparksketch.view import _read_manifest
+        df = spark.read.format("sketchview").option("path", view_path).load()
+        assert df.rdd.getNumPartitions() == _read_manifest(view_path).nbuckets
         types = [r["event_type"] for r in df.collect()]
         assert len(types) == len(set(types))
 
@@ -102,3 +104,35 @@ class TestSketchViewDataSource:
             read(f"1,{seg}")
         assert (sum(r["rows"] for r in read(f"{seg}"))
                 == sum(r["rows"] for r in read("0,1")))
+
+
+def test_each_partition_reads_only_its_bucket(spark, tmp_path):
+    """A view of 10^5 groups: each reader partition lists exactly its
+    bucket's manifest files of the active segments, and the read equals
+    ``view_query`` at the view's dims."""
+    import pandas as pd
+
+    from sparksketch.view import _read_manifest, view_compact, view_query
+    spark.dataSource.register(SketchViewDataSource)
+    path = str(tmp_path / "wide")
+    facts = spark.range(300_000).select(
+        (F.col("id") % 100_000).alias("g"), (F.col("id") % 7).alias("u"))
+    spec = HLLSpec(p=4)
+    view_materialize(facts.filter("id < 200000"), ["g"], spec, ["u"], path)
+    view_append(facts.filter("id >= 200000"), spec, ["u"], path)
+    view_compact(spark, path)
+    view_append(facts.filter("id < 1000"), spec, ["u"], path)
+    m = _read_manifest(path)
+    want = [[f for r in m.rows if r.active
+             for f, b in zip(r.files, r.buckets) if b == bucket]
+            for bucket in range(m.nbuckets)]
+    reader = SketchViewDataSource({"path": path}).reader(None)
+    got = [[f.split("/segments/", 1)[1] for f in p.value]
+           for p in reader.partitions()]
+    assert got == want and all(len(w) == 2 for w in want)
+    read = (spark.read.format("sketchview").option("path", path).load()
+            .toPandas().sort_values("g").reset_index(drop=True))
+    query = (view_query(spark, path).toPandas()[["g", "estimate", "rows"]]
+             .sort_values("g").reset_index(drop=True))
+    assert len(read) == 100_000
+    pd.testing.assert_frame_equal(read, query)

@@ -7,7 +7,7 @@ import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
-from sparksketch.agg import BottomKSpec, HLLSpec
+from sparksketch.agg import BottomKSpec, HLLSpec, KLLSpec
 from sparksketch.view import (view_append, view_compact, view_materialize,
                               view_query, view_rows)
 
@@ -396,23 +396,105 @@ class TestSketchView:
         assert read.schema["bucket"].dataType == IntegerType()
         assert {r["bucket"]: r["estimate"] for r in read.collect()} == want
 
-    def test_old_layout_manifest_rejected(self, spark, tmp_path):
-        """A manifest without segment file lists (the earlier layout,
-        whose readers listed segment directories) raises, naming it."""
+    def test_old_layout_manifest_rejected(self, spark, events, tmp_path):
+        """Manifests of both earlier layouts raise, naming the old layout:
+        segments found by listing directories, and listed segment files
+        without buckets.  ``view_query``, ``view_append``,
+        ``view_compact`` and the sketchview reader all refuse them."""
         import os
 
         import pyarrow as pa
         import pyarrow.parquet as pq
-        path = str(tmp_path / "old")
-        os.makedirs(f"{path}/manifest")
-        pq.write_table(pa.table({
-            "seg": pa.array([0], pa.int32()), "spec": ["BottomKSpec()"],
-            "dims": ["event_type"], "active": [True], "note": ["initial"]}),
-            f"{path}/manifest/manifest.parquet")
-        for call in (lambda: view_query(spark, path),
-                     lambda: view_compact(spark, path)):
-            with pytest.raises(ValueError, match="old layout"):
-                call()
+
+        from sparksketch.datasource import SketchViewDataSource
+        spark.dataSource.register(SketchViewDataSource)
+        listed = {"seg": pa.array([0], pa.int32()), "spec": [repr(self.SPEC)],
+                  "dims": ["event_type"], "active": [True],
+                  "note": ["initial"]}
+        unbucketed = {**listed, "files": [["seg=0/part-00000-x.parquet"]],
+                      "schema": [events.select("event_type").schema.json()]}
+        for i, cols in enumerate((listed, unbucketed)):
+            path = str(tmp_path / f"old{i}")
+            os.makedirs(f"{path}/manifest")
+            pq.write_table(pa.table(cols),
+                           f"{path}/manifest/manifest.parquet")
+            for call in (
+                    lambda: view_query(spark, path),
+                    lambda: view_append(events, self.SPEC, ["user_id"],
+                                        path),
+                    lambda: view_compact(spark, path),
+                    lambda: spark.read.format("sketchview")
+                    .option("path", path).load().collect()):
+                with pytest.raises(Exception, match="old layout"):
+                    call()
+
+    def test_segment_files_hold_one_bucket_each(self, spark, events,
+                                                tmp_path):
+        """Every file of every segment (materialized, appended and
+        compacted) holds the rows of one bucket, ``pmod(xxhash64(dims),
+        B)`` computed by Spark, and it is the file's bucket in the
+        manifest; a segment has at most one file per bucket."""
+        from sparksketch.view import _read_manifest
+        path = str(tmp_path / "bview")
+        ev = events.withColumn(
+            "flag", F.when(F.col("event_id") % 3 == 0, F.lit(None))
+            .otherwise((F.col("event_id") % 5).cast("int")))
+        h = F.xxhash64(F.col("event_id").cast("string")) % 2 == 0
+        view_materialize(ev.filter(h), ["event_type", "flag"], self.SPEC,
+                         ["user_id"], path)
+        view_append(ev.filter(~h), self.SPEC, ["user_id"], path)
+        view_compact(spark, path)
+        m = _read_manifest(path)
+        assert m.nbuckets == spark.sparkContext.defaultParallelism
+        assert len(m.rows) == 3
+        for r in m.rows:
+            assert len(r.files) > 1 and len(set(r.buckets)) == len(r.buckets)
+            for f, b in zip(r.files, r.buckets):
+                got = (spark.read.parquet(f"{path}/segments/{f}")
+                       .select(F.pmod(F.xxhash64("event_type", "flag"),
+                                      F.lit(m.nbuckets)).alias("b"))
+                       .distinct().collect())
+                assert [x["b"] for x in got] == [b], (r.seg, f)
+
+    def test_append_with_other_dim_types_rejected(self, spark, events,
+                                                  tmp_path):
+        """A dim whose type differs from the view's would hash its groups
+        to other buckets; the append raises before writing anything."""
+        from sparksketch.view import _read_manifest
+        path = str(tmp_path / "tview")
+        ev = events.withColumn("b", (F.col("event_id") % 4).cast("int"))
+        view_materialize(ev, ["b"], self.SPEC, ["user_id"], path)
+        with pytest.raises(ValueError, match="dim types mismatch"):
+            view_append(ev.withColumn("b", F.col("b").cast("long")),
+                        self.SPEC, ["user_id"], path)
+        assert _read_manifest(path).active == [0]
+
+    def test_query_of_many_files_runs_no_listing_job(self, spark, events,
+                                                     tmp_path):
+        """Past Spark's parallel-listing threshold (32 paths) a file scan
+        lists its paths with a job of its own; a view query of more listed
+        files runs none (no ``parquet at`` stage in its job group)."""
+        from sparksketch.view import _read_manifest
+        path = str(tmp_path / "wide")
+        ev = events.withColumn("k", F.col("event_id") % 400)
+        view_materialize(ev, ["k"], self.SPEC, ["user_id"], path)
+        segs = -(-33 // spark.sparkContext.defaultParallelism)
+        for _ in range(segs - 1):
+            view_append(ev, self.SPEC, ["user_id"], path)
+        assert len(_read_manifest(path).files(path)) > 32
+        sc = spark.sparkContext
+        sc.setJobGroup("wide-view-query", "view_query of many files")
+        try:
+            got = view_query(spark, path, group_cols=[]).collect()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        assert got[0]["rows"] == segs * events.count()
+        st = sc.statusTracker()
+        names = [st.getStageInfo(s).name
+                 for j in st.getJobIdsForGroup("wide-view-query")
+                 for s in st.getJobInfo(j).stageIds]
+        assert names
+        assert not [n for n in names if n.startswith("parquet at")], names
 
     def test_view_calls_use_no_spark_writer_or_inference_job(
             self, spark, events, tmp_path, monkeypatch):
@@ -438,3 +520,52 @@ class TestSketchView:
                  for s in st.getJobInfo(j).stageIds]
         assert names
         assert not [n for n in names if n.startswith("parquet at")], names
+
+
+# sha256 of the compacted segment's sorted (dims, rows, sketch) rows: sf0.01
+# events with dims (event_type, an int bucket with NULLs), split in three by
+# event_id and folded through materialize, two appends and a compaction.
+# Recorded before segments were bucketed; the layout must not move a byte.
+@pytest.mark.parametrize("spec,cols,digest", [
+    pytest.param(HLLSpec(p=10), ["user_id"],
+                 "45ee424a6e1286adcf934fcb86ea795feb406feb682ee87353751e8a73c1b8e4",
+                 id="hll"),
+    pytest.param(BottomKSpec(k=256), ["user_id"],
+                 "c63a36e4aa7e25197d94b99e16b6f43a52912d2c2ff0b960ae727e79646a8777",
+                 id="bottomk"),
+    pytest.param(KLLSpec(k=32, col="value"), ["event_id"],
+                 "b1139e3f5a5a537faaa82a7ba53bec5c6b1a230893f2517ae84a509686768544",
+                 id="kll"),
+])
+def test_compacted_segment_golden_bytes(spark, sf_dir, tmp_path, spec, cols,
+                                        digest):
+    import hashlib
+    import os
+
+    import pyarrow.parquet as pq
+
+    from sparksketch.view import _read_manifest
+    sf01 = os.path.join(os.path.dirname(os.path.normpath(sf_dir)), "sf0.01")
+    if not os.path.exists(f"{sf01}/events.parquet"):
+        pytest.skip("golden digests are recorded for the sf0.01 events")
+    ev = (spark.read.parquet(f"{sf01}/events.parquet")
+          .withColumn("b", F.when(F.col("event_id") % 7 != 0,
+                                  F.pmod(F.xxhash64("user_id"), F.lit(5)))
+                      .cast("int"))
+          .repartition(4, "event_id").sortWithinPartitions("event_id"))
+    part = [ev.filter(F.col("event_id") % 3 == i) for i in range(3)]
+    path = str(tmp_path / "gview")
+    view_materialize(part[0], ["event_type", "b"], spec, cols, path)
+    view_append(part[1], spec, cols, path)
+    view_append(part[2], spec, cols, path)
+    seg = view_compact(spark, path)
+    rows = []
+    for f in _read_manifest(path).files(path, [seg]):
+        t = pq.read_table(f, columns=["event_type", "b", "rows", "sketch"])
+        rows += [((r["event_type"], r["b"]), r["rows"], r["sketch"])
+                 for r in t.to_pylist()]
+    h = hashlib.sha256()
+    for key, n, blob in sorted(rows, key=repr):
+        h.update(repr((key, n)).encode())
+        h.update(blob)
+    assert h.hexdigest() == digest

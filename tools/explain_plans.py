@@ -12,6 +12,8 @@ scale-critical properties directly from the plan text:
 - a sketch-view query folds and estimates in ONE Python operator
 - sketch-view writes run no Spark file-write command: the fold's own
   tasks write the segment files, and reads scan only the listed files
+- a sketch-view append shuffles its fold by the JVM bucket column, and a
+  compaction is one MapInPandas over a Range: no file scan, no Exchange
 - a streaming micro-batch folds its partials and the state once
 
 Usage: PYTHONPATH=/root/repo python tools/explain_plans.py [sf_dir]
@@ -268,8 +270,9 @@ def main():
     print("PASS  bloom anti-join keeps one probe eval per branch")
 
     # -- materialized sketch view: reads open only the manifest's files
-    # of the requested segments, and the fold's own tasks write segment
-    # files (no Spark write command) --------------------------------------
+    # of the requested segments, the fold's own tasks write segment files
+    # (no Spark write command), appends shuffle by bucket and compaction
+    # folds bucket by bucket without a shuffle ----------------------------
     from pyspark.sql.classic.dataframe import DataFrame
     from sparksketch.view import (_read_manifest, view_append, view_compact,
                                   view_materialize, view_query, view_rows)
@@ -299,16 +302,38 @@ def main():
                         ["MapInPandas"],
                         ["InsertIntoHadoopFsRelationCommand", "WriteFiles"])
             ops = py_op.findall(wplan)
-            # the last Python operator is the fold, emitting (file, rows)
+            # the last Python operator is the fold, emitting (file, rows,
+            # bucket)
             fold = wplan[wplan.rfind("MapInPandas ("):]
-            if (not ops or ops[-1] != "MapInPandas"
-                    or not re.search(r"\[file#\d+, rows#\d+L\]", fold)):
+            if (not ops or ops[-1] != "MapInPandas" or not re.search(
+                    r"\[file#\d+, rows#\d+L, bucket#\d+\]", fold)):
                 print(f"FAIL  {name}: last Python operator is not the "
                       f"writing fold ({ops})")
                 ok = False
         if len(collected) != 2:
             print(f"FAIL  view writes collected {len(collected)} plans")
             ok = False
+        else:
+            aplan, cplan = collected
+            # the append's one Exchange partitions by the JVM bucket id
+            ex = re.findall(r"^\(\d+\) Exchange\n(?:.*\n)*?Arguments: (.*)",
+                            aplan, re.M)
+            if len(ex) == 1 and "(_bucket#" in ex[0]:
+                print("PASS  view_append: the fold's Exchange partitions "
+                      "on _bucket")
+            else:
+                print(f"FAIL  view_append: Exchange arguments {ex}")
+                ok = False
+            # compaction: one MapInPandas over a Range, nothing else
+            nodes = re.findall(r"^\(\d+\) (\w+)", cplan, re.M)
+            if (nodes.count("MapInPandas") == 1 and "Range" in nodes
+                    and nodes.index("Range") < nodes.index("MapInPandas")
+                    and "Exchange" not in nodes and "Scan" not in nodes):
+                print("PASS  view_compact: one MapInPandas over a Range, "
+                      "no Exchange, no file scan")
+            else:
+                print(f"FAIL  view_compact plan nodes {nodes}")
+                ok = False
         m = _read_manifest(vdir)
         scanned = view_rows(spark, vdir, group_cols=[],
                             segments=[0]).inputFiles()
