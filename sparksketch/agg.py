@@ -802,14 +802,13 @@ def regroup_sketch_rows(grouped: DataFrame, group_cols: Sequence[str],
     :func:`with_sketch_estimate` after the fold would add a second.
 
     With ``write_dir``, the rows are laid out in ``buckets`` buckets by
-    ``_bucket = pmod(xxhash64(*group_cols), buckets)``, computed in the
-    JVM (bucket 0 without group columns), and repartitioned by it, so
-    each bucket is folded by one task.  A task writes the merged
-    ``[*group_cols, sketch, rows]`` rows of each bucket it holds as one
-    parquet file in that directory (:func:`~sparksketch.io.write_part`)
-    and emits one ``(file, rows, bucket)`` row naming it; a task with no
-    groups writes nothing.  The caller commits the files it collects —
-    no Spark write job runs."""
+    ``pmod(xxhash64(*group_cols), buckets)``, computed in the JVM (bucket
+    0 without group columns), and ``repartitionById`` sends bucket ``b``
+    to task ``b``.  A task writes its merged ``[*group_cols, sketch,
+    rows]`` rows as one parquet file in that directory
+    (:func:`~sparksketch.io.write_part`) and emits one ``(file, rows,
+    bucket)`` row naming it; a task with no groups writes nothing.  The
+    caller commits the files it collects — no Spark write job runs."""
     from .io import arrow_rows, fs_path, write_part
     group_cols = list(group_cols)
     row_schema = _sketch_row_schema(grouped, group_cols)
@@ -826,9 +825,8 @@ def regroup_sketch_rows(grouped: DataFrame, group_cols: Sequence[str],
         tz = grouped.sparkSession.conf.get("spark.sql.session.timeZone")
     else:
         out_schema = row_schema
-    key_cols = group_cols if write_dir is None else ["_bucket", *group_cols]
-    sort_cols = key_cols + [c for c in order_cols
-                            if c in grouped.columns and c not in group_cols]
+    sort_cols = group_cols + [c for c in order_cols
+                              if c in grouped.columns and c not in group_cols]
 
     def fold(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         acc: dict[tuple, list] = {}
@@ -837,7 +835,7 @@ def regroup_sketch_rows(grouped: DataFrame, group_cols: Sequence[str],
                 continue
             # one run per group; the stable sort keeps each group's rows
             # in arrival order (a no-op on the sorted input)
-            codes, keys = _batch_group_codes(pdf, key_cols)
+            codes, keys = _batch_group_codes(pdf, group_cols)
             order = np.argsort(codes, kind="stable")
             codes = codes[order]
             starts = np.flatnonzero(np.diff(codes, prepend=-1))
@@ -862,28 +860,27 @@ def regroup_sketch_rows(grouped: DataFrame, group_cols: Sequence[str],
         if acc:
             keys = sorted(acc, key=_null_last)
             data = {c: [k[i] for k in keys]
-                    for i, c in enumerate(key_cols)}
+                    for i, c in enumerate(group_cols)}
             data["rows"] = [acc[k][1] for k in keys]
             if estimate_col:
                 data[estimate_col] = [_estimate(acc[k][0]) for k in keys]
             else:
                 data["sketch"] = [acc[k][0] for k in keys]
             pdf = pd.DataFrame(data)
-            if target is None:
-                yield pdf
-                return
-            for b, part in pdf.groupby("_bucket", sort=False):
-                name = write_part(arrow_rows(part, row_schema, tz), target,
-                                  b)
-                yield pd.DataFrame({"file": [name], "rows": [len(part)],
+            if target is not None:
+                from pyspark import TaskContext
+                b = TaskContext.get().partitionId()  # = the bucket
+                name = write_part(arrow_rows(pdf, row_schema, tz), target, b)
+                pdf = pd.DataFrame({"file": [name], "rows": [len(pdf)],
                                     "bucket": [b]})
+            yield pdf
 
     src = grouped
     if write_dir is not None:
         bucket = (F.pmod(F.xxhash64(*group_cols), F.lit(buckets))
                   if group_cols else F.lit(0))
-        src = (src.withColumn("_bucket", bucket.cast("int"))
-               .repartition("_bucket").sortWithinPartitions(*sort_cols))
+        src = (src.repartitionById(buckets, bucket.cast("int"))
+               .sortWithinPartitions(*sort_cols))
     elif group_cols:
         src = (src.repartition(*group_cols)
                .sortWithinPartitions(*sort_cols))

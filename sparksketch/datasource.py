@@ -15,9 +15,10 @@ manifest (unknown ids, or compacted-away ids mixed with active ones,
 raise).  Files no manifest lists are never opened.  The schema's dim
 types come from the manifest too.
 
-There is one input partition per stored bucket of the view, so a read is
-one wave of B tasks at the default B.  Each task opens only its bucket's
-files (every row of a group lives in its bucket), folds them with
+There is one input partition per stored bucket of the view; B is at
+most the default parallelism the view was built with, so a read is one
+wave of tasks (one task for a small view).  Each task opens only its
+bucket's files (every row of a group lives in its bucket), folds them with
 ``view._fold_bucket`` — a stable sort by key, then ``merge_blob_runs``
 per key (one stacked NumPy max/OR for HLL and dense Bloom) — and emits
 one Arrow batch of (group, estimate, rows), one row per group.  Read work

@@ -16,15 +16,22 @@ Storage layout:
         (seg, spec, dims, active, note, files, buckets, schema, nbuckets)
 
 Segments are bucketed: a group's rows live in bucket
-``pmod(xxhash64(*dims), B)`` of every segment, and a segment holds at
-most one file per bucket.  B is the session's default parallelism when
-the view is materialized, so one wave of tasks covers every bucket; the
-manifest records it with each file's bucket.  The materialize/append
-fold computes the bucket in the JVM and repartitions by it
-(``regroup_sketch_rows(write_dir=..., buckets=B)``): each fold task
-writes one file per bucket it holds with pyarrow and returns their
-names; no Spark write job runs.  Since one bucket's files hold every row
-of its groups, compaction and the sketchview reader fold bucket by
+``pmod(xxhash64(*dims), B)`` of every segment.  B follows the view's
+size: about one bucket per ``_GROUPS_PER_BUCKET`` groups of segment 0,
+capped at the session's default parallelism P when the view is
+materialized (so one wave of tasks covers every bucket), and a divisor
+of P.  A small view is one bucket, and pays no per-bucket file on
+appends and query scans.  The materialize/append fold computes the
+bucket in the JVM and sends bucket ``b`` to fold task ``b``
+(``regroup_sketch_rows(write_dir=..., buckets=...)``, a
+``repartitionById``), which writes the bucket's file with pyarrow and
+returns its name; no Spark write job runs.  Materialize folds in P
+buckets, since the group count is known only after the fold, and then
+records each file under bucket ``b % B`` (``pmod(h, P) % B ==
+pmod(h, B)`` when B divides P), so segment 0 may hold several files per
+bucket; every later segment holds at most one.  The manifest records B
+with each file's bucket.  Since one bucket's files hold every row of
+its groups, compaction and the sketchview reader fold bucket by
 bucket (:func:`_fold_bucket`) with no shuffle: compaction is one job of
 B tasks (``spark.range(B).mapInPandas``), each folding one bucket's
 files of the active segments into the new segment's file for that
@@ -48,11 +55,13 @@ verified here.
 segments with ``spark.read.schema(<manifest schema>)`` and ``basePath``
 (``seg`` comes from the paths): no directory listing, no schema-inference
 job, and no parallel file-status job however many files are listed (the
-listing threshold is raised to the file count for that one call).  The
-manifest records repr(spec), so an append with a mismatched sketch spec
-or dim types fails loudly instead of silently merging incompatible blobs
-(the wire-format VERSION's contract at the byte level).  A manifest
-without bucketed file lists (an earlier layout) is rejected.
+listing threshold is raised to the file count for that one call, under
+a lock so concurrent view calls in one process do not undo each other's
+raise).  The manifest records repr(spec), so an append with a mismatched
+sketch spec or dim types fails loudly instead of silently merging
+incompatible blobs (the wire-format VERSION's contract at the byte
+level).  A manifest without bucketed file lists (an earlier layout) is
+rejected.
 
 Concurrency note: segment files are immutable once written and each
 manifest commit is one atomic rename, so readers never block or see a
@@ -65,6 +74,7 @@ the io seam to Iceberg/Delta (io.py) and inherit their atomic commit.
 from __future__ import annotations
 
 import json
+import threading
 import uuid
 from dataclasses import dataclass
 from typing import NamedTuple, Sequence
@@ -91,6 +101,14 @@ _MANIFEST_SCHEMA = pa.schema([("seg", pa.int32()), ("spec", pa.string()),
                               ("buckets", pa.list_(pa.int32())),
                               ("schema", pa.string()),
                               ("nbuckets", pa.int32())])
+# A bucket task folds and estimates about 40 us per group in Python (HLL
+# p=10, 4-vCPU host), so 8192 groups are about 0.3 s of work.  Each
+# bucket costs one more file per append, which every query scan opens;
+# below a few thousand groups per bucket that costs more than the read
+# parallelism saves (views_rw's 2,048-group view ran faster as one
+# bucket than as four).
+_GROUPS_PER_BUCKET = 8192
+_LISTING_LOCK = threading.Lock()  # see _segment_rows
 
 
 class _Segment(NamedTuple):
@@ -217,37 +235,48 @@ def _new_segment(seg: int, spec: str, dims: list[str], note: str,
                  written: list, schema: StructType,
                  nbuckets: int) -> _Segment:
     """The manifest row, not yet committed, of segment ``seg`` whose fold
-    tasks ``written`` its files as ``(file, rows, bucket)`` rows."""
-    written = sorted(written, key=lambda r: r.bucket)
+    tasks ``written`` its files as ``(file, rows, bucket)`` rows, each
+    file under bucket ``bucket % nbuckets``."""
+    written = sorted(written, key=lambda r: r.bucket % nbuckets)
     return _Segment(seg, spec, ",".join(dims), True, note,
                     [f"seg={seg}/{r.file}" for r in written],
-                    [r.bucket for r in written], schema.json(), nbuckets)
+                    [r.bucket % nbuckets for r in written], schema.json(),
+                    nbuckets)
 
 
-def _write_segment(parts: DataFrame, dims: list[str], schema: StructType,
-                   path: str, seg: int, spec: str, note: str,
-                   nbuckets: int) -> _Segment:
+def _write_segment(parts: DataFrame, dims: list[str], path: str, seg: int,
+                   nbuckets: int) -> list:
     """Fold the partial rows ``parts`` to one row per ``dims`` group, laid
     out in ``nbuckets`` buckets, one file of segment ``seg`` per bucket;
-    the segment's manifest row, not yet committed."""
-    written = regroup_sketch_rows(
+    the ``(file, rows, bucket)`` rows of the files written."""
+    return regroup_sketch_rows(
         parts, dims, order_cols=["_pid"],
         write_dir=f"{_segments_path(path)}/seg={seg}",
         buckets=nbuckets).collect()
-    return _new_segment(seg, spec, dims, note, written, schema, nbuckets)
+
+
+def _bucket_count(groups: int, parallelism: int) -> int:
+    """B for a view whose segment 0 has ``groups`` groups: the largest
+    divisor of ``parallelism`` that is at most one bucket per
+    ``_GROUPS_PER_BUCKET`` groups (rounded up), and at least 1."""
+    want = max(1, -(-groups // _GROUPS_PER_BUCKET))
+    return max(d for d in range(1, parallelism + 1)
+               if parallelism % d == 0 and d <= want)
 
 
 def view_materialize(df: DataFrame, dims: Sequence[str], spec: SketchSpec,
                      cols: Sequence[str | Column], path: str,
                      note: str = "initial") -> None:
     """Create the view: build per-``dims`` sketch rows from ``df`` (one
-    fact scan, raw rows never shuffle) and write them as segment 0, in as
-    many buckets as the session's default parallelism."""
+    fact scan, raw rows never shuffle) and write them as segment 0, in
+    as many buckets as its size calls for (see the module docstring)."""
     dims = list(dims)
     parts = _grouped_partials(df, dims, spec, cols)
-    _write_manifest(path, [_write_segment(
-        parts, dims, _sketch_row_schema(parts, dims), path, 0, repr(spec),
-        note, df.sparkSession.sparkContext.defaultParallelism)])
+    p = df.sparkSession.sparkContext.defaultParallelism
+    written = _write_segment(parts, dims, path, 0, p)
+    _write_manifest(path, [_new_segment(
+        0, repr(spec), dims, note, written, _sketch_row_schema(parts, dims),
+        _bucket_count(sum(r.rows for r in written), p))])
 
 
 def view_append(df: DataFrame, spec: SketchSpec,
@@ -270,8 +299,9 @@ def view_append(df: DataFrame, spec: SketchSpec,
             f"dim types mismatch: view built with {m.schema.simpleString()}"
             f", append gives {schema.simpleString()}")
     seg = m.max_seg + 1
-    _write_manifest(path, m.rows + [_write_segment(
-        parts, m.dims, schema, path, seg, m.spec, note, m.nbuckets)])
+    written = _write_segment(parts, m.dims, path, seg, m.nbuckets)
+    _write_manifest(path, m.rows + [_new_segment(
+        seg, m.spec, m.dims, note, written, schema, m.nbuckets)])
     return seg
 
 
@@ -280,20 +310,25 @@ def _segment_rows(spark: SparkSession, m: _Manifest, path: str,
     """``[*dims, seg, sketch, rows]`` of the covered segments: a scan of
     exactly their listed files with the manifest's schema.  Spark lists
     more than ``parallelPartitionDiscovery.threshold`` paths with a job of
-    its own; the threshold is raised to the file count for this call."""
+    its own; the threshold is raised to the file count for this call.
+    The conf is session-wide: a lock keeps two view calls of this process
+    from saving each other's raised value as the one to restore, and a
+    read planned by other code meanwhile may list its paths on the
+    driver instead of with a job."""
     files = m.files(path, segments)
     if not files:  # only empty segments; a file scan needs a path
         return spark.createDataFrame([], StructType(
             m.schema.fields + [StructField("seg", IntegerType())])
         ).select(*m.dims, "seg", "sketch", "rows")
     key = "spark.sql.sources.parallelPartitionDiscovery.threshold"
-    old = spark.conf.get(key)
-    spark.conf.set(key, str(max(int(old), len(files))))
-    try:
-        src = (spark.read.schema(m.schema)
-               .option("basePath", _segments_path(path)).parquet(*files))
-    finally:
-        spark.conf.set(key, old)
+    with _LISTING_LOCK:
+        old = spark.conf.get(key)
+        spark.conf.set(key, str(max(int(old), len(files))))
+        try:
+            src = (spark.read.schema(m.schema)
+                   .option("basePath", _segments_path(path)).parquet(*files))
+        finally:
+            spark.conf.set(key, old)
     return src.select(*m.dims, "seg", "sketch", "rows")
 
 

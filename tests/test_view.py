@@ -422,19 +422,24 @@ class TestSketchView:
                     lambda: view_query(spark, path),
                     lambda: view_append(events, self.SPEC, ["user_id"],
                                         path),
-                    lambda: view_compact(spark, path),
-                    lambda: spark.read.format("sketchview")
-                    .option("path", path).load().collect()):
-                with pytest.raises(Exception, match="old layout"):
+                    lambda: view_compact(spark, path)):
+                with pytest.raises(ValueError, match="old layout"):
                     call()
+            # the reader's ValueError reaches the driver wrapped by Spark
+            with pytest.raises(Exception, match="old layout"):
+                (spark.read.format("sketchview").option("path", path)
+                 .load().collect())
 
     def test_segment_files_hold_one_bucket_each(self, spark, events,
-                                                tmp_path):
+                                                tmp_path, monkeypatch):
         """Every file of every segment (materialized, appended and
         compacted) holds the rows of one bucket, ``pmod(xxhash64(dims),
         B)`` computed by Spark, and it is the file's bucket in the
-        manifest; a segment has at most one file per bucket."""
+        manifest; a segment has at most one file per bucket.  One group
+        per bucket makes B the default parallelism on this small view."""
+        from sparksketch import view
         from sparksketch.view import _read_manifest
+        monkeypatch.setattr(view, "_GROUPS_PER_BUCKET", 1)
         path = str(tmp_path / "bview")
         ev = events.withColumn(
             "flag", F.when(F.col("event_id") % 3 == 0, F.lit(None))
@@ -456,6 +461,52 @@ class TestSketchView:
                        .distinct().collect())
                 assert [x["b"] for x in got] == [b], (r.seg, f)
 
+    def test_bucket_count_follows_view_size(self, spark, events, tmp_path,
+                                            monkeypatch):
+        """B is about one bucket per ``_GROUPS_PER_BUCKET`` groups of
+        segment 0, a divisor of the default parallelism P: a small view
+        is one bucket.  Materialize folds in P buckets and files each
+        under ``b % B``, which is Spark's ``pmod(xxhash64(dims), B)``
+        of its rows; reads, appends and compaction then see B buckets."""
+        from sparksketch import view
+        from sparksketch.datasource import SketchViewDataSource
+        from sparksketch.view import _bucket_count, _read_manifest
+        assert [_bucket_count(g, 4) for g in (0, 1, 2048, 8193, 20000,
+                                               10 ** 5)] == [1, 1, 1, 2, 2, 4]
+        assert _bucket_count(20000, 6) == 3 and _bucket_count(1, 1) == 1
+        p = spark.sparkContext.defaultParallelism
+        small = self._build(events, tmp_path)
+        assert _read_manifest(small).nbuckets == 1
+        ev = events.withColumn("k", F.col("event_id") % 64)
+        groups = ev.select("event_type", "k").distinct().count()
+        monkeypatch.setattr(view, "_GROUPS_PER_BUCKET", -(-groups // 2))
+        path = str(tmp_path / "halves")
+        view_materialize(ev, ["event_type", "k"], self.SPEC, ["user_id"],
+                         path)
+        view_append(ev, self.SPEC, ["user_id"], path)
+        m = _read_manifest(path)
+        assert m.nbuckets == 2 and p % 2 == 0
+        assert len(m.rows[0].files) > 2 and len(m.rows[1].files) <= 2
+        for r in m.rows:
+            for f, b in zip(r.files, r.buckets):
+                got = (spark.read.parquet(f"{path}/segments/{f}")
+                       .select(F.pmod(F.xxhash64("event_type", "k"),
+                                      F.lit(2)).alias("b"))
+                       .distinct().collect())
+                assert [x["b"] for x in got] == [b], (r.seg, f)
+        want = {(r["event_type"], r["k"]): (r["estimate"], r["rows"])
+                for r in view_query(spark, path).collect()}
+        assert len(want) == groups
+        spark.dataSource.register(SketchViewDataSource)
+        read = spark.read.format("sketchview").option("path", path).load()
+        assert read.rdd.getNumPartitions() == 2
+        assert {(r["event_type"], r["k"]): (r["estimate"], r["rows"])
+                for r in read.collect()} == want
+        view_compact(spark, path)
+        assert sorted(_read_manifest(path).rows[-1].buckets) == [0, 1]
+        assert {(r["event_type"], r["k"]): (r["estimate"], r["rows"])
+                for r in view_query(spark, path).collect()} == want
+
     def test_append_with_other_dim_types_rejected(self, spark, events,
                                                   tmp_path):
         """A dim whose type differs from the view's would hash its groups
@@ -470,11 +521,14 @@ class TestSketchView:
         assert _read_manifest(path).active == [0]
 
     def test_query_of_many_files_runs_no_listing_job(self, spark, events,
-                                                     tmp_path):
+                                                     tmp_path, monkeypatch):
         """Past Spark's parallel-listing threshold (32 paths) a file scan
         lists its paths with a job of its own; a view query of more listed
-        files runs none (no ``parquet at`` stage in its job group)."""
+        files runs none (no ``parquet at`` stage in its job group).  One
+        group per bucket gives every segment one file per core."""
+        from sparksketch import view
         from sparksketch.view import _read_manifest
+        monkeypatch.setattr(view, "_GROUPS_PER_BUCKET", 1)
         path = str(tmp_path / "wide")
         ev = events.withColumn("k", F.col("event_id") % 400)
         view_materialize(ev, ["k"], self.SPEC, ["user_id"], path)

@@ -12,8 +12,9 @@ scale-critical properties directly from the plan text:
 - a sketch-view query folds and estimates in ONE Python operator
 - sketch-view writes run no Spark file-write command: the fold's own
   tasks write the segment files, and reads scan only the listed files
-- a sketch-view append shuffles its fold by the JVM bucket column, and a
-  compaction is one MapInPandas over a Range: no file scan, no Exchange
+- a sketch-view append sends each row to the fold task of its bucket,
+  computed in the JVM, and a compaction is one MapInPandas over a Range:
+  no file scan, no Exchange
 - a streaming micro-batch folds its partials and the state once
 
 Usage: PYTHONPATH=/root/repo python tools/explain_plans.py [sf_dir]
@@ -282,8 +283,6 @@ def main():
     try:
         half = F.xxhash64(F.col("event_id").cast("string")) % 2 == 0
         spec = BottomKSpec(k=4096)
-        view_materialize(events.filter(half), ["event_type"], spec,
-                         ["user_id"], vdir)
         # the plans the view's writes collect: captured at collect()
         collected, collect = [], DataFrame.collect
 
@@ -292,11 +291,14 @@ def main():
             return collect(df)
         DataFrame.collect = capture
         try:
+            view_materialize(events.filter(half), ["event_type"], spec,
+                             ["user_id"], vdir)
             view_append(events.filter(~half), spec, ["user_id"], vdir)
             view_compact(spark, vdir)
         finally:
             DataFrame.collect = collect
-        for name, wplan in zip(("view_append", "view_compact"), collected):
+        names = ("view_materialize", "view_append", "view_compact")
+        for name, wplan in zip(names, collected):
             print(wplan)
             ok &= check(f"{name}: no Spark file-write command", wplan,
                         ["MapInPandas"],
@@ -310,20 +312,33 @@ def main():
                 print(f"FAIL  {name}: last Python operator is not the "
                       f"writing fold ({ops})")
                 ok = False
-        if len(collected) != 2:
+        if len(collected) != 3:
             print(f"FAIL  view writes collected {len(collected)} plans")
             ok = False
         else:
-            aplan, cplan = collected
-            # the append's one Exchange partitions by the JVM bucket id
-            ex = re.findall(r"^\(\d+\) Exchange\n(?:.*\n)*?Arguments: (.*)",
-                            aplan, re.M)
-            if len(ex) == 1 and "(_bucket#" in ex[0]:
-                print("PASS  view_append: the fold's Exchange partitions "
-                      "on _bucket")
-            else:
-                print(f"FAIL  view_append: Exchange arguments {ex}")
-                ok = False
+            # a write fold's one Exchange sends each row to the task of
+            # its bucket, computed in the JVM (repartitionById):
+            # materialize folds in P buckets, an append in the view's B
+            # (one bucket, a SinglePartition Exchange, on this small view)
+            p = spark.sparkContext.defaultParallelism
+            by_id = (r"shufflepartitionidpassthrough\(direct_shuffle_"
+                     r"partition_id\(cast\(pmod\(xxhash64\(event_type#\d+"
+                     r", 42\), {0}\) as int\)\), {0}\), REPARTITION_BY_NUM")
+            single = r"SinglePartition, REPARTITION_BY_NUM"
+            want_b = _read_manifest(vdir).nbuckets
+            for name, wplan, nb in (("view_materialize", collected[0], p),
+                                    ("view_append", collected[1], want_b)):
+                ex = re.findall(
+                    r"^\(\d+\) Exchange\n(?:.*\n)*?Arguments: (.*)",
+                    wplan, re.M)
+                want = by_id.format(nb) if nb > 1 else single
+                if len(ex) == 1 and re.match(want, ex[0]):
+                    print(f"PASS  {name}: the fold's Exchange sends bucket "
+                          f"b of {nb} to task b")
+                else:
+                    print(f"FAIL  {name}: Exchange arguments {ex}")
+                    ok = False
+            cplan = collected[2]
             # compaction: one MapInPandas over a Range, nothing else
             nodes = re.findall(r"^\(\d+\) (\w+)", cplan, re.M)
             if (nodes.count("MapInPandas") == 1 and "Range" in nodes
