@@ -40,7 +40,8 @@ def _utc(spark: SparkSession) -> None:
 def entry(spark: SparkSession) -> DataFrame:
     """Flagship: distinct conversations + membership over sf0.001
     transcripts — exercises shape math, JVM hashing, mapInPandas partials,
-    treeAggregate merge, and estimate in one slice."""
+    the Arrow-collect merge (tree_aggregate_multi), and estimate in one
+    slice."""
     from sparksketch.agg import (BloomSpec, HLLSpec, sketch_dataframe,
                                  with_might_contain)
     from sparksketch.shape import Shape

@@ -6,8 +6,11 @@ vectorized Arrow/pandas UDFs.
 Capability surface modeled on Claudenw/BloomFilters (see SURVEY.md); the
 execution design is Spark-first: JVM-side xxhash64 hashing, per-partition
 vectorized sketch builds via mapInPandas, associative byte-canonical merges
-via treeAggregate, grouped aggregation with a map-side combine that bounds a
-hot group to one partial sketch per input partition."""
+of the partial sketches (an Arrow collect folded on the driver, with
+``groupBy(pid // fanout)`` fold rounds first past ``collect_max``), grouped
+aggregation with a map-side combine that bounds a hot group to one partial
+sketch per input partition, and one Arrow fold of sketch rows per group
+(``agg.fold_sketch_runs``)."""
 
 from .shape import Shape, StableShape  # noqa: F401
 from . import sketches  # noqa: F401

@@ -11,20 +11,23 @@ Execution design (SURVEY.md §4, BASELINE.json north_rule):
   hash bytes are its payload.  Python only does closed-form EDH
   arithmetic on whole Arrow batches.  No per-row Python.
 - **Partial aggregation.** ``pandas_udf(GROUPED_AGG)`` has no map-side
-  combine, so global sketches are built with ``mapInPandas`` — ONE sketch row
-  per input partition, built fully vectorized — then merged with
-  ``rdd.treeAggregate`` (depth ~ log4(P)).  Raw rows never shuffle; only
-  KB-MB sketch blobs do.
+  combine, so global sketches are built with ``mapInPandas`` — ONE sketch
+  row per input partition, built fully vectorized — and merged by
+  :func:`tree_aggregate_multi`: an Arrow collect of the partial rows,
+  folded on the driver, with ``groupBy(pid // fanout)`` fold rounds on
+  the executors first when there are more than ``collect_max``.  Raw rows
+  never shuffle; only KB-MB sketch blobs do.
 - **Grouped aggregation** has one path, :func:`grouped_sketch`: each
   input partition builds per-group partials inside ``mapInPandas`` (raw
   rows never shuffle), and only those sketch rows shuffle to be merged.
-  Merging sketch ROWS per group (stage 2 of the grouped build, view
-  appends/compactions/queries, streaming windows, the cube) is one fold,
-  :func:`regroup_sketch_rows`: rows arrive sorted by group, so each Arrow
-  batch is a sequence of same-group runs merged by ``merge_blob_runs`` —
-  one stacked NumPy max/OR per batch for HLL and dense Bloom,
-  decode-and-merge for the other kinds.  Partials are sound because
-  every mergeable sketch kind here has a commutative+associative merge.
+  Sketch ROWS fold in one place, :func:`fold_sketch_runs`: rows sorted by
+  group are runs, each merged by ``merge_blob_runs`` — one stacked NumPy
+  max/OR for HLL and dense Bloom, decode-and-merge for the other kinds.
+  :func:`regroup_sketch_rows` (stage 2 of the grouped build, view appends
+  and queries, streaming windows, the cube) calls it per Arrow batch in a
+  ``mapInArrow``; view compaction and the ``sketchview`` reader call it
+  per bucket.  Partials are sound because every mergeable sketch kind
+  here has a commutative+associative merge.
 - **Byte-identical associativity.** OR/sum/max/min-merge kinds (bloom,
   counting, layered, HLL, CMS, bottom-k, minhash) produce byte-identical
   results for ANY partitioning / merge order.  KLL and t-digest are
@@ -42,10 +45,11 @@ from typing import ClassVar, Iterator, Sequence
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import Column, DataFrame, functions as F
 from pyspark.sql.types import (BinaryType, BooleanType, DoubleType,
-                               IntegerType, LongType, StringType,
-                               StructField, StructType)
+                               LongType, StructField, StructType)
 
 from .hashing import combine_hashes
 from .shape import Shape, StableShape
@@ -67,28 +71,22 @@ PARTIAL_SCHEMA = _partials_schema(["sketch"])
 
 
 def _norm_key(key) -> tuple:
-    """Normalize a pandas ``groupby(dropna=False)`` key to a stable tuple:
-    NaN/NaT/None all become ``None``.  Raw NaN keys are unusable as dict
-    keys across Arrow batches (``nan != nan`` defeats the hash lookup
-    unless pandas happens to hand back the same singleton) and unsortable
-    against strings.
+    """Normalize a group key to a stable tuple: NaN/NaT/None all become
+    ``None``.  Raw NaN keys are unusable as dict keys across Arrow batches
+    (``nan != nan`` defeats the hash lookup unless pandas happens to hand
+    back the same singleton) and unsortable against strings.
 
     CONTRACT (round-3 ADVICE): for float/double group columns this
     FOLDS real NaN keys into the NULL group, where native Spark groupBy
     keeps NaN as its own non-null group.  The conflation is partly
     forced upstream — the Arrow->pandas crossing already maps SQL NULL
     to NaN, so the two are indistinguishable by the time a pandas-side
-    fold sees them.  Callers that need NaN as a distinct group must
-    pre-normalize JVM-side (e.g. ``nanvl(col, lit(sentinel))`` or a
-    ``isnan`` filter) before the mapInPandas stage."""
+    build sees them; :func:`fold_sketch_runs` keeps the same contract.
+    Callers that need NaN as a distinct group must pre-normalize
+    JVM-side (e.g. ``nanvl(col, lit(sentinel))`` or a ``isnan`` filter)
+    before the build."""
     kt = key if isinstance(key, tuple) else (key,)
     return tuple(None if v is None or v != v else v for v in kt)
-
-
-def _null_last(key: tuple) -> tuple:
-    """Sort key placing None group values last; never compares None with a
-    concrete value (nulls-last flag sorts first)."""
-    return tuple((1, "") if v is None else (0, v) for v in key)
 
 
 # --------------------------------------------------------------------------
@@ -649,8 +647,7 @@ def _group_sketches(batches: Iterator[pd.DataFrame],
     for pdf in batches:
         if not len(pdf):
             continue
-        for key, sub in pdf.groupby(group_cols, sort=False, dropna=False):
-            key = _norm_key(key)
+        for key, sub in _batch_groups(pdf, group_cols):
             ent = sks.get(key)
             if ent is None:
                 ent = sks[key] = [spec.empty(), 0]
@@ -673,6 +670,17 @@ def _batch_group_codes(pdf: pd.DataFrame,
                                     return_index=True, return_inverse=True)
     cols = [pdf[c].take(first).tolist() for c in group_cols]
     return codes.reshape(-1), [_norm_key(k) for k in zip(*cols)]
+
+
+def _batch_groups(pdf: pd.DataFrame,
+                  group_cols: list[str]) -> Iterator[tuple[tuple, pd.DataFrame]]:
+    """Each group of one batch as ``(key, rows)``: the key normalized as
+    :func:`_norm_key` does, the rows in their batch order."""
+    codes, keys = _batch_group_codes(pdf, group_cols)
+    order = np.argsort(codes, kind="stable")
+    starts = np.flatnonzero(np.diff(codes[order], prepend=-1))
+    for s, e in zip(starts, np.append(starts[1:], len(order))):
+        yield keys[codes[order[s]]], pdf.take(order[s:e])
 
 
 def _hll_group_sketches(batches: Iterator[pd.DataFrame],
@@ -723,7 +731,7 @@ def _grouped_partials(df: DataFrame, group_cols: list[str],
                else _group_sketches(batches, group_cols, spec))
         if sks:
             pid = TaskContext.get().partitionId()
-            keys = sorted(sks, key=_null_last)  # canonical emit order
+            keys = list(sks)
             data = {c: [k[i] for k in keys] for i, c in enumerate(group_cols)}
             data["sketch"] = [sks[k][0] for k in keys]
             data["rows"] = [sks[k][1] for k in keys]
@@ -775,6 +783,47 @@ def _sketch_row_schema(df: DataFrame,
                          StructField("rows", LongType())])
 
 
+def fold_sketch_runs(t: pa.Table, keys: Sequence[str]) -> pa.Table:
+    """Fold sketch rows ``[*keys, sketch, rows, ...]``, in which each group
+    of ``keys`` is one run of consecutive rows, to ``[*keys, sketch,
+    rows]``: one row per run, in run order.  Every run's blobs merge in
+    row order in one :func:`~sparksketch.sketches.base.merge_blob_runs`
+    call (a stacked NumPy max/OR for HLL and dense Bloom, no sketch
+    objects) and ``rows`` sums by ``np.add.reduceat``.  Keys compare with
+    NULL equal to NULL and a float key's NaN read as NULL, and the
+    emitted key is the normalized one: the :func:`_norm_key` contract."""
+    cols = []
+    for k in keys:
+        c = t.column(k).combine_chunks()
+        if pa.types.is_floating(c.type):
+            c = pc.if_else(pc.is_nan(c), pa.scalar(None, c.type), c)
+        cols.append(c)
+    new = np.zeros(t.num_rows, dtype=bool)
+    new[:1] = True
+    for c in cols:  # a run starts where any key differs
+        prev, cur = c[:-1], c[1:]
+        same = pc.if_else(pc.is_null(prev), pc.is_null(cur),
+                          pc.fill_null(pc.equal(prev, cur), False))
+        new[1:] |= ~np.asarray(same)
+    starts = np.flatnonzero(new)
+    sketch = t.column("sketch")
+    return pa.Table.from_arrays(
+        [*(c.take(starts) for c in cols),
+         pa.array(merge_blob_runs(sketch.to_pylist(), starts), sketch.type),
+         pa.array(np.add.reduceat(np.asarray(t.column("rows")), starts))],
+        names=[*keys, "sketch", "rows"])
+
+
+def _group_keys(df: DataFrame, group_cols: list[str]) -> list[Column]:
+    """``group_cols`` of ``df`` as partition and sort keys, a float
+    column's NaN read as NULL: a group's NaN and NULL rows meet in one
+    task and sort into one run of :func:`fold_sketch_runs`."""
+    types = dict(df.dtypes)
+    return [F.nanvl(F.col(c), F.lit(None).cast(types[c]))
+            if types[c] in ("float", "double") else F.col(c)
+            for c in group_cols]
+
+
 def regroup_sketch_rows(grouped: DataFrame, group_cols: Sequence[str],
                         order_cols: Sequence[str] = (),
                         estimate_col: str | None = None,
@@ -788,13 +837,11 @@ def regroup_sketch_rows(grouped: DataFrame, group_cols: Sequence[str],
 
     The rows are repartitioned by ``group_cols`` and sorted by them (then
     ``order_cols``), so inside each Arrow batch a group is one run of
-    consecutive rows.  Each batch's runs merge in one
-    :func:`~sparksketch.sketches.base.merge_blob_runs` call (a stacked
-    NumPy max/OR for HLL and dense Bloom, no sketch objects) and ``rows``
-    sums by ``np.add.reduceat``.  A group already in the accumulator —
-    its rows straddle two batches — merges as ``merge_blob_list([acc,
-    *run])``, the same decode order as one list, so KLL and t-digest bytes
-    do not depend on where batches split.
+    consecutive rows, and a ``mapInArrow`` folds each batch with
+    :func:`fold_sketch_runs`.  A batch's last merged row is carried to the
+    front of the next batch: a group whose rows straddle batches merges
+    as ``[carried, *run]``, the decode order of one list, so KLL and
+    t-digest bytes do not depend on where batches split.
 
     With ``estimate_col``, the fold also estimates each merged sketch and
     emits ``[*group_cols, rows, <estimate_col> double]`` instead of the
@@ -809,86 +856,65 @@ def regroup_sketch_rows(grouped: DataFrame, group_cols: Sequence[str],
     (:func:`~sparksketch.io.write_part`) and emits one ``(file, rows,
     bucket)`` row naming it; a task with no groups writes nothing.  The
     caller commits the files it collects — no Spark write job runs."""
-    from .io import arrow_rows, fs_path, write_part
+    from .io import WRITTEN_SCHEMA, fs_path, write_part
     group_cols = list(group_cols)
-    row_schema = _sketch_row_schema(grouped, group_cols)
-    target = tz = None
+    cols = [*group_cols, "sketch", "rows"]
+    out_schema = _sketch_row_schema(grouped, group_cols)
+    target = None
     if estimate_col:
-        out_schema = StructType(row_schema.fields[:-2] + [
+        out_schema = StructType(out_schema.fields[:-2] + [
             StructField("rows", LongType()),
             StructField(estimate_col, DoubleType())])
     elif write_dir is not None:
-        out_schema = StructType([StructField("file", StringType()),
-                                 StructField("rows", LongType()),
-                                 StructField("bucket", IntegerType())])
+        out_schema = WRITTEN_SCHEMA
         target = fs_path(write_dir)
-        tz = grouped.sparkSession.conf.get("spark.sql.session.timeZone")
-    else:
-        out_schema = row_schema
-    sort_cols = group_cols + [c for c in order_cols
-                              if c in grouped.columns and c not in group_cols]
 
-    def fold(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        acc: dict[tuple, list] = {}
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            # one run per group; the stable sort keeps each group's rows
-            # in arrival order (a no-op on the sorted input)
-            codes, keys = _batch_group_codes(pdf, group_cols)
-            order = np.argsort(codes, kind="stable")
-            codes = codes[order]
-            starts = np.flatnonzero(np.diff(codes, prepend=-1))
-            ends = np.append(starts[1:], len(codes))
-            blobs = pdf["sketch"].to_numpy()[order].tolist()
-            rows = np.add.reduceat(pdf["rows"].to_numpy()[order], starts)
-            new = []  # (entry, run) of groups first seen in this batch
-            for s, e, n in zip(starts, ends, rows):
-                key = keys[codes[s]]
-                ent = acc.get(key)
-                if ent is None:
-                    ent = acc[key] = [None, 0]
-                    new.append((ent, blobs[s:e]))
-                else:  # straddles batches: merge as one list, in order
-                    ent[0] = merge_blob_list([ent[0], *blobs[s:e]])
-                ent[1] += int(n)
-            merged = merge_blob_runs(
-                [b for _, run in new for b in run],
-                np.cumsum([0, *(len(run) for _, run in new)])[:-1])
-            for (ent, _), blob in zip(new, merged):
-                ent[0] = blob
-        if acc:
-            keys = sorted(acc, key=_null_last)
-            data = {c: [k[i] for k in keys]
-                    for i, c in enumerate(group_cols)}
-            data["rows"] = [acc[k][1] for k in keys]
+    def folded(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.Table]:
+        carry = None
+        for b in batches:
+            if b.num_rows:
+                t = pa.Table.from_arrays([b.column(c) for c in cols],
+                                         names=cols)
+                if carry is not None:
+                    t = pa.concat_tables([carry, t])
+                t = fold_sketch_runs(t, group_cols)
+                carry = t.slice(t.num_rows - 1)  # may go on in the next
+                yield t.slice(0, t.num_rows - 1)
+        if carry is not None:
+            yield carry
+
+    def fold(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        if target is not None:
+            from pyspark import TaskContext
+            parts = list(folded(batches))
+            if parts:  # the task's partition id is its bucket
+                yield write_part(pa.concat_tables(parts), target,
+                                 TaskContext.get().partitionId())
+            return
+        for t in folded(batches):
             if estimate_col:
-                data[estimate_col] = [_estimate(acc[k][0]) for k in keys]
-            else:
-                data["sketch"] = [acc[k][0] for k in keys]
-            pdf = pd.DataFrame(data)
-            if target is not None:
-                from pyspark import TaskContext
-                b = TaskContext.get().partitionId()  # = the bucket
-                name = write_part(arrow_rows(pdf, row_schema, tz), target, b)
-                pdf = pd.DataFrame({"file": [name], "rows": [len(pdf)],
-                                    "bucket": [b]})
-            yield pdf
+                est = [_estimate(x) for x in t.column("sketch").to_pylist()]
+                t = pa.Table.from_arrays(
+                    [*t.columns[:-2], t.column("rows"),
+                     pa.array(est, pa.float64())], names=out_schema.names)
+            yield from t.to_batches()
 
+    keys = _group_keys(grouped, group_cols)
+    sort_cols = [k.asc_nulls_last() for k in keys] + [
+        c for c in order_cols if c in grouped.columns and c not in group_cols]
     src = grouped
     if write_dir is not None:
-        bucket = (F.pmod(F.xxhash64(*group_cols), F.lit(buckets))
+        bucket = (F.pmod(F.xxhash64(*keys), F.lit(buckets))
                   if group_cols else F.lit(0))
         src = (src.repartitionById(buckets, bucket.cast("int"))
                .sortWithinPartitions(*sort_cols))
     elif group_cols:
-        src = (src.repartition(*group_cols)
-               .sortWithinPartitions(*sort_cols))
+        src = src.repartition(*keys).sortWithinPartitions(*sort_cols)
     else:
         src = src.coalesce(1)
         if sort_cols:
             src = src.sortWithinPartitions(*sort_cols)
-    return src.mapInPandas(fold, out_schema)
+    return src.mapInArrow(fold, out_schema)
 
 
 def grouped_sketch_cube(df: DataFrame, dims: Sequence[str],
@@ -974,19 +1000,6 @@ def with_sketch_estimate(df: DataFrame, out_col: str = "estimate",
 # --------------------------------------------------------------------------
 # Scalar sketch functions over DataFrames
 # --------------------------------------------------------------------------
-
-_SKETCH_CACHE: dict[bytes, Sketch] = {}
-
-
-def _cached_sketch(blob: bytes) -> Sketch:
-    sk = _SKETCH_CACHE.get(blob)
-    if sk is None:
-        if len(_SKETCH_CACHE) > 8:
-            _SKETCH_CACHE.clear()
-        sk = sketch_from_bytes(blob)
-        _SKETCH_CACHE[blob] = sk
-    return sk
-
 
 # Large probe blobs ship as Spark broadcasts (one torrent fetch per
 # executor) instead of riding the UDF closure into every task; small ones
@@ -1084,8 +1097,7 @@ def with_might_contain(df: DataFrame, blob: bytes,
 
     @F.pandas_udf(BooleanType())
     def probe(h1: pd.Series) -> pd.Series:
-        sk = (_probe_sketch(token, bc, inline) if bc is not None
-              else _cached_sketch(inline))
+        sk = _probe_sketch(token, bc, inline)
         return pd.Series(sk.contains_hashes(h1.to_numpy()))
 
     return df.withColumn(out_col, probe(F.xxhash64(*cols)))
@@ -1105,8 +1117,7 @@ def with_layer_find(df: DataFrame, blob: bytes,
 
     @F.pandas_udf("array<long>")
     def probe(h1: pd.Series) -> pd.Series:
-        sk = (_probe_sketch(token, bc, inline, decode_acc)
-              if bc is not None else _cached_sketch(inline))
+        sk = _probe_sketch(token, bc, inline, decode_acc)
         return pd.Series(sk.find_hashes(h1.to_numpy()))
 
     return df.withColumn(out_col, probe(F.xxhash64(*cols)))
@@ -1149,8 +1160,9 @@ def bloom_semijoin(probe_df: DataFrame, probe_cols: Sequence[str],
                    fpp: float = 1e-6) -> DataFrame:
     """Pre-filter ``probe_df`` to rows whose key might exist in ``build_df``.
 
-    Builds a Bloom filter over the (small) build side with treeAggregate and
-    broadcasts the KB-scale blob inside the UDF closure — no shuffle of the
+    Builds a Bloom filter over the (small) build side (partials merged by
+    :func:`tree_aggregate`, an Arrow collect folded on the driver) and
+    ships the KB-scale blob inside the UDF closure — no shuffle of the
     probe side, filter applied map-side.  With m >> n the filter is
     effectively exact (zero FP), making this a drop-in distributed semi-join
     data-reduction operator (A6 -> "bloom semi-join" per SURVEY.md Table C).
@@ -1273,8 +1285,7 @@ def cms_lookup(df: DataFrame, blob: bytes,
 
     @F.pandas_udf(LongType())
     def probe(h1: pd.Series) -> pd.Series:
-        sk = (_probe_sketch(token, bc, inline) if bc is not None
-              else _cached_sketch(inline))
+        sk = _probe_sketch(token, bc, inline)
         return pd.Series(sk.query_hashes(h1.to_numpy()))
 
     return df.withColumn(out_col, probe(F.xxhash64(*cols)))
@@ -1320,9 +1331,7 @@ def fill_layered_build(df: DataFrame, shape: Shape, target_n: int,
         for pdf in batches:
             if not len(pdf):
                 continue
-            for val, sub in pdf.groupby("_stream", sort=False,
-                                        dropna=False):
-                (val,) = _norm_key(val)
+            for (val,), sub in _batch_groups(pdf, ["_stream"]):
                 sk = sks.get(val)
                 if sk is None:
                     sk = sks[val] = FillLayeredBloomFilter(
@@ -1331,7 +1340,7 @@ def fill_layered_build(df: DataFrame, shape: Shape, target_n: int,
                 sk.insert_hashes(sub["h1"].to_numpy())
                 rows[val] += len(sub)
         if sks:
-            keys = sorted(sks, key=lambda v: _null_last((v,)))
+            keys = list(sks)
             yield pd.DataFrame({
                 "stream": keys,
                 "sketch": [sks[k].as_layered().to_bytes() for k in keys],

@@ -24,11 +24,3 @@ def popcount(words: np.ndarray) -> int:
         return 0
     return int(_POP16[np.ascontiguousarray(words).view(np.uint16)].sum())
 
-
-def popcount_rows(mat: np.ndarray) -> np.ndarray:
-    """Per-row popcount of a 2-D integer matrix -> int64 vector."""
-    if mat.size == 0:
-        return np.zeros(mat.shape[0], dtype=np.int64)
-    m = np.ascontiguousarray(mat)
-    half = m.view(np.uint16).reshape(m.shape[0], -1)
-    return _POP16[half].sum(axis=1, dtype=np.int64)

@@ -19,10 +19,11 @@ There is one input partition per stored bucket of the view; B is at
 most the default parallelism the view was built with, so a read is one
 wave of tasks (one task for a small view).  Each task opens only its
 bucket's files (every row of a group lives in its bucket), folds them with
-``view._fold_bucket`` — a stable sort by key, then ``merge_blob_runs``
-per key (one stacked NumPy max/OR for HLL and dense Bloom) — and emits
-one Arrow batch of (group, estimate, rows), one row per group.  Read work
-is O(rows of the view), each row read once.
+``view._fold_bucket`` — a stable sort by key, then the one sketch-row
+fold, ``agg.fold_sketch_runs``, that view appends, queries and
+compactions also use — and emits one Arrow batch of (group, estimate,
+rows), one row per group.  Read work is O(rows of the view), each row
+read once.
 
 This surface is the catalog-style integration seam: the same view
 directory serves `view_query` (DataFrame API), the registered SQL

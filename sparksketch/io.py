@@ -17,12 +17,13 @@ from __future__ import annotations
 import os
 import uuid
 
-import pandas as pd
 import pyarrow as pa
 import pyarrow.parquet as pq
 from pyarrow import fs as pafs
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql.types import StructType
+
+# the row a task emits for each file it wrote: see write_part
+WRITTEN_SCHEMA = "file string, rows long, bucket int"
 
 
 def read_table(spark: SparkSession, source: str,
@@ -70,41 +71,17 @@ def fs_path(path: str) -> tuple[pafs.FileSystem, str]:
         return pafs.LocalFileSystem(), os.path.abspath(path)
 
 
-def arrow_rows(pdf: pd.DataFrame, schema: StructType,
-               timezone: str) -> pa.Table:
-    """``pdf`` as an Arrow table of the Spark ``schema``'s Arrow types,
-    converted as ``mapInPandas`` converts its output (session ``timezone``
-    for timestamps), so Spark reads a file of it back with ``schema``."""
-    from pyspark.sql.pandas.types import (_create_converter_from_pandas,
-                                          to_arrow_schema)
-    arrow = to_arrow_schema(schema)
-    cols = [pa.Array.from_pandas(
-        _create_converter_from_pandas(f.dataType, timezone=timezone)(
-            pdf[f.name]), type=af.type, safe=False)
-        for f, af in zip(schema.fields, arrow)]
-    return pa.Table.from_arrays(cols, schema=arrow)
-
-
 def write_part(table: pa.Table, target: tuple[pafs.FileSystem, str],
-               partition: int) -> str:
+               bucket: int) -> pa.RecordBatch:
     """Write ``table`` as one new parquet file in the directory ``target``
-    (an :func:`fs_path` pair) and return the file's name.  The name,
-    ``part-<partition>-<uuid>.parquet``, is new for every call: a retried
-    or speculative task attempt never overwrites another attempt's file."""
+    (an :func:`fs_path` pair) and return the one :data:`WRITTEN_SCHEMA`
+    row that names it: ``(file, rows, bucket)``.  The name,
+    ``part-<bucket>-<uuid>.parquet``, is new for every call: a retried or
+    speculative task attempt never overwrites another attempt's file."""
     fs, d = target
     fs.create_dir(d, recursive=True)
-    name = f"part-{partition:05d}-{uuid.uuid4().hex}.parquet"
+    name = f"part-{bucket:05d}-{uuid.uuid4().hex}.parquet"
     pq.write_table(table, f"{d}/{name}", filesystem=fs)
-    return name
-
-
-def read_stream(spark: SparkSession, source: str, schema,
-                fmt: str = "parquet", **options):
-    """Streaming source with the same seam (file stream in the sandbox;
-    format('iceberg')/format('kafka') in production)."""
-    reader = spark.readStream.schema(schema)
-    for k, v in options.items():
-        reader = reader.option(k, v)
-    if fmt == "parquet":
-        return reader.parquet(source)
-    return reader.format(fmt).load(source)
+    return pa.RecordBatch.from_arrays(
+        [pa.array([name]), pa.array([table.num_rows], pa.int64()),
+         pa.array([bucket], pa.int32())], names=["file", "rows", "bucket"])

@@ -441,27 +441,6 @@ def audio_features(df: DataFrame) -> DataFrame:
               .mapInPandas(fn, schema=out_schema))
 
 
-def resize_images(df: DataFrame, out_w: int, out_h: int,
-                  fake: bool = False) -> DataFrame:
-    """Resize kernel (nearest-neighbor on the decoded array; re-encoded as
-    P6).  Binary-in/binary-out contract with a real codec on both ends."""
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for mid, payload, mime in zip(pdf["media_id"], pdf["payload"],
-                                          pdf["mime"]):
-                px = decode_image(bytes(payload), mime, fake=fake)
-                ys = (np.arange(out_h) * px.shape[0] // out_h)
-                xs = (np.arange(out_w) * px.shape[1] // out_w)
-                small = px[ys][:, xs]
-                out.append((mid, encode_ppm(small)))
-            yield pd.DataFrame(out, columns=["media_id", "payload"])
-
-    return (df.filter(F.col("kind") == "image")
-              .select("media_id", "payload", "mime")
-              .mapInPandas(fn, schema="media_id long, payload binary"))
-
-
 def video_sps_features(spark, n: int = 32, partitions: int = 4) -> DataFrame:
     """Synthesize genuine avc1 MP4 clips and recover each video's TRUE
     dimensions/profile/level/fps from the H.264 SPS inside its avcC box

@@ -110,8 +110,8 @@ def sketch_from_bytes(data: bytes | bytearray | memoryview) -> "Sketch":
 def merge_bytes(a: bytes | None, b: bytes | None) -> bytes | None:
     """Associative merge over serialized sketches; ``None``/empty is identity.
 
-    This is the combiner handed to ``rdd.treeAggregate`` and the reduce step
-    of grouped merges.
+    The pairwise form of :func:`merge_blob_list`, behind the
+    ``sketch_merge`` SQL function (sqlfuncs.py).
     """
     if not a:
         return b

@@ -97,16 +97,6 @@ def with_lang_id(df: DataFrame, text_col: str = "text",
         out_col, F.when(best["score"] > 0, best["lang"]).otherwise("und"))
 
 
-def token_hashes(df: DataFrame, id_col: str, text_col: str = "text",
-                 distinct: bool = True) -> DataFrame:
-    """(id, th) pairs: explode tokens and hash JVM-side with xxhash64."""
-    toks = tokens_col(text_col)
-    if distinct:
-        toks = F.array_distinct(toks)
-    return (df.select(F.col(id_col), F.explode(toks).alias("tok"))
-              .select(id_col, F.xxhash64("tok").alias("th")))
-
-
 def _segment_starts(lists) -> tuple[np.ndarray, np.ndarray]:
     """(flat int64 hashes, segment starts) for a Series of hash lists."""
     arrs = [np.asarray(x, dtype=np.int64) for x in lists]
@@ -163,15 +153,6 @@ def simhash(df: DataFrame, id_col: str, text_col: str = "text",
     th_arr = F.transform(F.array_distinct(tokens_col(text_col)),
                          lambda t: F.xxhash64(t))
     return df.select(F.col(id_col), votes(th_arr).alias(out_col))
-
-
-def rolling_fingerprint(df: DataFrame, id_col: str, text_col: str = "text",
-                        out_col: str = "fingerprint") -> DataFrame:
-    """Polynomial rolling-hash fingerprint of the full text — pure JVM
-    (xxhash64 of the text is the degenerate-but-sufficient rolling hash for
-    whole-document identity; winnowed k-gram minima provided separately via
-    dedup.shingles + min)."""
-    return df.select(id_col, F.xxhash64(text_col).alias(out_col))
 
 
 def top_terms(df: DataFrame, text_col: str = "text", k: int = 20,

@@ -7,7 +7,9 @@ raw rows); interactive queries read KB-scale sketch rows, merge them with
 the sketch algebra (:func:`~sparksketch.agg.regroup_sketch_rows`) and
 answer at any grouping set coarser than ``dims`` — never rescanning the
 facts.  Compaction folds the segment log back to one segment with the
-same algebra.
+same algebra.  Every one of these folds — append, query, compaction and
+the sketchview reader — is :func:`~sparksketch.agg.fold_sketch_runs` over
+Arrow rows sorted by group.
 
 Storage layout:
 
@@ -32,10 +34,10 @@ pmod(h, B)`` when B divides P), so segment 0 may hold several files per
 bucket; every later segment holds at most one.  The manifest records B
 with each file's bucket.  Since one bucket's files hold every row of
 its groups, compaction and the sketchview reader fold bucket by
-bucket (:func:`_fold_bucket`) with no shuffle: compaction is one job of
-B tasks (``spark.range(B).mapInPandas``), each folding one bucket's
-files of the active segments into the new segment's file for that
-bucket.
+bucket (:func:`_fold_bucket`: read, sort, ``fold_sketch_runs``) with no
+shuffle: compaction is one job of B tasks (``spark.range(B).mapInArrow``),
+each folding one bucket's files of the active segments into the new
+segment's file for that bucket.
 
 The manifest is one KB-scale parquet file the DRIVER reads and writes
 with pyarrow: per segment, its files (relative to ``<path>/segments``),
@@ -79,8 +81,6 @@ import uuid
 from dataclasses import dataclass
 from typing import NamedTuple, Sequence
 
-import numpy as np
-import pandas as pd
 import pyarrow as pa
 import pyarrow.compute as pc
 import pyarrow.parquet as pq
@@ -89,9 +89,8 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql.types import IntegerType, StructField, StructType
 
 from .agg import (SketchSpec, _grouped_partials, _sketch_row_schema,
-                  regroup_sketch_rows)
-from .io import fs_path, write_part
-from .sketches.base import merge_blob_runs
+                  fold_sketch_runs, regroup_sketch_rows)
+from .io import WRITTEN_SCHEMA, fs_path, write_part
 
 _MANIFEST_FILE = "manifest.parquet"
 _MANIFEST_SCHEMA = pa.schema([("seg", pa.int32()), ("spec", pa.string()),
@@ -417,28 +416,14 @@ def _fold_bucket(fs: pafs.FileSystem, files: list[str],
                  dims: list[str]) -> pa.Table:
     """Fold one bucket: read its ``files`` (listed in segment order) with
     pyarrow, stable-sort the rows by ``dims`` so each group's rows keep
-    their segment order, and merge each group's run with
-    ``merge_blob_runs``.  Returns ``[*dims, sketch, rows]``, one row per
-    group, sorted by ``dims``: the bytes the Spark fold gives, which also
-    merges each group in segment order."""
-    t = pa.concat_tables(
-        [pq.read_table(f, filesystem=fs) for f in files]).combine_chunks()
+    their segment order, and fold the runs with
+    :func:`~sparksketch.agg.fold_sketch_runs`.  Returns ``[*dims, sketch,
+    rows]``, one row per group: the bytes ``regroup_sketch_rows`` gives,
+    which also merges each group in segment order."""
+    t = pa.concat_tables([pq.read_table(f, filesystem=fs) for f in files])
     if dims:
         t = t.take(pc.sort_indices(t, [(d, "ascending") for d in dims]))
-    new = np.zeros(t.num_rows, dtype=bool)
-    new[:1] = True
-    for d in dims:  # a run starts where any dim differs (NULL == NULL)
-        prev, cur = t.column(d)[:-1], t.column(d)[1:]
-        same = pc.if_else(pc.is_null(prev), pc.is_null(cur),
-                          pc.fill_null(pc.equal(prev, cur), False))
-        new[1:] |= ~np.asarray(same)
-    starts = np.flatnonzero(new)
-    return pa.Table.from_arrays(
-        [*(t.column(d).take(starts) for d in dims),
-         pa.array(merge_blob_runs(t.column("sketch").to_pylist(), starts),
-                  pa.binary()),
-         pa.array(np.add.reduceat(np.asarray(t.column("rows")), starts))],
-        schema=t.schema)
+    return fold_sketch_runs(t, dims)
 
 
 def view_compact(spark: SparkSession, path: str,
@@ -455,15 +440,13 @@ def view_compact(spark: SparkSession, path: str,
 
     def fold(batches):
         for ids in batches:
-            for b in ids["id"].tolist():
+            for b in ids.column("id").to_pylist():
                 if buckets[b]:
-                    t = _fold_bucket(fs, buckets[b], dims)
-                    yield pd.DataFrame({"file": [write_part(t, target, b)],
-                                        "rows": [t.num_rows], "bucket": [b]})
+                    yield write_part(_fold_bucket(fs, buckets[b], dims),
+                                     target, b)
 
     written = (spark.range(m.nbuckets, numPartitions=m.nbuckets)
-               .mapInPandas(fold, "file string, rows long, bucket int")
-               .collect())
+               .mapInArrow(fold, WRITTEN_SCHEMA).collect())
     # notes are PRESERVED (the streaming writer's exactly-once check
     # matches on them); the compaction marker is appended after ';'
     kept = [r._replace(active=False,

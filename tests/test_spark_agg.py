@@ -338,6 +338,90 @@ class TestGrouped:
         assert got == exact
 
 
+class TestSketchRowFold:
+    """regroup_sketch_rows folds each Arrow batch with fold_sketch_runs and
+    carries a batch's last group into the next one."""
+
+    def test_nan_and_null_double_keys_fold_to_one_null_group(self, spark):
+        """A double key's NaN rows join its NULL rows (the _norm_key
+        contract), with and without a second key column, and the emitted
+        key is NULL, not NaN."""
+        from sparksketch.agg import _norm_key, regroup_sketch_rows
+        from sparksketch.sketches import merge_blob_list
+        nan = float("nan")
+        keys = [nan, None, 1.0, nan, None, 1.0, nan]
+        blobs = []
+        for i in range(len(keys)):
+            sk = HLLSpec(p=8).empty()
+            sk.add_hashes(np.arange(10 * i, 10 * i + 10, dtype=np.int64))
+            blobs.append(sk.to_bytes())
+        rows = [(k, "a" if i % 2 else "b", blobs[i], i + 1)
+                for i, k in enumerate(keys)]
+        df = spark.createDataFrame(
+            rows, "k double, g string, sketch binary, rows long")
+        for group_cols in (["k"], ["k", "g"]):
+            want = {}
+            for k, g, blob, n in rows:
+                key = _norm_key((k, g))[:len(group_cols)]
+                ent = want.setdefault(key, [[], 0])
+                ent[0].append(blob)
+                ent[1] += n
+            got = {tuple(r[c] for c in group_cols): (bytes(r.sketch), r.rows)
+                   for r in regroup_sketch_rows(df, group_cols).collect()}
+            assert got == {k: (merge_blob_list(b), n)
+                           for k, (b, n) in want.items()}, group_cols
+
+    @pytest.mark.parametrize("spec", [KLLSpec(k=16, col="value"),
+                                      TDigestSpec(compression=20,
+                                                  col="value")],
+                             ids=["kll", "tdigest"])
+    def test_one_row_batches_merge_as_one_list(self, spark, events, spec,
+                                               tmp_path):
+        """At one row per Arrow batch every group spans batches: KLL and
+        t-digest bytes still equal ``merge_blob_list`` of the group's rows
+        in (key, order_cols) order, on the estimate path and the
+        write_dir path alike."""
+        import pyarrow.parquet as pq
+
+        from sparksketch.agg import _estimate, regroup_sketch_rows
+        from sparksketch.sketches import merge_blob_list
+        df = (events.withColumn("ub", F.when(F.col("user_id") % 7 != 0,
+                                             F.col("user_id") % 3))
+              .repartition(4, "event_id").sortWithinPartitions("event_id"))
+        fine_rows = grouped_sketch(df, ["ub", "event_type"], spec,
+                                   ["event_id"]).collect()
+        fine = spark.createDataFrame(
+            fine_rows, "ub bigint, event_type string, sketch binary, "
+                       "rows bigint")
+        want = {}
+        for r in sorted(fine_rows, key=lambda r: r.event_type):
+            ent = want.setdefault(r.ub, [[], 0])
+            ent[0].append(bytes(r.sketch))
+            ent[1] += r.rows
+        want = {k: (merge_blob_list(b), n) for k, (b, n) in want.items()}
+        assert max(len(v) for v in want.values()) > 1
+        conf = "spark.sql.execution.arrow.maxRecordsPerBatch"
+        default = spark.conf.get(conf)
+        spark.conf.set(conf, "1")
+        try:
+            est = {r.ub: (r.est, r.rows) for r in regroup_sketch_rows(
+                fine, ["ub"], order_cols=["event_type"],
+                estimate_col="est").collect()}
+            out = str(tmp_path / "fold")
+            written = regroup_sketch_rows(
+                fine, ["ub"], order_cols=["event_type"], write_dir=out,
+                buckets=2).collect()
+        finally:
+            spark.conf.set(conf, default)
+        assert est == {k: (_estimate(b), n) for k, (b, n) in want.items()}
+        got = {}
+        for w in written:
+            for r in pq.read_table(f"{out}/{w.file}").to_pylist():
+                assert r["ub"] not in got
+                got[r["ub"]] = (r["sketch"], r["rows"])
+        assert got == want
+
+
 class TestKeyedLayerFind:
     def test_per_key_blob_routing(self, spark):
         """Each row probes the layered sketch selected by its key column;

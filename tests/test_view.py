@@ -362,6 +362,65 @@ class TestSketchView:
         view_compact(spark, path)
         assert view_rows(spark, path).collect() == []
 
+    def test_view_without_dims(self, spark, events, tmp_path):
+        """A view with no dims holds one global group, for a non-HLL spec
+        too: its query returns one row holding every fact."""
+        from sparksketch.datasource import SketchViewDataSource
+        spark.dataSource.register(SketchViewDataSource)
+        path = str(tmp_path / "nodims")
+        h = F.xxhash64(F.col("event_id").cast("string")) % 2 == 0
+        view_materialize(events.filter(h), [], self.SPEC, ["user_id"], path)
+        view_append(events.filter(~h), self.SPEC, ["user_id"], path)
+        exact = events.select("user_id").distinct().count()
+        row = view_query(spark, path, []).collect()
+        assert len(row) == 1
+        assert row[0]["rows"] == events.count()
+        assert row[0]["estimate"] == exact
+        view_compact(spark, path)
+        read = (spark.read.format("sketchview").option("path", path)
+                .load().collect())
+        assert [(r["estimate"], r["rows"]) for r in read] == \
+            [(exact, events.count())]
+
+    def test_timestamp_and_date_dims_in_other_time_zone(self, spark, events,
+                                                        tmp_path):
+        """``timestamp`` and ``date`` dims keep their keys under a non-UTC
+        session time zone through materialize, append, compaction,
+        ``view_query`` and the sketchview reader."""
+        from sparksketch.datasource import SketchViewDataSource
+        spark.dataSource.register(SketchViewDataSource)
+        key = "spark.sql.session.timeZone"
+        old = spark.conf.get(key)
+        spark.conf.set(key, "America/Los_Angeles")
+        try:
+            ts = F.col("ts").cast("timestamp")
+            ev = events.select(
+                F.date_trunc("hour", ts).alias("hr"),
+                F.to_date(ts).alias("d"), "user_id", "event_id")
+            path = str(tmp_path / "tsview")
+            h = F.xxhash64(F.col("event_id").cast("string")) % 2 == 0
+            view_materialize(ev.filter(h), ["hr", "d"], self.SPEC,
+                             ["user_id"], path)
+            view_append(ev.filter(~h), self.SPEC, ["user_id"], path)
+            want = {(r["hr"], r["d"]): (float(r["exact"]), r["n"])
+                    for r in ev.groupBy("hr", "d").agg(
+                        F.countDistinct("user_id").alias("exact"),
+                        F.count(F.lit(1)).alias("n")).collect()}
+
+            def answers():
+                q = {(r["hr"], r["d"]): (r["estimate"], r["rows"])
+                     for r in view_query(spark, path).collect()}
+                read = {(r["hr"], r["d"]): (r["estimate"], r["rows"])
+                        for r in spark.read.format("sketchview")
+                        .option("path", path).load().collect()}
+                return q, read
+
+            assert answers() == (want, want)
+            view_compact(spark, path)
+            assert answers() == (want, want)
+        finally:
+            spark.conf.set(key, old)
+
     def test_int_dim_with_nulls_keeps_its_type(self, spark, events,
                                                tmp_path):
         """An ``int`` dim with NULLs round-trips through the segment

@@ -9,11 +9,13 @@ scale-critical properties directly from the plan text:
 - the sketch-build plan has NO Exchange before the mapInPandas partials
   (raw rows never shuffle; only sketch blobs do)
 - probe-side plans stay in WholeStageCodegen up to the single Arrow eval
-- a sketch-view query folds and estimates in ONE Python operator
+- each sketch-view fold (materialize, append, compaction, query) is one
+  MapInArrow (``fold_sketch_runs``); a query folds and estimates in it,
+  and the only MapInPandas left is the write's grouped build
 - sketch-view writes run no Spark file-write command: the fold's own
   tasks write the segment files, and reads scan only the listed files
 - a sketch-view append sends each row to the fold task of its bucket,
-  computed in the JVM, and a compaction is one MapInPandas over a Range:
+  computed in the JVM, and a compaction is one MapInArrow over a Range:
   no file scan, no Exchange
 - a streaming micro-batch folds its partials and the state once
 
@@ -117,7 +119,8 @@ def main():
 
     # 5. grouped build (high-cardinality groups): raw rows never
     # shuffle — the ONLY Exchange in the plan is AFTER the mapInPandas
-    # partial build, i.e. it moves KB-scale sketch rows, not data rows
+    # partial build, i.e. it moves KB-scale sketch rows, not data rows,
+    # to the mapInArrow fold
     from sparksketch.agg import BottomKSpec, grouped_sketch
     p5 = plan_of(grouped_sketch(
         orders, ["o_custkey"], BottomKSpec(k=64), ["o_orderkey"]))
@@ -125,12 +128,13 @@ def main():
     ok &= check("grouped build: single sketch-row exchange", p5,
                 want=["MapInPandas"], forbid=["FlatMapGroupsInPandas"])
     # the tree prints top-down, so compare plan NODE NUMBERS (dataflow
-    # order: (1) scan ... (n) sink): both stages are MapInPandas and the
-    # single Exchange sits BETWEEN them — it moves sketch rows only
+    # order: (1) scan ... (n) sink): stage 1 is a MapInPandas, stage 2 a
+    # MapInArrow, and the single Exchange sits BETWEEN them — it moves
+    # sketch rows only
     import re
+    stage = r"\bMapIn(?:Pandas|Arrow) \((\d+)\)"
     ex_ids = [int(m) for m in re.findall(r"\bExchange \((\d+)\)", p5)]
-    map_ids = sorted(int(m) for m in
-                     re.findall(r"\bMapInPandas \((\d+)\)", p5))
+    map_ids = sorted(int(m) for m in re.findall(stage, p5))
     assert len(ex_ids) == 1, f"expected exactly one Exchange, got {ex_ids}"
     assert len(map_ids) == 2 and map_ids[0] < ex_ids[0] < map_ids[1], \
         "raw rows must not shuffle before the grouped partial build"
@@ -162,14 +166,14 @@ def main():
 
     # 7. grouped fixed-k KLL (per-conv latency p95, the billions-of-groups
     # plan): raw rows shuffle exactly ONCE, for the inherent lag-window
-    # (delta computation) — between the grouped build's two mapInPandas
+    # (delta computation) — between the grouped build's two Python
     # stages only KB-scale sketch rows cross an Exchange; anything after
     # stage 2 moves (conv_id, p95) result rows
     import __spark_entry__ as se
     p7 = plan_of(se.q_kll_grouped_fixedk_latency(spark, SF))
     print(p7)
     ex7 = sorted(int(m) for m in re.findall(r"\bExchange \((\d+)\)", p7))
-    map7 = sorted(int(m) for m in re.findall(r"\bMapInPandas \((\d+)\)", p7))
+    map7 = sorted(int(m) for m in re.findall(stage, p7))
     win7 = sorted(int(m) for m in re.findall(r"\bWindow \((\d+)\)", p7))
     assert len(map7) == 2, f"expected 2 grouped-build stages, got {map7}"
     # every pre-build Exchange must feed a Window (the transcript
@@ -301,17 +305,22 @@ def main():
         for name, wplan in zip(names, collected):
             print(wplan)
             ok &= check(f"{name}: no Spark file-write command", wplan,
-                        ["MapInPandas"],
+                        ["MapInArrow"],
                         ["InsertIntoHadoopFsRelationCommand", "WriteFiles"])
             ops = py_op.findall(wplan)
-            # the last Python operator is the fold, emitting (file, rows,
-            # bucket)
-            fold = wplan[wplan.rfind("MapInPandas ("):]
-            if (not ops or ops[-1] != "MapInPandas" or not re.search(
-                    r"\[file#\d+, rows#\d+L, bucket#\d+\]", fold)):
-                print(f"FAIL  {name}: last Python operator is not the "
-                      f"writing fold ({ops})")
+            # the one MapInArrow is the fold, emitting (file, rows,
+            # bucket); before it only the grouped build's MapInPandas
+            fold = wplan[wplan.rfind("MapInArrow ("):]
+            want_ops = (["MapInArrow"] if name == "view_compact"
+                        else ["MapInPandas", "MapInArrow"])
+            if ops != want_ops or not re.search(
+                    r"\[file#\d+, rows#\d+L, bucket#\d+\]", fold):
+                print(f"FAIL  {name}: Python operators {ops}, want "
+                      f"{want_ops} ending in the writing fold")
                 ok = False
+            else:
+                print(f"PASS  {name}: Python operators {ops}, the fold "
+                      "one MapInArrow")
         if len(collected) != 3:
             print(f"FAIL  view writes collected {len(collected)} plans")
             ok = False
@@ -339,12 +348,12 @@ def main():
                     print(f"FAIL  {name}: Exchange arguments {ex}")
                     ok = False
             cplan = collected[2]
-            # compaction: one MapInPandas over a Range, nothing else
+            # compaction: one MapInArrow over a Range, nothing else
             nodes = re.findall(r"^\(\d+\) (\w+)", cplan, re.M)
-            if (nodes.count("MapInPandas") == 1 and "Range" in nodes
-                    and nodes.index("Range") < nodes.index("MapInPandas")
+            if (nodes.count("MapInArrow") == 1 and "Range" in nodes
+                    and nodes.index("Range") < nodes.index("MapInArrow")
                     and "Exchange" not in nodes and "Scan" not in nodes):
-                print("PASS  view_compact: one MapInPandas over a Range, "
+                print("PASS  view_compact: one MapInArrow over a Range, "
                       "no Exchange, no file scan")
             else:
                 print(f"FAIL  view_compact plan nodes {nodes}")
@@ -361,20 +370,21 @@ def main():
                   f"{sorted(m.rows[0].files)}")
             ok = False
         # the query folds AND estimates in its one Python operator: no
-        # estimate UDF (ArrowEvalPython) after the merge's MapInPandas
+        # estimate UDF (ArrowEvalPython) after the merge's MapInArrow
         qplan = plan_of(view_query(spark, vdir, ["event_type"]))
         print(qplan)
         py_ops = py_op.findall(qplan)
         ok &= check("sketch view query: one Python operator", qplan,
-                    ["MapInPandas"], ["ArrowEvalPython"])
-        if py_ops != ["MapInPandas"]:
+                    ["MapInArrow"], ["ArrowEvalPython", "MapInPandas"])
+        if py_ops != ["MapInArrow"]:
             print(f"FAIL  sketch view query: Python operators {py_ops}")
             ok = False
     finally:
         shutil.rmtree(vdir, ignore_errors=True)
 
     # -- windowed streaming state: each micro-batch's partials and the
-    # stored state fold in ONE pass (2 MapInPandas, 1 Exchange) ----------
+    # stored state fold in ONE pass (the build's MapInPandas, 1 Exchange,
+    # the fold's MapInArrow) ----------------------------------------------
     import datetime
     from sparksketch.agg import HLLSpec
     from sparksketch.streaming import WindowedSketchState
@@ -389,13 +399,14 @@ def main():
         splan = plan_of(wss._merged(batch))
         print(splan)
         n_map = len(re.findall(r"\bMapInPandas \((\d+)\)", splan))
+        n_arrow = len(re.findall(r"\bMapInArrow \((\d+)\)", splan))
         n_ex = len(re.findall(r"\bExchange \((\d+)\)", splan))
-        if (n_map, n_ex) == (2, 1):
-            print("PASS  streaming micro-batch folds once: 2 MapInPandas, "
-                  "1 Exchange")
+        if (n_map, n_arrow, n_ex) == (1, 1, 1):
+            print("PASS  streaming micro-batch folds once: 1 MapInPandas, "
+                  "1 MapInArrow, 1 Exchange")
         else:
             print(f"FAIL  streaming micro-batch: {n_map} MapInPandas, "
-                  f"{n_ex} Exchange (want 2, 1)")
+                  f"{n_arrow} MapInArrow, {n_ex} Exchange (want 1, 1, 1)")
             ok = False
     finally:
         shutil.rmtree(sdir, ignore_errors=True)
