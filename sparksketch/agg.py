@@ -553,7 +553,7 @@ def tree_merge_round_multi(partials: DataFrame, names: Sequence[str],
     groups of ``fanout`` rows (sorted by pid within each group — canonical)
     into one row per group, per sketch column."""
 
-    def fold(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def fold(key, pdf):  # partial type hints make pyspark warn
         pdf = pdf.sort_values("pid")
         data = {"pid": [int(key[0])], "rows": [int(pdf["rows"].sum())]}
         for n in names:
@@ -773,14 +773,16 @@ def grouped_sketch(df: DataFrame, group_cols: Sequence[str],
                                group_cols, order_cols=["_pid"])
 
 
-def _sketch_row_schema(df: DataFrame,
-                       group_cols: Sequence[str]) -> StructType:
-    """The schema of merged sketch rows keyed by ``group_cols`` of ``df``:
-    ``[*group_cols, sketch binary, rows bigint]``."""
-    return StructType([StructField(c, df.schema[c].dataType)
-                       for c in group_cols]
-                      + [StructField("sketch", BinaryType()),
-                         StructField("rows", LongType())])
+def _sketch_row_schema(schema: StructType, group_cols: Sequence[str],
+                       estimate_col: str | None = None) -> StructType:
+    """Merged sketch rows keyed by ``group_cols``, typed as in ``schema``:
+    ``[*group_cols, sketch binary, rows bigint]``, or with ``estimate_col``
+    ``[*group_cols, rows bigint, <estimate_col> double]``."""
+    tail = ([("rows", LongType()), (estimate_col, DoubleType())]
+            if estimate_col else
+            [("sketch", BinaryType()), ("rows", LongType())])
+    return StructType([StructField(c, schema[c].dataType)
+                       for c in group_cols] + [StructField(*f) for f in tail])
 
 
 def fold_sketch_runs(t: pa.Table, keys: Sequence[str]) -> pa.Table:
@@ -824,50 +826,31 @@ def _group_keys(df: DataFrame, group_cols: list[str]) -> list[Column]:
             for c in group_cols]
 
 
-def regroup_sketch_rows(grouped: DataFrame, group_cols: Sequence[str],
-                        order_cols: Sequence[str] = (),
-                        estimate_col: str | None = None,
-                        write_dir: str | None = None,
-                        buckets: int = 1) -> DataFrame:
-    """Merge an existing ``[*keys, sketch, rows]`` frame down to a COARSER
-    key set — because every sketch kind here is mergeable, rollups /
-    grouping-set views are an algebra over KB-scale sketch rows, never a
-    rescan of the data.  ``order_cols`` (e.g. the dropped dims) fixes the
-    per-group merge order for determinism.
+def _estimated(t: pa.Table, estimate_col: str) -> pa.Table:
+    """Folded rows ``[*keys, sketch, rows]`` as ``[*keys, rows,
+    <estimate_col>]``: each blob replaced by its :func:`_estimate`."""
+    est = [_estimate(x) for x in t.column("sketch").to_pylist()]
+    return pa.Table.from_arrays(
+        [*t.columns[:-2], t.column("rows"), pa.array(est, pa.float64())],
+        names=[*t.column_names[:-2], "rows", estimate_col])
 
-    The rows are repartitioned by ``group_cols`` and sorted by them (then
-    ``order_cols``), so inside each Arrow batch a group is one run of
-    consecutive rows, and a ``mapInArrow`` folds each batch with
-    :func:`fold_sketch_runs`.  A batch's last merged row is carried to the
-    front of the next batch: a group whose rows straddle batches merges
-    as ``[carried, *run]``, the decode order of one list, so KLL and
-    t-digest bytes do not depend on where batches split.
 
-    With ``estimate_col``, the fold also estimates each merged sketch and
-    emits ``[*group_cols, rows, <estimate_col> double]`` instead of the
-    blob: one Python operator answers the query, where
-    :func:`with_sketch_estimate` after the fold would add a second.
-
-    With ``write_dir``, the rows are laid out in ``buckets`` buckets by
-    ``pmod(xxhash64(*group_cols), buckets)``, computed in the JVM (bucket
-    0 without group columns), and ``repartitionById`` sends bucket ``b``
-    to task ``b``.  A task writes its merged ``[*group_cols, sketch,
-    rows]`` rows as one parquet file in that directory
-    (:func:`~sparksketch.io.write_part`) and emits one ``(file, rows,
-    bucket)`` row naming it; a task with no groups writes nothing.  The
-    caller commits the files it collects — no Spark write job runs."""
+def _fold_sorted(src: DataFrame, group_cols: list[str],
+                 estimate_col: str | None = None,
+                 write_dir: str | None = None) -> DataFrame:
+    """Fold ``src``'s ``[*group_cols, sketch, rows, ...]`` rows, each
+    group one run of one partition, with a ``mapInArrow`` of
+    :func:`fold_sketch_runs` per Arrow batch.  A batch's last merged row
+    is carried to the front of the next: a group straddling batches
+    merges as ``[carried, *run]``, the decode order of one list, so KLL
+    and t-digest bytes do not depend on where batches split.  See
+    :func:`regroup_sketch_rows` for ``estimate_col`` and ``write_dir``."""
     from .io import WRITTEN_SCHEMA, fs_path, write_part
-    group_cols = list(group_cols)
     cols = [*group_cols, "sketch", "rows"]
-    out_schema = _sketch_row_schema(grouped, group_cols)
+    out_schema = _sketch_row_schema(src.schema, group_cols, estimate_col)
     target = None
-    if estimate_col:
-        out_schema = StructType(out_schema.fields[:-2] + [
-            StructField("rows", LongType()),
-            StructField(estimate_col, DoubleType())])
-    elif write_dir is not None:
-        out_schema = WRITTEN_SCHEMA
-        target = fs_path(write_dir)
+    if write_dir is not None:
+        out_schema, target = WRITTEN_SCHEMA, fs_path(write_dir)
 
     def folded(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.Table]:
         carry = None
@@ -892,29 +875,53 @@ def regroup_sketch_rows(grouped: DataFrame, group_cols: Sequence[str],
                                  TaskContext.get().partitionId())
             return
         for t in folded(batches):
-            if estimate_col:
-                est = [_estimate(x) for x in t.column("sketch").to_pylist()]
-                t = pa.Table.from_arrays(
-                    [*t.columns[:-2], t.column("rows"),
-                     pa.array(est, pa.float64())], names=out_schema.names)
-            yield from t.to_batches()
+            yield from (_estimated(t, estimate_col) if estimate_col
+                        else t).to_batches()
 
+    return src.mapInArrow(fold, out_schema)
+
+
+def regroup_sketch_rows(grouped: DataFrame, group_cols: Sequence[str],
+                        order_cols: Sequence[str] = (),
+                        estimate_col: str | None = None,
+                        write_dir: str | None = None,
+                        buckets: int = 1) -> DataFrame:
+    """Merge an existing ``[*keys, sketch, rows]`` frame down to a COARSER
+    key set — because every sketch kind here is mergeable, rollups /
+    grouping-set views are an algebra over KB-scale sketch rows, never a
+    rescan of the data.  ``order_cols`` (e.g. the dropped dims) fixes the
+    per-group merge order for determinism.
+
+    The rows are repartitioned by ``group_cols`` and sorted by them (then
+    ``order_cols``), so a group is one run of consecutive rows, and
+    :func:`_fold_sorted` folds them.  With ``estimate_col``, the fold also
+    estimates each merged sketch and emits ``[*group_cols, rows,
+    <estimate_col> double]`` instead of the blob, in the same operator.
+
+    With ``write_dir``, the rows are laid out in ``buckets`` buckets by
+    ``pmod(xxhash64(*group_cols), buckets)``, computed in the JVM (bucket
+    0 without group columns), and ``repartitionById`` sends bucket ``b``
+    to task ``b``.  A task writes its merged ``[*group_cols, sketch,
+    rows]`` rows as one parquet file in that directory
+    (:func:`~sparksketch.io.write_part`) and emits one ``(file, rows,
+    bucket)`` row naming it; a task with no groups writes nothing.  The
+    caller commits the files it collects — no Spark write job runs."""
+    group_cols = list(group_cols)
     keys = _group_keys(grouped, group_cols)
     sort_cols = [k.asc_nulls_last() for k in keys] + [
         c for c in order_cols if c in grouped.columns and c not in group_cols]
-    src = grouped
     if write_dir is not None:
         bucket = (F.pmod(F.xxhash64(*keys), F.lit(buckets))
                   if group_cols else F.lit(0))
-        src = (src.repartitionById(buckets, bucket.cast("int"))
-               .sortWithinPartitions(*sort_cols))
+        grouped = (grouped.repartitionById(buckets, bucket.cast("int"))
+                   .sortWithinPartitions(*sort_cols))
     elif group_cols:
-        src = src.repartition(*keys).sortWithinPartitions(*sort_cols)
+        grouped = grouped.repartition(*keys).sortWithinPartitions(*sort_cols)
     else:
-        src = src.coalesce(1)
+        grouped = grouped.coalesce(1)
         if sort_cols:
-            src = src.sortWithinPartitions(*sort_cols)
-    return src.mapInArrow(fold, out_schema)
+            grouped = grouped.sortWithinPartitions(*sort_cols)
+    return _fold_sorted(grouped, group_cols, estimate_col, write_dir)
 
 
 def grouped_sketch_cube(df: DataFrame, dims: Sequence[str],

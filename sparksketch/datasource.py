@@ -18,12 +18,11 @@ types come from the manifest too.
 There is one input partition per stored bucket of the view; B is at
 most the default parallelism the view was built with, so a read is one
 wave of tasks (one task for a small view).  Each task opens only its
-bucket's files (every row of a group lives in its bucket), folds them with
-``view._fold_bucket`` — a stable sort by key, then the one sketch-row
-fold, ``agg.fold_sketch_runs``, that view appends, queries and
-compactions also use — and emits one Arrow batch of (group, estimate,
-rows), one row per group.  Read work is O(rows of the view), each row
-read once.
+bucket's files (every row of a group lives in its bucket) and folds and
+estimates them with ``view._fold_bucket`` at the view's dims: the bucket
+read, sort and ``agg.fold_sketch_runs`` of every view read, and the task
+body of a ``view_query`` at the view's dims.  It emits (group, estimate,
+rows), one row per group; each row of the view is read once.
 
 This surface is the catalog-style integration seam: the same view
 directory serves `view_query` (DataFrame API), the registered SQL
@@ -32,14 +31,11 @@ functions over sketch rows, and plain `spark.read` here.
 
 from __future__ import annotations
 
-import pyarrow as pa
 from pyspark.sql.datasource import (DataSource, DataSourceReader,
                                     InputPartition)
 from pyspark.sql.types import DoubleType, LongType, StructField, StructType
 
-from .agg import _estimate
-from .io import fs_path
-from .view import _fold_bucket, _read_manifest, _segments_path
+from .view import _fold_bucket, _read_manifest
 
 
 class SketchViewDataSource(DataSource):
@@ -54,8 +50,7 @@ class SketchViewDataSource(DataSource):
         if not path:
             raise ValueError("sketchview needs .option('path', ...)")
         m = _read_manifest(path)
-        seg_rows = m.schema
-        return StructType([seg_rows[d] for d in m.dims]
+        return StructType([m.schema[d] for d in m.dims]
                           + [StructField("estimate", DoubleType()),
                              StructField("rows", LongType())])
 
@@ -72,8 +67,7 @@ class _SketchViewReader(DataSourceReader):
         # resolved once at plan time so every read task agrees
         m = _read_manifest(path)
         self.dims = m.dims
-        self.fs, root = fs_path(_segments_path(path))
-        self.buckets = m.bucket_files(root, segments)
+        self.fs, self.buckets = m.bucket_files(path, segments)
 
     def partitions(self):
         """One partition per bucket; its value is the bucket's files."""
@@ -82,9 +76,6 @@ class _SketchViewReader(DataSourceReader):
     def read(self, partition):
         if not partition.value:
             return
-        t = _fold_bucket(self.fs, partition.value, self.dims)
-        est = [_estimate(b) for b in t.column("sketch").to_pylist()]
-        yield from pa.Table.from_arrays(
-            [*(t.column(d) for d in self.dims), pa.array(est, pa.float64()),
-             t.column("rows")],
-            names=[*self.dims, "estimate", "rows"]).to_batches()
+        t = _fold_bucket(self.fs, partition.value, self.dims, self.dims,
+                         "estimate")
+        yield from t.select([*self.dims, "estimate", "rows"]).to_batches()

@@ -4,10 +4,9 @@ pipeline needs.  A scheduled job appends one SEGMENT of per-``dims``
 sketch rows per batch of new data (the ONLY fact-table scan, built by
 :func:`~sparksketch.agg.grouped_sketch`'s two stages, which never shuffle
 raw rows); interactive queries read KB-scale sketch rows, merge them with
-the sketch algebra (:func:`~sparksketch.agg.regroup_sketch_rows`) and
-answer at any grouping set coarser than ``dims`` — never rescanning the
-facts.  Compaction folds the segment log back to one segment with the
-same algebra.  Every one of these folds — append, query, compaction and
+the sketch algebra and answer at any grouping set coarser than ``dims``
+— never rescanning the facts.  Compaction folds the segment log back to
+one segment.  Every one of these folds — append, query, compaction and
 the sketchview reader — is :func:`~sparksketch.agg.fold_sketch_runs` over
 Arrow rows sorted by group.
 
@@ -18,26 +17,27 @@ Storage layout:
         (seg, spec, dims, active, note, files, buckets, schema, nbuckets)
 
 Segments are bucketed: a group's rows live in bucket
-``pmod(xxhash64(*dims), B)`` of every segment.  B follows the view's
-size: about one bucket per ``_GROUPS_PER_BUCKET`` groups of segment 0,
-capped at the session's default parallelism P when the view is
-materialized (so one wave of tasks covers every bucket), and a divisor
-of P.  A small view is one bucket, and pays no per-bucket file on
-appends and query scans.  The materialize/append fold computes the
-bucket in the JVM and sends bucket ``b`` to fold task ``b``
-(``regroup_sketch_rows(write_dir=..., buckets=...)``, a
-``repartitionById``), which writes the bucket's file with pyarrow and
-returns its name; no Spark write job runs.  Materialize folds in P
-buckets, since the group count is known only after the fold, and then
-records each file under bucket ``b % B`` (``pmod(h, P) % B ==
-pmod(h, B)`` when B divides P), so segment 0 may hold several files per
-bucket; every later segment holds at most one.  The manifest records B
-with each file's bucket.  Since one bucket's files hold every row of
-its groups, compaction and the sketchview reader fold bucket by
-bucket (:func:`_fold_bucket`: read, sort, ``fold_sketch_runs``) with no
-shuffle: compaction is one job of B tasks (``spark.range(B).mapInArrow``),
-each folding one bucket's files of the active segments into the new
-segment's file for that bucket.
+``pmod(xxhash64(*dims), B)`` of every segment.  B is about one bucket
+per ``_GROUPS_PER_BUCKET`` groups of segment 0, a divisor of the
+session's default parallelism P when the view is materialized (so one
+wave of tasks covers every bucket); a small view is one bucket.  The
+materialize/append fold computes the bucket in the JVM and sends bucket
+``b`` to fold task ``b`` (``regroup_sketch_rows(write_dir=...,
+buckets=...)``, a ``repartitionById``), which writes the bucket's file
+with pyarrow; no Spark write job runs.  Materialize folds in P buckets,
+since the group count is known only after the fold, and records each
+file under bucket ``b % B`` (``pmod(h, P) % B == pmod(h, B)`` when B
+divides P), so segment 0 may hold several files per bucket; every later
+segment holds at most one.
+
+Every read is one job of B tasks, ``spark.range(B).mapInArrow``
+(:func:`_map_buckets`), with no file scan: task ``b`` reads bucket
+``b``'s listed files with pyarrow, tagged with their segment id ``seg``
+and sorted into each group's merge order (:func:`_read_bucket`).  A
+compaction, a sketchview read and a query of one bucket or at the
+view's dims fold (and estimate) in that task: one stage, no shuffle.  A
+``where`` is a JVM filter between the read and the fold; a coarser
+query of several buckets merges across buckets with one Exchange.
 
 The manifest is one KB-scale parquet file the DRIVER reads and writes
 with pyarrow: per segment, its files (relative to ``<path>/segments``),
@@ -53,13 +53,7 @@ by its ``_`` prefix.  The rename is atomic on POSIX local paths (and
 HDFS); object stores have no atomic rename.  Only local paths are
 verified here.
 
-``view_query`` and ``view_rows`` scan the listed files of the requested
-segments with ``spark.read.schema(<manifest schema>)`` and ``basePath``
-(``seg`` comes from the paths): no directory listing, no schema-inference
-job, and no parallel file-status job however many files are listed (the
-listing threshold is raised to the file count for that one call, under
-a lock so concurrent view calls in one process do not undo each other's
-raise).  The manifest records repr(spec), so an append with a mismatched
+The manifest records repr(spec), so an append with a mismatched
 sketch spec or dim types fails loudly instead of silently merging
 incompatible blobs (the wire-format VERSION's contract at the byte
 level).  A manifest without bucketed file lists (an earlier layout) is
@@ -76,7 +70,6 @@ the io seam to Iceberg/Delta (io.py) and inherit their atomic commit.
 from __future__ import annotations
 
 import json
-import threading
 import uuid
 from dataclasses import dataclass
 from typing import NamedTuple, Sequence
@@ -88,8 +81,8 @@ from pyarrow import fs as pafs
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql.types import IntegerType, StructField, StructType
 
-from .agg import (SketchSpec, _grouped_partials, _sketch_row_schema,
-                  fold_sketch_runs, regroup_sketch_rows)
+from .agg import (SketchSpec, _estimated, _fold_sorted, _grouped_partials,
+                  _sketch_row_schema, fold_sketch_runs, regroup_sketch_rows)
 from .io import WRITTEN_SCHEMA, fs_path, write_part
 
 _MANIFEST_FILE = "manifest.parquet"
@@ -102,12 +95,11 @@ _MANIFEST_SCHEMA = pa.schema([("seg", pa.int32()), ("spec", pa.string()),
                               ("nbuckets", pa.int32())])
 # A bucket task folds and estimates about 40 us per group in Python (HLL
 # p=10, 4-vCPU host), so 8192 groups are about 0.3 s of work.  Each
-# bucket costs one more file per append, which every query scan opens;
-# below a few thousand groups per bucket that costs more than the read
+# bucket costs one more file per append, which every read opens; below
+# a few thousand groups per bucket that costs more than the read
 # parallelism saves (views_rw's 2,048-group view ran faster as one
 # bucket than as four).
 _GROUPS_PER_BUCKET = 8192
-_LISTING_LOCK = threading.Lock()  # see _segment_rows
 
 
 class _Segment(NamedTuple):
@@ -180,28 +172,20 @@ class _Manifest:
                 "would count their rows twice")
         return segs
 
-    def files(self, path: str,
-              requested: Sequence[int] | None = None) -> list[str]:
-        """The files of the segments a read covers (see :meth:`segments`),
-        in segment order, as paths under the view at ``path``."""
-        segs = set(self.segments(requested))
-        root = _segments_path(path)
-        return [f"{root}/{f}" for r in self.rows if r.seg in segs
-                for f in r.files]
-
-    def bucket_files(self, root: str,
+    def bucket_files(self, path: str,
                      requested: Sequence[int] | None = None
-                     ) -> list[list[str]]:
-        """Per bucket, the files of the segments a read covers (see
-        :meth:`segments`) in segment order, as paths under ``root``, the
-        view's segments directory: what :func:`_fold_bucket` reads."""
+                     ) -> tuple[pafs.FileSystem, list[list[str]]]:
+        """The filesystem of the view at ``path`` and, per bucket, the
+        files of the segments a read covers (see :meth:`segments`) in
+        segment order: what :func:`_read_bucket` reads."""
+        fs, root = fs_path(_segments_path(path))
         segs = set(self.segments(requested))
         out: list[list[str]] = [[] for _ in range(self.nbuckets)]
         for r in self.rows:
             if r.seg in segs:
                 for f, b in zip(r.files, r.buckets):
                     out[b].append(f"{root}/{f}")
-        return out
+        return fs, out
 
 
 def _read_manifest(path: str) -> _Manifest:
@@ -274,7 +258,8 @@ def view_materialize(df: DataFrame, dims: Sequence[str], spec: SketchSpec,
     p = df.sparkSession.sparkContext.defaultParallelism
     written = _write_segment(parts, dims, path, 0, p)
     _write_manifest(path, [_new_segment(
-        0, repr(spec), dims, note, written, _sketch_row_schema(parts, dims),
+        0, repr(spec), dims, note, written,
+        _sketch_row_schema(parts.schema, dims),
         _bucket_count(sum(r.rows for r in written), p))])
 
 
@@ -292,7 +277,7 @@ def view_append(df: DataFrame, spec: SketchSpec,
             f"sketch spec mismatch: view built with {m.spec}, "
             f"append called with {repr(spec)}")
     parts = _grouped_partials(df, m.dims, spec, cols)
-    schema = _sketch_row_schema(parts, m.dims)
+    schema = _sketch_row_schema(parts.schema, m.dims)
     if schema != m.schema:
         raise ValueError(
             f"dim types mismatch: view built with {m.schema.simpleString()}"
@@ -304,45 +289,34 @@ def view_append(df: DataFrame, spec: SketchSpec,
     return seg
 
 
-def _segment_rows(spark: SparkSession, m: _Manifest, path: str,
-                  segments: Sequence[int] | None) -> DataFrame:
-    """``[*dims, seg, sketch, rows]`` of the covered segments: a scan of
-    exactly their listed files with the manifest's schema.  Spark lists
-    more than ``parallelPartitionDiscovery.threshold`` paths with a job of
-    its own; the threshold is raised to the file count for this call.
-    The conf is session-wide: a lock keeps two view calls of this process
-    from saving each other's raised value as the one to restore, and a
-    read planned by other code meanwhile may list its paths on the
-    driver instead of with a job."""
-    files = m.files(path, segments)
-    if not files:  # only empty segments; a file scan needs a path
-        return spark.createDataFrame([], StructType(
-            m.schema.fields + [StructField("seg", IntegerType())])
-        ).select(*m.dims, "seg", "sketch", "rows")
-    key = "spark.sql.sources.parallelPartitionDiscovery.threshold"
-    with _LISTING_LOCK:
-        old = spark.conf.get(key)
-        spark.conf.set(key, str(max(int(old), len(files))))
-        try:
-            src = (spark.read.schema(m.schema)
-                   .option("basePath", _segments_path(path)).parquet(*files))
-        finally:
-            spark.conf.set(key, old)
-    return src.select(*m.dims, "seg", "sketch", "rows")
-
-
-def _view_rows(spark: SparkSession, m: _Manifest, path: str,
+def _view_rows(spark: SparkSession, path: str,
                group_cols: Sequence[str] | None, where: Column | None,
                segments: Sequence[int] | None,
                estimate_col: str | None = None) -> DataFrame:
-    src = _segment_rows(spark, m, path, segments)
-    if where is not None:
-        src = src.filter(where)
+    """``view_rows``, or ``view_query`` with ``estimate_col``."""
+    m = _read_manifest(path)
     dims = m.dims
     gcols = dims if group_cols is None else list(group_cols)
     unknown = [c for c in gcols if c not in dims]
     if unknown:
         raise ValueError(f"group cols {unknown} not in view dims {dims}")
+    fs, buckets = m.bucket_files(path, segments)
+    # one bucket holds every row of a group of gcols
+    local = m.nbuckets == 1 or set(gcols) == set(dims)
+    if local and where is None:
+        return _map_buckets(
+            spark, buckets,
+            lambda b, files: _fold_bucket(fs, files, dims, gcols,
+                                          estimate_col).to_batches(),
+            _sketch_row_schema(m.schema, gcols, estimate_col))
+    src = _map_buckets(
+        spark, buckets,
+        lambda b, files: _read_bucket(fs, files, dims, gcols).to_batches(),
+        StructType(m.schema.fields + [StructField("seg", IntegerType())]))
+    if where is not None:
+        src = src.filter(where)
+    if local:
+        return _fold_sorted(src, gcols, estimate_col)
     # deterministic merge order: remaining dims, then segment id
     return regroup_sketch_rows(src, gcols, order_cols=[*dims, "seg"],
                                estimate_col=estimate_col)
@@ -356,13 +330,12 @@ def view_rows(spark: SparkSession, path: str,
 
     ``group_cols`` defaults to the view's dims; any subset (down to
     ``[]`` = the global sketch) is valid because every kind is
-    mergeable.  ``where`` filters on dim columns BEFORE the merge (the
-    predicate reaches the parquet scan of KB-scale rows); ``segments``
-    restricts the scan to those segments' files (default: the active
-    set; unknown ids, or compacted-away ids mixed with active ones,
-    raise ``ValueError``)."""
-    return _view_rows(spark, _read_manifest(path), path, group_cols, where,
-                      segments)
+    mergeable.  ``where`` filters on the dims and ``seg`` (the segment
+    id) BEFORE the merge, in the JVM between the bucket read and the
+    fold; ``segments`` restricts the read to those segments' files
+    (default: the active set; unknown ids, or compacted-away ids mixed
+    with active ones, raise ``ValueError``)."""
+    return _view_rows(spark, path, group_cols, where, segments)
 
 
 def view_query(spark: SparkSession, path: str,
@@ -372,9 +345,9 @@ def view_query(spark: SparkSession, path: str,
                estimate_col: str = "estimate") -> DataFrame:
     """``view_rows`` + executor-side estimates: the driver only ever sees
     (group, rows, estimate) — sketch blobs stay on the executors, and the
-    estimate is taken inside the merge's own Python operator."""
-    return _view_rows(spark, _read_manifest(path), path, group_cols, where,
-                      segments, estimate_col)
+    estimate is taken inside the fold's own task."""
+    return _view_rows(spark, path, group_cols, where, segments,
+                      estimate_col)
 
 
 def view_stream_writer(dims: Sequence[str], spec: SketchSpec,
@@ -412,18 +385,50 @@ def view_stream_writer(dims: Sequence[str], spec: SketchSpec,
     return fn
 
 
-def _fold_bucket(fs: pafs.FileSystem, files: list[str],
-                 dims: list[str]) -> pa.Table:
-    """Fold one bucket: read its ``files`` (listed in segment order) with
-    pyarrow, stable-sort the rows by ``dims`` so each group's rows keep
-    their segment order, and fold the runs with
-    :func:`~sparksketch.agg.fold_sketch_runs`.  Returns ``[*dims, sketch,
-    rows]``, one row per group: the bytes ``regroup_sketch_rows`` gives,
-    which also merges each group in segment order."""
-    t = pa.concat_tables([pq.read_table(f, filesystem=fs) for f in files])
-    if dims:
-        t = t.take(pc.sort_indices(t, [(d, "ascending") for d in dims]))
-    return fold_sketch_runs(t, dims)
+def _read_bucket(fs: pafs.FileSystem, files: list[str], dims: list[str],
+                 keys: list[str]) -> pa.Table:
+    """One bucket's ``files`` read with pyarrow as ``[*dims, sketch, rows,
+    seg]``, each file's rows tagged with its segment, and stable-sorted
+    by ``keys`` (some of ``dims``), the other dims and ``seg``, NULLs
+    first as in Spark's ascending sort (the files hold no NaN key: the
+    fold writes it as NULL).  Each group of ``keys`` is then one run that
+    merges in the order of ``regroup_sketch_rows(order_cols=[*dims,
+    "seg"])``."""
+    tables = []
+    for f in files:  # <root>/seg=<id>/part-...: [*dims, sketch, rows]
+        t = pq.read_table(f, filesystem=fs)
+        seg = int(f.rsplit("/seg=", 1)[1].split("/", 1)[0])
+        tables.append(t.append_column(
+            pa.field("seg", pa.int32()), pa.array([seg] * len(t), pa.int32())))
+    t = pa.concat_tables(tables)
+    order = [*keys, *(d for d in dims if d not in keys), "seg"]
+    return t.take(pc.sort_indices(t, [(c, "ascending") for c in order],
+                                  null_placement="at_start"))
+
+
+def _fold_bucket(fs: pafs.FileSystem, files: list[str], dims: list[str],
+                 keys: list[str], estimate_col: str | None = None
+                 ) -> pa.Table:
+    """One bucket's ``files`` (:func:`_read_bucket`) folded by
+    :func:`~sparksketch.agg.fold_sketch_runs` to ``[*keys, sketch, rows]``
+    (the bytes ``regroup_sketch_rows`` gives), or with ``estimate_col`` to
+    ``[*keys, rows, <estimate_col>]``."""
+    t = fold_sketch_runs(_read_bucket(fs, files, dims, keys), keys)
+    return _estimated(t, estimate_col) if estimate_col else t
+
+
+def _map_buckets(spark: SparkSession, buckets: list[list[str]], fn,
+                 schema) -> DataFrame:
+    """``spark.range(B).mapInArrow``, B tasks: task ``b`` emits the batches
+    ``fn(b, files)`` of bucket ``b``'s ``files`` (none if it has none)."""
+    def run(batches):
+        for ids in batches:
+            for b in ids.column("id").to_pylist():
+                if buckets[b]:
+                    yield from fn(b, buckets[b])
+
+    n = len(buckets)
+    return spark.range(n, numPartitions=n).mapInArrow(run, schema)
 
 
 def view_compact(spark: SparkSession, path: str,
@@ -434,19 +439,13 @@ def view_compact(spark: SparkSession, path: str,
     lineage but are marked inactive; returns the new segment id."""
     m = _read_manifest(path)
     seg, dims = m.max_seg + 1, m.dims
-    fs, root = fs_path(_segments_path(path))
-    buckets = m.bucket_files(root)
-    target = (fs, f"{root}/seg={seg}")
-
-    def fold(batches):
-        for ids in batches:
-            for b in ids.column("id").to_pylist():
-                if buckets[b]:
-                    yield write_part(_fold_bucket(fs, buckets[b], dims),
-                                     target, b)
-
-    written = (spark.range(m.nbuckets, numPartitions=m.nbuckets)
-               .mapInArrow(fold, WRITTEN_SCHEMA).collect())
+    fs, buckets = m.bucket_files(path)
+    target = fs_path(f"{_segments_path(path)}/seg={seg}")
+    written = _map_buckets(
+        spark, buckets,
+        lambda b, files: [write_part(_fold_bucket(fs, files, dims, dims),
+                                     target, b)],
+        WRITTEN_SCHEMA).collect()
     # notes are PRESERVED (the streaming writer's exactly-once check
     # matches on them); the compaction marker is appended after ';'
     kept = [r._replace(active=False,

@@ -101,6 +101,19 @@ class TestDistributedTreeRounds:
                                   collect_max=4, fanout=4)
         assert d2["b"] == r2["b"]
 
+    def test_tree_round_warns_nothing(self, spark, events, recwarn):
+        """A tree round's fold carries no partial type hints, so pyspark
+        plans its ``applyInPandas`` without a ``Cannot infer the eval type
+        from type hints`` warning."""
+        from sparksketch.agg import (BloomSpec, build_partials_multi,
+                                     tree_merge_round_multi)
+        from sparksketch.shape import Shape
+        specs = {"b": (BloomSpec(Shape.from_np(5000, 1e-6)), ["user_id"])}
+        parts = build_partials_multi(events.repartition(8), specs)
+        assert len(tree_merge_round_multi(parts, ["b"], 4).collect()) == 2
+        assert not [w for w in recwarn
+                    if "TYPE_HINT_SHOULD_BE_SPECIFIED" in str(w.message)]
+
     def test_multi_level_rounds_all_kinds(self, spark, events):
         """TWO tree levels (16 partials -> 8 -> 4 at fanout 2) — the shape
         a 10k-partition cluster run takes: byte-identical to the flat

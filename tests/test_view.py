@@ -78,13 +78,21 @@ class TestSketchView:
         exact_half = (events.filter(h).select("user_id")
                       .distinct().count())
         assert half.collect()[0]["estimate"] == exact_half
-        # and the scan's file list is exactly segment 0's files
-        scanned = view_rows(spark, path, group_cols=[],
-                            segments=[0]).inputFiles()
-        seg0 = _read_manifest(path).rows[0]
+        # and the read opens only segment 0's files: with every other
+        # listed file overwritten by garbage it still answers exactly,
+        # while a read of every segment fails on the garbage
+        m = _read_manifest(path)
+        seg0 = m.rows[0]
         assert seg0.seg == 0 and seg0.files
-        assert sorted(f.split("/segments/", 1)[1] for f in scanned) == \
-            sorted(seg0.files)
+        others = [f for r in m.rows[1:] for f in r.files]
+        assert others
+        for f in others:
+            with open(f"{path}/segments/{f}", "wb") as out:
+                out.write(b"not a parquet file")
+        half = view_query(spark, path, group_cols=[], segments=[0])
+        assert half.collect()[0]["estimate"] == exact_half
+        with pytest.raises(Exception, match="Parquet magic bytes"):
+            view_query(spark, path, group_cols=[]).collect()
 
     def test_compact_preserves_estimates(self, spark, events, tmp_path):
         path = self._build(events, tmp_path)
@@ -349,18 +357,44 @@ class TestSketchView:
         assert answers() == (want, want)
 
     def test_view_of_no_facts_answers_empty(self, spark, events, tmp_path):
-        """A view materialized from no facts has no segment files at all;
-        its queries and reads return no groups rather than failing."""
+        """A view materialized from no facts has no segment files at all:
+        its reads run B tasks that emit nothing, so ``view_query`` (with
+        and without ``where``, at the dims and at ``[]``), ``view_rows``
+        and the sketchview reader return no rows, with the schema a
+        non-empty view's read has, before and after a compaction."""
         from sparksketch.datasource import SketchViewDataSource
         spark.dataSource.register(SketchViewDataSource)
         path = str(tmp_path / "empty")
         view_materialize(events.limit(0), ["event_type"], self.SPEC,
                          ["user_id"], path)
-        assert view_query(spark, path).collect() == []
-        assert (spark.read.format("sketchview").option("path", path)
-                .load().collect()) == []
-        view_compact(spark, path)
-        assert view_rows(spark, path).collect() == []
+        full = self._build(events, tmp_path)
+        where = F.col("event_type") == "click"
+
+        def reads(p):
+            return [view_query(spark, p, **kw) for kw in (
+                {}, {"where": where}, {"group_cols": []},
+                {"group_cols": [], "where": where})] + [
+                view_rows(spark, p),
+                spark.read.format("sketchview").option("path", p).load()]
+
+        for compacted in (False, True):
+            for df, want in zip(reads(path), reads(full)):
+                assert df.collect() == [], compacted
+                assert df.schema == want.schema
+            view_compact(spark, path)
+
+    def test_where_on_segment_column(self, spark, events, tmp_path):
+        """``where`` may name ``seg``: ``seg == 1`` answers from the
+        appended half alone, as ``segments=[1]`` does."""
+        path = self._build(events, tmp_path)
+
+        def answer(**kw):
+            return sorted(tuple(r) for r in
+                          view_query(spark, path, **kw).collect())
+        seg1 = answer(where=F.col("seg") == 1)
+        assert seg1 == answer(segments=[1]) != answer()
+        assert sum(r[1] for r in seg1) == events.filter(
+            F.xxhash64(F.col("event_id").cast("string")) % 2 != 0).count()
 
     def test_view_without_dims(self, spark, events, tmp_path):
         """A view with no dims holds one global group, for a non-HLL spec
@@ -441,8 +475,9 @@ class TestSketchView:
         view_materialize(ev, ["bucket"], self.SPEC, ["user_id"], path)
         m = _read_manifest(path)
         assert m.schema["bucket"].dataType == IntegerType()
-        for f in m.files(path):
-            assert pq.read_schema(f).field("bucket").type == pa.int32()
+        for f in m.rows[0].files:
+            assert pq.read_schema(f"{path}/segments/{f}").field(
+                "bucket").type == pa.int32()
         assert view_rows(spark, path).schema["bucket"].dataType == \
             IntegerType()
         want = {r["bucket"]: float(r["exact"])
@@ -594,7 +629,7 @@ class TestSketchView:
         segs = -(-33 // spark.sparkContext.defaultParallelism)
         for _ in range(segs - 1):
             view_append(ev, self.SPEC, ["user_id"], path)
-        assert len(_read_manifest(path).files(path)) > 32
+        assert sum(len(r.files) for r in _read_manifest(path).rows) > 32
         sc = spark.sparkContext
         sc.setJobGroup("wide-view-query", "view_query of many files")
         try:
@@ -635,29 +670,12 @@ class TestSketchView:
         assert not [n for n in names if n.startswith("parquet at")], names
 
 
-# sha256 of the compacted segment's sorted (dims, rows, sketch) rows: sf0.01
-# events with dims (event_type, an int bucket with NULLs), split in three by
-# event_id and folded through materialize, two appends and a compaction.
-# Recorded before segments were bucketed; the layout must not move a byte.
-@pytest.mark.parametrize("spec,cols,digest", [
-    pytest.param(HLLSpec(p=10), ["user_id"],
-                 "45ee424a6e1286adcf934fcb86ea795feb406feb682ee87353751e8a73c1b8e4",
-                 id="hll"),
-    pytest.param(BottomKSpec(k=256), ["user_id"],
-                 "c63a36e4aa7e25197d94b99e16b6f43a52912d2c2ff0b960ae727e79646a8777",
-                 id="bottomk"),
-    pytest.param(KLLSpec(k=32, col="value"), ["event_id"],
-                 "b1139e3f5a5a537faaa82a7ba53bec5c6b1a230893f2517ae84a509686768544",
-                 id="kll"),
-])
-def test_compacted_segment_golden_bytes(spark, sf_dir, tmp_path, spec, cols,
-                                        digest):
-    import hashlib
+def _golden_view(spark, sf_dir, tmp_path, spec, cols):
+    """The golden digests' view: sf0.01 events with dims (event_type, an
+    int ``b`` with NULLs), split in three by event_id and folded through
+    materialize and two appends.  Skips where the sf0.01 events are
+    missing."""
     import os
-
-    import pyarrow.parquet as pq
-
-    from sparksketch.view import _read_manifest
     sf01 = os.path.join(os.path.dirname(os.path.normpath(sf_dir)), "sf0.01")
     if not os.path.exists(f"{sf01}/events.parquet"):
         pytest.skip("golden digests are recorded for the sf0.01 events")
@@ -671,14 +689,79 @@ def test_compacted_segment_golden_bytes(spark, sf_dir, tmp_path, spec, cols,
     view_materialize(part[0], ["event_type", "b"], spec, cols, path)
     view_append(part[1], spec, cols, path)
     view_append(part[2], spec, cols, path)
-    seg = view_compact(spark, path)
-    rows = []
-    for f in _read_manifest(path).files(path, [seg]):
-        t = pq.read_table(f, columns=["event_type", "b", "rows", "sketch"])
-        rows += [((r["event_type"], r["b"]), r["rows"], r["sketch"])
-                 for r in t.to_pylist()]
+    return path
+
+
+def _digest(rows, keys) -> str:
+    """sha256 of sketch rows sorted by their (keys, rows) repr."""
+    import hashlib
     h = hashlib.sha256()
-    for key, n, blob in sorted(rows, key=repr):
+    for key, n, blob in sorted(((tuple(r[k] for k in keys), r["rows"],
+                                 bytes(r["sketch"])) for r in rows),
+                               key=repr):
         h.update(repr((key, n)).encode())
         h.update(blob)
-    assert h.hexdigest() == digest
+    return h.hexdigest()
+
+
+# sha256 of the compacted segment's sorted (dims, rows, sketch) rows of
+# the golden view.  Recorded before segments were bucketed; the layout must
+# not move a byte.
+@pytest.mark.parametrize("spec,cols,digest", [
+    pytest.param(HLLSpec(p=10), ["user_id"],
+                 "45ee424a6e1286adcf934fcb86ea795feb406feb682ee87353751e8a73c1b8e4",
+                 id="hll"),
+    pytest.param(BottomKSpec(k=256), ["user_id"],
+                 "c63a36e4aa7e25197d94b99e16b6f43a52912d2c2ff0b960ae727e79646a8777",
+                 id="bottomk"),
+    pytest.param(KLLSpec(k=32, col="value"), ["event_id"],
+                 "b1139e3f5a5a537faaa82a7ba53bec5c6b1a230893f2517ae84a509686768544",
+                 id="kll"),
+])
+def test_compacted_segment_golden_bytes(spark, sf_dir, tmp_path, spec, cols,
+                                        digest):
+    import pyarrow.parquet as pq
+
+    from sparksketch.view import _read_manifest
+    path = _golden_view(spark, sf_dir, tmp_path, spec, cols)
+    seg = view_compact(spark, path)
+    rows = []
+    for f in _read_manifest(path).rows[-1].files:
+        assert f.startswith(f"seg={seg}/")
+        rows += pq.read_table(f"{path}/segments/{f}").to_pylist()
+    assert _digest(rows, ["event_type", "b"]) == digest
+
+
+# sha256 of view_rows of the golden view at group_cols ["b"], at [] and at
+# its dims under ``where b < 3``, with one bucket and with four.  Recorded
+# while queries still scanned the segment files with Spark; KLL bytes
+# follow the merge order, so this pins each group's merge in (other dims,
+# segment) order.
+@pytest.mark.parametrize("nbuckets", [1, 4])
+@pytest.mark.parametrize("spec,cols,digests", [
+    pytest.param(HLLSpec(p=10), ["user_id"], (
+        "8bd690428e14dec87a12cb907b9eac41ba13b8da0ea1a4858eab8a8cbe4f2829",
+        "e5dbfd854cea402b832bd5021545dec000b2487f0c4ca26ad57ed06da085f581",
+        "cc6d3f0c171a44f9b8e616f2c12df1d53ba32880a98a104d26d49260a54495cd"),
+        id="hll"),
+    pytest.param(KLLSpec(k=32, col="value"), ["event_id"], (
+        "f662616c1f4d94638ebb2e216e72c219f3d00d44b31eb4c5f33ad3894b370835",
+        "f4a2e5dd77a4df80d9fe96cd8905b1c66cc5364edb2216313fef85d0151fa7c4",
+        "3dfa454c355270cc5c7d1ff5acf85f7db3117542d7808a418ccb7fcef10e0f5d"),
+        id="kll"),
+])
+def test_view_rows_golden_bytes(spark, sf_dir, tmp_path, monkeypatch, spec,
+                                cols, digests, nbuckets):
+    from sparksketch import view
+    from sparksketch.view import _read_manifest
+    if nbuckets > 1:  # one group per bucket: B is the default parallelism
+        monkeypatch.setattr(view, "_GROUPS_PER_BUCKET", 1)
+    path = _golden_view(spark, sf_dir, tmp_path, spec, cols)
+    assert _read_manifest(path).nbuckets == nbuckets
+    got = []
+    for group_cols, where in ((["b"], None), ([], None),
+                              (None, F.col("b") < 3)):
+        rows = view_rows(spark, path, group_cols, where).collect()
+        keys = ["event_type", "b"] if group_cols is None else group_cols
+        got.append(_digest((r.asDict() for r in rows), keys))
+    assert tuple(got) == digests

@@ -9,14 +9,16 @@ scale-critical properties directly from the plan text:
 - the sketch-build plan has NO Exchange before the mapInPandas partials
   (raw rows never shuffle; only sketch blobs do)
 - probe-side plans stay in WholeStageCodegen up to the single Arrow eval
-- each sketch-view fold (materialize, append, compaction, query) is one
-  MapInArrow (``fold_sketch_runs``); a query folds and estimates in it,
-  and the only MapInPandas left is the write's grouped build
+- each sketch-view write fold (materialize, append, compaction) is one
+  MapInArrow (``fold_sketch_runs``), and the only MapInPandas left is
+  the write's grouped build
 - sketch-view writes run no Spark file-write command: the fold's own
-  tasks write the segment files, and reads scan only the listed files
+  tasks write the segment files, and reads open only the listed files
 - a sketch-view append sends each row to the fold task of its bucket,
-  computed in the JVM, and a compaction is one MapInArrow over a Range:
-  no file scan, no Exchange
+  computed in the JVM; a compaction, and a query of one bucket or at
+  the view's dims, is one MapInArrow over a Range: no file scan, no
+  Exchange; a ``where`` is a Filter between two MapInArrows, and a
+  coarser query of several buckets has one Exchange
 - a streaming micro-batch folds its partials and the state once
 
 Usage: PYTHONPATH=/root/repo python tools/explain_plans.py [sf_dir]
@@ -278,9 +280,10 @@ def main():
     # of the requested segments, the fold's own tasks write segment files
     # (no Spark write command), appends shuffle by bucket and compaction
     # folds bucket by bucket without a shuffle ----------------------------
+    from pyspark.errors import PythonException
     from pyspark.sql.classic.dataframe import DataFrame
     from sparksketch.view import (_read_manifest, view_append, view_compact,
-                                  view_materialize, view_query, view_rows)
+                                  view_materialize, view_query)
     events = spark.read.parquet(f"{SF}/events.parquet")
     vdir = tempfile.mkdtemp(prefix="sparksketch_planview_")
     py_op = re.compile(r"^\(\d+\) (\w*(?:Python|Pandas|InArrow)\w*)", re.M)
@@ -358,26 +361,78 @@ def main():
             else:
                 print(f"FAIL  view_compact plan nodes {nodes}")
                 ok = False
-        m = _read_manifest(vdir)
-        scanned = view_rows(spark, vdir, group_cols=[],
-                            segments=[0]).inputFiles()
-        got = sorted(f.split("/segments/", 1)[1] for f in scanned)
-        if got and got == sorted(m.rows[0].files):
-            print("PASS  sketch view: the segment-0 scan lists only "
-                  "segment 0's files")
-        else:
-            print(f"FAIL  sketch view: segment-0 scan files {got} != "
-                  f"{sorted(m.rows[0].files)}")
-            ok = False
-        # the query folds AND estimates in its one Python operator: no
-        # estimate UDF (ArrowEvalPython) after the merge's MapInArrow
+        # reads are Range -> MapInArrow jobs, one task per bucket: with
+        # B = 1 and no ``where`` the one MapInArrow reads, folds and
+        # estimates; a ``where`` is a JVM Filter between the bucket read
+        # and the fold; a coarser query of B > 1 buckets merges its
+        # groups across buckets with one Exchange
+        def nodes_of(plan):
+            return re.findall(r"^\(\d+\) (\w+)", plan, re.M)
+
         qplan = plan_of(view_query(spark, vdir, ["event_type"]))
         print(qplan)
-        py_ops = py_op.findall(qplan)
-        ok &= check("sketch view query: one Python operator", qplan,
-                    ["MapInArrow"], ["ArrowEvalPython", "MapInPandas"])
-        if py_ops != ["MapInArrow"]:
-            print(f"FAIL  sketch view query: Python operators {py_ops}")
+        nodes = nodes_of(qplan)
+        if (nodes.count("MapInArrow") == 1 and "Range" in nodes
+                and nodes.index("Range") < nodes.index("MapInArrow")
+                and not {"Exchange", "Scan", "ArrowEvalPython",
+                         "MapInPandas"} & set(nodes)):
+            print("PASS  sketch view query: one MapInArrow over a Range, "
+                  "no Exchange, no file scan, no estimate UDF")
+        else:
+            print(f"FAIL  sketch view query plan nodes {nodes}")
+            ok = False
+        fplan = plan_of(view_query(spark, vdir, ["event_type"],
+                                   where=F.col("event_type") != "click"))
+        print(fplan)
+        nodes = nodes_of(fplan)
+        if ([n for n in nodes if n in ("Range", "MapInArrow", "Filter")]
+                == ["Range", "MapInArrow", "Filter", "MapInArrow"]
+                and not {"Exchange", "Scan"} & set(nodes)):
+            print("PASS  filtered sketch view query: MapInArrow -> Filter "
+                  "-> MapInArrow, no Exchange, no file scan")
+        else:
+            print(f"FAIL  filtered sketch view query plan nodes {nodes}")
+            ok = False
+        from sparksketch import view
+        per_bucket, view._GROUPS_PER_BUCKET = view._GROUPS_PER_BUCKET, 1
+        bdir = f"{vdir}/wide"
+        try:
+            view_materialize(events.withColumn("k", F.col("event_id") % 8),
+                             ["event_type", "k"], spec, ["user_id"], bdir)
+        finally:
+            view._GROUPS_PER_BUCKET = per_bucket
+        nb = _read_manifest(bdir).nbuckets
+        bplan = plan_of(view_query(spark, bdir, ["event_type"]))
+        print(bplan)
+        nodes = nodes_of(bplan)
+        if nb > 1 and nodes.count("Exchange") == 1 and "Scan" not in nodes:
+            print(f"PASS  coarser query of {nb} buckets: one Exchange, "
+                  "no file scan")
+        else:
+            print(f"FAIL  coarser query of {nb} buckets: plan nodes {nodes}")
+            ok = False
+        # a segment-0 read opens only segment 0's files: with every
+        # other listed file overwritten by garbage it answers as before,
+        # and a read of every segment fails
+        m = _read_manifest(vdir)
+        exact = events.filter(half).select("user_id").distinct().count()
+        for r in m.rows[1:]:
+            for f in r.files:
+                with open(f"{vdir}/segments/{f}", "wb") as out:
+                    out.write(b"not a parquet file")
+        got = view_query(spark, vdir, [], segments=[0]).collect()
+        try:
+            view_query(spark, vdir, []).collect()
+            whole = "answered"
+        except PythonException as e:  # the garbage fails its parquet read
+            whole = "raised" if "Parquet magic bytes" in str(e) else str(e)
+        if ([r["estimate"] for r in got] == [exact] and m.rows[0].files
+                and whole == "raised"):
+            print("PASS  sketch view: a segment-0 read opens only segment "
+                  "0's files")
+        else:
+            print(f"FAIL  sketch view: segment-0 estimates {got} (want "
+                  f"{exact}); the read of every segment {whole}")
             ok = False
     finally:
         shutil.rmtree(vdir, ignore_errors=True)
