@@ -101,18 +101,19 @@ SCALING_BUDGET_S = float(os.environ.get("SPARK_GRAFT_BUDGET_S", "1800"))
 MIN_ROUNDS = 3
 # fixed across the SCALING PAIR so per-task work is identical.  16 tasks
 # of ~500K turns: the (1->4) ratio's measured non-scaling tail is the
-# partial-blob result ship plus per-task turnaround (tools/xp_tail.py:
-# full - build_only ~= 1.2 s at the hi level at 64 parts, while the
-# driver-side merge itself is 0.06 s), and both scale with the TASK
-# COUNT at fixed total work — tools/xp_ship.py measured 16 parts ~10%
-# faster than 32 at BOTH levels (interleaved same-window passes), with
-# local[4] still getting 4 uniform waves for load balance and the bloom
-# partial ship halved to ~15 MB.  The one-shot throughput-table children
-# above the pair (8, 32 cores) scale their partitioning with their core
-# count instead (4 tasks/core) — at 16 tasks half of local[32] would
-# sit idle; those rows are informational, not the gate, and each level
-# runs at its natural task grain.  Round-5 CMS sparse partials cut the
-# same tail on the bytes axis (512 KB -> ~2 KB per partial).
+# partial-blob result ship plus per-task turnaround (xp_tail, BENCH.md
+# "Retired diagnostic scripts": full - build_only ~= 1.2 s at the hi
+# level at 64 parts, while the driver-side merge itself is 0.06 s), and
+# both scale with the TASK COUNT at fixed total work — xp_ship measured
+# 16 parts ~10% faster than 32 at BOTH levels (interleaved same-window
+# passes), with local[4] still getting 4 uniform waves for load balance
+# and the bloom partial ship halved to ~15 MB.  The one-shot
+# throughput-table children above the pair (8, 32 cores) scale their
+# partitioning with their core count instead (4 tasks/core) — at 16
+# tasks half of local[32] would sit idle; those rows are informational,
+# not the gate, and each level runs at its natural task grain.  Round-5
+# CMS sparse partials cut the same tail on the bytes axis (512 KB ->
+# ~2 KB per partial).
 N_PARTS = int(os.environ.get("SPARK_GRAFT_PARTS", "16"))
 # smaller Arrow batches keep the per-batch numpy temporaries cache-sized;
 # measured: local[4] build 3.9 s -> 3.35 s vs the 131072 default
@@ -803,7 +804,8 @@ def _write_bench_md(queries, query_steal, qrec, thr, scaling, rounds,
             "no-Spark calibration is pinned identically "
             "(sched_setaffinity before the pool fork).  Host topology "
             "verified flat: 32 vCPUs, 1 thread/core, 1 NUMA node.\n\n"
-            "SHIP-VOLUME FIXES (tools/xp_tail.py decomposition: the "
+            "SHIP-VOLUME FIXES (xp_tail decomposition, see 'Retired "
+            "diagnostic scripts' below: the "
             "job's non-scaling tail is the partial-blob result ship "
             "plus driver-side per-task costs, NOT the driver merge — "
             "0.06 s): CMS partials now auto-select a sparse (index, "

@@ -13,10 +13,11 @@ Execution design (SURVEY.md §4, BASELINE.json north_rule):
 - **Partial aggregation.** ``pandas_udf(GROUPED_AGG)`` has no map-side
   combine, so global sketches are built with ``mapInPandas`` — ONE sketch
   row per input partition, built fully vectorized — and merged by
-  :func:`tree_aggregate_multi`: an Arrow collect of the partial rows,
-  folded on the driver, with ``groupBy(pid // fanout)`` fold rounds on
-  the executors first when there are more than ``collect_max``.  Raw rows
-  never shuffle; only KB-MB sketch blobs do.
+  :func:`tree_aggregate_multi`: a ``toArrow()`` collect of the partial
+  rows, folded on the driver in pid order, with ``mapInArrow`` fold
+  rounds keyed on ``pid // fanout`` on the executors first when there are
+  more than ``collect_max``.  Raw rows never shuffle; only KB-MB sketch
+  blobs do.
 - **Grouped aggregation** has one path, :func:`grouped_sketch`: each
   input partition builds per-group partials inside ``mapInPandas`` (raw
   rows never shuffle), and only those sketch rows shuffle to be merged.
@@ -24,10 +25,11 @@ Execution design (SURVEY.md §4, BASELINE.json north_rule):
   group are runs, each merged by ``merge_blob_runs`` — one stacked NumPy
   max/OR for HLL and dense Bloom, decode-and-merge for the other kinds.
   :func:`regroup_sketch_rows` (stage 2 of the grouped build, view appends
-  and queries, streaming windows, the cube) calls it per Arrow batch in a
-  ``mapInArrow``; view compaction and the ``sketchview`` reader call it
-  per bucket.  Partials are sound because every mergeable sketch kind
-  here has a commutative+associative merge.
+  and queries, streaming windows, the cube, the global merge's tree
+  rounds) calls it per Arrow batch in a ``mapInArrow``; view compaction
+  and the ``sketchview`` reader call it per bucket.  Partials are sound
+  because every mergeable sketch kind here has a commutative+associative
+  merge.
 - **Byte-identical associativity.** OR/sum/max/min-merge kinds (bloom,
   counting, layered, HLL, CMS, bottom-k, minhash) produce byte-identical
   results for ANY partitioning / merge order.  KLL and t-digest are
@@ -407,28 +409,6 @@ def sketch_dataframe(df: DataFrame, spec: SketchSpec,
     return sketch_dataframe_multi(df, {"sketch": (spec, cols)})["sketch"]
 
 
-def _collect_partials(partials: DataFrame) -> pd.DataFrame:
-    """Pull partial-sketch rows to the driver through the Arrow collect path
-    (``toPandas``), sorted by pid.  The row-object ``collect()`` path
-    re-serializes each MB-scale binary per row and is ~50x slower — with
-    128 x 4.5 MB partials it alone would dominate the whole build."""
-    sess = partials.sparkSession
-    key = "spark.sql.execution.arrow.pyspark.enabled"
-    try:
-        old = sess.conf.get(key)
-    except Exception:
-        old = None
-    sess.conf.set(key, "true")
-    try:
-        pdf = partials.toPandas()
-    finally:
-        if old is not None:
-            sess.conf.set(key, old)
-        else:
-            sess.conf.unset(key)
-    return pdf.sort_values("pid")
-
-
 DRIVER_COLLECT_BUDGET = 512 << 20  # max bytes of partial blobs collected
 
 
@@ -547,25 +527,6 @@ def build_partials_multi(
         fn, schema=_partials_schema(names) + ", wall_sec double")
 
 
-def tree_merge_round_multi(partials: DataFrame, names: Sequence[str],
-                           fanout: int = 16) -> DataFrame:
-    """One parallel tree round over a multi-sketch partials frame: fold
-    groups of ``fanout`` rows (sorted by pid within each group — canonical)
-    into one row per group, per sketch column."""
-
-    def fold(key, pdf):  # partial type hints make pyspark warn
-        pdf = pdf.sort_values("pid")
-        data = {"pid": [int(key[0])], "rows": [int(pdf["rows"].sum())]}
-        for n in names:
-            data[n] = [merge_blob_list(bytes(b) for b in pdf[n])]
-        return pd.DataFrame(data)
-
-    grouped = partials.select(
-        "pid", "rows", *[F.col(f"`{n}`") for n in names]).withColumn(
-        "_g", (F.col("pid") / F.lit(fanout)).cast("long"))
-    return grouped.groupBy("_g").applyInPandas(fold, _partials_schema(names))
-
-
 def tree_aggregate_multi(partials: DataFrame, names: Sequence[str],
                          collect_max: int = 1024,
                          fanout: int = 64,
@@ -573,15 +534,16 @@ def tree_aggregate_multi(partials: DataFrame, names: Sequence[str],
                          est_parts: int | None = None) -> dict[str, bytes | None]:
     """Merge a multi-sketch partials frame to one blob per sketch name.
 
-    Up to ``collect_max`` partials are pulled straight to the driver via the
-    Arrow collect path and folded there (sub-second even for hundreds of
-    MB-scale blobs).  Beyond that — true cluster scale — parallel tree
-    rounds fold ``fanout`` rows into one executor-side first, so the driver
-    only ever sees ``collect_max`` rows.  The rounds are DataFrame
-    ``groupBy(pid // fanout)`` -> ``applyInPandas`` folds, so blobs stay in
-    Arrow and AQE places the tiny shuffles.  Folds happen in sorted-pid
-    order at every level (canonical).  ``blob_bytes`` = per-ROW total size
-    hint (sum of the specs' est_bytes()) capping the collect by bytes.
+    Up to ``collect_max`` partials are pulled straight to the driver by
+    ``toArrow()`` and folded there in pid order (sub-second even for
+    hundreds of MB-scale blobs).  Beyond that — true cluster scale —
+    parallel tree rounds fold ``fanout`` rows into one executor-side
+    first, so the driver only ever sees ``collect_max`` rows.  A round is
+    :func:`regroup_sketch_rows` keyed on ``pid // fanout``: one shuffle of
+    the sketch rows, then a ``mapInArrow`` of :func:`fold_sketch_runs` over
+    every sketch column.  Folds happen in sorted-pid order at every level
+    (canonical).  ``blob_bytes`` = per-ROW total size hint (sum of the
+    specs' est_bytes()) capping the collect by bytes.
     ``est_parts`` (when the caller knows the partial count, e.g. it chose
     the input partitioning) skips the ``.rdd`` partition probe — that
     conversion runs full plan analysis on the driver, a flat cost worth
@@ -590,13 +552,22 @@ def tree_aggregate_multi(partials: DataFrame, names: Sequence[str],
     if est_parts is None:
         est_parts = partials.rdd.getNumPartitions()
     while est_parts > collect_max:
-        partials = tree_merge_round_multi(partials, names, fanout)
+        partials = regroup_sketch_rows(
+            partials.withColumn("_g", F.floor(F.col("pid") / fanout)),
+            ["_g"], order_cols=["pid"], sketches=names,
+        ).select(F.col("_g").alias("pid"), "rows",
+                 *[F.col(f"`{n}`") for n in names])
         est_parts = int(np.ceil(est_parts / fanout))
     # collect ``partials`` itself, not a projection of it: the partition
     # probe above runs an adaptive plan's shuffle stages, and only the same
     # DataFrame reuses them
-    pdf = _collect_partials(partials)
-    return {n: merge_blob_list(bytes(b) for b in pdf[n]) for n in names}
+    t = partials.toArrow()
+    order = np.argsort(np.asarray(t.column("pid")), kind="stable")
+    out = {}
+    for n in names:
+        blobs = t.column(n).to_pylist()
+        out[n] = merge_blob_list(blobs[i] for i in order)
+    return out
 
 
 def sketch_dataframe_multi(
@@ -745,7 +716,7 @@ def grouped_sketch(df: DataFrame, group_cols: Sequence[str],
                    spec: SketchSpec,
                    cols: Sequence[str | Column]) -> DataFrame:
     """``groupBy(group_cols).agg(sketch)`` -> DataFrame[*group_cols, sketch,
-    rows], with the map-side combine that ``applyInPandas`` lacks:
+    rows], with the map-side combine that grouped pandas UDFs lack:
 
     - **stage 1** (``mapInPandas``, NO shuffle): each input partition
       builds one partial sketch per group it contains, segmented inside the
@@ -774,26 +745,29 @@ def grouped_sketch(df: DataFrame, group_cols: Sequence[str],
 
 
 def _sketch_row_schema(schema: StructType, group_cols: Sequence[str],
-                       estimate_col: str | None = None) -> StructType:
+                       estimate_col: str | None = None,
+                       sketches: Sequence[str] = ("sketch",)) -> StructType:
     """Merged sketch rows keyed by ``group_cols``, typed as in ``schema``:
-    ``[*group_cols, sketch binary, rows bigint]``, or with ``estimate_col``
-    ``[*group_cols, rows bigint, <estimate_col> double]``."""
+    ``[*group_cols, *sketches binary, rows bigint]``, or with
+    ``estimate_col`` ``[*group_cols, rows bigint, <estimate_col> double]``."""
     tail = ([("rows", LongType()), (estimate_col, DoubleType())]
             if estimate_col else
-            [("sketch", BinaryType()), ("rows", LongType())])
+            [(s, BinaryType()) for s in sketches] + [("rows", LongType())])
     return StructType([StructField(c, schema[c].dataType)
                        for c in group_cols] + [StructField(*f) for f in tail])
 
 
-def fold_sketch_runs(t: pa.Table, keys: Sequence[str]) -> pa.Table:
-    """Fold sketch rows ``[*keys, sketch, rows, ...]``, in which each group
-    of ``keys`` is one run of consecutive rows, to ``[*keys, sketch,
-    rows]``: one row per run, in run order.  Every run's blobs merge in
-    row order in one :func:`~sparksketch.sketches.base.merge_blob_runs`
-    call (a stacked NumPy max/OR for HLL and dense Bloom, no sketch
-    objects) and ``rows`` sums by ``np.add.reduceat``.  Keys compare with
-    NULL equal to NULL and a float key's NaN read as NULL, and the
-    emitted key is the normalized one: the :func:`_norm_key` contract."""
+def fold_sketch_runs(t: pa.Table, keys: Sequence[str],
+                     sketches: Sequence[str] = ("sketch",)) -> pa.Table:
+    """Fold sketch rows ``[*keys, *sketches, rows, ...]``, in which each
+    group of ``keys`` is one run of consecutive rows, to ``[*keys,
+    *sketches, rows]``: one row per run, in run order.  Each sketch
+    column's runs merge in row order in one
+    :func:`~sparksketch.sketches.base.merge_blob_runs` call (a stacked
+    NumPy max/OR for HLL and dense Bloom, no sketch objects) and ``rows``
+    sums by ``np.add.reduceat``.  Keys compare with NULL equal to NULL and
+    a float key's NaN read as NULL, and the emitted key is the normalized
+    one: the :func:`_norm_key` contract."""
     cols = []
     for k in keys:
         c = t.column(k).combine_chunks()
@@ -808,12 +782,13 @@ def fold_sketch_runs(t: pa.Table, keys: Sequence[str]) -> pa.Table:
                           pc.fill_null(pc.equal(prev, cur), False))
         new[1:] |= ~np.asarray(same)
     starts = np.flatnonzero(new)
-    sketch = t.column("sketch")
+    blobs = [t.column(s) for s in sketches]
     return pa.Table.from_arrays(
         [*(c.take(starts) for c in cols),
-         pa.array(merge_blob_runs(sketch.to_pylist(), starts), sketch.type),
+         *(pa.array(merge_blob_runs(b.to_pylist(), starts), b.type)
+           for b in blobs),
          pa.array(np.add.reduceat(np.asarray(t.column("rows")), starts))],
-        names=[*keys, "sketch", "rows"])
+        names=[*keys, *sketches, "rows"])
 
 
 def _group_keys(df: DataFrame, group_cols: list[str]) -> list[Column]:
@@ -837,17 +812,20 @@ def _estimated(t: pa.Table, estimate_col: str) -> pa.Table:
 
 def _fold_sorted(src: DataFrame, group_cols: list[str],
                  estimate_col: str | None = None,
-                 write_dir: str | None = None) -> DataFrame:
-    """Fold ``src``'s ``[*group_cols, sketch, rows, ...]`` rows, each
+                 write_dir: str | None = None,
+                 sketches: Sequence[str] = ("sketch",)) -> DataFrame:
+    """Fold ``src``'s ``[*group_cols, *sketches, rows, ...]`` rows, each
     group one run of one partition, with a ``mapInArrow`` of
     :func:`fold_sketch_runs` per Arrow batch.  A batch's last merged row
     is carried to the front of the next: a group straddling batches
     merges as ``[carried, *run]``, the decode order of one list, so KLL
     and t-digest bytes do not depend on where batches split.  See
-    :func:`regroup_sketch_rows` for ``estimate_col`` and ``write_dir``."""
+    :func:`regroup_sketch_rows` for ``estimate_col``, ``write_dir`` and
+    ``sketches``."""
     from .io import WRITTEN_SCHEMA, fs_path, write_part
-    cols = [*group_cols, "sketch", "rows"]
-    out_schema = _sketch_row_schema(src.schema, group_cols, estimate_col)
+    cols = [*group_cols, *sketches, "rows"]
+    out_schema = _sketch_row_schema(src.schema, group_cols, estimate_col,
+                                    sketches)
     target = None
     if write_dir is not None:
         out_schema, target = WRITTEN_SCHEMA, fs_path(write_dir)
@@ -860,7 +838,7 @@ def _fold_sorted(src: DataFrame, group_cols: list[str],
                                          names=cols)
                 if carry is not None:
                     t = pa.concat_tables([carry, t])
-                t = fold_sketch_runs(t, group_cols)
+                t = fold_sketch_runs(t, group_cols, sketches)
                 carry = t.slice(t.num_rows - 1)  # may go on in the next
                 yield t.slice(0, t.num_rows - 1)
         if carry is not None:
@@ -885,7 +863,8 @@ def regroup_sketch_rows(grouped: DataFrame, group_cols: Sequence[str],
                         order_cols: Sequence[str] = (),
                         estimate_col: str | None = None,
                         write_dir: str | None = None,
-                        buckets: int = 1) -> DataFrame:
+                        buckets: int = 1,
+                        sketches: Sequence[str] = ("sketch",)) -> DataFrame:
     """Merge an existing ``[*keys, sketch, rows]`` frame down to a COARSER
     key set — because every sketch kind here is mergeable, rollups /
     grouping-set views are an algebra over KB-scale sketch rows, never a
@@ -905,7 +884,10 @@ def regroup_sketch_rows(grouped: DataFrame, group_cols: Sequence[str],
     rows]`` rows as one parquet file in that directory
     (:func:`~sparksketch.io.write_part`) and emits one ``(file, rows,
     bucket)`` row naming it; a task with no groups writes nothing.  The
-    caller commits the files it collects — no Spark write job runs."""
+    caller commits the files it collects — no Spark write job runs.
+
+    ``sketches`` names the blob columns to fold, each over the same runs
+    (the global merge's tree rounds fold one column per spec)."""
     group_cols = list(group_cols)
     keys = _group_keys(grouped, group_cols)
     sort_cols = [k.asc_nulls_last() for k in keys] + [
@@ -921,7 +903,8 @@ def regroup_sketch_rows(grouped: DataFrame, group_cols: Sequence[str],
         grouped = grouped.coalesce(1)
         if sort_cols:
             grouped = grouped.sortWithinPartitions(*sort_cols)
-    return _fold_sorted(grouped, group_cols, estimate_col, write_dir)
+    return _fold_sorted(grouped, group_cols, estimate_col, write_dir,
+                        sketches)
 
 
 def grouped_sketch_cube(df: DataFrame, dims: Sequence[str],

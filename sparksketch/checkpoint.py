@@ -106,14 +106,13 @@ def merged_sketch_bytes(spark: SparkSession, ckpt_dir: str,
     """Final merge over checkpointed partials — canonical sorted-pid fold
     (deterministic for every sketch kind), dedup-ing retries by pid.
 
-    Blobs come to the driver through the Arrow ``toPandas`` path
-    (agg._collect_partials): the row-object ``collect()`` path re-serializes
-    each MB-scale binary per row and is ~50x slower."""
-    from .agg import _collect_partials
+    Blobs come to the driver through ``toArrow()``: the row-object
+    ``collect()`` path re-serializes each MB-scale binary per row and is
+    ~50x slower."""
     path = os.path.join(ckpt_dir, f"partials_{run_id}")
-    pdf = _collect_partials(
-        spark.read.parquet(path).select("pid", "sketch"))
+    t = spark.read.parquet(path).select("pid", "sketch").toArrow()
     seen: dict[int, bytes] = {}
-    for pid, blob in zip(pdf["pid"], pdf["sketch"]):
-        seen.setdefault(int(pid), bytes(blob))
+    for pid, blob in zip(t.column("pid").to_pylist(),
+                         t.column("sketch").to_pylist()):
+        seen.setdefault(pid, blob)
     return merge_blob_list(seen[p] for p in sorted(seen))

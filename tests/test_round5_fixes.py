@@ -491,9 +491,10 @@ class TestCmsSparseLayout:
     """Round-5 ship-volume fix: a CMS partial over a low-cardinality key is
     ~all zeros; the dense 512 KB layout dominated the build job's
     partial-blob ship (the measured non-scaling tail of the N->4N bench,
-    tools/xp_tail2.py).  to_bytes now auto-selects a sparse (index, count)
-    layout when it is at most half the dense size; layout is a pure
-    function of table content so canonical byte-identity is preserved."""
+    xp_tail2 in BENCH.md "Retired diagnostic scripts").  to_bytes now
+    auto-selects a sparse (index, count) layout when it is at most half
+    the dense size; layout is a pure function of table content so
+    canonical byte-identity is preserved."""
 
     def _cms(self, w=1 << 14, d=4):
         from sparksketch.sketches import CountMinSketch

@@ -2,9 +2,14 @@
 §4: the engine's built-ins are independent oracles for our from-scratch
 sketches) and coverage of the distributed tree-merge branch."""
 
+import hashlib
+import os
+
 import numpy as np
 import pytest
 from pyspark.sql import functions as F
+
+from sparksketch.agg import HLLSpec, KLLSpec, TDigestSpec
 
 pytestmark = pytest.mark.spark
 
@@ -101,16 +106,56 @@ class TestDistributedTreeRounds:
                                   collect_max=4, fanout=4)
         assert d2["b"] == r2["b"]
 
+    # sha256 of the merged bytes after two tree levels (16 partials -> 8
+    # -> 4 at fanout 2) over the golden-bytes frame, with 1-row Arrow
+    # batches so every round's group straddles batches.  KLL and t-digest
+    # bytes depend on the merge tree, so these pin its shape and its
+    # sorted-pid fold order at every level.
+    @pytest.mark.parametrize("specs,digest", [
+        pytest.param({"sketch": (KLLSpec(k=64, col="value"), ["event_id"])},
+                     "fb37126e1e819e4441a8faebcaa0617e3f62d52c4430342baaa26322358cb97c",
+                     id="kll"),
+        pytest.param({"sketch": (TDigestSpec(compression=50, col="value"),
+                                 ["event_id"])},
+                     "05206ff7a5679b399a35d5967ef2b3d495fda1b3f4a9ef3e3cd02ae043d26d21",
+                     id="tdigest"),
+        pytest.param({"hll": (HLLSpec(p=12), ["user_id"]),
+                      "kll": (KLLSpec(k=64, col="value"), ["event_id"])},
+                     "3c4ff463515bdff43a934ee3cc46ec0b0fc48ed532b5aac61cf32bda63bb5e66",
+                     id="multi_hll_kll"),
+    ])
+    def test_tree_round_golden_bytes(self, spark, events, sf_dir, specs,
+                                     digest):
+        from sparksketch.agg import build_partials_multi, tree_aggregate_multi
+        if os.path.basename(os.path.normpath(sf_dir)) != "sf0.001":
+            pytest.skip("golden digests are recorded for sf0.001")
+        df = (events.repartition(4, "event_id")
+              .sortWithinPartitions("event_id").repartition(16))
+        conf = "spark.sql.execution.arrow.maxRecordsPerBatch"
+        default = spark.conf.get(conf)
+        spark.conf.set(conf, "1")
+        try:  # the one name "sketch" is what tree_aggregate merges
+            blobs = tree_aggregate_multi(
+                build_partials_multi(df, specs), list(specs),
+                collect_max=4, fanout=2)
+        finally:
+            spark.conf.set(conf, default)
+        h = hashlib.sha256()
+        for n in sorted(blobs):
+            h.update(n.encode())
+            h.update(blobs[n])
+        assert h.hexdigest() == digest
+
     def test_tree_round_warns_nothing(self, spark, events, recwarn):
-        """A tree round's fold carries no partial type hints, so pyspark
-        plans its ``applyInPandas`` without a ``Cannot infer the eval type
-        from type hints`` warning."""
+        """A merge forced through a tree round plans and runs without a
+        ``Cannot infer the eval type from type hints`` warning."""
         from sparksketch.agg import (BloomSpec, build_partials_multi,
-                                     tree_merge_round_multi)
+                                     tree_aggregate_multi)
         from sparksketch.shape import Shape
         specs = {"b": (BloomSpec(Shape.from_np(5000, 1e-6)), ["user_id"])}
         parts = build_partials_multi(events.repartition(8), specs)
-        assert len(tree_merge_round_multi(parts, ["b"], 4).collect()) == 2
+        assert tree_aggregate_multi(parts, ["b"], collect_max=4,
+                                    fanout=4)["b"]
         assert not [w for w in recwarn
                     if "TYPE_HINT_SHOULD_BE_SPECIFIED" in str(w.message)]
 

@@ -20,6 +20,7 @@ scale-critical properties directly from the plan text:
   Exchange; a ``where`` is a Filter between two MapInArrows, and a
   coarser query of several buckets has one Exchange
 - a streaming micro-batch folds its partials and the state once
+- a global merge's tree rounds are one Exchange + one MapInArrow each
 
 Usage: PYTHONPATH=/root/repo python tools/explain_plans.py [sf_dir]
 """
@@ -58,7 +59,8 @@ def check(name: str, plan: str, want: list, forbid: list) -> bool:
 def main():
     from pyspark.sql import SparkSession, functions as F
     from sparksketch.agg import (BloomSpec, HLLSpec, build_partials,
-                                 build_partials_multi, with_might_contain)
+                                 build_partials_multi, tree_aggregate,
+                                 tree_aggregate_multi, with_might_contain)
     from sparksketch.shape import Shape
 
     spark = (SparkSession.builder.master("local[4]")
@@ -91,9 +93,8 @@ def main():
     # 3. membership semi-join: map-side filter, no shuffle, ONE UDF eval
     # (keeping the probe column after the filter would make Catalyst
     # evaluate the pandas UDF twice — filter+drop collapses it to one)
-    blob = __import__("sparksketch.agg", fromlist=["tree_aggregate"]) \
-        .tree_aggregate(build_partials(
-            orders, BloomSpec(Shape.from_np(100_000, 1e-6)), ["o_custkey"]))
+    blob = tree_aggregate(build_partials(
+        orders, BloomSpec(Shape.from_np(100_000, 1e-6)), ["o_custkey"]))
     semi = (with_might_contain(customer.select("c_custkey"), blob,
                                ["c_custkey"], "_mc")
             .filter(F.col("_mc")).drop("_mc"))
@@ -147,8 +148,7 @@ def main():
     # ones (distinct build of the probe set, final tiny groupBy of
     # (layer, count) rows), never a shuffle of probe rows to reach the
     # sketch
-    from sparksketch.agg import (LayeredBloomSpec, tree_aggregate,
-                                 with_layer_find)
+    from sparksketch.agg import LayeredBloomSpec, with_layer_find
     ev = orders.withColumn("day", (F.col("o_orderkey") % 7).cast("long"))
     lblob = tree_aggregate(build_partials(
         ev, LayeredBloomSpec(Shape.from_np(10_000, 1e-9), layer_col="day"),
@@ -465,6 +465,22 @@ def main():
             ok = False
     finally:
         shutil.rmtree(sdir, ignore_errors=True)
+
+    # -- a global merge forced through tree rounds (16 -> 8 -> 4 rows), as
+    # the driver collects it: each round one Exchange, then one MapInArrow
+    tplans, to_arrow = [], DataFrame.toArrow
+    DataFrame.toArrow = lambda df: tplans.append(plan_of(df)) or to_arrow(df)
+    try:
+        tree_aggregate_multi(build_partials_multi(orders.repartition(16), {
+            "h": (HLLSpec(p=12), ["o_custkey"])}), ["h"], 4, 2, est_parts=16)
+    finally:
+        DataFrame.toArrow = to_arrow
+    print(*tplans)
+    stages = [n for n in nodes_of("".join(tplans))
+              if "Map" in n or n == "Exchange"]
+    want = ["Exchange", "MapInPandas"] + ["Exchange", "MapInArrow"] * 2
+    ok &= check("tree rounds: one Exchange then one MapInArrow per round",
+                repr((len(tplans), stages)), [repr((1, want))], [])
 
     # -- range_bucket stays inside whole-stage codegen (no Python eval
     # in the bucket-assignment hot path; round 5) ------------------------
