@@ -24,7 +24,9 @@ failure of the previous protocol — see BENCH.md):
   small task's runtime; a sitecustomize backports CPython 3.12's mtime
   guard.  (b) glibc MALLOC_MMAP_THRESHOLD_ raised so numpy batch
   temporaries reuse the heap instead of mmap/munmap churn (TLB
-  shootdowns serialize across workers).
+  shootdowns serialize across workers).  (c) pyspark's Python channels
+  run over Unix domain sockets, which drops the ~45 ms first-batch
+  wait of each Python stage over the worker's TCP socket.
 - CPU PINNING (the round-5 fix that made the measurement honest).  Each
   level-N build child runs its WHOLE process tree (JVM + Python workers)
   under ``taskset -c 0-(N-1)`` — the sandbox equivalent of the cgroup
@@ -909,7 +911,8 @@ def _write_bench_md(queries, query_steal, qrec, thr, scaling, rounds,
                 with open(curve_path) as cf:
                     curve = json.load(cf)
                 f.write(
-                    "Size sweep (tools/scaling_curve.py, round-4 record, "
+                    "Size sweep (retired tools/scaling_curve.py, see 'Retired "
+                    "diagnostic scripts' below; round-4 record, "
                     "PRE-zipimport-fix absolute times; the 8->32 "
                     "saturation story it documents still holds):\n\n")
                 f.write("| n_turns | local[8] sec | local[32] sec "
