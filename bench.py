@@ -1,68 +1,27 @@
-"""Benchmark harness: sketch build+merge throughput (turns/sec) and headline
-query latencies, at two parallelism levels (local[N] and local[4N] as the
-sandbox stand-in for N vs 4N executors, per BASELINE.md §C).
+"""Benchmark harness: the one-pass sketch build's throughput (turns/sec)
+and its N -> 4N scaling efficiency, plus headline driver-query latencies.
+
+The query suite runs first, in its own child process, so it never shares
+a contended window with the scaling rounds.  Then each scaling round runs
+the build at N and at 4N CPUs, each in a fresh child process and JVM
+pinned with ``taskset`` to exactly that many CPUs, and the headline
+efficiency is the median over the rounds that pass the steal, spread,
+floor and hardware-ceiling bars.  Why each part of the protocol exists is
+in the "Protocol (round 5)" section this script writes into BENCH.md.
 
 Prints ONE JSON line:
   {"metric": ..., "value": <headline suite seconds>, "unit": "sec",
    "queries": {...}, "sf": ..., "throughput": {...}, "scaling": {...}}
 
 and records the human-readable table in BENCH.md (full detail in
-BENCH_result.json).
-
-Round-5 measurement protocol (each element below is backed by a measured
-failure of the previous protocol — see BENCH.md):
-
-- PROCESS ISOLATION.  Every (round, level) measurement runs in a fresh
-  subprocess with its own JVM.  Round 4 interleaved levels inside one
-  process/JVM and its rep series decayed monotonically (driver record:
-  efficiency reps 0.454 -> 0.343; reproduced locally as t8 = 2.4 s ->
-  22 s across four in-process reps) — lingering JVM heap/session state
-  contaminates later reps.
-- WORKER RUNTIME FIXES (sparksketch/workerenv.py).  (a) CPython 3.11's
-  zipimporter.invalidate_caches() re-reads whole zip directories and
-  pyspark calls it once per task: measured 137 ms/task, ~90% of every
-  small task's runtime; a sitecustomize backports CPython 3.12's mtime
-  guard.  (b) glibc MALLOC_MMAP_THRESHOLD_ raised so numpy batch
-  temporaries reuse the heap instead of mmap/munmap churn (TLB
-  shootdowns serialize across workers).  (c) pyspark's Python channels
-  run over Unix domain sockets, which drops the ~45 ms first-batch
-  wait of each Python stage over the worker's TCP socket.
-- CPU PINNING (the round-5 fix that made the measurement honest).  Each
-  level-N build child runs its WHOLE process tree (JVM + Python workers)
-  under ``taskset -c 0-(N-1)`` — the sandbox equivalent of the cgroup
-  cpuset a real N-core executor container gets.  Without pinning,
-  "local[1]" is a lie: the Python worker is a separate PROCESS, so the
-  JVM serializer and the worker pipeline across ~1.6 CPUs (measured:
-  unpinned local[1] build 7.5 s vs pinned 12.3 s at 4M turns), which
-  inflates the lo level and deflates the N->4N ratio far below what the
-  engine actually scales at.  Pinned, the engine's own (1->4) ratio
-  measured ~1.0 in a clean window.  The north rule compares N vs 4N
-  EXECUTORS; an executor's cores are confined, so pinning is the honest
-  model — and it removes the systematic bias, not the noise (the median
-  below handles that).
-- COHERENT ROUNDS + MEDIAN.  Each round runs lo then hi back-to-back;
-  the efficiency ratio is computed per round (like-contended windows)
-  and the HEADLINE is the MEDIAN over filtered rounds — round 4
-  reported the max coherent rep, which is upward-biased selection on
-  noise (ADVICE r04).  Rounds are dropped when host steal exceeds a bar
-  OR when the same-window no-Spark calibration shows the window itself
-  could not scale (hw ceiling < 0.7: the VM was contended in a way
-  /proc/stat steal does not see).  All rounds and their tags are
-  recorded.
-- PAIR (N, 4N) = (SCALE_LO, 4*SCALE_LO), default (1, 4).  A no-Spark
-  multiprocessing calibration (warm pools, fixed total work, SAME
-  pinning) shows what this oversubscribed VM itself delivers on
-  vectorized NumPy work: 1->4 procs ~0.9 of ideal; 8->32 only ~0.43
-  for ANY code (one shared memory bus).  (1,4) is the only 4x pair
-  whose hardware ceiling is meaningfully above the 0.8 gate.  The
-  per-round calibration is recorded next to each efficiency rep.
-- The headline QUERY suite runs before the scaling sweep (round 4 ran it
-  inside the last rep's contended window), in its own subprocess.
+BENCH_result.json).  The children are this script run as
+``--child-build <cores>`` and ``--child-queries``.
 
 Env: SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1),
      SPARK_GRAFT_CPUS (default 32), SPARK_GRAFT_TURNS (default 32_000_000),
      SPARK_GRAFT_SCALE_LO (default 1), SPARK_GRAFT_REPS (default 7),
-     SPARK_GRAFT_PARTS (default 16), SPARK_GRAFT_PASSES (default 8 max).
+     SPARK_GRAFT_PARTS (default 16), SPARK_GRAFT_PASSES (default 8 max),
+     SPARK_GRAFT_BUDGET_S (default 1800, the scaling rounds' wall clock).
 """
 
 from __future__ import annotations
@@ -198,11 +157,12 @@ def _session(cores: int, arrow_batch: int = 131072):
             # writer blocks mid-batch whenever the worker is busy, so the
             # two sides of each task's pipeline alternate instead of
             # overlapping; 1 MiB holds 2-3 batches of run-ahead.
-            # Measured (tools/xp_hiknobs.py, pinned local[4], 16M turns):
+            # Measured (xp_hiknobs, pinned local[4], 16M turns):
             # identity crossing 5.57 s -> 4.83 s (-13%%); the crossing is
-            # the build's non-scaling term (tools/xp_decomp.py: scan
-            # scales 0.90, crossing 0.47), so this feeds the (1->4)
-            # efficiency directly.
+            # the build's non-scaling term (xp_decomp: scan scales 0.90,
+            # crossing 0.47), so this feeds the (1->4) efficiency
+            # directly.  Both scripts are retired; BENCH.md "Retired
+            # diagnostic scripts" keeps their findings.
             .config("spark.buffer.size", str(1 << 20))
             .config("spark.driver.memory", "48g")
             # each partial-sketch task result is ~1.5 MB; above the 1 MB
@@ -235,7 +195,8 @@ def _build_specs(n_turns: int):
     # worker-side from the conv_id and tool hashes the sibling sketches
     # already cross, so the whole 4-sketch build ships THREE hash/value
     # columns instead of four — the JVM row->Arrow serializer is the
-    # build's dominant per-value cost (tools/xp_arrow_identity.py).
+    # build's dominant per-value cost (xp_arrow_identity, BENCH.md
+    # "Retired diagnostic scripts").
     return {
         "hll_conv": (HLLSpec(p=14), ["conv_id"]),
         "bloom_conv_tool": (MixKeyBloomSpec(bloom_shape),
@@ -285,10 +246,11 @@ def _child_build(cores: int) -> None:
     specs = _build_specs(N_TURNS)
     # ROUND-5 STRUCTURAL FIX: no raw row ever crosses the Arrow boundary.
     # The JVM row->Arrow serializer is the build's dominant and
-    # worst-scaling term (tools/xp_serializer_cpu.py: its per-value work
-    # inflates ~2.2x in CPU-seconds under 4-way concurrency on this
-    # shared-bus box; every per-value knob A/B'd dead) — so the fix is
-    # STRUCTURAL: cross fewer values.  Two sub-jobs per pass:
+    # worst-scaling term (xp_serializer_cpu, BENCH.md "Retired diagnostic
+    # scripts": its per-value work inflates ~2.2x in CPU-seconds under
+    # 4-way concurrency on this shared-bus box; every per-value knob
+    # A/B'd dead) — so the fix is STRUCTURAL: cross fewer values.  Two
+    # sub-jobs per pass:
     #
     # 1. The idempotent/additive trio (HLL distinct-conv, Bloom
     #    (conv,tool), CMS tool-counts) goes through the PRE-REDUCED
@@ -297,7 +259,8 @@ def _child_build(cores: int) -> None:
     #    only the ~1M-row distinct stream (+ multiplicities) crosses
     #    instead of 8M raw rows x 3 columns.  Sketch bytes are IDENTICAL
     #    to the raw path (tests/test_prereduce.py); measured scaling of
-    #    this sub-job alone: 0.85 at (1->4) (tools/xp_split.py).
+    #    this sub-job alone: 0.85 at (1->4) (xp_split, BENCH.md "Retired
+    #    diagnostic scripts").
     #
     # 2. The value sketch measures the CONVERSATION-LENGTH distribution
     #    (KLL over groupBy(conv_id).count() — the transcript analytics
@@ -308,10 +271,10 @@ def _child_build(cores: int) -> None:
     #    makes the post-shuffle value order — and hence the KLL bytes —
     #    run-to-run deterministic without feeding the compactor a
     #    sorted-by-value stream.  (A raw per-turn KLL over a near-unique
-    #    column remains fully supported — tools/xp_klljob.py measures
-    #    it: identity-crossing-bound, 6.0 s at lo — but quantiles of a
-    #    uniform hash are not an analytics target; conversation length
-    #    is.)
+    #    column remains fully supported — xp_klljob in BENCH.md "Retired
+    #    diagnostic scripts" measured it: identity-crossing-bound, 6.0 s
+    #    at lo — but quantiles of a uniform hash are not an analytics
+    #    target; conversation length is.)
     red = {n: s for n, s in specs.items() if s[0].REDUCE is not None}
     conv_len = (tr.groupBy("conv_id")
                 .agg(F.count(F.lit(1)).alias("turns"))
@@ -760,7 +723,20 @@ def _write_bench_md(queries, query_steal, qrec, thr, scaling, rounds,
         except (OSError, ValueError, AttributeError):
             pass
 
-    with open(os.path.join(HERE, "BENCH.md"), "w") as f:
+    # sections kept by hand below the generated record survive the rewrite:
+    # everything from the first heading whose section carries the marker
+    md_path = os.path.join(HERE, "BENCH.md")
+    kept = ""
+    try:
+        with open(md_path) as f:
+            old = f.read()
+        at = old.find("(Kept by hand below the generated record")
+        if at >= 0:
+            kept = old[old.rindex("\n## ", 0, at) + 1:]
+    except (OSError, ValueError):
+        pass
+
+    with open(md_path, "w") as f:
         f.write("# BENCH — measured results\n\n")
         f.write(f"Build suite input: {N_TURNS} synthetic transcript turns "
                 f"in {N_PARTS} partitions (identical across the scaling "
@@ -775,7 +751,8 @@ def _write_bench_md(queries, query_steal, qrec, thr, scaling, rounds,
                 f"the KLL input is itself the groupBy(conv_id).count() "
                 f"aggregate — NO raw row ever crosses the row->Arrow "
                 f"serializer, the build's dominant and worst-scaling "
-                f"term (tools/xp_serializer_cpu.py, xp_klljob.py).\n"
+                f"term (xp_serializer_cpu and xp_klljob in 'Retired "
+                f"diagnostic scripts' below).\n"
                 f"Query suite input: {SF_DIR}.\n\n")
         f.write("## Protocol (round 5)\n\n")
         f.write(
@@ -979,6 +956,8 @@ def _write_bench_md(queries, query_steal, qrec, thr, scaling, rounds,
                 "sketch kinds from a real table scan (hashing, Arrow, "
                 "distributed merge included) — and unlike the in-heap "
                 "reference it shards to arbitrarily many executors.\n")
+        if kept:
+            f.write("\n" + kept)
 
 
 if __name__ == "__main__":

@@ -128,7 +128,8 @@ class SketchSpec:
     # prepare() emits (KLL/TDigest read only the value column; the h1 the
     # base class emits for them is pure Arrow-crossing waste — the JVM
     # row->Arrow serializer is the build's dominant per-value cost, see
-    # tools/xp_serializer_cpu.py).  None = all emitted columns are used.
+    # xp_serializer_cpu in BENCH.md "Retired diagnostic scripts").  None =
+    # all emitted columns are used.
     USED_BATCH_COLS: ClassVar[tuple[str, ...] | None] = None
 
     # How this sketch's update commutes with a JVM-side pre-aggregation of
@@ -207,7 +208,8 @@ class MixKeyBloomSpec(SketchSpec):
     individual columns: build_partials_multi's structural dedup then
     projects each source column's hash ONCE, and the composite never
     crosses the Arrow boundary at all — the JVM row->Arrow serializer is
-    the build's dominant per-value cost (tools/xp_arrow_identity.py), so
+    the build's dominant per-value cost (xp_arrow_identity in BENCH.md
+    "Retired diagnostic scripts"), so
     at 100 TB one fewer crossed column is material.  The key universe
     differs from BloomSpec's (different composite hash function), so pick
     one spec per filter and stay with it; membership probes go through
@@ -443,8 +445,8 @@ def build_partials_multi(
     keyed on ``xxhash64(conv_id)``) share ONE projected column: the hash is
     computed once JVM-side and crosses the Arrow boundary once — at 100 TB
     the crossing is the build's dominant cost (measured ~90%% of
-    over-scan time, tools/profile_build.py), so duplicate columns are
-    pure waste.
+    over-scan time, profile_build in BENCH.md "Retired diagnostic
+    scripts"), so duplicate columns are pure waste.
 
     ``prereduce=True`` inserts a JVM-side partial aggregation BEFORE the
     Arrow crossing: the prepared hash columns are grouped
@@ -456,8 +458,8 @@ def build_partials_multi(
     updates); raises for order/sequence-dependent or value-carrying specs.
     When keys repeat (conversations × tools at transcript scale), this
     shrinks the crossing — the build's measured dominant per-value cost
-    (tools/xp_serializer_cpu.py) — by the key-repetition factor, and the
-    worker-side scatter kernels with it.  The added exchange moves only
+    (xp_serializer_cpu in BENCH.md "Retired diagnostic scripts") — by the
+    key-repetition factor, and the worker-side scatter kernels with it.  The added exchange moves only
     the already-combined distinct stream.  The partial count follows the
     shuffle partitioning, so pass the session's shuffle partition count as
     ``est_parts`` to the merge."""

@@ -107,7 +107,8 @@ def combine_hashes(*hs: np.ndarray) -> np.ndarray:
     column across the Arrow boundary *in addition to* the per-column
     hashes its sibling sketches already ship — and the JVM row->Arrow
     serializer is the build's dominant per-value cost
-    (tools/xp_arrow_identity.py: the identity crossing is ~85% JVM-side).
+    (xp_arrow_identity in BENCH.md "Retired diagnostic scripts": the
+    identity crossing is ~85% JVM-side).
     Deriving the composite from the per-column hashes lets the projection
     dedup to ONE crossed column per distinct source column.  The rotate
     breaks commutativity (``combine(a, b) != combine(b, a)``) and the

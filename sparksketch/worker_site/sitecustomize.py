@@ -1,8 +1,9 @@
 """Python-worker runtime fix, loaded via PYTHONPATH into every Python
 process that Spark forks (pyspark.daemon and its worker children).
 
-Why this exists (round-5 profiling, tools/xp_crossing.py + the worker
-instrumentation in tools/inst/): pyspark's worker calls
+Why this exists (round-5 profiling, xp_crossing in BENCH.md "Retired
+diagnostic scripts" + the worker instrumentation in tools/inst/):
+pyspark's worker calls
 ``importlib.invalidate_caches()`` once per task (worker_util.py
 ``setup_spark_files``), and on CPython 3.11 ``zipimporter.
 invalidate_caches()`` re-reads the ENTIRE zip central directory

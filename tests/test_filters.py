@@ -2,6 +2,8 @@
 commons-collections4 contract suites and StableBloomFilterTest2 goldens
 (/root/reference/src/test/java/org/xenei/bloomfilter/stable/)."""
 
+import struct
+
 import numpy as np
 import pytest
 
@@ -416,3 +418,42 @@ class TestCountingUniqueIndices:
             cbf.add_index_rows([np.array([SHAPE.m])])
         with pytest.raises(ValueError):
             cbf.add_index_rows([np.array([-1])])
+
+
+class TestWireVersionGate:
+    def test_v2_roundtrip(self):
+        from sparksketch.shape import Shape
+        from sparksketch.sketches import BloomFilter, sketch_from_bytes
+        bf = BloomFilter(Shape.from_np(100, 1e-6))
+        bf.add_hashes(np.arange(10, dtype=np.int64))
+        got = sketch_from_bytes(bf.to_bytes())
+        assert got.to_bytes() == bf.to_bytes()
+
+    def test_header_records_scheme(self):
+        from sparksketch.sketches.base import (HASH_SCHEME_SPLITMIX_REMIX,
+                                               VERSION, pack_header)
+        hdr = pack_header(1)
+        magic, ver, kind, flags = struct.unpack("<4sBBH", hdr)
+        assert magic == b"SKS1" and ver == VERSION == 2
+        assert flags & 0xFF == HASH_SCHEME_SPLITMIX_REMIX
+
+    def test_v1_blob_rejected_loudly(self):
+        """A round-3-era blob (version 1, flags 0) decoded fine but
+        probed with the wrong EDH sequence — it must now fail loudly."""
+        from sparksketch.shape import Shape
+        from sparksketch.sketches import BloomFilter, sketch_from_bytes
+        bf = BloomFilter(Shape.from_np(100, 1e-6))
+        blob = bytearray(bf.to_bytes())
+        blob[4] = 1  # version byte
+        blob[6:8] = b"\x00\x00"  # flags
+        with pytest.raises(ValueError, match="wire-version 1.*Re-build"):
+            sketch_from_bytes(bytes(blob))
+
+    def test_unknown_scheme_rejected(self):
+        from sparksketch.shape import Shape
+        from sparksketch.sketches import BloomFilter, sketch_from_bytes
+        bf = BloomFilter(Shape.from_np(100, 1e-6))
+        blob = bytearray(bf.to_bytes())
+        blob[6] = 99  # flags low byte = bogus scheme id
+        with pytest.raises(ValueError, match="probe-hash scheme"):
+            sketch_from_bytes(bytes(blob))

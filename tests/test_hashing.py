@@ -6,6 +6,7 @@ direct simulation of the reference recurrence
 under Java-long wrap-around."""
 
 import numpy as np
+import pytest
 
 from sparksketch.hashing import (DecrementPRNG, array_indices, edh_indices,
                                  hash_bytes64, incrementing_indices, splitmix64)
@@ -161,3 +162,34 @@ def test_float_hash_input_raises():
             call()
     # integer input of any width still passes, as int64
     assert np.array_equal(derive_h2(ints.astype(np.int32)), derive_h2(ints))
+
+
+class TestCombineHashes:
+    def test_identity_for_single_input(self):
+        from sparksketch.hashing import combine_hashes
+        h = np.array([1, -5, 2**62], dtype=np.int64)
+        assert np.array_equal(combine_hashes(h), h)
+
+    def test_not_commutative(self):
+        from sparksketch.hashing import combine_hashes
+        a = np.arange(100, dtype=np.int64)
+        b = np.arange(100, dtype=np.int64) * 31 + 7
+        assert not np.array_equal(combine_hashes(a, b),
+                                  combine_hashes(b, a))
+
+    def test_avalanche_on_one_bit(self):
+        from sparksketch.hashing import combine_hashes
+        a = np.zeros(64, dtype=np.int64)
+        b = (np.int64(1) << np.arange(64)).astype(np.int64)
+        out = combine_hashes(a, b)
+        assert len(np.unique(out)) == 64
+        # every output changes ~half its bits vs the all-zero input pair
+        base = combine_hashes(np.zeros(1, np.int64), np.zeros(1, np.int64))
+        flips = np.array([bin(int(np.uint64(x) ^ np.uint64(base[0]))).count("1")
+                          for x in out.view(np.uint64)])
+        assert flips.min() > 10
+
+    def test_empty_raises(self):
+        from sparksketch.hashing import combine_hashes
+        with pytest.raises(ValueError):
+            combine_hashes()

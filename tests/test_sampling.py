@@ -125,3 +125,58 @@ class TestPerGroupSample:
                                prefilter_rate=0.1).select("g", "k")
         assert sorted(map(tuple, full.collect())) \
             == sorted(map(tuple, pre.collect()))
+
+
+class TestSampleHashFraming:
+    def _hashes(self, spark, rows, cols, schema):
+        from sparksketch.sampling import sample_hash
+        df = spark.createDataFrame(rows, schema)
+        return [r.h for r in
+                df.select(sample_hash(cols, "s").alias("h")).collect()]
+
+    def test_null_distinct_from_missing(self, spark):
+        """('a', NULL) must hash differently from ('a',) — concat_ws
+        skipped NULLs and made them collide."""
+        from sparksketch.sampling import sample_hash
+        df = spark.createDataFrame([("a", None)], "x string, y string")
+        one = df.select(sample_hash(["x"], "s").alias("h")).first().h
+        two = df.select(sample_hash(["x", "y"], "s").alias("h")).first().h
+        assert one != two
+
+    def test_delimiter_injection_distinct(self, spark):
+        """('a:b',) vs ('a','b') and ('a','b:c') vs ('a:b','c') must all
+        differ — the old ':' join made them collide."""
+        h1 = self._hashes(spark, [("a:b",)], ["x"], "x string")[0]
+        h2 = self._hashes(spark, [("a", "b")], ["x", "y"],
+                          "x string, y string")[0]
+        h3 = self._hashes(spark, [("a", "b:c")], ["x", "y"],
+                          "x string, y string")[0]
+        h4 = self._hashes(spark, [("a:b", "c")], ["x", "y"],
+                          "x string, y string")[0]
+        assert len({h1, h2, h3, h4}) == 4
+
+    def test_framing_prefix_ambiguity(self, spark):
+        """Length-framing must keep ('1#a', 'b') and ('1', '#ab')-style
+        reassemblies apart (prefix-free property)."""
+        h1 = self._hashes(spark, [("1#a", "b")], ["x", "y"],
+                          "x string, y string")[0]
+        h2 = self._hashes(spark, [("1", "#ab")], ["x", "y"],
+                          "x string, y string")[0]
+        assert h1 != h2
+
+    def test_sql_rendering_matches_spark(self, spark):
+        """sample_hash_sql through DuckDB == sample_hash through Spark,
+        including NULL and ':'-bearing values."""
+        import duckdb
+        from sparksketch.sampling import sample_hash, sample_hash_sql
+        rows = [("a", "b"), ("a:b", None), (None, None), ("", "x")]
+        df = spark.createDataFrame(rows, "x string, y string")
+        got = sorted(r.h for r in df.select(
+            sample_hash(["x", "y"], "salt").alias("h")).collect())
+        con = duckdb.connect()
+        con.sql("CREATE TABLE t (x VARCHAR, y VARCHAR)")
+        con.executemany("INSERT INTO t VALUES (?, ?)", rows)
+        want = sorted(r[0] for r in con.sql(
+            "SELECT " + sample_hash_sql(["x", "y"], "salt")
+            + " FROM t").fetchall())
+        assert got == want

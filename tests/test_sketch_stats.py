@@ -256,3 +256,81 @@ class TestBottomKSetOps:
         from sparksketch.sketches import BottomKSketch
         with _pytest.raises(ValueError):
             BottomKSketch(8).union_distinct(BottomKSketch(16))
+
+
+class TestCmsSparseLayout:
+    """Round-5 ship-volume fix: a CMS partial over a low-cardinality key is
+    ~all zeros; the dense 512 KB layout dominated the build job's
+    partial-blob ship (the measured non-scaling tail of the N->4N bench,
+    xp_tail2 in BENCH.md "Retired diagnostic scripts").  to_bytes now
+    auto-selects a sparse (index, count) layout when it is at most half
+    the dense size; layout is a pure function of table content so
+    canonical byte-identity is preserved."""
+
+    def _cms(self, w=1 << 14, d=4):
+        from sparksketch.sketches import CountMinSketch
+        return CountMinSketch(w, d)
+
+    def test_sparse_chosen_for_low_cardinality(self):
+        cms = self._cms()
+        cms.add_hashes(np.arange(13, dtype=np.int64))
+        blob = cms.to_bytes()
+        assert len(blob) < 2048  # dense body would be 512 KB
+
+    def test_dense_chosen_when_full(self):
+        cms = self._cms(w=64, d=2)
+        cms.add_hashes(np.arange(500, dtype=np.int64))
+        blob = cms.to_bytes()
+        assert len(blob) >= 64 * 2 * 8
+
+    def test_roundtrip_both_layouts(self):
+        from sparksketch.sketches import sketch_from_bytes
+        dense_body = 256 * 3 * 8
+        for n, sparse in ((5, True), (2000, False)):
+            cms = self._cms(w=256, d=3)
+            # n distinct keys: multiply in uint64 so the product wraps
+            h = (np.arange(n, dtype=np.uint64)
+                 * np.uint64(0x9E3779B97F4A7C15)).view(np.int64)
+            cms.add_hashes(h)
+            blob = cms.to_bytes()
+            if sparse:
+                assert len(blob) <= dense_body // 2
+            else:
+                assert len(blob) >= dense_body
+            rt = sketch_from_bytes(blob)
+            assert np.array_equal(rt.table, cms.table)
+            assert rt.to_bytes() == blob
+
+    def test_mixed_layout_merge_matches_whole(self):
+        from sparksketch.sketches.base import merge_bytes
+        sparse = self._cms()
+        dense = self._cms()
+        whole = self._cms()
+        hs = np.arange(4, dtype=np.int64)          # sparse partial
+        hd = np.arange(40000, dtype=np.int64) * 7  # dense partial
+        sparse.add_hashes(hs)
+        dense.add_hashes(hd)
+        whole.add_hashes(hs)
+        whole.add_hashes(hd)
+        m1 = merge_bytes(sparse.to_bytes(), dense.to_bytes())
+        m2 = merge_bytes(dense.to_bytes(), sparse.to_bytes())
+        assert m1 == m2 == whole.to_bytes()
+
+    def test_point_queries_survive_roundtrip(self):
+        from sparksketch.sketches import sketch_from_bytes
+        cms = self._cms()
+        h = np.repeat(np.arange(13, dtype=np.int64), [i + 1 for i in range(13)])
+        cms.add_hashes(h)
+        rt = sketch_from_bytes(cms.to_bytes())
+        q = np.arange(13, dtype=np.int64)
+        assert np.array_equal(rt.query_hashes(q), cms.query_hashes(q))
+
+    def test_pre_layout_blob_rejected_loudly(self):
+        import struct as _s
+        from sparksketch.sketches import sketch_from_bytes
+        from sparksketch.sketches.base import pack_header
+        w, d = 64, 2
+        blob = (pack_header(7) + _s.pack("<QI", w, d)
+                + b"\x00" * (w * d * 8))  # old body: no layout byte
+        with pytest.raises(ValueError, match="layout byte"):
+            sketch_from_bytes(blob)

@@ -505,3 +505,97 @@ class TestTranscripts:
         g = pa.groupby("conv_id")["turn_idx"]
         assert (g.min() == 0).all()
         assert (g.max() + 1 == g.count()).all()
+
+
+class TestStructuralExprDedup:
+    def test_shared_hash_column_dedupes(self, spark):
+        """Two specs keyed on the same cols share ONE projected column;
+        a spec NAME containing ' AS ' must not confuse the dedup (the
+        old str(_jc) rpartition(' AS ') did)."""
+        from sparksketch.agg import (HLLSpec, KLLSpec,
+                                     build_partials_multi,
+                                     tree_aggregate_multi)
+        from sparksketch.sketches import sketch_from_bytes
+        df = spark.range(0, 1000, 1, 4).select(
+            F.concat(F.lit("c"), (F.col("id") % 50).cast("string"))
+            .alias("conv_id"),
+            (F.col("id") % 7).cast("double").alias("turn_idx"))
+        specs = {
+            "hll AS weird": (HLLSpec(p=12), ["conv_id"]),
+            "hll2": (HLLSpec(p=12), ["conv_id"]),
+            "kll": (KLLSpec(k=200, col="turn_idx"), ["conv_id"]),
+        }
+        partials = build_partials_multi(df, specs)
+        # 3 specs, but only 2 distinct prepared exprs (shared hash +
+        # kll's value column): pid/rows + 3 binary outputs
+        blobs = tree_aggregate_multi(partials, list(specs), est_parts=4)
+        a = sketch_from_bytes(blobs["hll AS weird"])
+        b = sketch_from_bytes(blobs["hll2"])
+        assert a.to_bytes() == b.to_bytes()
+        assert abs(a.estimate() - 50) / 50 < 0.15
+
+    def test_prepared_projection_is_deduped(self, spark):
+        from sparksketch.agg import HLLSpec, CMSSpec
+        specs = {
+            "a": (HLLSpec(p=12), ["x"]),
+            "b": (CMSSpec(w=1 << 10, d=2), ["x"]),
+            "c": (HLLSpec(p=12), ["y"]),
+        }
+        keys = set()
+        for name, (spec, cols) in specs.items():
+            for bc, key, _ in spec.prepare_keyed_exprs(cols,
+                                                       prefix=f"{name}__"):
+                keys.add(key)
+        assert len(keys) == 2  # xxhash64(x) shared by a+b, xxhash64(y)
+
+
+class TestMixKeyBloomSpec:
+    def test_projection_dedups_to_three_columns(self, spark):
+        """The bench's 4-sketch build must cross exactly three columns:
+        h(conv_id) shared by HLL/KLL/bloom-part-0, h(tool) shared by
+        CMS/bloom-part-1, and the KLL value."""
+        from bench import _build_specs
+        from sparksketch.agg import build_partials_multi
+        from sparksketch.transcripts import synthesize_transcripts
+        tr = synthesize_transcripts(spark, 10_000, partitions=4)
+        specs = _build_specs(10_000)
+        exprs = []
+        seen = {}
+        for name, (spec, cols) in specs.items():
+            for bc, key, c in spec.prepare_keyed_exprs(cols,
+                                                       prefix=f"{name}__"):
+                if key not in seen:
+                    seen[key] = bc
+                    exprs.append(c)
+        assert len(exprs) == 3
+        # and the distributed build agrees with a single-threaded replay
+        from sparksketch.agg import tree_aggregate_multi
+        from sparksketch.hashing import combine_hashes
+        from sparksketch.sketches import sketch_from_bytes
+        blobs = tree_aggregate_multi(build_partials_multi(tr, specs),
+                                     list(specs))
+        got = sketch_from_bytes(blobs["bloom_conv_tool"])
+        pdf = tr.selectExpr("xxhash64(conv_id) a", "xxhash64(tool) b") \
+            .toPandas()
+        ref = specs["bloom_conv_tool"][0].empty()
+        ref.add_hashes(combine_hashes(pdf.a.to_numpy(), pdf.b.to_numpy()))
+        assert got.to_bytes() == ref.to_bytes()
+
+    def test_partitioning_invariance(self, spark):
+        from bench import _build_specs
+        from sparksketch.agg import build_partials_multi, tree_aggregate_multi
+        from sparksketch.transcripts import synthesize_transcripts
+        specs = _build_specs(20_000)
+        blobs = {}
+        for parts in (2, 7):
+            tr = synthesize_transcripts(spark, 20_000, partitions=parts)
+            blobs[parts] = tree_aggregate_multi(
+                build_partials_multi(tr, specs), list(specs))
+        # bitwise-commutative kinds are byte-identical across partitionings;
+        # KLL is canonical-but-history-dependent by contract (base.py)
+        for n in ("hll_conv", "bloom_conv_tool", "cms_tool"):
+            assert blobs[2][n] == blobs[7][n], n
+        from sparksketch.sketches import sketch_from_bytes
+        k2 = sketch_from_bytes(blobs[2]["kll_turn_idx"])
+        k7 = sketch_from_bytes(blobs[7]["kll_turn_idx"])
+        assert k2.n == k7.n == 20_000
