@@ -10,17 +10,21 @@ Execution design (SURVEY.md §4, BASELINE.json north_rule):
   crossing is the build's measured scaling bottleneck (BENCH.md) and
   hash bytes are its payload.  Python only does closed-form EDH
   arithmetic on whole Arrow batches.  No per-row Python.
-- **Partial aggregation.** ``pandas_udf(GROUPED_AGG)`` has no map-side
-  combine, so global sketches are built with ``mapInPandas`` — ONE sketch
-  row per input partition, built fully vectorized — and merged by
+- **One stage-1 builder**, :func:`_grouped_partials`: each input
+  partition builds one partial sketch row per group it contains inside
+  ONE ``mapInPandas`` (``pandas_udf(GROUPED_AGG)`` has no map-side
+  combine), for any number of specs over one shared projection, with an
+  optional JVM pre-reduce of the hash columns before the Arrow crossing.
+  Raw rows never shuffle; only KB-MB sketch blobs do.
+- **Partial aggregation** (global sketches) is that builder with no
+  group columns: :func:`build_partials_multi` emits ONE sketch row per
+  input partition, empty partitions included, merged by
   :func:`tree_aggregate_multi`: a ``toArrow()`` collect of the partial
   rows, folded on the driver in pid order, with ``mapInArrow`` fold
   rounds keyed on ``pid // fanout`` on the executors first when there are
-  more than ``collect_max``.  Raw rows never shuffle; only KB-MB sketch
-  blobs do.
-- **Grouped aggregation** has one path, :func:`grouped_sketch`: each
-  input partition builds per-group partials inside ``mapInPandas`` (raw
-  rows never shuffle), and only those sketch rows shuffle to be merged.
+  more than ``collect_max``.
+- **Grouped aggregation**, :func:`grouped_sketch`, is the same builder
+  with group columns; only its sketch rows shuffle to be merged.
   Sketch ROWS fold in one place, :func:`fold_sketch_runs`: rows sorted by
   group are runs, each merged by ``merge_blob_runs`` — one stacked NumPy
   max/OR for HLL and dense Bloom, decode-and-merge for the other kinds.
@@ -63,13 +67,8 @@ from .sketches.base import Sketch, merge_blob_runs
 from .sketches.hll import blob_prefix, bucket_rho
 
 
-def _partials_schema(names: Sequence[str]) -> str:
-    """Partial-sketch rows: partition id, raw rows, one blob per sketch."""
-    return ", ".join(["pid long", "rows long"]
-                     + [f"`{n}` binary" for n in names])
-
-
-PARTIAL_SCHEMA = _partials_schema(["sketch"])
+# Partial-sketch rows: partition id, raw rows, the partition's sketch
+PARTIAL_SCHEMA = "pid long, rows long, sketch binary"
 
 
 def _norm_key(key) -> tuple:
@@ -133,7 +132,7 @@ class SketchSpec:
     USED_BATCH_COLS: ClassVar[tuple[str, ...] | None] = None
 
     # How this sketch's update commutes with a JVM-side pre-aggregation of
-    # its key columns (build_partials_multi(prereduce=True)):
+    # its key columns (_grouped_partials(prereduce=True)):
     #   "distinct" — insert is idempotent (bloom OR / HLL max / minhash
     #                min): feeding one row per DISTINCT key produces
     #                byte-identical sketches to feeding every raw row.
@@ -205,7 +204,7 @@ class MixKeyBloomSpec(SketchSpec):
     instead of shipping an extra ``xxhash64(col_a, col_b, ...)`` column.
 
     Use when sibling sketches in the same one-pass build already hash the
-    individual columns: build_partials_multi's structural dedup then
+    individual columns: the builder's structural dedup then
     projects each source column's hash ONCE, and the composite never
     crosses the Arrow boundary at all — the JVM row->Arrow serializer is
     the build's dominant per-value cost (xp_arrow_identity in BENCH.md
@@ -382,9 +381,9 @@ class LayeredBloomSpec(SketchSpec):
 
 
 # --------------------------------------------------------------------------
-# Global (ungrouped) aggregation: mapInPandas partials + tree merge.  One
-# implementation builds and merges N sketches in one pass; the single-sketch
-# calls are that path with the one name ``sketch``.
+# Global (ungrouped) aggregation: the one builder's partials with no group
+# columns + tree merge.  The single-sketch calls are the multi-sketch ones
+# with the one name ``sketch``.
 # --------------------------------------------------------------------------
 
 def build_partials(df: DataFrame, spec: SketchSpec,
@@ -431,102 +430,16 @@ def build_partials_multi(
         prereduce: bool = False,
 ) -> DataFrame:
     """Build several sketches (possibly over different key columns) in ONE
-    pass over the data: all hash/value columns are computed JVM-side in a
-    single projection, the batch crosses the Arrow boundary once, and every
-    sketch updates from the same batch.  At 100 TB this turns N scans into
-    one — the scan is the cost; the sketch updates are cheap NumPy.
-
-    Output: one row per input partition,
+    pass over the data: :func:`_grouped_partials` with no group columns.
+    Output: one row per input partition, empty ones included,
     ``pid long, rows long, <name> binary ..., wall_sec double`` (one binary
     column per spec; ``wall_sec`` is the partition's build time, recorded
-    by checkpoint manifests).
-
-    Specs that prepare IDENTICAL expressions (e.g. an HLL and a KLL both
-    keyed on ``xxhash64(conv_id)``) share ONE projected column: the hash is
-    computed once JVM-side and crosses the Arrow boundary once — at 100 TB
-    the crossing is the build's dominant cost (measured ~90%% of
-    over-scan time, profile_build in BENCH.md "Retired diagnostic
-    scripts"), so duplicate columns are pure waste.
-
-    ``prereduce=True`` inserts a JVM-side partial aggregation BEFORE the
-    Arrow crossing: the prepared hash columns are grouped
-    (``groupBy(*hashes).count()`` — Tungsten hash-agg with map-side
-    combine) and only one row per DISTINCT key tuple crosses, carrying its
-    raw multiplicity in ``__cnt``.  Sound for every spec whose REDUCE is
-    "distinct" (idempotent insert: identical bytes from the distinct set)
-    or "weighted" (additive cells: identical bytes from count-weighted
-    updates); raises for order/sequence-dependent or value-carrying specs.
-    When keys repeat (conversations × tools at transcript scale), this
-    shrinks the crossing — the build's measured dominant per-value cost
-    (xp_serializer_cpu in BENCH.md "Retired diagnostic scripts") — by the
-    key-repetition factor, and the worker-side scatter kernels with it.  The added exchange moves only
-    the already-combined distinct stream.  The partial count follows the
-    shuffle partitioning, so pass the session's shuffle partition count as
-    ``est_parts`` to the merge."""
-    names = list(specs)
-    if prereduce:
-        for name, (spec, _) in specs.items():
-            if spec.REDUCE is None:
-                raise ValueError(
-                    f"spec {name!r} ({type(spec).__name__}) is not "
-                    "pre-reducible: REDUCE is None (order-dependent or "
-                    "value-carrying) — build it on the raw path")
-    exprs: list[Column] = []
-    # structural expr key -> canonical projected column name (ADVICE r04:
-    # keys come from prepare_keyed_exprs, never from parsing the JVM
-    # expression string — Connect-safe and immune to ' AS ' in names)
-    seen: dict[tuple, str] = {}
-    # spec name -> {batch col (h1/value/layer) -> projected column name}
-    canon: dict[str, dict[str, str]] = {}
-    for name, (spec, cols) in specs.items():
-        canon[name] = {}
-        used = spec.USED_BATCH_COLS
-        for batch_col, expr_key, c in spec.prepare_keyed_exprs(
-                cols, prefix=f"{name}__"):
-            if used is not None and batch_col not in used:
-                continue  # update() never reads it: don't cross it
-            out_name = f"{name}__{batch_col}"
-            if expr_key in seen:
-                canon[name][batch_col] = seen[expr_key]
-            else:
-                seen[expr_key] = out_name
-                canon[name][batch_col] = out_name
-                exprs.append(c)
-    prepared = df.select(*exprs)
-    if prereduce:
-        key_names = list(seen.values())
-        prepared = (prepared.groupBy(*key_names)
-                    .agg(F.count(F.lit(1)).alias("__cnt")))
-        for n in names:
-            canon[n]["_cnt"] = "__cnt"
-
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from pyspark import TaskContext
-        t0 = time.monotonic()
-        sks = {n: specs[n][0].empty() for n in names}
-        rows = 0
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            # "rows" records RAW rows processed, not crossed rows
-            rows += int(pdf["__cnt"].sum()) if prereduce else len(pdf)
-            for n in names:
-                spec = specs[n][0]
-                sub = pdf.rename(columns={
-                    src: bc for bc, src in canon[n].items()})
-                if prereduce:
-                    spec.update_reduced(sks[n], sub)
-                else:
-                    spec.update(sks[n], sub)
-        pid = TaskContext.get().partitionId()
-        data = {"pid": [pid], "rows": [rows]}
-        for n in names:
-            data[n] = [sks[n].to_bytes()]
-        data["wall_sec"] = [time.monotonic() - t0]
-        yield pd.DataFrame(data)
-
-    return prepared.mapInPandas(
-        fn, schema=_partials_schema(names) + ", wall_sec double")
+    by checkpoint manifests).  With ``prereduce=True`` the partial count
+    follows the shuffle partitioning, so pass the session's shuffle
+    partition count as ``est_parts`` to the merge."""
+    return _grouped_partials(df, [], specs, prereduce).select(
+        F.col("_pid").alias("pid"), "rows",
+        *[F.col(f"`{n}`") for n in specs], "wall_sec")
 
 
 def tree_aggregate_multi(partials: DataFrame, names: Sequence[str],
@@ -581,7 +494,7 @@ def sketch_dataframe_multi(
 
     ``prereduce=True`` routes every spec whose REDUCE contract allows it
     through the pre-reduced crossing (JVM hash-agg before the Arrow
-    boundary — byte-identical output, see build_partials_multi) and
+    boundary — byte-identical output, see _grouped_partials) and
     builds the rest on the raw path.  The split costs one extra pass,
     but each pass reads only its own specs' columns, so on columnar
     storage the two scans touch disjoint data; results are identical to
@@ -607,27 +520,9 @@ def sketch_dataframe_multi(
 
 
 # --------------------------------------------------------------------------
-# Grouped aggregation: per-partition partials in mapInPandas, merged by
-# the one sketch-row fold
+# The one stage-1 builder: per-(partition, group) partials in mapInPandas,
+# merged by the one sketch-row fold
 # --------------------------------------------------------------------------
-
-def _group_sketches(batches: Iterator[pd.DataFrame],
-                    group_cols: list[str],
-                    spec: SketchSpec) -> dict[tuple, list]:
-    """``{group key: [blob, rows]}`` over a partition's Arrow batches,
-    one ``spec.update`` per (batch, group)."""
-    sks: dict[tuple, list] = {}
-    for pdf in batches:
-        if not len(pdf):
-            continue
-        for key, sub in _batch_groups(pdf, group_cols):
-            ent = sks.get(key)
-            if ent is None:
-                ent = sks[key] = [spec.empty(), 0]
-            spec.update(ent[0], sub)
-            ent[1] += len(sub)
-    return {k: [sk.to_bytes(), n] for k, (sk, n) in sks.items()}
-
 
 def _batch_group_codes(pdf: pd.DataFrame,
                        group_cols: list[str]) -> tuple[np.ndarray, list]:
@@ -645,71 +540,139 @@ def _batch_group_codes(pdf: pd.DataFrame,
     return codes.reshape(-1), [_norm_key(k) for k in zip(*cols)]
 
 
-def _batch_groups(pdf: pd.DataFrame,
-                  group_cols: list[str]) -> Iterator[tuple[tuple, pd.DataFrame]]:
-    """Each group of one batch as ``(key, rows)``: the key normalized as
-    :func:`_norm_key` does, the rows in their batch order."""
-    codes, keys = _batch_group_codes(pdf, group_cols)
+def _batch_groups(pdf: pd.DataFrame, codes: np.ndarray,
+                  n: int) -> Iterator[tuple[int, pd.DataFrame]]:
+    """Each of the ``n`` codes' rows of one batch as ``(code, rows)``,
+    the rows in their batch order; a batch of one code is itself."""
+    if n == 1:
+        yield 0, pdf
+        return
     order = np.argsort(codes, kind="stable")
     starts = np.flatnonzero(np.diff(codes[order], prepend=-1))
     for s, e in zip(starts, np.append(starts[1:], len(order))):
-        yield keys[codes[order[s]]], pdf.take(order[s:e])
+        yield codes[order[s]], pdf.take(order[s:e])
 
 
-def _hll_group_sketches(batches: Iterator[pd.DataFrame],
-                        group_cols: list[str], p: int) -> dict[tuple, list]:
-    """:func:`_group_sketches` for HLL: every group's registers are one
-    row of a ``[groups x 2^p]`` block, updated by a single max-scatter per
-    Arrow batch, and each blob is the HLL prefix plus its block row.  Max
-    is order-free, so the bytes equal the per-group
-    ``HyperLogLog.add_hashes`` result."""
-    m = 1 << p
-    index: dict[tuple, int] = {}
-    block = np.zeros((0, m), dtype=np.uint8)
-    rows = np.zeros(0, dtype=np.int64)
-    for pdf in batches:
-        if not len(pdf):
-            continue
-        codes, keys = _batch_group_codes(pdf, group_cols)
-        gid = np.array([index.setdefault(k, len(index)) for k in keys],
-                       dtype=np.int64)[codes]
-        if len(index) > len(block):
-            cap = max(len(index), 2 * len(block))
-            block = np.concatenate(
-                [block, np.zeros((cap - len(block), m), dtype=np.uint8)])
-            rows = np.concatenate(
-                [rows, np.zeros(cap - len(rows), dtype=np.int64)])
-        bucket, rho = bucket_rho(pdf["h1"].to_numpy(), p)
-        np.maximum.at(block, (gid, bucket), rho)
-        rows += np.bincount(gid, minlength=len(rows))
-    prefix = blob_prefix(p)
-    return {k: [prefix + block[g].tobytes(), int(rows[g])]
-            for k, g in index.items()}
+def _grouped_partials(
+        df: DataFrame, group_cols: Sequence[str],
+        specs: dict[str, tuple[SketchSpec, Sequence[str | Column]]],
+        prereduce: bool = False) -> DataFrame:
+    """The one stage-1 builder: each input partition builds one partial
+    row per group it contains, ``[*group_cols, <name> binary ..., rows,
+    _pid, wall_sec]``, in ONE ``mapInPandas`` pass over ONE projection —
+    raw rows never shuffle, and N sketches cost one scan.
 
+    - Specs that prepare IDENTICAL expressions (e.g. an HLL and a Bloom
+      both keyed on ``xxhash64(conv_id)``) share ONE projected column: the
+      keys come from ``prepare_keyed_exprs``, compared structurally, and a
+      column the spec's ``USED_BATCH_COLS`` leaves out never crosses.  The
+      JVM row->Arrow serializer is the build's dominant per-value cost
+      (xp_serializer_cpu in BENCH.md "Retired diagnostic scripts").
+    - Every HLL spec keeps its groups' registers as the rows of one
+      ``[groups x 2^p]`` block, updated by a single max-scatter per Arrow
+      batch (max is order-free: the bytes equal ``add_hashes``); the other
+      kinds ``update`` once per (batch, group), rows in batch order.
+    - ``prereduce=True`` groups the projection in the JVM on
+      ``(*group_cols, *hashes)`` before the crossing (Tungsten hash-agg
+      with map-side combine), so one row per DISTINCT key tuple crosses,
+      carrying its raw multiplicity in ``__cnt``, and ``rows`` is the sum
+      of ``__cnt``.  Sound for specs whose REDUCE is "distinct" or
+      "weighted" (byte-identical sketches); raises for the others.
+    - With no group columns, a partition with no rows still emits one row
+      of empty sketches with ``rows = 0``: a checkpoint records its pid
+      as complete.
 
-def _grouped_partials(df: DataFrame, group_cols: list[str],
-                      spec: SketchSpec,
-                      cols: Sequence[str | Column]) -> DataFrame:
-    """Stage 1 of :func:`grouped_sketch`: one partial sketch row per
-    (input partition, group), ``[*group_cols, sketch, rows, _pid]``."""
-    prepared = spec.prepare(df, cols, keep=group_cols)
-    gtypes = dict(df.dtypes)
+    ``wall_sec`` is the partition's build time, on each of its rows."""
+    group_cols, names = list(group_cols), list(specs)
+    if prereduce:
+        for name, (spec, _) in specs.items():
+            if spec.REDUCE is None:
+                raise ValueError(
+                    f"spec {name!r} ({type(spec).__name__}) is not "
+                    "pre-reducible: REDUCE is None (order-dependent or "
+                    "value-carrying) — build it on the raw path")
+    exprs: list[Column] = []
+    # structural expr key -> canonical projected column name (ADVICE r04:
+    # keys come from prepare_keyed_exprs, never from parsing the JVM
+    # expression string — Connect-safe and immune to ' AS ' in names)
+    seen: dict[tuple, str] = {}
+    # spec name -> {batch col (h1/value/layer) -> projected column name}
+    canon: dict[str, dict[str, str]] = {}
+    for name, (spec, cols) in specs.items():
+        canon[name] = {}
+        used = spec.USED_BATCH_COLS
+        for batch_col, expr_key, c in spec.prepare_keyed_exprs(
+                cols, prefix=f"{name}__"):
+            if used is not None and batch_col not in used:
+                continue  # update() never reads it: don't cross it
+            if expr_key not in seen:
+                seen[expr_key] = f"{name}__{batch_col}"
+                exprs.append(c)
+            canon[name][batch_col] = seen[expr_key]
+    prepared = df.select(*[F.col(c) for c in group_cols], *exprs)
+    if prereduce:
+        prepared = (prepared.groupBy(*group_cols, *seen.values())
+                    .agg(F.count(F.lit(1)).alias("__cnt")))
+        for n in names:
+            canon[n]["_cnt"] = "__cnt"
+    gtypes = dict(df.dtypes) if group_cols else {}
     out_schema = ", ".join([f"`{c}` {gtypes[c]}" for c in group_cols]
-                           + ["sketch binary", "rows long", "_pid long"])
+                           + [f"`{n}` binary" for n in names]
+                           + ["rows long", "_pid long", "wall_sec double"])
+    hll = {n: (s.p, canon[n]["h1"])
+           for n, (s, _) in specs.items() if isinstance(s, HLLSpec)}
+    others = [n for n in names if n not in hll]
 
     def build(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         from pyspark import TaskContext
-        sks = (_hll_group_sketches(batches, group_cols, spec.p)
-               if isinstance(spec, HLLSpec)
-               else _group_sketches(batches, group_cols, spec))
-        if sks:
-            pid = TaskContext.get().partitionId()
-            keys = list(sks)
-            data = {c: [k[i] for k in keys] for i, c in enumerate(group_cols)}
-            data["sketch"] = [sks[k][0] for k in keys]
-            data["rows"] = [sks[k][1] for k in keys]
-            data["_pid"] = pid
-            yield pd.DataFrame(data)
+        t0 = time.monotonic()
+        index: dict[tuple, int] = {} if group_cols else {(): 0}
+        rows = np.zeros(len(index), dtype=np.int64)
+        blocks = {n: np.zeros((len(index), 1 << p), dtype=np.uint8)
+                  for n, (p, _) in hll.items()}
+        sks = {n: [specs[n][0].empty() for _ in index] for n in others}
+        for pdf in batches:
+            if not len(pdf):
+                continue
+            codes, keys = _batch_group_codes(pdf, group_cols)
+            gids = np.array([index.setdefault(k, len(index)) for k in keys],
+                            dtype=np.int64)
+            gid = gids[codes]
+            if len(index) > len(rows):
+                cap = max(len(index), 2 * len(rows))
+                rows = np.concatenate(
+                    [rows, np.zeros(cap - len(rows), dtype=np.int64)])
+                for n, b in blocks.items():
+                    blocks[n] = np.concatenate(
+                        [b, np.zeros((cap - len(b), b.shape[1]), np.uint8)])
+            rows += np.bincount(
+                gid, pdf["__cnt"].to_numpy() if prereduce else None,
+                len(rows)).astype(np.int64)
+            for n, (p, src) in hll.items():
+                bucket, rho = bucket_rho(pdf[src].to_numpy(), p)
+                np.maximum.at(blocks[n].reshape(-1), (gid << p) + bucket, rho)
+            for n in others:
+                spec, sk = specs[n][0], sks[n]
+                sk.extend(spec.empty() for _ in range(len(index) - len(sk)))
+                update = spec.update_reduced if prereduce else spec.update
+                named = pdf.rename(columns={
+                    src: bc for bc, src in canon[n].items()})
+                for code, sub in _batch_groups(named, codes, len(keys)):
+                    update(sk[gids[code]], sub)
+        if not index:
+            return
+        keys = list(index)  # in gid order
+        data = {c: [k[i] for k in keys] for i, c in enumerate(group_cols)}
+        for n in names:
+            if n in hll:
+                prefix = blob_prefix(hll[n][0])
+                data[n] = [prefix + r.tobytes() for r in blocks[n][:len(keys)]]
+            else:
+                data[n] = [sk.to_bytes() for sk in sks[n]]
+        data["rows"] = rows[:len(keys)]
+        data["_pid"] = TaskContext.get().partitionId()
+        data["wall_sec"] = time.monotonic() - t0
+        yield pd.DataFrame(data)
 
     return prepared.mapInPandas(build, out_schema)
 
@@ -742,8 +705,9 @@ def grouped_sketch(df: DataFrame, group_cols: Sequence[str],
     column join the NULL group.
     """
     group_cols = list(group_cols)
-    return regroup_sketch_rows(_grouped_partials(df, group_cols, spec, cols),
-                               group_cols, order_cols=["_pid"])
+    return regroup_sketch_rows(
+        _grouped_partials(df, group_cols, {"sketch": (spec, cols)}),
+        group_cols, order_cols=["_pid"])
 
 
 def _sketch_row_schema(schema: StructType, group_cols: Sequence[str],
@@ -1323,7 +1287,9 @@ def fill_layered_build(df: DataFrame, shape: Shape, target_n: int,
         for pdf in batches:
             if not len(pdf):
                 continue
-            for (val,), sub in _batch_groups(pdf, ["_stream"]):
+            codes, vals = _batch_group_codes(pdf, ["_stream"])
+            for code, sub in _batch_groups(pdf, codes, len(vals)):
+                (val,) = vals[code]
                 sk = sks.get(val)
                 if sk is None:
                     sk = sks[val] = FillLayeredBloomFilter(

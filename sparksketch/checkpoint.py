@@ -2,9 +2,11 @@
 (BASELINE.json north_rule: "resumable from checkpoint with per-partition
 lineage + metrics").
 
-Stage-1 output (one sketch row per partition, from the one partial
-builder behind agg.build_partials, which also times each partition) is
-persisted as parquet keyed by (run_id, pid) together with a manifest JSON
+Stage-1 output comes from the one stage-1 builder (``agg._grouped_partials``
+through ``agg.build_partials``) with no group columns: one sketch row per
+input partition, an empty partition's row holding empty sketches and
+``rows = 0``, each timed as ``wall_sec``.  It is persisted as parquet
+keyed by (run_id, pid) together with a manifest JSON
 recording input files, spec repr, per-partition row counts and wall-times.
 The manifest is written to a temp file and renamed over the old one, so a
 crash mid-write leaves the previous manifest loadable.

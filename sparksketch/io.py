@@ -7,9 +7,10 @@ production the swap is this module only:
     read_table(spark, "catalog.db.transcripts", fmt="iceberg")
 
 and every operator above it — sketch builds, dedup, streaming state —
-works unchanged because they only consume DataFrames.  Writes go through
-``write_table`` so the checkpoint/state tables get the same one-line swap
-(Iceberg/Delta additionally give those writes transactional commit).
+works unchanged because they only consume DataFrames.  Writes are not
+behind this seam: checkpoints and streaming state use Spark's
+``DataFrameWriter``, and a view's fold tasks write their own segment
+files with :func:`write_part`, which the view's manifest then lists.
 """
 
 from __future__ import annotations
@@ -35,14 +36,6 @@ def read_table(spark: SparkSession, source: str,
         # catalog table name, e.g. "my_catalog.db.transcripts"
         return spark.read.format("iceberg").load(source)
     return spark.read.format(fmt).load(source)
-
-
-def write_table(df: DataFrame, target: str, fmt: str = "parquet",
-                mode: str = "overwrite") -> None:
-    if fmt == "parquet":
-        df.write.mode(mode).parquet(target)
-    else:
-        df.write.format(fmt).mode(mode).save(target)
 
 
 def write_text_atomic(path: str, text: str) -> None:

@@ -238,12 +238,13 @@ class WindowedSketchState:
         keyed = batch_df.withColumn(
             "window_start",
             F.window(F.col(self.ts_col), self.window)["start"])
-        parts = _grouped_partials(keyed, self._keys, self.spec, self.cols)
+        parts = _grouped_partials(keyed, self._keys,
+                                  {"sketch": (self.spec, self.cols)})
         live = self._current_state_path()
         if live is not None:
             parts = (spark.read.parquet(live)
                      .withColumn("_pid", F.lit(-1).cast("long"))
-                     .unionByName(parts))
+                     .unionByName(parts, allowMissingColumns=True))
         merged = regroup_sketch_rows(parts, self._keys, order_cols=["_pid"])
         if self.watermark is not None:
             hi = keyed.select(F.max("window_start")).first()[0]

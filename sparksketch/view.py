@@ -254,7 +254,7 @@ def view_materialize(df: DataFrame, dims: Sequence[str], spec: SketchSpec,
     fact scan, raw rows never shuffle) and write them as segment 0, in
     as many buckets as its size calls for (see the module docstring)."""
     dims = list(dims)
-    parts = _grouped_partials(df, dims, spec, cols)
+    parts = _grouped_partials(df, dims, {"sketch": (spec, cols)})
     p = df.sparkSession.sparkContext.defaultParallelism
     written = _write_segment(parts, dims, path, 0, p)
     _write_manifest(path, [_new_segment(
@@ -276,7 +276,7 @@ def view_append(df: DataFrame, spec: SketchSpec,
         raise ValueError(
             f"sketch spec mismatch: view built with {m.spec}, "
             f"append called with {repr(spec)}")
-    parts = _grouped_partials(df, m.dims, spec, cols)
+    parts = _grouped_partials(df, m.dims, {"sketch": (spec, cols)})
     schema = _sketch_row_schema(parts.schema, m.dims)
     if schema != m.schema:
         raise ValueError(

@@ -129,6 +129,37 @@ class TestCheckpointResume:
         assert merged_sketch_bytes(spark, ckpt, "r4") == tree_aggregate(
             build_partials(df, spec, ["user_id"]))
 
+    def test_empty_partitions_emit_empty_rows(self, spark, tmp_path):
+        """A partition with no rows still emits its row: the spec's empty
+        bytes with ``rows = 0``, so a checkpoint records every pid as
+        complete.  HLL (register-block kernel) and Bloom/KLL (per-batch
+        update) both keep the rule."""
+        from sparksketch.agg import (BloomSpec, HLLSpec, KLLSpec,
+                                     build_partials_multi)
+        from sparksketch.checkpoint import checkpoint_partials, missing_pids
+        from sparksketch.shape import Shape
+
+        # range splits contiguously: ids < 250 all sit in partition 0
+        df = (spark.range(0, 1000, 1, 4).filter(F.col("id") < 250)
+              .select(F.concat(F.lit("u"), F.col("id")).alias("user_id"),
+                      F.col("id").cast("double").alias("v")))
+        specs = {"hll": (HLLSpec(p=10), ["user_id"]),
+                 "bloom": (BloomSpec(Shape.from_np(500, 1e-3)), ["user_id"]),
+                 "kll": (KLLSpec(k=64, col="v"), ["user_id"])}
+        rows = build_partials_multi(df, specs).toPandas().sort_values("pid")
+        assert rows["pid"].tolist() == [0, 1, 2, 3]
+        assert rows["rows"].tolist() == [250, 0, 0, 0]
+        for n, (spec, _) in specs.items():
+            empty = spec.empty().to_bytes()
+            assert bytes(rows[n].iloc[0]) != empty
+            assert [bytes(b) for b in rows[n].iloc[1:]] == [empty] * 3, n
+
+        ckpt = str(tmp_path)
+        m = checkpoint_partials(df, specs["hll"][0], ["user_id"], ckpt, "r5")
+        assert missing_pids(ckpt, "r5") == set()
+        assert {p: v["rows"] for p, v in m.completed.items()} == {
+            "0": 250, "1": 0, "2": 0, "3": 0}
+
     def test_retry_dedup_by_pid(self, spark, tmp_path):
         """A re-run of an already-complete pid (retry after lost manifest
         write) must not double-count: merge dedups by pid."""

@@ -83,6 +83,32 @@ def test_prereduce_rejects_unreducible(spark, skewed):
                                  {"x": (spec, ["k"])}, prereduce=True)
 
 
+def test_grouped_prereduce_byte_identity(spark, skewed):
+    """A grouped build with ``prereduce=True`` gives the bytes and raw row
+    counts of the raw grouped build, for every kind whose REDUCE is set;
+    a REDUCE=None spec still raises."""
+    from sparksketch.agg import (SketchSpec, _grouped_partials,
+                                 regroup_sketch_rows)
+    specs = _specs()
+    reducible = {c for c in SketchSpec.__subclasses__() if c.REDUCE}
+    assert {type(s) for s, _ in specs.values()} == reducible
+
+    def merged(prereduce):
+        parts = _grouped_partials(skewed, ["tool"], specs, prereduce)
+        pdf = regroup_sketch_rows(parts, ["tool"], order_cols=["_pid"],
+                                  sketches=list(specs)).toPandas()
+        return {r["tool"]: (r["rows"], *(bytes(r[n]) for n in specs))
+                for _, r in pdf.iterrows()}
+
+    raw, reduced = merged(False), merged(True)
+    assert len(raw) == 8  # 7 tools and NULL
+    assert reduced == raw
+    assert sum(v[0] for v in raw.values()) == skewed.count()
+    with pytest.raises(ValueError, match="not pre-reducible"):
+        _grouped_partials(skewed, ["tool"],
+                          {"kll": (KLLSpec(k=64, col="v"), ["k"])}, True)
+
+
 def test_prereduce_rows_account_raw_rows(spark, skewed):
     """Partials record RAW rows processed, not crossed (reduced) rows."""
     specs = {"hll": (HLLSpec(p=12), ["k"])}

@@ -8,6 +8,9 @@ scale-critical properties directly from the plan text:
   filter exists)
 - the sketch-build plan has NO Exchange before the mapInPandas partials
   (raw rows never shuffle; only sketch blobs do)
+- a pre-reduced build, global or grouped, is the same one builder with
+  the JVM hash-agg on (group cols, hashes) feeding its MapInPandas
+  directly: the hash-agg's Exchange moves distinct hash tuples only
 - probe-side plans stay in WholeStageCodegen up to the single Arrow eval
 - each sketch-view write fold (materialize, append, compaction) is one
   MapInArrow (``fold_sketch_runs``), and the only MapInPandas left is
@@ -27,6 +30,7 @@ Usage: PYTHONPATH=/root/repo python tools/explain_plans.py [sf_dir]
 
 import io
 import os
+import re
 import sys
 from contextlib import redirect_stdout
 
@@ -40,6 +44,11 @@ def plan_of(df) -> str:
     with redirect_stdout(buf):
         df.explain("formatted")
     return buf.getvalue()
+
+
+def nodes_of(plan: str) -> list:
+    """The plan's operator names in node-number (dataflow) order."""
+    return re.findall(r"^\(\d+\) (\w+)", plan, re.M)
 
 
 def check(name: str, plan: str, want: list, forbid: list) -> bool:
@@ -120,6 +129,27 @@ def main():
     assert p4.count(") Scan parquet") == 1, "multi-sketch must scan ONCE"
     print("PASS  multi-sketch scans parquet exactly once")
 
+    # 4b. pre-reduced builds: the one builder, global (no group columns)
+    # and grouped, hash-aggregates (*group_cols, *hashes) in the JVM, and
+    # that HashAggregate feeds the MapInPandas directly — perfbench's
+    # agg.prereduce.rows_out counts the rows it sends to Python
+    from sparksketch.agg import CMSSpec, _grouped_partials
+    for name, pre in (
+            ("global", build_partials_multi(orders, {
+                "h": (HLLSpec(p=12), ["o_custkey"]),
+                "c": (CMSSpec(w=1024), ["o_orderstatus"])}, prereduce=True)),
+            ("grouped", _grouped_partials(orders, ["o_orderpriority"], {
+                "h": (HLLSpec(p=12), ["o_custkey"])}, prereduce=True))):
+        nodes = nodes_of(plan_of(pre))
+        before = nodes[:nodes.index("MapInPandas")]
+        if (nodes.count("MapInPandas") == 1 and before[-1] == "HashAggregate"
+                and before.count("Exchange") == 1):
+            print(f"PASS  pre-reduced {name} build: HashAggregate -> "
+                  "MapInPandas, one Exchange")
+        else:
+            print(f"FAIL  pre-reduced {name} build: plan nodes {nodes}")
+            ok = False
+
     # 5. grouped build (high-cardinality groups): raw rows never
     # shuffle — the ONLY Exchange in the plan is AFTER the mapInPandas
     # partial build, i.e. it moves KB-scale sketch rows, not data rows,
@@ -134,7 +164,6 @@ def main():
     # order: (1) scan ... (n) sink): stage 1 is a MapInPandas, stage 2 a
     # MapInArrow, and the single Exchange sits BETWEEN them — it moves
     # sketch rows only
-    import re
     stage = r"\bMapIn(?:Pandas|Arrow) \((\d+)\)"
     ex_ids = [int(m) for m in re.findall(r"\bExchange \((\d+)\)", p5)]
     map_ids = sorted(int(m) for m in re.findall(stage, p5))
@@ -352,7 +381,7 @@ def main():
                     ok = False
             cplan = collected[2]
             # compaction: one MapInArrow over a Range, nothing else
-            nodes = re.findall(r"^\(\d+\) (\w+)", cplan, re.M)
+            nodes = nodes_of(cplan)
             if (nodes.count("MapInArrow") == 1 and "Range" in nodes
                     and nodes.index("Range") < nodes.index("MapInArrow")
                     and "Exchange" not in nodes and "Scan" not in nodes):
@@ -366,9 +395,6 @@ def main():
         # estimates; a ``where`` is a JVM Filter between the bucket read
         # and the fold; a coarser query of B > 1 buckets merges its
         # groups across buckets with one Exchange
-        def nodes_of(plan):
-            return re.findall(r"^\(\d+\) (\w+)", plan, re.M)
-
         qplan = plan_of(view_query(spark, vdir, ["event_type"]))
         print(qplan)
         nodes = nodes_of(qplan)
