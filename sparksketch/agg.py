@@ -47,7 +47,7 @@ from __future__ import annotations
 
 import time
 from dataclasses import dataclass, field
-from typing import ClassVar, Iterator, Sequence
+from typing import ClassVar, Collection, Iterator, Sequence
 
 import numpy as np
 import pandas as pd
@@ -58,6 +58,7 @@ from pyspark.sql.types import (BinaryType, BooleanType, DoubleType,
                                LongType, StructField, StructType)
 
 from .hashing import combine_hashes
+from .io import WRITTEN_SCHEMA, fs_path, write_part
 from .shape import Shape, StableShape
 from .sketches import (BloomFilter, BottomKSketch, CountMinSketch,
                        CountingBloomFilter, HyperLogLog, KLLSketch,
@@ -124,9 +125,9 @@ class SketchSpec:
     BATCH_COLS: ClassVar[tuple[str, ...]] = ("h1", "value")
 
     # Batch cols update() ACTUALLY consumes when narrower than everything
-    # prepare() emits (KLL/TDigest read only the value column; the h1 the
-    # base class emits for them is pure Arrow-crossing waste — the JVM
-    # row->Arrow serializer is the build's dominant per-value cost, see
+    # prepare_keyed_exprs() emits (KLL/TDigest read only the value column;
+    # the h1 the base class emits for them is pure Arrow-crossing waste —
+    # the JVM row->Arrow serializer is the build's dominant per-value cost, see
     # xp_serializer_cpu in BENCH.md "Retired diagnostic scripts").  None =
     # all emitted columns are used.
     USED_BATCH_COLS: ClassVar[tuple[str, ...] | None] = None
@@ -166,23 +167,6 @@ class SketchSpec:
                           F.col(self.value_col).cast("double")
                           .alias(prefix + "value")))
         return keyed
-
-    def prepare_exprs(self, cols: Sequence[str | Column],
-                      prefix: str = "") -> list[Column]:
-        """JVM-side column expressions feeding this sketch's update step —
-        these are the ONLY columns that cross the Arrow boundary.  Pruned
-        to USED_BATCH_COLS when the spec declares update() reads less than
-        the base class emits."""
-        used = self.USED_BATCH_COLS
-        return [c for bc, _, c in self.prepare_keyed_exprs(cols, prefix)
-                if used is None or bc in used]
-
-    def prepare(self, df: DataFrame, cols: Sequence[str | Column],
-                keep: Sequence[str] = ()) -> DataFrame:
-        """Project down to hash/value columns (column pruning reaches the
-        scan)."""
-        return df.select(*[F.col(c) for c in keep],
-                         *self.prepare_exprs(cols))
 
 
 @dataclass(frozen=True)
@@ -556,7 +540,8 @@ def _batch_groups(pdf: pd.DataFrame, codes: np.ndarray,
 def _grouped_partials(
         df: DataFrame, group_cols: Sequence[str],
         specs: dict[str, tuple[SketchSpec, Sequence[str | Column]]],
-        prereduce: bool = False) -> DataFrame:
+        prereduce: bool = False, write_dir: str | None = None,
+        write_pids: Collection[int] | None = None) -> DataFrame:
     """The one stage-1 builder: each input partition builds one partial
     row per group it contains, ``[*group_cols, <name> binary ..., rows,
     _pid, wall_sec]``, in ONE ``mapInPandas`` pass over ONE projection —
@@ -581,6 +566,13 @@ def _grouped_partials(
     - With no group columns, a partition with no rows still emits one row
       of empty sketches with ``rows = 0``: a checkpoint records its pid
       as complete.
+    - With ``write_dir``, the task writes its rows as one parquet file in
+      that directory (:func:`~sparksketch.io.write_part`, bucket = its
+      partition id) and emits one ``file string, rows long, pid long,
+      wall_sec double`` row naming it instead; ``rows`` is the input row
+      count.  A partition outside ``write_pids`` (when given) writes and
+      emits nothing.  This is the checkpoint's write path: the caller
+      commits the files it collects — no Spark write job runs.
 
     ``wall_sec`` is the partition's build time, on each of its rows."""
     group_cols, names = list(group_cols), list(specs)
@@ -619,6 +611,10 @@ def _grouped_partials(
     out_schema = ", ".join([f"`{c}` {gtypes[c]}" for c in group_cols]
                            + [f"`{n}` binary" for n in names]
                            + ["rows long", "_pid long", "wall_sec double"])
+    target = None
+    if write_dir is not None:
+        out_schema = "file string, rows long, pid long, wall_sec double"
+        target = fs_path(write_dir)
     hll = {n: (s.p, canon[n]["h1"])
            for n, (s, _) in specs.items() if isinstance(s, HLLSpec)}
     others = [n for n in names if n not in hll]
@@ -669,10 +665,19 @@ def _grouped_partials(
                 data[n] = [prefix + r.tobytes() for r in blocks[n][:len(keys)]]
             else:
                 data[n] = [sk.to_bytes() for sk in sks[n]]
+        pid = TaskContext.get().partitionId()
         data["rows"] = rows[:len(keys)]
-        data["_pid"] = TaskContext.get().partitionId()
-        data["wall_sec"] = time.monotonic() - t0
-        yield pd.DataFrame(data)
+        data["_pid"] = pid
+        data["wall_sec"] = wall = time.monotonic() - t0
+        if target is None:
+            yield pd.DataFrame(data)
+        elif write_pids is None or pid in write_pids:
+            f = write_part(pa.Table.from_pandas(pd.DataFrame(data),
+                                                preserve_index=False),
+                           target, pid)
+            yield pd.DataFrame({"file": f.column("file").to_pylist(),
+                                "rows": [int(data["rows"].sum())],
+                                "pid": [pid], "wall_sec": [wall]})
 
     return prepared.mapInPandas(build, out_schema)
 
@@ -788,7 +793,6 @@ def _fold_sorted(src: DataFrame, group_cols: list[str],
     and t-digest bytes do not depend on where batches split.  See
     :func:`regroup_sketch_rows` for ``estimate_col``, ``write_dir`` and
     ``sketches``."""
-    from .io import WRITTEN_SCHEMA, fs_path, write_part
     cols = [*group_cols, *sketches, "rows"]
     out_schema = _sketch_row_schema(src.schema, group_cols, estimate_col,
                                     sketches)

@@ -1,32 +1,30 @@
-"""Checkpoint / resume with per-partition lineage + metrics
-(BASELINE.json north_rule: "resumable from checkpoint with per-partition
-lineage + metrics").
+"""Checkpoint / resume with per-partition lineage + metrics (north rule).
 
-Stage-1 output comes from the one stage-1 builder (``agg._grouped_partials``
-through ``agg.build_partials``) with no group columns: one sketch row per
-input partition, an empty partition's row holding empty sketches and
-``rows = 0``, each timed as ``wall_sec``.  It is persisted as parquet
-keyed by (run_id, pid) together with a manifest JSON
-recording input files, spec repr, per-partition row counts and wall-times.
-The manifest is written to a temp file and renamed over the old one, so a
-crash mid-write leaves the previous manifest loadable.
-``resume`` re-builds only the missing partitions and re-runs the cheap
-merge — the expensive scan+build work is never repeated.
-
-The checkpoint directory must be inside the writable workspace (or a real
-object store in production)."""
+Checkpoints commit like sketch views (view.py).  The build task of input
+partition ``pid`` (``agg._grouped_partials``, no group columns) writes its
+row ``[sketch, rows, _pid, wall_sec]`` (empty sketches and ``rows = 0``
+for an empty partition) as one file, ``partials_<run_id>/part-<pid>-
+<uuid>.parquet``, with ``io.write_part``.  The driver commits the rows
+``(file, rows, pid, wall_sec)`` it collects in ``manifest_<run_id>.json``
+(spec repr, input files, partition count and ``completed: {pid: {file,
+rows, wall_sec}}``) by a temp-file rename, so a crash mid-write leaves
+the previous manifest loadable.  ``merged_sketch_bytes`` opens exactly
+the listed files: a file no manifest lists (a failed or speculative
+attempt's, a stray one) is never read, and never removed.  ``resume``
+builds only the missing pids.  Only local directories are supported."""
 
 from __future__ import annotations
 
 import json
 import os
-from dataclasses import dataclass
+from dataclasses import asdict, dataclass
 from typing import Sequence
 
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from .agg import SketchSpec, build_partials
-from .io import write_text_atomic
+from .agg import SketchSpec, _grouped_partials
+from .io import fs_path, write_text_atomic
 from .sketches import merge_blob_list
 
 
@@ -36,21 +34,53 @@ class Manifest:
     spec: str
     input_files: list[str]
     n_partitions: int
-    completed: dict[str, dict]  # pid -> {rows, wall_sec}
+    completed: dict[str, dict]  # pid -> {file, rows, wall_sec}
 
     def to_json(self) -> str:
-        return json.dumps({
-            "run_id": self.run_id, "spec": self.spec,
-            "input_files": self.input_files,
-            "n_partitions": self.n_partitions,
-            "completed": self.completed}, indent=2, sort_keys=True)
+        return json.dumps(asdict(self), indent=2, sort_keys=True)
 
     @staticmethod
     def load(path: str) -> "Manifest":
         with open(path) as f:
-            d = json.load(f)
-        return Manifest(d["run_id"], d["spec"], d["input_files"],
-                        d["n_partitions"], d["completed"])
+            m = Manifest(**json.load(f))
+        if any("file" not in v for v in m.completed.values()):
+            raise ValueError(f"{path} is a checkpoint manifest of an old "
+                             "layout, without per-pid files; rebuild the run")
+        return m
+
+
+def _checkpoint(df: DataFrame, spec: SketchSpec, cols: Sequence[str],
+                ckpt_dir: str, run_id: str, only_pids: set[int] | None,
+                resuming: bool) -> Manifest:
+    """Build and commit the pids ``only_pids`` (all if None; if
+    ``resuming``, the missing ones).  A prior manifest must match the
+    call's spec, partition count and input files, else ``ValueError``."""
+    m = Manifest(run_id, repr(spec), sorted(df.inputFiles()),
+                 df.rdd.getNumPartitions(), {})
+    path = os.path.join(ckpt_dir, f"manifest_{run_id}.json")
+    if resuming or os.path.exists(path):
+        old = Manifest.load(path)
+        for key in ("spec", "n_partitions", "input_files"):
+            have, want = getattr(old, key), getattr(m, key)
+            if have != want:
+                raise ValueError(f"checkpoint run {run_id!r} has {key} "
+                                 f"{have!r}, not {want!r}")
+        m = old
+    if resuming:
+        only_pids = set(range(m.n_partitions)) - {int(p) for p in m.completed}
+        if not only_pids:
+            return m
+    os.makedirs(ckpt_dir, exist_ok=True)
+    if only_pids is not None:
+        df = df.filter(F.spark_partition_id().isin(sorted(only_pids)))
+    written = _grouped_partials(
+        df, [], {"sketch": (spec, cols)}, write_pids=only_pids,
+        write_dir=os.path.join(ckpt_dir, f"partials_{run_id}")).collect()
+    m.completed.update({str(r.pid): {"file": r.file, "rows": r.rows,
+                                     "wall_sec": round(r.wall_sec, 4)}
+                        for r in written})
+    write_text_atomic(path, m.to_json())
+    return m
 
 
 def checkpoint_partials(df: DataFrame, spec: SketchSpec,
@@ -58,33 +88,10 @@ def checkpoint_partials(df: DataFrame, spec: SketchSpec,
                         only_pids: set[int] | None = None) -> Manifest:
     """Build per-partition sketches and persist them with lineage.
 
-    ``only_pids`` restricts the build to missing partitions (resume path):
-    the other partitions' rows are filtered out on ``spark_partition_id()``
-    before the Arrow crossing, and the empty sketch rows those partitions
-    still emit are dropped, so they are never recorded as completed."""
-    os.makedirs(ckpt_dir, exist_ok=True)
-    input_files = sorted(df.inputFiles())
-    n_parts = df.rdd.getNumPartitions()
-    if only_pids is None:
-        built = build_partials(df, spec, cols)
-    else:
-        pids = sorted(only_pids)
-        built = build_partials(
-            df.filter(F.spark_partition_id().isin(pids)), spec, cols)
-        built = built.filter(built.pid.isin(pids))
-    out_path = os.path.join(ckpt_dir, f"partials_{run_id}")
-    built.write.mode("append").parquet(out_path)
-
-    spark = df.sparkSession
-    done = spark.read.parquet(out_path).select("pid", "rows", "wall_sec").collect()
-    manifest = Manifest(
-        run_id=run_id, spec=repr(spec), input_files=input_files,
-        n_partitions=n_parts,
-        completed={str(r.pid): {"rows": r.rows, "wall_sec": round(r.wall_sec, 4)}
-                   for r in done})
-    write_text_atomic(os.path.join(ckpt_dir, f"manifest_{run_id}.json"),
-                      manifest.to_json())
-    return manifest
+    ``only_pids`` restricts the build to those partitions: the others'
+    rows are filtered out on ``spark_partition_id()`` before the Arrow
+    crossing, and their tasks write nothing."""
+    return _checkpoint(df, spec, cols, ckpt_dir, run_id, only_pids, False)
 
 
 def missing_pids(ckpt_dir: str, run_id: str) -> set[int]:
@@ -96,25 +103,17 @@ def resume(spark: SparkSession, df: DataFrame, spec: SketchSpec,
            cols: Sequence[str], ckpt_dir: str, run_id: str) -> Manifest:
     """Complete an interrupted run: build only partitions absent from the
     manifest, then refresh the manifest."""
-    todo = missing_pids(ckpt_dir, run_id)
-    if not todo:
-        return Manifest.load(os.path.join(ckpt_dir, f"manifest_{run_id}.json"))
-    return checkpoint_partials(df, spec, cols, ckpt_dir, run_id,
-                               only_pids=todo)
+    return _checkpoint(df, spec, cols, ckpt_dir, run_id, None, True)
 
 
 def merged_sketch_bytes(spark: SparkSession, ckpt_dir: str,
                         run_id: str) -> bytes | None:
-    """Final merge over checkpointed partials — canonical sorted-pid fold
-    (deterministic for every sketch kind), dedup-ing retries by pid.
-
-    Blobs come to the driver through ``toArrow()``: the row-object
-    ``collect()`` path re-serializes each MB-scale binary per row and is
-    ~50x slower."""
-    path = os.path.join(ckpt_dir, f"partials_{run_id}")
-    t = spark.read.parquet(path).select("pid", "sketch").toArrow()
-    seen: dict[int, bytes] = {}
-    for pid, blob in zip(t.column("pid").to_pylist(),
-                         t.column("sketch").to_pylist()):
-        seen.setdefault(pid, blob)
-    return merge_blob_list(seen[p] for p in sorted(seen))
+    """Final merge over checkpointed partials: the driver opens exactly the
+    manifest's files with pyarrow and folds their sketches in pid order
+    (canonical for every sketch kind).  No Spark job runs."""
+    m = Manifest.load(os.path.join(ckpt_dir, f"manifest_{run_id}.json"))
+    fs, d = fs_path(os.path.join(ckpt_dir, f"partials_{run_id}"))
+    return merge_blob_list(
+        pq.read_table(f"{d}/{m.completed[p]['file']}", columns=["sketch"],
+                      filesystem=fs).column("sketch")[0].as_py()
+        for p in sorted(m.completed, key=int))

@@ -8,9 +8,10 @@ production the swap is this module only:
 
 and every operator above it — sketch builds, dedup, streaming state —
 works unchanged because they only consume DataFrames.  Writes are not
-behind this seam: checkpoints and streaming state use Spark's
-``DataFrameWriter``, and a view's fold tasks write their own segment
-files with :func:`write_part`, which the view's manifest then lists.
+behind this seam: streaming state uses Spark's ``DataFrameWriter``, and
+a view's fold tasks and a checkpoint's build tasks write their own files
+with :func:`write_part`, which the view's or checkpoint's manifest then
+lists.
 """
 
 from __future__ import annotations

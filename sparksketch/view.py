@@ -49,7 +49,9 @@ or the new one, never a missing or partial file.  The rename is the only
 commit: every reader opens exactly the listed files, so a file no
 manifest lists (a failed write's segment, a failed or speculative task
 attempt's output) is never read, and a stray ``_tmp-*`` file is hidden
-by its ``_`` prefix.  The rename is atomic on POSIX local paths (and
+by its ``_`` prefix.  Nothing removes such files either: they stay on
+disk until the view's directory is deleted.  Checkpoint directories
+(checkpoint.py) commit the same way and keep the same leftovers.  The rename is atomic on POSIX local paths (and
 HDFS); object stores have no atomic rename.  Only local paths are
 verified here.
 

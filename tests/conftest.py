@@ -36,11 +36,15 @@ def sf_dir():
 @pytest.fixture(scope="session")
 def grouped_reference():
     """Driver-side grouped build to check ``grouped_sketch`` against:
-    ``{key tuple: (sketch bytes, rows)}`` from ``toPandas()``, a
-    ``groupby(dropna=False)`` and one ``spec.empty()`` + ``spec.update``
-    per group.  NULL and NaN keys both become ``None``."""
+    ``{key tuple: (sketch bytes, rows)}`` from ``toPandas()`` of the group
+    columns and ``h1 = xxhash64(*cols)``, a ``groupby(dropna=False)`` and
+    one ``spec.empty()`` + ``spec.update`` per group, for specs whose
+    update reads ``h1`` alone (Bloom, HLL, ...).  NULL and NaN keys both
+    become ``None``."""
     def build(df, group_cols, spec, cols):
-        pdf = spec.prepare(df, cols, keep=group_cols).toPandas()
+        from pyspark.sql import functions as F
+        pdf = df.select(*group_cols,
+                        F.xxhash64(*cols).alias("h1")).toPandas()
         out = {}
         for key, sub in pdf.groupby(list(group_cols), dropna=False):
             sk = spec.empty()

@@ -162,7 +162,9 @@ class TestCheckpointResume:
 
     def test_retry_dedup_by_pid(self, spark, tmp_path):
         """A re-run of an already-complete pid (retry after lost manifest
-        write) must not double-count: merge dedups by pid."""
+        write) must not double-count.  The merge does not de-duplicate:
+        the manifest lists one file per pid, the re-run's file replacing
+        the earlier one."""
         from sparksketch.agg import HLLSpec
         from sparksketch.checkpoint import (checkpoint_partials,
                                             merged_sketch_bytes)
@@ -179,6 +181,84 @@ class TestCheckpointResume:
             merged_sketch_bytes(spark, ckpt, "r2")).estimate()
         assert abs(est - 2000) <= 2000 * 0.1
 
+
+    def test_stray_file_is_never_read(self, spark, tmp_path):
+        """The merge opens only the manifest's files: a parquet file
+        dropped into the partials directory, holding sketch rows for a new
+        pid and for pid 0, changes nothing."""
+        import pyarrow as pa
+        import pyarrow.parquet as pq
+
+        from sparksketch.agg import HLLSpec
+        from sparksketch.checkpoint import (checkpoint_partials,
+                                            merged_sketch_bytes)
+        from sparksketch.sketches import HyperLogLog
+
+        df = (spark.range(0, 2000, 1, 4)
+              .select(F.concat(F.lit("u"), F.col("id")).alias("user_id")))
+        ckpt = str(tmp_path)
+        checkpoint_partials(df, HLLSpec(p=10), ["user_id"], ckpt, "r6")
+        before = merged_sketch_bytes(spark, ckpt, "r6")
+        other = HyperLogLog(10)
+        other.add_hashes(np.arange(1, 5001, dtype=np.int64) * 7919)
+        blob = other.to_bytes()
+        pq.write_table(pa.table({
+            "pid": pa.array([4, 0], pa.int64()),
+            "rows": pa.array([5000, 5000], pa.int64()),
+            "sketch": pa.array([blob, blob], pa.binary()),
+            "wall_sec": pa.array([0.0, 0.0])}),
+            tmp_path / "partials_r6" / "part-00004-stray.parquet")
+        assert merged_sketch_bytes(spark, ckpt, "r6") == before
+
+    def test_run_must_match_its_manifest(self, spark, tmp_path):
+        """resume and checkpoint_partials refuse a run whose manifest
+        records another partition count or spec, and leave the manifest
+        as it was."""
+        from sparksketch.agg import HLLSpec
+        from sparksketch.checkpoint import checkpoint_partials, resume
+
+        df = (spark.range(0, 4000, 1, 8)
+              .select(F.concat(F.lit("u"), F.col("id")).alias("user_id")))
+        ckpt = str(tmp_path)
+        checkpoint_partials(df, HLLSpec(p=12), ["user_id"], ckpt, "r7")
+        manifest = tmp_path / "manifest_r7.json"
+        before = manifest.read_text()
+        with pytest.raises(ValueError, match="n_partitions 8, not 4"):
+            resume(spark, df.coalesce(4), HLLSpec(p=12), ["user_id"], ckpt,
+                   "r7")
+        with pytest.raises(ValueError, match="p=12.*p=14"):
+            resume(spark, df, HLLSpec(p=14), ["user_id"], ckpt, "r7")
+        with pytest.raises(ValueError, match="p=12.*p=14"):
+            checkpoint_partials(df, HLLSpec(p=14), ["user_id"], ckpt, "r7",
+                                only_pids={0})
+        assert manifest.read_text() == before
+
+    def test_one_job_per_build_none_per_merge(self, spark, tmp_path):
+        """checkpoint_partials and resume each run one Spark job, the
+        build that writes the files; merged_sketch_bytes runs none."""
+        from sparksketch.agg import HLLSpec
+        from sparksketch.checkpoint import (checkpoint_partials,
+                                            merged_sketch_bytes, resume)
+
+        df = (spark.range(0, 2000, 1, 4)
+              .select(F.concat(F.lit("u"), F.col("id")).alias("user_id")))
+        spec, ckpt, sc = HLLSpec(p=10), str(tmp_path), spark.sparkContext
+        calls = {
+            "checkpoint": lambda: checkpoint_partials(
+                df, spec, ["user_id"], ckpt, "r8", only_pids={0, 1}),
+            "resume": lambda: resume(spark, df, spec, ["user_id"], ckpt,
+                                     "r8"),
+            "merge": lambda: merged_sketch_bytes(spark, ckpt, "r8")}
+        jobs = {}
+        for name, call in calls.items():
+            sc.setJobGroup(f"ckpt-jobs-{name}", name)
+            try:
+                call()
+            finally:
+                sc.setLocalProperty("spark.jobGroup.id", None)
+            jobs[name] = len(sc.statusTracker().getJobIdsForGroup(
+                f"ckpt-jobs-{name}"))
+        assert jobs == {"checkpoint": 1, "resume": 1, "merge": 0}
 
 class TestHeavyHitters:
     def test_no_false_negatives_and_exact_regime(self, spark):

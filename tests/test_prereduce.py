@@ -8,6 +8,10 @@ stop crossing the hash column their update never reads.
 """
 from __future__ import annotations
 
+import io
+import re
+from contextlib import redirect_stdout
+
 import pandas as pd
 import pytest
 from pyspark.sql import functions as F
@@ -117,11 +121,24 @@ def test_prereduce_rows_account_raw_rows(spark, skewed):
     assert int(pdf["rows"].sum()) == skewed.count()
 
 
+def _crossing_cols(df) -> list[str]:
+    """The columns entering the plan's one MapInPandas, read from its
+    formatted explain."""
+    buf = io.StringIO()
+    with redirect_stdout(buf):
+        df.explain("formatted")
+    (cols,) = re.findall(r"^\(\d+\) MapInPandas\nInput \[\d+\]: \[(.*)\]$",
+                         buf.getvalue(), re.M)
+    return [re.sub(r"#\d+L?$", "", c) for c in cols.split(", ")]
+
+
 def test_kll_crossing_prunes_unused_hash(spark, skewed):
-    """KLL/TDigest prepare only their value column — the h1 the base class
-    would emit never crosses the Arrow boundary."""
-    assert KLLSpec(k=64, col="v").prepare(skewed, ["k"]).columns == ["value"]
-    assert TDigestSpec(col="v").prepare(skewed, ["k"]).columns == ["value"]
+    """KLL/TDigest builds cross only their value column — the h1 the base
+    class would emit never crosses the Arrow boundary."""
+    for name, spec in (("kll", KLLSpec(k=64, col="v")),
+                       ("td", TDigestSpec(col="v"))):
+        built = build_partials_multi(skewed, {name: (spec, ["k"])})
+        assert _crossing_cols(built) == [f"{name}__value"]
     # and the sketch built through the pruned crossing is still correct
     specs = {"kll": (KLLSpec(k=512, col="v"), ["k"])}
     blob = tree_aggregate_multi(build_partials_multi(skewed, specs),

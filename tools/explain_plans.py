@@ -22,6 +22,8 @@ scale-critical properties directly from the plan text:
   the view's dims, is one MapInArrow over a Range: no file scan, no
   Exchange; a ``where`` is a Filter between two MapInArrows, and a
   coarser query of several buckets has one Exchange
+- a checkpoint's build tasks write their own files: one MapInPandas, no
+  Exchange, no Spark file-write command; its merge starts no Spark job
 - a streaming micro-batch folds its partials and the state once
 - a global merge's tree rounds are one Exchange + one MapInArrow each
 
@@ -462,6 +464,46 @@ def main():
             ok = False
     finally:
         shutil.rmtree(vdir, ignore_errors=True)
+
+    # -- checkpoint: each build task writes its own partial file (one
+    # MapInPandas, no Exchange, no Spark file-write command), and the
+    # merge opens the manifest's files on the driver: no Spark job -------
+    from sparksketch.checkpoint import checkpoint_partials, merged_sketch_bytes
+    cdir = tempfile.mkdtemp(prefix="sparksketch_planckpt_")
+    sc = spark.sparkContext
+    try:
+        collected = []
+        DataFrame.collect = capture
+        try:
+            checkpoint_partials(orders, HLLSpec(p=12), ["o_custkey"], cdir,
+                                "plan")
+        finally:
+            DataFrame.collect = collect
+        wplan = collected[0] if len(collected) == 1 else ""
+        print(wplan)
+        ok &= check("checkpoint build + write: no Exchange, no Spark "
+                    "file-write command", wplan, ["MapInPandas"],
+                    ["Exchange", "InsertIntoHadoopFsRelationCommand",
+                     "WriteFiles"])
+        ops = py_op.findall(wplan)
+        if len(collected) == 1 and ops == ["MapInPandas"]:
+            print("PASS  checkpoint: one collected plan, one MapInPandas")
+        else:
+            print(f"FAIL  checkpoint: {len(collected)} collected plans, "
+                  f"Python operators {ops}")
+            ok = False
+        sc.setJobGroup("plan-checkpoint-merge", "merged_sketch_bytes")
+        try:
+            merged_sketch_bytes(spark, cdir, "plan")
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        n_jobs = len(sc.statusTracker().getJobIdsForGroup(
+            "plan-checkpoint-merge"))
+        print(f"{'PASS' if n_jobs == 0 else 'FAIL'}  merged_sketch_bytes "
+              f"starts {n_jobs} Spark jobs (want 0)")
+        ok &= n_jobs == 0
+    finally:
+        shutil.rmtree(cdir, ignore_errors=True)
 
     # -- windowed streaming state: each micro-batch's partials and the
     # stored state fold in ONE pass (the build's MapInPandas, 1 Exchange,
